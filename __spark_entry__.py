@@ -204,7 +204,7 @@ def q_lcs_window_pairs(spark, sf):
 def q_doc_simhash_pairs(spark, sf):
     """Text SimHash near-dup pairs (hamming <= 8) — banded blocking +
     exact popcount verify. FULLY oracle-checked: the simhash chain is
-    pure-JVM columns (parity_hash.doc_simhash_col — u32 hash_combine char
+    one Arrow kernel (parity_hash.doc_simhash_col — u32 hash_combine char
     fold per shingle, hi/lo word derivation, bit votes) and the DuckDB
     oracle (doc_simhash_oracle_sql) recomputes the identical chain in SQL
     plus a brute-force popcount over all pairs, so the banded blocking's
@@ -714,7 +714,7 @@ def _parity_cfg():
 def q_rp_parity_buckets(spark, sf):
     """Reference-semantics random-projections bucket assignment
     (random_projections.hpp:72-85 chain) over the embeddings — the parity
-    operator, as a pure-JVM plan (parity_hash.rp_buckets_df) whose
+    operator, as one Arrow kernel (parity_hash.rp_buckets_df) whose
     sequential-fold projections are bit-identical to the driver's DuckDB
     oracle (rp_oracle_sql). The vectorized NumPy twin
     (hashing.random_projection_buckets) stays the pytest arbiter for the

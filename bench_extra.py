@@ -8,7 +8,6 @@ that actually costs, not the one that looks expensive.
 Usage:
   python bench_extra.py --queries ivf_topk,lsh_knn --reps 3
   python bench_extra.py --phases streaming
-  python bench_extra.py --phases ivf
 """
 
 from __future__ import annotations
@@ -215,65 +214,6 @@ def phases_streaming_inner() -> None:
     spark.stop()
 
 
-def phases_ivf() -> None:
-    """Stage isolation for ivf_topk: checkpoint/cents, assignment
-    (crossJoin+fold+window), candidate join, re-rank."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window as W
-
-    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
-        diff_sq_col, dot_col, with_norm)
-
-    spark = _spark()
-    _warm(spark)
-    t = {}
-
-    def mark(name, t0):
-        t[name] = round(time.perf_counter() - t0, 2)
-        return time.perf_counter()
-
-    e = spark.read.parquet(os.path.join(SF, "embeddings.parquet")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    n_centroids, nprobe = 16, 4
-    t0 = time.perf_counter()
-    en = with_norm(e, "v").localCheckpoint(eager=True)
-    t0 = mark("en_checkpoint", t0)
-    cents = (en.orderBy("vec_id").limit(n_centroids)
-             .select(F.col("vec_id").alias("cent_id"),
-                     F.col("v").alias("cv"), F.col("norm").alias("cnorm")))
-    simc = (en.crossJoin(F.broadcast(cents))
-            .withColumn("csim", F.round(dot_col(F.col("v"), F.col("cv"))
-                                        / (F.col("norm") * F.col("cnorm")), 6)))
-    wq = W.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
-    ranked = (simc.select("vec_id", "cent_id", "csim")
-              .withColumn("rn", F.row_number().over(wq))).localCheckpoint(eager=True)
-    t0 = mark("assign_window", t0)
-    assign = ranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("m"), "cent_id")
-    probes = ranked.filter(F.col("rn") <= nprobe).select(
-        F.col("vec_id").alias("q"), "cent_id")
-    cand = (probes.join(assign, "cent_id")
-            .filter(F.col("q") != F.col("m"))
-            .select("q", "m").distinct()).localCheckpoint(eager=True)
-    n_cand = cand.count()
-    t0 = mark("cand_join", t0)
-    va = en.select(F.col("vec_id").alias("q"), F.col("v").alias("va"),
-                   F.col("norm").alias("na"))
-    vb = en.select(F.col("vec_id").alias("m"), F.col("v").alias("vb"),
-                   F.col("norm").alias("nb"))
-    sims = (cand.join(va, "q").join(vb, "m")
-            .withColumn("sim", F.round(dot_col(F.col("va"), F.col("vb"))
-                                       / (F.col("na") * F.col("nb")), 6)))
-    w = W.partitionBy("q").orderBy(F.col("sim").desc(), F.col("m"))
-    _noop(sims.withColumn("rank", F.row_number().over(w))
-          .filter(F.col("rank") <= 5)
-          .select("q", "m", "rank", "sim"))
-    t0 = mark("rerank", t0)
-    t["n_cand"] = n_cand
-    print(json.dumps(t, indent=1))
-    spark.stop()
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default=None)
@@ -286,8 +226,6 @@ def main():
         phases_streaming()
     elif args.phases == "streaming_inner":
         phases_streaming_inner()
-    elif args.phases == "ivf":
-        phases_ivf()
     else:
         ap.error("pass --queries or --phases")
 

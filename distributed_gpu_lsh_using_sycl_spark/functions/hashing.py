@@ -246,9 +246,9 @@ def seqdot(points: np.ndarray, coeffs: np.ndarray, init=None) -> np.ndarray:
 def random_projection_buckets_seq(points01: np.ndarray, funcs: np.ndarray,
                                   w: float, bucket_modulus: int) -> np.ndarray:
     """The random-projections bucket chain with SEQUENTIAL-fold
-    projections (``seqdot``) — the bit-identical vectorized twin of
-    parity_hash.rp_buckets_df's JVM fold plan (and of the DuckDB
-    oracle's list_reduce), unlike ``random_projection_buckets`` whose
+    projections (``seqdot``) — the kernel behind parity_hash.rp_buckets_df,
+    bit-identical to the DuckDB oracle's list_reduce fold
+    (rp_oracle_sql), unlike ``random_projection_buckets`` whose
     einsum order is the reference's own chain. ``points01``: (n, dims)
     ALREADY affine-mapped into [0,1]; ``funcs``: (L, k, dims+1).
     Returns (n, L) int64 bucket ids."""

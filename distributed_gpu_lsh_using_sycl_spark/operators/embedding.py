@@ -405,13 +405,6 @@ def knn_topk_tiled(e: DataFrame, k: int = 5, tile_target: int = 4096,
             .select("vec_id", "neighbor_id", "rank", "sim"))
 
 
-def diff_sq_col(a, b):
-    """Sequential-fold squared L2 distance of two array<double> columns
-    (JVM, same FP order as DuckDB list_reduce / hashing.seqdot)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda s, x: s + x)
-
-
 def kcenter_cents(e: DataFrame, n_centroids: int, rounds: int = 2,
                   id_col: str = "vec_id", vec_col: str = "v") -> DataFrame:
     """Data-adaptive coarse quantizer / codebook for ``ivf_topk`` /
@@ -470,22 +463,242 @@ def _collect_cents(cents: DataFrame, rank_col: str) -> list:
     Bounded by max(n_centroids, ks) rows — the same driver-size class as
     the kcenter training picks (kmeans.kcenter_init) and the reference's
     pool gen + broadcast (random_projections.cpp:29-79). Doubles round-
-    trip py4j bit-exactly, so kernels fold the IDENTICAL values the JVM
-    fold plan folds."""
+    trip py4j bit-exactly, so kernels fold the IDENTICAL values the
+    DuckDB oracles fold."""
     return sorted(cents.collect(), key=lambda r: r[rank_col])
 
 
-def _ivf_topk_kernel(en: DataFrame, cents: DataFrame, k: int,
-                     n_centroids: int, nprobe: int) -> DataFrame:
-    """Arrow-batched execution of ivf_topk's plan (guide §4.2): the
-    n × n_centroids assignment fold becomes ONE seqdot kernel per Arrow
-    batch, and the candidate re-rank becomes a per-cell cogrouped seqdot
-    matmul — vectors ship to their (nprobe+1) cells ONCE instead of once
-    per candidate pair (guide §8: decide with small rows, move payloads
-    once). Every float op is the same IEEE op in the same order as the
-    fold plan (hashing.seqdot docstring), all rounding/division happens
-    in the JVM on the raw fold values, so the result is bit-identical to
-    kernel=False (pinned in tests/test_embedding.py)."""
+def ivfpq_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
+               nprobe: int = 4, n_sub: int = 8, ks: int = 16,
+               id_col: str = "vec_id", vec_col: str = "v",
+               dims: int = 64, cents: DataFrame | None = None) -> DataFrame:
+    """IVF-PQ approximate L2 top-k: coarse inverted-file probe +
+    product-quantization ADC ranking — the compressed-domain scale path
+    next to IVF-flat (ivf_topk) and hyperplane LSH (ann_topk_lsh),
+    completing the reference's multi-probe search surface
+    (hash_tables.hpp:388-494) with the FAISS-style code path.
+
+    Structure (all deterministic, so the DuckDB oracle recomputes it
+    end-to-end — parity_hash.ivfpq_oracle_sql):
+    - coarse quantizer: the ``n_centroids`` smallest-id vectors (or the
+      injected ``cents`` frame of (cent_id, cv) rows — e.g.
+      ``kcenter_cents`` — which must carry max(n_centroids, ks) rows;
+      cent_id order doubles as both cell rank and code rank); every
+      vector lands in the cell of its nearest centroid under sequential-
+      fold squared L2 in fixed-point micros (centroid-rank tie-break);
+      queries probe their ``nprobe`` nearest cells.
+    - PQ codebook: dims split into ``n_sub`` subspaces; per subspace the
+      ``ks`` smallest-id subvectors are the codes. Each vector encodes to
+      ``n_sub`` code ids (argmin sub-distance, code-rank tie-break).
+    - ADC: a query's distance table (sub-distance to every code of every
+      subspace, micros) is summed over the candidate's codes — an exact
+      integer sum, so ranking is order-independent and cross-engine
+      reproducible; rank by (adc asc, neighbor_id asc).
+
+    Scale shape: coarse and sub-distances are one Arrow-batched
+    hashing.seqdiffsq kernel per batch against the collected (tiny)
+    codebook, no shuffle; the ADC is a per-cell cogrouped integer gather
+    that ships ``n_sub`` small codes per member instead of ``dims``
+    doubles (8 bytes vs 512 at the default config — the point of PQ at
+    100 TB: the shuffled payload is the compressed representation).
+    Cells are ~n/n_centroids and n_centroids grows as sqrt(n), as in
+    ivf_topk.
+    """
+    assert dims % n_sub == 0, "dims must split evenly into subspaces"
+    sub = dims // n_sub
+    n_code = max(n_centroids, ks)
+    en = (e.select(F.col(id_col).alias("vec_id"),
+                   F.col(vec_col).cast("array<double>").alias("v"))
+          .localCheckpoint(eager=True))
+    if cents is None:
+        wc = W.orderBy("vec_id")
+        cents = (en.orderBy("vec_id").limit(n_code)
+                 .withColumn("crank", F.row_number().over(wc) - 1)
+                 .select("crank", F.col("v").alias("cv")))
+    else:
+        cents = cents.select(
+            F.col("cent_id").cast("long").alias("crank"),
+            F.col("cv").cast("array<double>").alias("cv"))
+
+    # Arrow-batched coarse/sub-distance folds (guide §4.2):
+    # hashing.seqdiffsq folds in DuckDB list_reduce's order, and the *1e6
+    # fixed-point rounding stays JVM-side on the raw fold values, so
+    # keys/codes match the oracle's (pinned in tests/test_embedding.py).
+    # The frame doubles as coarse quantizer AND PQ codebook source:
+    # fewer than max(n_centroids, ks) rows would silently underfill the
+    # codebook, so the collected rows are validated (no extra job).
+    from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
+
+    crows = _collect_cents(cents, "crank")
+    if len(crows) < n_code:
+        raise ValueError(
+            f"ivfpq_topk cents frame has {len(crows)} rows but must "
+            f"carry max(n_centroids={n_centroids}, ks={ks}) = {n_code} "
+            "(cent_id order is both cell rank and PQ code rank)")
+    C_all = np.asarray([r["cv"] for r in crows], dtype=np.float64)
+
+    @F.pandas_udf(T.ArrayType(T.DoubleType()))
+    def coarse_dsq(vs: pd.Series) -> pd.Series:
+        V = np.asarray(vs.tolist(), dtype=np.float64)
+        if len(V) == 0:
+            return pd.Series([], dtype=object)
+        return pd.Series(H.seqdiffsq(V, C_all[:n_centroids]).tolist())
+
+    @F.pandas_udf(T.ArrayType(T.DoubleType()))
+    def sub_dsq(vs: pd.Series) -> pd.Series:
+        V = np.asarray(vs.tolist(), dtype=np.float64)
+        if len(V) == 0:
+            return pd.Series([], dtype=object)
+        out = np.empty((len(V), n_sub * ks), dtype=np.float64)
+        for s in range(n_sub):
+            out[:, s * ks:(s + 1) * ks] = H.seqdiffsq(
+                V[:, s * sub:(s + 1) * sub],
+                C_all[:ks, s * sub:(s + 1) * sub])
+        return pd.Series(out.tolist())
+
+    # posexplode index == crank (C_all is crank-ordered)
+    csd = (en.select("vec_id",
+                     F.posexplode(coarse_dsq("v")).alias("ci", "draw"))
+           .select("vec_id",
+                   (F.round(F.col("draw") * 1e6, 0).cast("long")
+                    * n_centroids + F.col("ci")).alias("key")))
+    subd_src = (en.select("vec_id",
+                          F.posexplode(sub_dsq("v")).alias("ix", "sraw"))
+                .select("vec_id",
+                        (F.col("ix") / ks).cast("int").alias("sub_m"),
+                        (F.col("ix") % ks).cast("long").alias("c"),
+                        F.round(F.col("sraw") * 1e6, 0).cast("long")
+                        .alias("sdi")))
+
+    wq = W.partitionBy("vec_id").orderBy("key")
+    cranked = (csd.withColumn("rn", F.row_number().over(wq))
+               .withColumn("cell", F.col("key") % n_centroids))
+    assign = cranked.filter(F.col("rn") == 1).select(
+        F.col("vec_id").alias("x"), "cell")
+    probes = cranked.filter(F.col("rn") <= nprobe).select(
+        F.col("vec_id").alias("q"), "cell")
+
+    subd = subd_src.localCheckpoint(eager=True)  # feeds codes AND dtable
+    codes = (subd.groupBy("vec_id", "sub_m")
+             .agg((F.min(F.col("sdi") * ks + F.col("c")) % ks).alias("code"))
+             .select(F.col("vec_id").alias("xid"), "sub_m", "code"))
+    dtable = subd.select(F.col("vec_id").alias("qid"),
+                         F.col("sub_m").alias("qm"), "c", "sdi")
+
+    # ---- ADC as a per-cell cogrouped integer gather (guide §8:
+    # decide with small rows — each member ships its 8 codes and each
+    # query its 128-entry distance table ONCE per probed cell, instead
+    # of the 3-way join materializing n_sub rows per candidate pair).
+    # All arithmetic is exact int64 (sum of sdi micros), so per-cell
+    # top-k under the total order (adci asc, id asc) loses nothing
+    # against the global window — the same restriction argument as
+    # knn_topk_tiled, with no float rounding in sight.
+    codes_arr = (codes.groupBy("xid")
+                 .agg(F.transform(
+                     F.array_sort(F.collect_list(
+                         F.struct("sub_m", "code"))),
+                     lambda s: s["code"]).alias("mcodes")))
+    dt_arr = (dtable.groupBy("qid")
+              .agg(F.transform(
+                  F.array_sort(F.collect_list(
+                      F.struct("qm", "c", "sdi"))),
+                  lambda s: s["sdi"]).alias("qdt")))
+    mem = (assign.join(codes_arr, F.col("x") == F.col("xid"))
+           .select(F.col("cell").alias("mcell"),
+                   F.col("x").alias("m_id"), "mcodes"))
+    qry = (probes.join(dt_arr, F.col("q") == F.col("qid"))
+           .select(F.col("cell").alias("qcell"),
+                   F.col("q").alias("q_id"), "qdt"))
+    idt = en.schema["vec_id"].dataType.simpleString()
+    chunk_elems, chunk_min = CELL_CHUNK_ELEMS, CELL_CHUNK_MIN_ROWS
+
+    def cell_adc(qpdf, mpdf):
+        cols = ["q", "x", "adci"]
+        if len(qpdf) == 0 or len(mpdf) == 0:
+            return pd.DataFrame({c: [] for c in cols})
+        Cm = np.asarray(mpdf["mcodes"].tolist(), dtype=np.int64)
+        mid = mpdf["m_id"].to_numpy()
+        # canonical member order (id asc) once per cell; query-chunked
+        # so the (nq x nm) ADC matrix stays ~tens of MB at any cell
+        # size (per-query selection is row-local — chunking never
+        # changes the output)
+        mo = np.argsort(mid, kind="stable")
+        mid_s, Cm_s = mid[mo], Cm[mo]
+        step = max(chunk_min, chunk_elems // max(1, len(mid_s)))
+        outs = []
+        for lo in range(0, len(qpdf), step):
+            qc = qpdf.iloc[lo:lo + step]
+            DT = np.asarray(qc["qdt"].tolist(), dtype=np.int64) \
+                .reshape(len(qc), n_sub, ks)
+            qid = qc["q_id"].to_numpy()
+            adc_s = np.zeros((len(qid), len(mid_s)), dtype=np.int64)
+            for s in range(n_sub):
+                adc_s += DT[:, s, :][:, Cm_s[:, s]]
+            # stable argsort on adci over id-ascending columns =
+            # exact (adci asc, id asc) ranking; self-pairs sentineled
+            self_mask = qid[:, None] == mid_s[None, :]
+            adc_s = np.where(self_mask, np.iinfo(np.int64).max, adc_s)
+            nk = min(k, adc_s.shape[1])
+            sel = np.argsort(adc_s, axis=1, kind="stable")[:, :nk]
+            keep = np.take_along_axis(adc_s, sel, axis=1) \
+                != np.iinfo(np.int64).max
+            qi = np.repeat(np.arange(len(qid)), nk)[keep.ravel()]
+            mi = sel.ravel()[keep.ravel()]
+            outs.append(pd.DataFrame({"q": qid[qi], "x": mid_s[mi],
+                                      "adci": adc_s[qi, mi]}))
+        return pd.concat(outs, ignore_index=True)
+
+    adc = (qry.groupBy("qcell").cogroup(mem.groupBy("mcell"))
+           .applyInPandas(cell_adc, f"q {idt}, x {idt}, adci long"))
+    w = W.partitionBy("q").orderBy(F.col("adci").asc(), F.col("x").asc())
+    return (adc.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(F.col("q").alias("vec_id"), F.col("x").alias("neighbor_id"),
+                    "rank",
+                    (F.col("adci").cast("double") / 1e6).alias("adc_dist")))
+
+
+def ivf_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
+             nprobe: int = 4, id_col: str = "vec_id",
+             vec_col: str = "v", cents: DataFrame | None = None) -> DataFrame:
+    """IVF-flat approximate cosine top-k — the coarse-quantizer scale path
+    next to the LSH one (ann_topk_lsh).
+
+    Centroids are the n_centroids rows with the smallest ids — a
+    deterministic, data-dependent quantizer that needs no iterative fit,
+    so the DuckDB oracle (parity_hash.ivf_oracle_sql) can recompute the
+    ENTIRE structure: every vector is assigned to its nearest centroid
+    (rounded cosine, centroid-id tie-break); a query probes its nprobe
+    nearest centroids' cells and exactly re-ranks those candidates.
+
+    Arrow-batched execution (guide §4.2): the n × n_centroids assignment
+    fold is ONE seqdot kernel per Arrow batch against the collected
+    centroid table (no shuffle), and the candidate re-rank is a per-cell
+    cogrouped seqdot matmul — vectors ship to their (nprobe+1) cells ONCE
+    instead of once per candidate pair (guide §8: decide with small rows,
+    move payloads once). hashing.seqdot folds in the same IEEE order as
+    DuckDB's list_reduce, and all rounding/division happens in the JVM on
+    the raw fold values, so the result matches ivf_oracle_sql (and
+    ivf_kcenter_oracle_sql for the kcenter quantizer) bit-for-bit —
+    pinned in tests/test_embedding.py. Cells are ~n/n_centroids and
+    n_centroids grows as √n, so per-task candidate work is
+    O(n/√n · nprobe). Swapping in k-means centroids changes only the
+    `cents` frame, not the plan.
+    """
+    en = with_norm(e.select(F.col(id_col).alias("vec_id"),
+                            F.col(vec_col).alias("v")),
+                   "v").localCheckpoint(eager=True)
+    if cents is None:
+        cents = (en.orderBy("vec_id").limit(n_centroids)
+                 .select(F.col("vec_id").alias("cent_id"),
+                         F.col("v").alias("cv"),
+                         F.col("norm").alias("cnorm")))
+    else:  # injected quantizer (e.g. kcenter_cents): same fold-norm
+        cents = (cents.select(F.col("cent_id").cast("long"),
+                              F.col("cv").cast("array<double>"))
+                 .withColumn("cnorm",
+                             F.sqrt(dot_col(F.col("cv"), F.col("cv")))))
+
     from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 
     crows = _collect_cents(cents, "cent_id")
@@ -503,7 +716,7 @@ def _ivf_topk_kernel(en: DataFrame, cents: DataFrame, k: int,
     ids_arr = F.array(*[F.lit(i) for i in cent_ids])
     cn_arr = F.array(*[F.lit(x) for x in cnorms])
     # raw fold dots from the kernel; division + round stay JVM-side so the
-    # ranked csim is the identical double the fold plan ranks on
+    # ranked csim is the identical double ivf_oracle_sql ranks on
     simc = (en.select("vec_id", "norm",
                       F.posexplode(cdots("v")).alias("ci", "dotc"))
             .select("vec_id",
@@ -584,301 +797,3 @@ def _ivf_topk_kernel(en: DataFrame, cents: DataFrame, k: int,
             .filter(F.col("rank") <= k)
             .select(F.col("q").alias("vec_id"),
                     F.col("m").alias("neighbor_id"), "rank", "sim"))
-
-
-def ivfpq_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
-               nprobe: int = 4, n_sub: int = 8, ks: int = 16,
-               id_col: str = "vec_id", vec_col: str = "v",
-               dims: int = 64, cents: DataFrame | None = None,
-               kernel: bool = True) -> DataFrame:
-    """IVF-PQ approximate L2 top-k: coarse inverted-file probe +
-    product-quantization ADC ranking — the compressed-domain scale path
-    next to IVF-flat (ivf_topk) and hyperplane LSH (ann_topk_lsh),
-    completing the reference's multi-probe search surface
-    (hash_tables.hpp:388-494) with the FAISS-style code path.
-
-    Structure (all deterministic, so the DuckDB oracle recomputes it
-    end-to-end — parity_hash.ivfpq_oracle_sql):
-    - coarse quantizer: the ``n_centroids`` smallest-id vectors (or the
-      injected ``cents`` frame of (cent_id, cv) rows — e.g.
-      ``kcenter_cents`` — which must carry max(n_centroids, ks) rows;
-      cent_id order doubles as both cell rank and code rank); every
-      vector lands in the cell of its nearest centroid under sequential-
-      fold squared L2 in fixed-point micros (centroid-rank tie-break);
-      queries probe their ``nprobe`` nearest cells.
-    - PQ codebook: dims split into ``n_sub`` subspaces; per subspace the
-      ``ks`` smallest-id subvectors are the codes. Each vector encodes to
-      ``n_sub`` code ids (argmin sub-distance, code-rank tie-break).
-    - ADC: a query's distance table (sub-distance to every code of every
-      subspace, micros) is summed over the candidate's codes — an exact
-      integer sum, so ranking is order-independent and cross-engine
-      reproducible; rank by (adc asc, neighbor_id asc).
-
-    Scale shape: sub-distances are one broadcast crossJoin (n x
-    n_sub*ks rows, no shuffle); the candidate join ships ``n_sub`` small
-    codes per vector instead of ``dims`` doubles (8 bytes vs 512 at the
-    default config — the point of PQ at 100 TB: the shuffled payload is
-    the compressed representation); the ADC join co-partitions the
-    distance table and candidates on the query id. Cells are
-    ~n/n_centroids and n_centroids grows as sqrt(n), as in ivf_topk.
-    """
-    assert dims % n_sub == 0, "dims must split evenly into subspaces"
-    sub = dims // n_sub
-    n_code = max(n_centroids, ks)
-    if cents is not None and not kernel:
-        # the frame doubles as coarse quantizer AND PQ codebook source:
-        # fewer than max(n_centroids, ks) rows would silently underfill
-        # the codebook and desync from the oracle's max(n_centroids, ks)
-        # centers — fail loudly at plan-build time instead. (The kernel
-        # mode validates the collected rows below — no extra job.)
-        n_cents = cents.count()
-        if n_cents < n_code:
-            raise ValueError(
-                f"ivfpq_topk cents frame has {n_cents} rows but must carry "
-                f"max(n_centroids={n_centroids}, ks={ks}) = "
-                f"{n_code} (cent_id order is both cell rank "
-                "and PQ code rank)")
-    en = (e.select(F.col(id_col).alias("vec_id"),
-                   F.col(vec_col).cast("array<double>").alias("v"))
-          .localCheckpoint(eager=True))
-    if cents is None:
-        wc = W.orderBy("vec_id")
-        cents = (en.orderBy("vec_id").limit(n_code)
-                 .withColumn("crank", F.row_number().over(wc) - 1)
-                 .select("crank", F.col("v").alias("cv")))
-    else:
-        cents = cents.select(
-            F.col("cent_id").cast("long").alias("crank"),
-            F.col("cv").cast("array<double>").alias("cv"))
-
-    if kernel:
-        # Arrow-batched twins of the two crossJoin+fold stages (guide
-        # §4.2): hashing.seqdiffsq is the bit-identical vectorized left
-        # fold, the *1e6 fixed-point rounding stays JVM-side on the raw
-        # fold values, so keys/codes are identical to kernel=False
-        # (pinned in tests/test_embedding.py).
-        from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
-
-        crows = _collect_cents(cents, "crank")
-        if len(crows) < n_code:
-            raise ValueError(
-                f"ivfpq_topk cents frame has {len(crows)} rows but must "
-                f"carry max(n_centroids={n_centroids}, ks={ks}) = {n_code} "
-                "(cent_id order is both cell rank and PQ code rank)")
-        C_all = np.asarray([r["cv"] for r in crows], dtype=np.float64)
-
-        @F.pandas_udf(T.ArrayType(T.DoubleType()))
-        def coarse_dsq(vs: pd.Series) -> pd.Series:
-            V = np.asarray(vs.tolist(), dtype=np.float64)
-            if len(V) == 0:
-                return pd.Series([], dtype=object)
-            return pd.Series(H.seqdiffsq(V, C_all[:n_centroids]).tolist())
-
-        @F.pandas_udf(T.ArrayType(T.DoubleType()))
-        def sub_dsq(vs: pd.Series) -> pd.Series:
-            V = np.asarray(vs.tolist(), dtype=np.float64)
-            if len(V) == 0:
-                return pd.Series([], dtype=object)
-            out = np.empty((len(V), n_sub * ks), dtype=np.float64)
-            for s in range(n_sub):
-                out[:, s * ks:(s + 1) * ks] = H.seqdiffsq(
-                    V[:, s * sub:(s + 1) * sub],
-                    C_all[:ks, s * sub:(s + 1) * sub])
-            return pd.Series(out.tolist())
-
-        # posexplode index == crank (C_all is crank-ordered)
-        csd = (en.select("vec_id",
-                         F.posexplode(coarse_dsq("v")).alias("ci", "draw"))
-               .select("vec_id",
-                       (F.round(F.col("draw") * 1e6, 0).cast("long")
-                        * n_centroids + F.col("ci")).alias("key")))
-        subd_src = (en.select("vec_id",
-                              F.posexplode(sub_dsq("v")).alias("ix", "sraw"))
-                    .select("vec_id",
-                            (F.col("ix") / ks).cast("int").alias("sub_m"),
-                            (F.col("ix") % ks).cast("long").alias("c"),
-                            F.round(F.col("sraw") * 1e6, 0).cast("long")
-                            .alias("sdi")))
-    else:
-        cents = cents.localCheckpoint(eager=True)  # tiny; also silences
-        # the single-partition-window plan inside the broadcast subtree
-
-        # ---- coarse cells: nearest of n_centroids under fold-L2 micros --
-        ckey = (F.round(diff_sq_col(F.col("v"), F.col("cv")) * 1e6, 0)
-                .cast("long") * n_centroids + F.col("crank"))
-        csd = (en.crossJoin(
-            F.broadcast(cents.filter(F.col("crank") < n_centroids)))
-            .select("vec_id", ckey.alias("key")))
-
-        # ---- PQ sub-distances (vector x subspace x code), micros ----
-        subs = F.broadcast(
-            cents.filter(F.col("crank") < ks)
-            .crossJoin(en.sparkSession.range(n_sub).select(
-                F.col("id").cast("int").alias("sub_m")))
-            .select(F.col("crank").alias("c"), "sub_m",
-                    F.slice("cv", F.col("sub_m") * sub + 1, sub).alias("scv")))
-        sdi = (F.round(diff_sq_col(F.slice("v", F.col("sub_m") * sub + 1, sub),
-                                   F.col("scv")) * 1e6, 0).cast("long"))
-        subd_src = en.crossJoin(subs).select("vec_id", "sub_m", "c",
-                                             sdi.alias("sdi"))
-
-    wq = W.partitionBy("vec_id").orderBy("key")
-    cranked = (csd.withColumn("rn", F.row_number().over(wq))
-               .withColumn("cell", F.col("key") % n_centroids))
-    assign = cranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("x"), "cell")
-    probes = cranked.filter(F.col("rn") <= nprobe).select(
-        F.col("vec_id").alias("q"), "cell")
-    cand = (probes.join(assign, "cell")
-            .filter(F.col("q") != F.col("x"))
-            .select("q", "x").distinct())
-
-    subd = subd_src.localCheckpoint(eager=True)  # feeds codes AND dtable
-    codes = (subd.groupBy("vec_id", "sub_m")
-             .agg((F.min(F.col("sdi") * ks + F.col("c")) % ks).alias("code"))
-             .select(F.col("vec_id").alias("xid"), "sub_m", "code"))
-    dtable = subd.select(F.col("vec_id").alias("qid"),
-                         F.col("sub_m").alias("qm"), "c", "sdi")
-
-    if kernel:
-        # ---- ADC as a per-cell cogrouped integer gather (guide §8:
-        # decide with small rows — each member ships its 8 codes and each
-        # query its 128-entry distance table ONCE per probed cell, instead
-        # of the 3-way join materializing n_sub rows per candidate pair).
-        # All arithmetic is exact int64 (sum of sdi micros), so per-cell
-        # top-k under the total order (adci asc, id asc) loses nothing
-        # against the global window — the same restriction argument as
-        # knn_topk_tiled, with no float rounding in sight.
-        codes_arr = (codes.groupBy("xid")
-                     .agg(F.transform(
-                         F.array_sort(F.collect_list(
-                             F.struct("sub_m", "code"))),
-                         lambda s: s["code"]).alias("mcodes")))
-        dt_arr = (dtable.groupBy("qid")
-                  .agg(F.transform(
-                      F.array_sort(F.collect_list(
-                          F.struct("qm", "c", "sdi"))),
-                      lambda s: s["sdi"]).alias("qdt")))
-        mem = (assign.join(codes_arr, F.col("x") == F.col("xid"))
-               .select(F.col("cell").alias("mcell"),
-                       F.col("x").alias("m_id"), "mcodes"))
-        qry = (probes.join(dt_arr, F.col("q") == F.col("qid"))
-               .select(F.col("cell").alias("qcell"),
-                       F.col("q").alias("q_id"), "qdt"))
-        idt = en.schema["vec_id"].dataType.simpleString()
-        chunk_elems, chunk_min = CELL_CHUNK_ELEMS, CELL_CHUNK_MIN_ROWS
-
-        def cell_adc(qpdf, mpdf):
-            cols = ["q", "x", "adci"]
-            if len(qpdf) == 0 or len(mpdf) == 0:
-                return pd.DataFrame({c: [] for c in cols})
-            Cm = np.asarray(mpdf["mcodes"].tolist(), dtype=np.int64)
-            mid = mpdf["m_id"].to_numpy()
-            # canonical member order (id asc) once per cell; query-chunked
-            # so the (nq x nm) ADC matrix stays ~tens of MB at any cell
-            # size (per-query selection is row-local — chunking never
-            # changes the output)
-            mo = np.argsort(mid, kind="stable")
-            mid_s, Cm_s = mid[mo], Cm[mo]
-            step = max(chunk_min, chunk_elems // max(1, len(mid_s)))
-            outs = []
-            for lo in range(0, len(qpdf), step):
-                qc = qpdf.iloc[lo:lo + step]
-                DT = np.asarray(qc["qdt"].tolist(), dtype=np.int64) \
-                    .reshape(len(qc), n_sub, ks)
-                qid = qc["q_id"].to_numpy()
-                adc_s = np.zeros((len(qid), len(mid_s)), dtype=np.int64)
-                for s in range(n_sub):
-                    adc_s += DT[:, s, :][:, Cm_s[:, s]]
-                # stable argsort on adci over id-ascending columns =
-                # exact (adci asc, id asc) ranking; self-pairs sentineled
-                self_mask = qid[:, None] == mid_s[None, :]
-                adc_s = np.where(self_mask, np.iinfo(np.int64).max, adc_s)
-                nk = min(k, adc_s.shape[1])
-                sel = np.argsort(adc_s, axis=1, kind="stable")[:, :nk]
-                keep = np.take_along_axis(adc_s, sel, axis=1) \
-                    != np.iinfo(np.int64).max
-                qi = np.repeat(np.arange(len(qid)), nk)[keep.ravel()]
-                mi = sel.ravel()[keep.ravel()]
-                outs.append(pd.DataFrame({"q": qid[qi], "x": mid_s[mi],
-                                          "adci": adc_s[qi, mi]}))
-            return pd.concat(outs, ignore_index=True)
-
-        adc = (qry.groupBy("qcell").cogroup(mem.groupBy("mcell"))
-               .applyInPandas(cell_adc, f"q {idt}, x {idt}, adci long"))
-    else:
-        # ---- ADC: sum the query's table over the candidate's codes ----
-        adc = (cand.join(codes, F.col("x") == F.col("xid"))
-               .join(dtable, [F.col("q") == F.col("qid"),
-                              F.col("sub_m") == F.col("qm"),
-                              F.col("code") == F.col("c")])
-               .groupBy("q", "x")
-               .agg(F.sum("sdi").alias("adci")))
-    w = W.partitionBy("q").orderBy(F.col("adci").asc(), F.col("x").asc())
-    return (adc.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("q").alias("vec_id"), F.col("x").alias("neighbor_id"),
-                    "rank",
-                    (F.col("adci").cast("double") / 1e6).alias("adc_dist")))
-
-
-def ivf_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
-             nprobe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "v", cents: DataFrame | None = None,
-             kernel: bool = True) -> DataFrame:
-    """IVF-flat approximate cosine top-k — the coarse-quantizer scale path
-    next to the LSH one (ann_topk_lsh).
-
-    Centroids are the n_centroids rows with the smallest ids — a
-    deterministic, data-dependent quantizer that needs no iterative fit,
-    so the DuckDB oracle (parity_hash.ivf_oracle_sql) can recompute the
-    ENTIRE structure: every vector is assigned to its nearest centroid
-    (rounded cosine, centroid-id tie-break); a query probes its nprobe
-    nearest centroids' cells and exactly re-ranks those candidates.
-
-    Scale shape: assignment is n × n_centroids fold-dots against a
-    broadcast centroid table (no shuffle); the probe join shuffles on
-    cell id — cells are ~n/n_centroids and n_centroids grows as √n, so
-    per-task candidate work is O(n/√n · nprobe). Swapping in k-means
-    centroids changes only the `cents` frame, not the plan.
-    """
-    en = with_norm(e.select(F.col(id_col).alias("vec_id"),
-                            F.col(vec_col).alias("v")),
-                   "v").localCheckpoint(eager=True)
-    if cents is None:
-        cents = (en.orderBy("vec_id").limit(n_centroids)
-                 .select(F.col("vec_id").alias("cent_id"),
-                         F.col("v").alias("cv"),
-                         F.col("norm").alias("cnorm")))
-    else:  # injected quantizer (e.g. kcenter_cents): same fold-norm
-        cents = (cents.select(F.col("cent_id").cast("long"),
-                              F.col("cv").cast("array<double>"))
-                 .withColumn("cnorm",
-                             F.sqrt(dot_col(F.col("cv"), F.col("cv")))))
-    if kernel:
-        return _ivf_topk_kernel(en, cents, k, n_centroids, nprobe)
-    simc = (en.crossJoin(F.broadcast(cents))
-            .withColumn("csim", F.round(dot_col(F.col("v"), F.col("cv"))
-                                        / (F.col("norm") * F.col("cnorm")), 6)))
-    wq = W.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
-    ranked = (simc.select("vec_id", "cent_id", "csim")
-              .withColumn("rn", F.row_number().over(wq)))
-    assign = ranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("m"), "cent_id")
-    probes = ranked.filter(F.col("rn") <= nprobe).select(
-        F.col("vec_id").alias("q"), "cent_id")
-    cand = (probes.join(assign, "cent_id")
-            .filter(F.col("q") != F.col("m"))
-            .select("q", "m").distinct())
-    va = en.select(F.col("vec_id").alias("q"), F.col("v").alias("va"),
-                   F.col("norm").alias("na"))
-    vb = en.select(F.col("vec_id").alias("m"), F.col("v").alias("vb"),
-                   F.col("norm").alias("nb"))
-    sims = (cand.join(va, "q").join(vb, "m")
-            .withColumn("sim", F.round(dot_col(F.col("va"), F.col("vb"))
-                                       / (F.col("na") * F.col("nb")), 6)))
-    w = W.partitionBy("q").orderBy(F.col("sim").desc(), F.col("m"))
-    return (sims.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("q").alias("vec_id"), F.col("m").alias("neighbor_id"),
-                    "rank", "sim"))

@@ -16,12 +16,12 @@ bit-identical centroids, so assignments match exactly.
 
 Scale shape: per iteration ONE shuffle — the (cluster, dim) integer
 partial-sum aggregation (map-side combined, k·dims cells); centroids
-(k × dims, tiny) come to the driver and go back as literals — the
-classic iterate-broadcast loop. Assignment is pure per-row JVM
-expression (k sequential-fold distances + array argmin), no shuffle,
-no python. Init = the k smallest ids' vectors (deterministic, like
-ivf_topk's coarse quantizer — swapping in k-means|| changes only the
-init frame).
+(k × dims, tiny) come to the driver and go back in the UDF closure —
+the classic iterate-broadcast loop. Assignment is one Arrow-batched
+seqdiffsq kernel per batch (k sequential-fold distances + first-min
+argmin, the oracle's exact order), no shuffle. Init = the k smallest
+ids' vectors (deterministic, like ivf_topk's coarse quantizer —
+swapping in k-means|| changes only the init frame).
 
 Clustering is NEW surface (the reference is kNN-only); the loop mirrors
 its fit/search split (nearest_neighbors.cpp:60-97) in shape only.
@@ -47,63 +47,35 @@ def _quantized(e: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return e.select(F.col(id_col).alias("vec_id"), q.alias("q"))
 
 
-def _dists_col(centroids: list[list[float]]):
-    """array<double> of sequential-fold squared L2 distances to each
-    centroid literal, in cluster order (index order of the fold matches
-    DuckDB's list_reduce bit-for-bit)."""
-    def one(cent):
-        lits = F.array(*[F.lit(float(c)) for c in cent])
-        return F.aggregate(
-            F.zip_with(F.col("q"), lits,
-                       lambda x, c: (x.cast("double") - c)
-                       * (x.cast("double") - c)),
-            F.lit(0.0), lambda acc, x: acc + x)
-    return F.array(*[one(c) for c in centroids])
-
-
-def _assign(qdf: DataFrame, centroids: list[list[float]],
-            kernel: bool = True) -> DataFrame:
+def _assign(qdf: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """(vec_id, q, cluster, dist): argmin centroid; ties take the
-    SMALLEST cluster index (array_position returns the first match).
+    SMALLEST cluster index. The distance matrix is one seqdiffsq Arrow
+    kernel per batch — the same sequential fold as the DuckDB oracle's
+    list_reduce, and np.argmin returns the first minimum, matching the
+    oracle's list_position(dl, list_min(dl))."""
+    C = np.asarray(centroids, dtype=np.float64)
+    schema = T.StructType([T.StructField("cluster", T.IntegerType()),
+                           T.StructField("dist", T.DoubleType())])
 
-    ``kernel=True`` (default) computes the distance matrix as one
-    seqdiffsq Arrow kernel per batch — the bit-identical vectorized twin
-    of the JVM fold (np.argmin returns the first minimum, matching
-    array_position's first match); ``kernel=False`` keeps the pure-JVM
-    fold plan (parity mode, pinned equal in tests/test_kmeans.py)."""
-    if kernel:
-        C = np.asarray(centroids, dtype=np.float64)
-        schema = T.StructType([T.StructField("cluster", T.IntegerType()),
-                               T.StructField("dist", T.DoubleType())])
+    @F.pandas_udf(schema)
+    def ass_udf(qs: pd.Series) -> pd.DataFrame:
+        Q = np.asarray(qs.tolist(), dtype=np.float64)
+        if len(Q) == 0:
+            return pd.DataFrame({"cluster": [], "dist": []})
+        D = H.seqdiffsq(Q, C)
+        return pd.DataFrame(
+            {"cluster": np.argmin(D, axis=1).astype(np.int32),
+             "dist": D.min(axis=1)})
 
-        @F.pandas_udf(schema)
-        def ass_udf(qs: pd.Series) -> pd.DataFrame:
-            Q = np.asarray(qs.tolist(), dtype=np.float64)
-            if len(Q) == 0:
-                return pd.DataFrame({"cluster": [], "dist": []})
-            D = H.seqdiffsq(Q, C)
-            return pd.DataFrame(
-                {"cluster": np.argmin(D, axis=1).astype(np.int32),
-                 "dist": D.min(axis=1)})
-
-        return (qdf.withColumn("ad", ass_udf("q"))
-                .select("vec_id", "q",
-                        F.col("ad.cluster").alias("cluster"),
-                        F.col("ad.dist").alias("dist")))
-    d = _dists_col(centroids)
-    return (qdf.withColumn("dl", d)
+    return (qdf.withColumn("ad", ass_udf("q"))
             .select("vec_id", "q",
-                    (F.array_position("dl", F.array_min("dl")) - 1)
-                    .cast("int").alias("cluster"),
-                    F.array_min("dl").alias("dist")))
+                    F.col("ad.cluster").alias("cluster"),
+                    F.col("ad.dist").alias("dist")))
 
 
-def _mindist_col(centers: list[list[float]], kernel: bool = True):
+def _mindist_col(centers: list[list[float]]):
     """min dist² to the current center set as one Column — the kcenter
-    init's per-round pass. Kernel mode = seqdiffsq Arrow kernel,
-    bit-identical to array_min over the JVM fold array."""
-    if not kernel:
-        return F.array_min(_dists_col(centers))
+    init's per-round pass, one seqdiffsq Arrow kernel per batch."""
     C = np.asarray(centers, dtype=np.float64)
 
     @F.pandas_udf("double")
@@ -133,8 +105,9 @@ def kcenter_init(qdf: DataFrame, n_centroids: int,
     Bahmani et al., VLDB'12) with the probabilistic draw replaced by the
     deterministic top-cost pick (dist² desc, vec_id asc), which keeps
     the whole chain oracle-expressible. Per round: one pass computing
-    each point's min dist² to the current centers (JVM fold against
-    centroid literals, no shuffle) + one TakeOrdered of the batch.
+    each point's min dist² to the current centers (seqdiffsq kernel
+    against the driver's center list, no shuffle) + one TakeOrdered of
+    the batch.
     Centers are k quantized vectors in pick order (seed point first)."""
     first = qdf.orderBy("vec_id").limit(1).collect()
     centers = [[float(x) for x in r["q"]] for r in first]
@@ -231,8 +204,8 @@ def kmeans_oracle_sql(n_centroids: int = 8, n_iter: int = 2, dims: int = 64,
   from {table})"""]
     if init == "kcenter":
         # batched farthest-first: quantized ints are exact doubles, so
-        # the p.q/c.q double subtraction equals Spark's q-vs-centroid-
-        # literal fold bit-for-bit
+        # the p.q/c.q double subtraction equals Spark's q-vs-center
+        # seqdiffsq fold bit-for-bit
         dsq_i = (f"list_reduce(list_prepend(0.0::DOUBLE, list_transform("
                  f"range(1, {dims + 1}), i -> (p.q[i]::DOUBLE - c.q[i]::DOUBLE)"
                  f" * (p.q[i]::DOUBLE - c.q[i]::DOUBLE))), (a, x) -> a + x)")

@@ -7,7 +7,7 @@ Unlike the random-projections family (stateless — pandas UDF suffices),
 these two LEARN data-dependent cut-off points via a distributed sort +
 order-statistic pick (entropy_based.cpp:56-122, mixed_hash_functions.cpp:
 110-180 — the reference's odd-even MPI sort, our A7 analog as a
-window-ranked shuffle). Everything here is JVM-side built-ins:
+window-ranked shuffle). Both are JVM-side built-ins:
 
 - projections: sequential-fold dot products (``aggregate(zip_with(..))``)
   whose FP summation order matches the reference's scalar loop, the numpy
@@ -17,6 +17,10 @@ window-ranked shuffle). Everything here is JVM-side built-ins:
   arithmetic (hash_combine.hpp:23-32 — wrap == mask because every
   intermediate fits in 63 bits);
 - cut-offs: exact distributed order statistics at the reference's indices.
+
+The stateless chains here (random-projection buckets, hyperplane sign
+bits, text SimHash) have exactly one implementation each: an
+Arrow-batched numpy kernel on hashing.seqdot and the u32 hash_combine.
 
 Each function has a DuckDB-SQL generator so the driver's oracle gate can
 hash-compare the full chain (the pool/selection literals are re-derived
@@ -292,91 +296,48 @@ from vals v join cuts c on v.t = c.t"""
 
 
 # --------------------------------------------------------------------------- #
-# F3: random projections as a pure-JVM plan (driver-oracle variant)
+# F3: random projections (Arrow kernel) + DuckDB oracle
 # --------------------------------------------------------------------------- #
-
-def rp_funcs_df(spark, cfg: LshConfig, dims: int):
-    """Broadcastable (t, j, coeffs, bias) table re-derived from the seed —
-    the Spark analog of the reference's pool gen + MPI_Bcast
-    (random_projections.cpp:29-79)."""
-    funcs = H.random_projection_pool(cfg.seed, cfg.num_bands, cfg.rows_per_band,
-                                     cfg.signature_pool_size, dims, cfg.w)
-    return spark.createDataFrame(
-        [(t, j, [float(x) for x in funcs[t, j, :dims]], float(funcs[t, j, dims]))
-         for t in range(cfg.num_bands) for j in range(cfg.rows_per_band)],
-        "t int, j int, coeffs array<double>, bias double")
-
-
-def _affine01(col):
-    """The FIXED affine map into the reference's [0,1] input domain
-    (generate_data.py:44-46) — batch-independent, so parallelism-invariant,
-    and identical double ops on Spark / DuckDB / NumPy."""
-    return F.transform(col, lambda x: F.least(
-        F.greatest((x + F.lit(1.0)) * F.lit(0.5), F.lit(0.0)), F.lit(1.0)))
-
 
 def rp_buckets_df(e: DataFrame, cfg: LshConfig,
                   id_col: str = "vec_id", vec_col: str = "v",
-                  dims: int | None = None, kernel: bool = True) -> DataFrame:
+                  dims: int | None = None) -> DataFrame:
     """Random-projections bucket assignment (random_projections.hpp:72-85
-    chain): fold-dot projections, floor-quantize, u32-wrap, hash_combine
-    fold from rows_per_band, mod bucket_modulus.
+    chain): fixed affine map into the reference's [0,1] input domain
+    (generate_data.py:44-46), fold-dot projections, floor-quantize,
+    u32-wrap, hash_combine fold from rows_per_band, mod bucket_modulus.
 
     Same chain as functions.hashing.random_projection_buckets but with the
-    SEQUENTIAL FP summation order (hashing.seqdot / DuckDB list_reduce) so
-    the driver's DuckDB oracle (rp_oracle_sql) hash-matches bit-exactly.
-
-    ``kernel=True`` (default) runs the chain as ONE Arrow-batched numpy
-    kernel per batch (hashing.random_projection_buckets_seq — seqdot
-    projections + the u32 hash_combine twin, every op bit-identical to
-    the JVM fold plan); ``kernel=False`` keeps the pure-JVM built-ins
-    plan (the oracle/parity mode, pinned equal in
-    tests/test_parity_hash.py)."""
-    spark = e.sparkSession
+    SEQUENTIAL FP summation order, run as ONE Arrow-batched numpy kernel
+    per batch (hashing.random_projection_buckets_seq — seqdot projections
+    + the u32 hash_combine), so the DuckDB oracle (rp_oracle_sql,
+    list_reduce fold) hash-matches bit-exactly; the numpy recomputation
+    in tests/test_parity_hash.py pins the same chain in pytest."""
     if dims is None:  # a probe here would run a hidden Spark job per
         # pipeline construction; require the caller to state the width
         raise ValueError(
             "dims is required: pass the embedding width explicitly "
             "(e.g. dims=64 for the testdata embeddings table)")
-    if kernel:
-        funcs = H.random_projection_pool(
-            cfg.seed, cfg.num_bands, cfg.rows_per_band,
-            cfg.signature_pool_size, dims, cfg.w)
-        w, modulus = float(cfg.w), cfg.bucket_modulus
+    funcs = H.random_projection_pool(
+        cfg.seed, cfg.num_bands, cfg.rows_per_band,
+        cfg.signature_pool_size, dims, cfg.w)
+    w, modulus = float(cfg.w), cfg.bucket_modulus
 
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def rp_udf(vs: pd.Series) -> pd.Series:
-            V = np.asarray(vs.tolist(), dtype=np.float64)
-            if len(V) == 0:
-                return pd.Series([], dtype=object)
-            V01 = np.minimum(np.maximum((V + 1.0) * 0.5, 0.0), 1.0)
-            return pd.Series(
-                H.random_projection_buckets_seq(V01, funcs, w,
-                                                modulus).tolist())
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def rp_udf(vs: pd.Series) -> pd.Series:
+        V = np.asarray(vs.tolist(), dtype=np.float64)
+        if len(V) == 0:
+            return pd.Series([], dtype=object)
+        V01 = np.minimum(np.maximum((V + 1.0) * 0.5, 0.0), 1.0)
+        return pd.Series(
+            H.random_projection_buckets_seq(V01, funcs, w,
+                                            modulus).tolist())
 
-        return (e.select(F.col(id_col).alias("vec_id"),
-                         rp_udf(F.col(vec_col).cast("array<double>"))
-                         .alias("bk"))
-                .select("vec_id",
-                        F.posexplode("bk").alias("band_id", "bucket")))
-    src = e.select(F.col(id_col).alias("vec_id"),
-                   _affine01(F.col(vec_col).cast("array<double>")).alias("v"))
-    funcs_df = rp_funcs_df(spark, cfg, dims)
-    # h = a.x + b >= 0 (|N| coeffs, [0,1] data, b in [0,w)) so floor ==
-    # the C++ float->uint truncation; mask == u32 wrap.
-    q = (src.crossJoin(F.broadcast(funcs_df))
-         .select("vec_id", "t", "j",
-                 F.floor((_fold_dot(F.col("v"), F.col("coeffs"), F.lit(0.0))
-                          + F.col("bias")) / F.lit(float(cfg.w)))
-                 .cast("long").bitwiseAND(F.lit(_MASK)).alias("q")))
-    folded = (q.groupBy("vec_id", "t")
-              .agg(F.transform(F.array_sort(F.collect_list(F.struct("j", "q"))),
-                               lambda s: s["q"]).alias("ql")))
-    bucket = F.pmod(
-        F.aggregate(F.col("ql"), F.lit(cfg.rows_per_band).cast("long"), _hc_col),
-        F.lit(cfg.bucket_modulus))
-    return folded.select("vec_id", F.col("t").cast("int").alias("band_id"),
-                         bucket.alias("bucket"))
+    return (e.select(F.col(id_col).alias("vec_id"),
+                     rp_udf(F.col(vec_col).cast("array<double>"))
+                     .alias("bk"))
+            .select("vec_id",
+                    F.posexplode("bk").alias("band_id", "bucket")))
 
 
 def _rp_bucket_ctes(cfg: LshConfig, dims: int,
@@ -452,74 +413,41 @@ from slots s left join r on r.q = s.vec_id and r.rank = s.rank"""
 
 
 # --------------------------------------------------------------------------- #
-# Hyperplane (Charikar sign-bit) tables as a pure-JVM plan + DuckDB oracle
+# Hyperplane (Charikar sign-bit) tables (Arrow kernel) + DuckDB oracle
 # --------------------------------------------------------------------------- #
-
-def hyperplane_funcs_df(spark, n_tables: int, bits: int, seed: int, dims: int):
-    """(t, j, wt=2^j, coeffs) for the seeded Gaussian hyperplanes; plane
-    p = t*bits + j (row-major, matching embedding.hyperplane_bands)."""
-    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
-        hyperplane_planes)
-
-    planes = hyperplane_planes(seed, n_tables * bits, dims)
-    return spark.createDataFrame(
-        [(p // bits, p % bits, 1 << (p % bits),
-          [float(x) for x in planes[p]])
-         for p in range(n_tables * bits)],
-        "t int, j int, wt long, coeffs array<double>")
-
 
 def hyperplane_buckets_df(e: DataFrame, n_tables: int, bits: int, seed: int,
                           id_col: str = "vec_id", vec_col: str = "v",
-                          dims: int | None = None,
-                          kernel: bool = True) -> DataFrame:
+                          dims: int | None = None) -> DataFrame:
     """(id, vec) -> (image_id, band_id, bucket): sign-bit buckets with
-    SEQUENTIAL fold-dot projections — bit-identical to the DuckDB oracle
-    (ann_oracle_sql), drop-in for embedding.hyperplane_bands.
-
-    ``kernel=True`` (default) computes the projections as one seqdot
-    Arrow kernel per batch (same doubles, same signs — hashing.seqdot is
-    the bit-identical fold twin); ``kernel=False`` keeps the pure-JVM
-    fold plan (parity mode, pinned equal in tests/test_parity_hash.py)."""
-    spark = e.sparkSession
+    SEQUENTIAL fold-dot projections (one hashing.seqdot Arrow kernel per
+    batch) — bit-identical to the DuckDB oracle (ann_oracle_sql),
+    drop-in for embedding.hyperplane_bands."""
     if dims is None:  # a probe here would run a hidden Spark job per
         # pipeline construction; require the caller to state the width
         raise ValueError(
             "dims is required: pass the embedding width explicitly "
             "(e.g. dims=64 for the testdata embeddings table)")
-    if kernel:
-        from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
-            hyperplane_planes)
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
+        hyperplane_planes)
 
-        planes = hyperplane_planes(seed, n_tables * bits, dims)
-        weights = (1 << np.arange(bits)).astype(np.int64)
+    planes = hyperplane_planes(seed, n_tables * bits, dims)
+    weights = (1 << np.arange(bits)).astype(np.int64)
 
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def hp_udf(vs: pd.Series) -> pd.Series:
-            V = np.asarray(vs.tolist(), dtype=np.float64)
-            if len(V) == 0:
-                return pd.Series([], dtype=object)
-            signs = H.seqdot(V, planes) > 0  # (n, n_tables*bits)
-            b = signs.reshape(len(V), n_tables, bits) @ weights
-            return pd.Series(b.tolist())
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def hp_udf(vs: pd.Series) -> pd.Series:
+        V = np.asarray(vs.tolist(), dtype=np.float64)
+        if len(V) == 0:
+            return pd.Series([], dtype=object)
+        signs = H.seqdot(V, planes) > 0  # (n, n_tables*bits)
+        b = signs.reshape(len(V), n_tables, bits) @ weights
+        return pd.Series(b.tolist())
 
-        return (e.select(F.col(id_col).alias("image_id"),
-                         hp_udf(F.col(vec_col).cast("array<double>"))
-                         .alias("bk"))
-                .select("image_id",
-                        F.posexplode("bk").alias("band_id", "bucket")))
-    src = e.select(F.col(id_col).alias("image_id"),
-                   F.col(vec_col).cast("array<double>").alias("v"))
-    funcs_df = hyperplane_funcs_df(spark, n_tables, bits, seed, dims)
-    bit = (src.crossJoin(F.broadcast(funcs_df))
-           .select("image_id", "t",
-                   F.when(_fold_dot(F.col("v"), F.col("coeffs"),
-                                    F.lit(0.0)) > 0, F.col("wt"))
-                   .otherwise(F.lit(0).cast("long")).alias("bv")))
-    return (bit.groupBy("image_id", "t")
-            .agg(F.sum("bv").alias("bucket"))
-            .select("image_id", F.col("t").cast("int").alias("band_id"),
-                    "bucket"))
+    return (e.select(F.col(id_col).alias("image_id"),
+                     hp_udf(F.col(vec_col).cast("array<double>"))
+                     .alias("bk"))
+            .select("image_id",
+                    F.posexplode("bk").alias("band_id", "bucket")))
 
 
 def ann_oracle_sql(n_tables: int, bits: int, seed: int, dims: int, k: int,
@@ -580,7 +508,8 @@ select vec_id, neighbor_id, rank, sim from (
 
 def _sql_fold(a: str, b: str, dims: int) -> str:
     """Sequential-fold dot product of two DOUBLE[] expressions — the same
-    FP order as Spark's aggregate(zip_with(..)) in embedding.dot_col."""
+    FP order as hashing.seqdot, the Spark-side kernel (and as
+    embedding.dot_col's aggregate(zip_with(..)) fold)."""
     return (f"list_reduce(list_prepend(0.0::DOUBLE, list_transform("
             f"range(1, {dims + 1}), i -> {a}[i] * {b}[i])), "
             f"(acc, x) -> acc + x)")
@@ -716,7 +645,7 @@ select vec_id, neighbor_id, rank, sim from (
 def _sql_fold_diff(a: str, b: str, n: int, off: str = "0") -> str:
     """Sequential-fold squared L2 distance of two DOUBLE[] expressions
     over ``n`` dims starting after offset ``off`` (a SQL expression) —
-    same FP order as Spark's embedding.diff_sq_col."""
+    same FP order as hashing.seqdiffsq, the Spark-side kernel."""
     return (f"list_reduce(list_prepend(0.0::DOUBLE, list_transform("
             f"range(1, {n + 1}), i -> ({a}[{off}+i] - {b}[{off}+i]) * "
             f"({a}[{off}+i] - {b}[{off}+i]))), (acc, x) -> acc + x)")
@@ -817,78 +746,40 @@ select q as vec_id, x as neighbor_id, rank, adc_dist from (
 
 
 # --------------------------------------------------------------------------- #
-# Text SimHash — cross-engine chain (JVM columns == DuckDB SQL, bit-exact)
+# Text SimHash — Arrow kernel == DuckDB SQL, bit-exact
 # --------------------------------------------------------------------------- #
 
-_POW32 = [1 << b for b in range(32)]
-
-
-def _word_fp32(words_col):
-    """32-bit SimHash fingerprint (bigint Column) of an array<long> of
-    32-bit words: every word votes +1/-1 per bit, bit set iff the vote sum
-    is strictly positive (hashing.simhash64's ``sums > 0`` rule). Pure
-    JVM: getbit + zip_with fold, whole-stage-codegen friendly."""
-    votes = F.aggregate(
-        words_col,
-        F.array_repeat(F.lit(0), 32),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.transform(F.sequence(F.lit(0), F.lit(31)),
-                        lambda b: F.getbit(x, b) * 2 - 1),
-            lambda a, v: a + v))
-    weighted = F.zip_with(
-        votes, F.array(*[F.lit(p).cast("long") for p in _POW32]),
-        lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long")))
-    return F.aggregate(weighted, F.lit(0).cast("long"), lambda a, x: a + x)
-
-
-def doc_simhash_col(text_col, k: int = 3, kernel: bool = True):
+def doc_simhash_col(text_col, k: int = 3):
     """64-bit text SimHash as a Column, reproducible in DuckDB SQL
     (doc_simhash_oracle_sql) for the driver's value-hash gate.
 
-    Chain: distinct word-k-shingles (signatures.shingles_col) → per
-    shingle a uint32 hash_combine fold over the character code points
-    (hash_combine.hpp:23-32 constants; seed = k, mirroring the reference's
-    seeding of the u64 chain with the shingle size) → two decorrelated
-    32-bit words hc(h,1) / hc(h,2) → independent 32-bit bit-vote
-    fingerprints → hi<<32 | lo. Shingle ORDER never matters (votes are
-    sums), so Spark's array_distinct and DuckDB's list_distinct agree.
+    Chain: distinct word-k-shingles (the signatures._JAVA_WS tokenizer,
+    == signatures.shingles_col) → per shingle a uint32 hash_combine fold
+    over the character code points (hash_combine.hpp:23-32 constants;
+    seed = k, mirroring the reference's seeding of the u64 chain with
+    the shingle size) → two decorrelated 32-bit words hc(h,1) / hc(h,2)
+    → independent 32-bit bit-vote fingerprints → hi<<32 | lo. Shingle
+    ORDER never matters (votes are sums), so any distinct-shingle order
+    agrees with DuckDB's list_distinct.
 
-    ``kernel=True`` (default) runs the whole chain as one Arrow-batched
-    numpy kernel per batch (``_doc_simhash_batch`` — the same tokenizer/
-    hash_combine twins the blob-scan path uses, so every hash is
-    bit-identical); ``kernel=False`` keeps the pure-JVM expression chain
-    (the parity mode, pinned equal in tests/test_doc_simhash.py).
-    BMP-character contract either way: the JVM chain's split("")/ascii
-    walks UTF-16 code units, and the kernel mirrors that by hashing
-    UTF-16-LE code units."""
-    if kernel:
-        @F.pandas_udf(T.LongType())
-        def sh_udf(texts: pd.Series) -> pd.Series:
-            return _doc_simhash_batch(texts, k)
+    Runs as one Arrow-batched numpy kernel per batch
+    (``_doc_simhash_batch``, pinned against the scalar python oracle in
+    tests/test_doc_simhash.py). BMP-character contract: DuckDB's ord()
+    and the kernel's UTF-16-LE code units agree on BMP text."""
+    @F.pandas_udf(T.LongType())
+    def sh_udf(texts: pd.Series) -> pd.Series:
+        return _doc_simhash_batch(texts, k)
 
-        return sh_udf(text_col)
-    from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
-        shingles_col)
-
-    h32 = F.transform(
-        shingles_col(text_col, k),
-        lambda sg: F.aggregate(
-            F.transform(F.split(sg, ""), lambda c: F.ascii(c)),
-            F.lit(k).cast("long"), _hc_col))
-    his = F.transform(h32, lambda x: _hc_col(x, F.lit(1)))
-    los = F.transform(h32, lambda x: _hc_col(x, F.lit(2)))
-    return F.shiftleft(_word_fp32(his), 32).bitwiseOR(_word_fp32(los))
+    return sh_udf(text_col)
 
 
 def _doc_simhash_batch(texts: pd.Series, k: int) -> pd.Series:
-    """Vectorized bit-identical twin of the JVM doc-simhash chain: the
-    shingle grams come from the exact Python tokenizer twin
-    (signatures._JAVA_WS split semantics), the per-shingle character fold
-    is hash_combine_u32 over UTF-16-LE code units (== split("")/ascii on
-    BMP text), and the two 32-bit bit-vote fingerprints are computed with
-    one reduceat per word. NULL text -> NULL simhash (the JVM chain's
-    null propagation); zero shingles -> 0 (all votes zero)."""
+    """The doc-simhash chain over one Arrow batch: the shingle grams come
+    from the exact Python tokenizer twin (signatures._JAVA_WS split
+    semantics), the per-shingle character fold is hash_combine_u32 over
+    UTF-16-LE code units (== DuckDB ord() on BMP text), and the two
+    32-bit bit-vote fingerprints are computed with one reduceat per word.
+    NULL text -> NULL simhash; zero shingles -> 0 (all votes zero)."""
     from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
         _JAVA_WS)
 
@@ -946,7 +837,9 @@ def _doc_simhash_batch(texts: pd.Series, k: int) -> pd.Series:
 
 
 def _sql_fp32(col: str) -> str:
-    """DuckDB fingerprint of a BIGINT[] of 32-bit words == _word_fp32."""
+    """DuckDB 32-bit bit-vote fingerprint of a BIGINT[] of 32-bit words:
+    bit set iff the vote sum is strictly positive (hashing.simhash64's
+    ``sums > 0`` rule, == _doc_simhash_batch's per-word votes)."""
     vote = (f"coalesce(list_sum(list_transform({col}, "
             f"x -> case when ((x >> b) & 1) = 1 then 1 else -1 end)), 0)")
     return (f"coalesce(list_sum(list_transform(range(0, 32), "

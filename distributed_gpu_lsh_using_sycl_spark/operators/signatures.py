@@ -3,13 +3,11 @@
 The reference's ``fit`` builds per-table CSR hash buckets on the GPU
 (``hash_tables.hpp:141-210``); our analog computes, per row,
 
-- distinct caption shingle CRC-32s — **entirely JVM-side** with built-in
-  expressions (split / transform / crc32), so Catalyst keeps the hot path
-  in whole-stage codegen and only the MinHash min-reduction crosses into
-  an Arrow-batched pandas UDF;
-- the MinHash signature (num_bands * rows_per_band rows) and per-band
-  bucket ids via the reference's hash_combine chain
-  (random_projections.hpp:72-85 analog) — one vectorized pandas UDF;
+- distinct caption shingle CRC-32s (``shingle_crcs_py``, the exact
+  Python twin of the JVM built-in chain ``shingle_crc_col``), the MinHash
+  signature (num_bands * rows_per_band rows) and per-band bucket ids via
+  the reference's hash_combine chain (random_projections.hpp:72-85
+  analog) — all in ONE Arrow-batched pandas UDF;
 - the 64-bit image SimHash from the stored phash + decoded-pixel block
   features — one vectorized pandas UDF over (bytes, phash).
 
@@ -33,7 +31,8 @@ from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 
 
 # --------------------------------------------------------------------------- #
-# JVM-side shingling (whole-stage-codegen'd; no Python in this path)
+# JVM-side shingling (the built-in reference chain; shingle_crcs_py is
+# pinned to it)
 # --------------------------------------------------------------------------- #
 
 def tokens_col(text: Column) -> Column:
@@ -110,33 +109,8 @@ def minhash_buckets_batch(crc_arrays: list[np.ndarray], cfg: LshConfig,
 
 
 # --------------------------------------------------------------------------- #
-# MinHash + band buckets (vectorized pandas UDF)
+# Text signature: shingles + MinHash + band buckets (one pandas UDF)
 # --------------------------------------------------------------------------- #
-
-_MINHASH_SCHEMA = T.StructType([
-    T.StructField("minhash", T.ArrayType(T.LongType()), False),
-    T.StructField("buckets", T.ArrayType(T.LongType()), True),
-])
-
-
-def make_minhash_udf(cfg: LshConfig):
-    """Series(array<long> shingle crcs) -> struct(minhash, buckets).
-
-    Rows with no shingles get buckets = NULL so they never enter a band
-    bucket (the reference's dummy-point padding semantics are explicitly
-    NOT reproduced — SURVEY §1.5; empty docs become singleton clusters).
-    """
-    a, b = H.minhash_params(cfg.seed, cfg.signature_len, cfg.signature_pool_size)
-
-    @F.pandas_udf(_MINHASH_SCHEMA)
-    def minhash_udf(crcs: pd.Series) -> pd.DataFrame:
-        arrays = [np.asarray(x, dtype=np.int64).view(np.uint64) if x is not None and len(x)
-                  else np.zeros(0, dtype=np.uint64) for x in crcs]
-        sig_list, bucket_list = minhash_buckets_batch(arrays, cfg, a, b)
-        return pd.DataFrame({"minhash": sig_list, "buckets": bucket_list})
-
-    return minhash_udf
-
 
 _TEXT_SIG_SCHEMA = T.StructType([
     T.StructField("shingles", T.ArrayType(T.LongType()), True),
@@ -237,21 +211,18 @@ def make_simhash_udf(cfg: LshConfig):
 
 def compute_signatures(images: DataFrame, cfg: LshConfig,
                        id_col: str = "image_id", text_col: str = "caption",
-                       with_image: bool = True,
-                       python_shingles: bool = True) -> DataFrame:
+                       with_image: bool = True) -> DataFrame:
     """images -> signatures(image_id, shingles, minhash, buckets, simhash, phash).
 
     Column pruning note: only (id, caption[, bytes, phash]) are read —
     with parquet/Iceberg the scan never materializes ``bytes`` unless the
     image path is on (check ReadSchema in .explain).
 
-    ``python_shingles=True`` (default) computes shingle CRCs inside the
-    minhash UDF via ``shingle_crcs_py`` — ONE Arrow hop for the whole
-    text chain instead of the interpreted JVM higher-order shingle
-    expressions feeding a second hop; bit-identical output (the Python
-    twin's parity with the JVM chain is pinned in tests/test_blob_scan.py
-    and tests/test_banding.py). ``python_shingles=False`` keeps the
-    pure-JVM shingle chain (the parity mode).
+    The whole text chain is ONE Arrow hop (``make_text_signature_udf``):
+    shingle CRCs via ``shingle_crcs_py`` (pinned against the JVM
+    ``shingle_crc_col`` in tests/test_blob_scan.py) feeding the shared
+    minhash batch kernel. tests/test_banding.py recomputes the output
+    from the JVM shingle chain plus local numpy, NULL captions included.
     """
     # Tiny inputs (one small parquet file) arrive as a single partition,
     # which would serialize the whole UDF chain onto one core. Widen ONLY
@@ -263,33 +234,18 @@ def compute_signatures(images: DataFrame, cfg: LshConfig,
         target = images.sparkSession.sparkContext.defaultParallelism
         if images.rdd.getNumPartitions() < target:
             images = images.repartition(target)
-    if python_shingles:
-        sig_udf = make_text_signature_udf(cfg)
-        out = (
-            images
-            .withColumn("sg", sig_udf(F.col(text_col)))
-            .select(
-                F.col(id_col).alias("image_id"),
-                F.col("sg.shingles").alias("shingles"),
-                F.col("sg.minhash").alias("minhash"),
-                F.col("sg.buckets").alias("buckets"),
-                *([F.col("phash"), F.col("bytes")] if with_image else []),
-            )
+    sig_udf = make_text_signature_udf(cfg)
+    out = (
+        images
+        .withColumn("sg", sig_udf(F.col(text_col)))
+        .select(
+            F.col(id_col).alias("image_id"),
+            F.col("sg.shingles").alias("shingles"),
+            F.col("sg.minhash").alias("minhash"),
+            F.col("sg.buckets").alias("buckets"),
+            *([F.col("phash"), F.col("bytes")] if with_image else []),
         )
-    else:
-        minhash_udf = make_minhash_udf(cfg)
-        out = (
-            images
-            .withColumn("shingles", shingle_crc_col(F.col(text_col), cfg.shingle_size))
-            .withColumn("mh", minhash_udf(F.col("shingles")))
-            .select(
-                F.col(id_col).alias("image_id"),
-                "shingles",
-                F.col("mh.minhash").alias("minhash"),
-                F.col("mh.buckets").alias("buckets"),
-                *([F.col("phash"), F.col("bytes")] if with_image else []),
-            )
-        )
+    )
     if with_image:
         simhash_udf = make_simhash_udf(cfg)
         out = (out.withColumn("simhash", simhash_udf(F.col("bytes"), F.col("phash")))

@@ -93,8 +93,8 @@ def _compute_batch(t, cfg: LshConfig, a: np.ndarray, b: np.ndarray,
     """Signature frame for one in-memory Arrow batch/table slice."""
     caps = t.column(text_col).to_pylist()
     k = cfg.shingle_size
-    # NULL caption: the JVM chain yields shingles = NULL (not []) and the
-    # minhash UDF sees an empty set — mirror both exactly
+    # NULL caption: shingles = NULL (not []) and minhash over an empty
+    # set — mirror compute_signatures' text UDF exactly
     crcs = [np.zeros(0, dtype=np.uint64) if c is None
             else np.asarray(shingle_crcs_py(c, k), dtype=np.uint64)
             for c in caps]

@@ -138,26 +138,38 @@ def test_cap_enforced_when_cap_below_hot_threshold(spark):
 
 
 def test_compute_signatures_python_shingles_matches_jvm(spark):
-    """python_shingles=True (one-hop Python twin) == python_shingles=False
-    (pure-JVM shingle chain) bit-for-bit, including NULL/empty/short
-    captions — the twin is the default execution mode, the JVM chain the
-    parity mode."""
-    from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+    """compute_signatures (one Arrow hop: Python shingles + MinHash) ==
+    the JVM shingle chain (shingle_crc_col) followed by the shared
+    minhash_buckets_batch on local numpy, including NULL/empty/short/
+    tab-padded/unicode captions and at the default and a 4 x 2 band
+    config. NULL caption -> shingles NULL, empty-set signature, buckets
+    NULL."""
+    from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
     from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
-        compute_signatures)
+        compute_signatures, minhash_buckets_batch, shingle_crc_col)
 
-    cfg = LshConfig(num_bands=4, rows_per_band=2)
     rows = [(0, "the quick brown fox jumps over the lazy dog"),
             (1, None), (2, ""), (3, "one"), (4, "two words"),
             (5, "  padded   whitespace \t tabs "),
             (6, "the quick brown fox jumps over the lazy dog"),
             (7, "caffé déjà vu ünicode words here and there")]
     df = spark.createDataFrame(rows, "image_id long, caption string")
-    a = sorted(map(tuple, compute_signatures(
-        df, cfg, with_image=False, python_shingles=False).collect()))
-    b = sorted(map(tuple, compute_signatures(
-        df, cfg, with_image=False, python_shingles=True).collect()))
-    assert a == b
+    for cfg in (LshConfig(), LshConfig(num_bands=4, rows_per_band=2)):
+        jvm = dict(df.select("image_id", shingle_crc_col(
+            F.col("caption"), cfg.shingle_size).alias("crcs")).collect())
+        assert jvm[1] is None
+        ids = sorted(jvm)
+        a, b = H.minhash_params(cfg.seed, cfg.signature_len,
+                                cfg.signature_pool_size)
+        sigs, buckets = minhash_buckets_batch(
+            [np.asarray(jvm[i] or [], dtype=np.uint64) for i in ids],
+            cfg, a, b)
+        want = {i: (jvm[i], sig, bk)
+                for i, sig, bk in zip(ids, sigs, buckets)}
+        got = {r.image_id: (r.shingles, list(r.minhash), r.buckets)
+               for r in compute_signatures(df, cfg,
+                                           with_image=False).collect()}
+        assert got == want, cfg
 
 
 def test_candidate_pairs_fast_path_equals_salted(spark):

@@ -20,8 +20,10 @@ CFG = LshConfig()
 
 
 # adversarial tokenization inputs: Java \s is ASCII-only, F.trim strips
-# 0x20 only, NBSP/thin-space must NOT split, casing must fold identically
+# 0x20 only, NBSP/thin-space must NOT split, casing must fold identically;
+# NULL must stay NULL
 _EDGE_CAPTIONS = [
+    None,
     "  Hello   World  ",
     "\tTab\nNewline\x0bVt\x0cFf\rCr end",
     "one",
@@ -41,6 +43,9 @@ def test_shingle_crcs_py_matches_jvm(spark):
         "caption", shingle_crc_col(F.col("caption"), CFG.shingle_size).alias("crcs")
     ).collect()
     for row in jvm:
+        if row.caption is None:
+            assert row.crcs is None
+            continue
         assert shingle_crcs_py(row.caption, CFG.shingle_size) == row.crcs, row.caption
 
 
@@ -85,9 +90,9 @@ def test_scan_signatures_no_image_parity(spark, fixture_parquet):
 
 
 def test_scan_signatures_null_and_edge_captions(spark, tmp_path):
-    """NULL captions must mirror the JVM chain exactly: shingles = NULL
-    (not []), minhash = empty-set signature, buckets = NULL; int64 ids
-    keep their type through the inferred schema."""
+    """NULL captions: shingles = NULL (not []), minhash = empty-set
+    signature, buckets = NULL on both paths; int64 ids keep their type
+    through the inferred schema."""
     path = str(tmp_path / "edge.parquet")
     rows = [(i, c) for i, c in enumerate([None, "", "   ", "one",
                                           "a b c d", "  Mixed   CASE  "])]

@@ -32,6 +32,18 @@ def _df(spark, pts):
     return spark.createDataFrame(rows, "vec_id long, v array<double>")
 
 
+def _duck(pts):
+    """DuckDB connection holding the same rows as ``_df`` as table
+    ``emb(vec_id, v)``, for running the ``*_oracle_sql`` checks in pytest."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register("emb", pd.DataFrame({"vec_id": np.arange(len(pts)),
+                                      "v": pts.tolist()}))
+    return con
+
+
 @pytest.fixture(scope="module")
 def pts():
     return _blobs()
@@ -99,12 +111,14 @@ def test_knn_tiled_exact(spark, pts):
     assert got == truth
 
 
-def _ivfpq_numpy(pts, k=5, n_centroids=16, nprobe=4, n_sub=8, ks=16):
+def _ivfpq_numpy(pts, k=5, n_centroids=16, nprobe=4, n_sub=8, ks=16,
+                 cents=None):
     """Independent numpy mirror of embedding.ivfpq_topk's exact
     semantics: sequential-fold sub-distances (dim loop, the same FP order
-    as Spark's aggregate fold and DuckDB's list_reduce), fixed-point
-    micros, argmin-with-rank-tie-break codes, integer ADC sums,
-    (adc asc, id asc) ranking."""
+    as hashing.seqdiffsq and DuckDB's list_reduce), fixed-point micros,
+    argmin-with-rank-tie-break codes, integer ADC sums, (adc asc, id asc)
+    ranking. ``cents``: rank-ordered quantizer rows; default the
+    smallest-id vectors."""
     n, dims = pts.shape
     sub = dims // n_sub
 
@@ -123,7 +137,8 @@ def _ivfpq_numpy(pts, k=5, n_centroids=16, nprobe=4, n_sub=8, ks=16):
             acc = acc + diff * diff
         return acc
 
-    cents = pts[:max(n_centroids, ks)]  # vec_ids are 0..n-1 -> smallest ids
+    if cents is None:  # vec_ids are 0..n-1 -> smallest ids
+        cents = pts[:max(n_centroids, ks)]
     # coarse cells
     cd = seq_sq_full(pts[:, None, :], cents[None, :n_centroids, :])
     ckey = (np.round(cd * 1e6).astype(np.int64) * n_centroids
@@ -154,26 +169,33 @@ def test_ivfpq_matches_numpy_mirror(spark, pts):
     same deterministic semantics, exactly — on clustered data where the
     probe sets and code collisions are non-trivial. (The DuckDB oracle
     re-checks the identical structure at the driver; this pins it in
-    pytest without an engine in common.)"""
+    pytest without an engine in common.) Covers the default smallest-id
+    quantizer and the injected kcenter_cents quantizer/codebook."""
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
-        ivfpq_topk)
+        ivfpq_topk, kcenter_cents)
 
-    out = ivfpq_topk(_df(spark, pts), k=5, dims=pts.shape[1]).collect()
-    got = {(r["vec_id"], r["neighbor_id"], r["rank"],
-            round(r["adc_dist"], 6)) for r in out}
-    want = _ivfpq_numpy(pts)
-    assert got == want
-    # structure sanity: every query that has candidates emits rows, and
-    # ADC actually discriminates (not all-zero distances)
-    assert len({q for q, *_ in got}) >= len(pts) * 0.9
-    assert any(d > 0 for *_, d in got)
+    df = _df(spark, pts)
+    kc = kcenter_cents(df, 16, rounds=2)
+    kc_rows = np.asarray([r["cv"] for r in
+                          sorted(kc.collect(), key=lambda r: r["cent_id"])])
+    for cents, mirror_cents in ((None, None), (kc, kc_rows)):
+        out = ivfpq_topk(df, k=5, dims=pts.shape[1], cents=cents).collect()
+        got = {(r["vec_id"], r["neighbor_id"], r["rank"],
+                round(r["adc_dist"], 6)) for r in out}
+        want = _ivfpq_numpy(pts, cents=mirror_cents)
+        assert got == want
+        # structure sanity: every query that has candidates emits rows,
+        # and ADC actually discriminates (not all-zero distances)
+        assert len({q for q, *_ in got}) >= len(pts) * 0.9
+        assert any(d > 0 for *_, d in got)
 
 
 def test_ivf_topk_recall(spark, pts):
     """IVF-flat top-k: every returned neighbor's sim must be exact, and
     recall vs brute truth ≥ 0.7 on clustered data (nprobe=4 of 16 cells;
-    the structure is fully checked against DuckDB by the driver oracle —
-    this pins the approximation quality floor)."""
+    the structure is checked against DuckDB in
+    test_ivf_kernel_matches_fold — this pins the approximation quality
+    floor)."""
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import ivf_topk
 
     k = 5
@@ -286,28 +308,32 @@ def test_kcenter_codebook_artifact_cache(spark, pts, tmp_path):
 
 
 def test_ivf_kernel_matches_fold(spark, pts):
-    """The Arrow kernel mode (seqdot/seqdiffsq + cogrouped per-cell
-    re-rank/ADC) is bit-identical to the sequential-fold JVM plan — the
-    parity/oracle mode — for IVF-flat and IVF-PQ, including the injected
-    kcenter quantizer."""
+    """ivf_topk (seqdot/seqdiffsq + cogrouped per-cell Arrow re-rank)
+    equals the DuckDB sequential-fold plan over the same rows exactly,
+    for the default smallest-id quantizer (parity_hash.ivf_oracle_sql)
+    and the injected kcenter quantizer (ivf_kcenter_oracle_sql, which
+    recomputes the farthest-first init too). The interpreted-JVM fold
+    plan this test once compared against is gone; IVF-PQ with both
+    quantizers is pinned in test_ivfpq_matches_numpy_mirror."""
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
-        ivf_topk, ivfpq_topk, kcenter_cents)
+        ivf_topk, kcenter_cents)
+    from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
+        ivf_kcenter_oracle_sql, ivf_oracle_sql)
 
     e = _df(spark, pts)
+    con = _duck(pts)
     dims = pts.shape[1]
-    for cents in (None, kcenter_cents(e, 16, rounds=2)):
-        a = sorted(tuple(r) for r in
-                   ivf_topk(e, cents=cents, kernel=False).collect())
-        b = sorted(tuple(r) for r in
-                   ivf_topk(e, cents=cents, kernel=True).collect())
-        assert a == b
-        a = sorted(tuple(r) for r in
-                   ivfpq_topk(e, dims=dims, cents=cents,
-                              kernel=False).collect())
-        b = sorted(tuple(r) for r in
-                   ivfpq_topk(e, dims=dims, cents=cents,
-                              kernel=True).collect())
-        assert a == b
+    for cents, sql in (
+            (None, ivf_oracle_sql(dims=dims, k=5, n_centroids=16, nprobe=4,
+                                  table="emb", vec_col="v")),
+            (kcenter_cents(e, 16, rounds=2),
+             ivf_kcenter_oracle_sql(dims=dims, k=5, n_centroids=16,
+                                    nprobe=4, rounds=2, table="emb",
+                                    vec_col="v"))):
+        got = {tuple(r) for r in ivf_topk(e, k=5, n_centroids=16, nprobe=4,
+                                          cents=cents).collect()}
+        assert got == set(con.execute(sql).fetchall())
+        assert len(got) > 0
 
 
 def test_neardup_guardrail_low_tau_falls_back(spark, pts):
@@ -346,17 +372,13 @@ def test_ivf_kernel_chunked_matches_unchunked(spark, pts, monkeypatch):
     from distributed_gpu_lsh_using_sycl_spark.operators import embedding
 
     e = _df(spark, pts)
-    base = sorted(tuple(r) for r in
-                  embedding.ivf_topk(e, kernel=True).collect())
+    base = sorted(tuple(r) for r in embedding.ivf_topk(e).collect())
     basepq = sorted(tuple(r) for r in
-                    embedding.ivfpq_topk(e, dims=pts.shape[1],
-                                         kernel=True).collect())
+                    embedding.ivfpq_topk(e, dims=pts.shape[1]).collect())
     monkeypatch.setattr(embedding, "CELL_CHUNK_ELEMS", 64)
     monkeypatch.setattr(embedding, "CELL_CHUNK_MIN_ROWS", 2)
-    small = sorted(tuple(r) for r in
-                   embedding.ivf_topk(e, kernel=True).collect())
+    small = sorted(tuple(r) for r in embedding.ivf_topk(e).collect())
     smallpq = sorted(tuple(r) for r in
-                     embedding.ivfpq_topk(e, dims=pts.shape[1],
-                                          kernel=True).collect())
+                     embedding.ivfpq_topk(e, dims=pts.shape[1]).collect())
     assert small == base
     assert smallpq == basepq

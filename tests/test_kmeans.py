@@ -92,23 +92,24 @@ def test_kcenter_init_and_converge_stop(spark):
 
 
 def test_assign_kernel_matches_fold(spark):
-    """_assign kernel mode (seqdiffsq Arrow twin) == the JVM fold plan
-    bit-for-bit, and the full kmeans_assign chain is unchanged."""
-    import numpy as np
-
-    from distributed_gpu_lsh_using_sycl_spark.operators.kmeans import (
-        _assign, _quantized, kmeans_assign)
-
+    """The seqdiffsq Arrow kernel behind _assign reproduces the DuckDB
+    sequential list_reduce fold exactly on Gaussian 300 x 16 points with
+    6 centroids, for the smallest-id and the kcenter init. The
+    interpreted-JVM fold this test once compared against is gone;
+    kmeans_oracle_sql is the independent reference."""
     rng = np.random.Generator(np.random.PCG64(5))
-    pts = rng.standard_normal((300, 16))
-    rows = [(i, [float(x) for x in pts[i]]) for i in range(len(pts))]
-    e = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    qdf = _quantized(e, "vec_id", "v")
-    cents = [[float(x) for x in r["q"]]
-             for r in qdf.orderBy("vec_id").limit(6).collect()]
-    a = sorted(map(tuple, _assign(qdf, cents, kernel=False).collect()))
-    b = sorted(map(tuple, _assign(qdf, cents, kernel=True).collect()))
-    assert a == b
-    full = sorted(map(tuple, kmeans_assign(
-        e, n_centroids=6, n_iter=4, init="kcenter").collect()))
-    assert len(full) == 300
+    pdf = pd.DataFrame({"vec_id": np.arange(300),
+                        "v": rng.standard_normal((300, 16)).tolist()})
+    con = duckdb.connect()
+    con.register("gauss", pdf)
+    e = spark.createDataFrame(pdf)
+    for n_iter, init in ((3, "smallest_ids"), (4, "kcenter")):
+        want = {r[0]: (r[1], r[2]) for r in con.execute(
+            kmeans_oracle_sql(n_centroids=6, n_iter=n_iter, dims=16,
+                              table="gauss", vec_col="v",
+                              init=init)).fetchall()}
+        got = {r["vec_id"]: (r["cluster"], r["dist"]) for r in
+               kmeans_assign(e, n_centroids=6, n_iter=n_iter,
+                             init=init).collect()}
+        assert len(got) == 300
+        assert got == want, init

@@ -102,16 +102,16 @@ def test_hash_combine_masked_bigint_matches_uint32(spark):
     assert got == [int(want[i]) for i in order]
 
 
-def test_rp_buckets_df_equals_seqdot_numpy(spark, pts):
-    """The JVM random-projections plan (rp_buckets_df) == the numpy chain
-    recomputed with SEQUENTIAL fold-dot (hashing.seqdot) — the FP order
-    the DuckDB oracle (rp_oracle_sql) also uses."""
+def _check_rp_buckets(spark, pts, cfg):
+    """rp_buckets_df == the numpy chain recomputed with SEQUENTIAL
+    fold-dot (hashing.seqdot) — the FP order the DuckDB oracle
+    (rp_oracle_sql) also uses."""
     from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
         _MASK, rp_buckets_df)
 
-    cfg = LshConfig(num_bands=4, rows_per_band=5, signature_pool_size=8)
     got = _collect_buckets(rp_buckets_df(_df(spark, pts), cfg,
                                           dims=pts.shape[1]))
+    assert len(got) == len(pts) * cfg.num_bands
 
     funcs = H.random_projection_pool(cfg.seed, cfg.num_bands, cfg.rows_per_band,
                                      cfg.signature_pool_size, pts.shape[1],
@@ -126,18 +126,17 @@ def test_rp_buckets_df_equals_seqdot_numpy(spark, pts):
             acc = H.hash_combine_u32(acc, q[:, j])
         want = acc % np.uint32(cfg.bucket_modulus)
         for i in range(len(pts)):
-            assert got[(i, t)] == int(want[i]), (i, t)
+            assert got[(i, t)] == int(want[i]), (cfg, i, t)
 
 
-def test_hyperplane_buckets_df_equals_seqdot_numpy(spark, pts):
-    """The JVM hyperplane plan (hyperplane_buckets_df) == numpy sign bits
-    under the identical sequential fold."""
+def _check_hyperplane_buckets(spark, pts, n_tables, bits, seed):
+    """hyperplane_buckets_df == numpy sign bits under the identical
+    sequential fold (hashing.seqdot)."""
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
         hyperplane_planes)
     from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
         hyperplane_buckets_df)
 
-    n_tables, bits, seed = 3, 5, 11
     planes = hyperplane_planes(seed, n_tables * bits, pts.shape[1])
     proj = H.seqdot(pts, planes)  # (n, n_tables*bits)
     signs = (proj > 0).reshape(len(pts), n_tables, bits)
@@ -146,9 +145,29 @@ def test_hyperplane_buckets_df_equals_seqdot_numpy(spark, pts):
     df = hyperplane_buckets_df(_df(spark, pts), n_tables, bits, seed,
                                dims=pts.shape[1])
     got = {(r["image_id"], r["band_id"]): r["bucket"] for r in df.collect()}
+    assert len(got) == len(pts) * n_tables
     for i in range(len(pts)):
         for t in range(n_tables):
-            assert got[(i, t)] == int(want[i, t]), (i, t)
+            assert got[(i, t)] == int(want[i, t]), (n_tables, bits, i, t)
+
+
+def test_rp_buckets_df_equals_seqdot_numpy(spark, pts):
+    _check_rp_buckets(spark, pts, LshConfig(num_bands=4, rows_per_band=5,
+                                            signature_pool_size=8))
+
+
+def test_hyperplane_buckets_df_equals_seqdot_numpy(spark, pts):
+    _check_hyperplane_buckets(spark, pts, 3, 5, 11)
+
+
+def test_rp_and_hyperplane_kernel_match_jvm(spark, pts):
+    """The Arrow seqdot kernels at the reference defaults (LshConfig()
+    random projections, 8 tables x 6 bits hyperplanes) == the sequential
+    fold-dot numpy chain. The interpreted-JVM plan this test once compared
+    against is gone; the numpy chain fixes the same FP order, which
+    rp_oracle_sql also re-checks on DuckDB."""
+    _check_rp_buckets(spark, pts, LshConfig())
+    _check_hyperplane_buckets(spark, pts, 8, 6, 11)
 
 
 def test_sampled_cutoffs_agree_with_exact(spark):
@@ -182,29 +201,3 @@ def test_sampled_cutoffs_agree_with_exact(spark):
         # determinism of the sampled path itself
         again = _collect_buckets(fn(_df(spark, pts), scfg, 7, dims=16))
         assert again == sampled
-
-
-def test_rp_and_hyperplane_kernel_match_jvm(spark, pts):
-    """kernel=True (Arrow seqdot chain) == kernel=False (pure-JVM fold
-    plan) bit-for-bit — the kernel is the default execution mode, the JVM
-    plan stays the parity/oracle mode."""
-    from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
-    from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
-        hyperplane_buckets_df, rp_buckets_df)
-
-    cfg = LshConfig()
-    df = _df(spark, pts)
-    a = sorted(tuple(r) for r in
-               rp_buckets_df(df, cfg, dims=pts.shape[1],
-                             kernel=False).collect())
-    b = sorted(tuple(r) for r in
-               rp_buckets_df(df, cfg, dims=pts.shape[1],
-                             kernel=True).collect())
-    assert a == b
-    a = sorted(tuple(r) for r in
-               hyperplane_buckets_df(df, 8, 6, 11, dims=pts.shape[1],
-                                     kernel=False).collect())
-    b = sorted(tuple(r) for r in
-               hyperplane_buckets_df(df, 8, 6, 11, dims=pts.shape[1],
-                                     kernel=True).collect())
-    assert a == b

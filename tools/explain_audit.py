@@ -11,7 +11,8 @@ The 100-TB questions, made greppable per query:
 - is AQE live (AdaptiveSparkPlan) so skew/coalesce re-plans at runtime?
 
 Usage: python tools/explain_audit.py [--sf DIR] [--only name,...]
-Writes PLANS.md at the repo root and prints the summary table.
+Writes PLANS.md at the repo root and prints the summary table. Unknown
+``--only`` names are rejected (exit 2) before any Spark session starts.
 """
 
 from __future__ import annotations
@@ -66,43 +67,53 @@ def audit_one(df) -> dict:
     return out
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default=None)
     ap.add_argument("--cores", type=int, default=8)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     import __spark_entry__ as E
     from distributed_gpu_lsh_using_sycl_spark.sources.tables import get_spark
+
+    qs = E.queries()
+    names = args.only.split(",") if args.only else list(qs)
+    # validate every name before a session starts, so a typo never
+    # leaves a half-written audit behind
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        ap.error("unknown query name(s): " + ", ".join(unknown))
 
     # AQE off ONLY for the audit: AdaptiveSparkPlan prints its pre-
     # execution plan without codegen annotation, which would read as
     # "0 codegen spans" everywhere. Production sessions keep AQE on.
     spark = get_spark("plan-audit", parallelism=args.cores,
                       extra_conf={"spark.sql.adaptive.enabled": "false"})
-    qs = E.queries()
-    names = args.only.split(",") if args.only else list(qs)
-
     rows, notes = [], []
-    for name in names:
-        try:
-            a = audit_one(qs[name](spark, args.sf))
-        except Exception as exc:  # noqa: BLE001 — audit must cover the rest
-            rows.append((name, f"ERR {type(exc).__name__}", "", "", "", "", ""))
-            continue
-        rows.append((name, a["exchanges"], a["wholestage"], a["bcast_joins"],
-                     a["smj_joins"], a["python"],
-                     "; ".join(a["read_schema"])[:80]))
-        if a["smj_joins"] and not a["bcast_joins"]:
-            if name in SMJ_DELIBERATE:
-                notes.append(f"- `{name}`: {a['smj_joins']} sort-merge "
-                             f"join(s) in the static plan — deliberate: "
-                             f"{SMJ_DELIBERATE[name]}")
-            else:
-                notes.append(f"- `{name}`: {a['smj_joins']} sort-merge join(s), "
-                             "no broadcast — check whether a side is small "
-                             "enough to broadcast at target SF.")
+    try:
+        for name in names:
+            try:
+                a = audit_one(qs[name](spark, args.sf))
+            except Exception as exc:  # noqa: BLE001 — audit must cover the rest
+                rows.append((name, f"ERR {type(exc).__name__}",
+                             "", "", "", "", ""))
+                continue
+            rows.append((name, a["exchanges"], a["wholestage"],
+                         a["bcast_joins"], a["smj_joins"], a["python"],
+                         "; ".join(a["read_schema"])[:80]))
+            if a["smj_joins"] and not a["bcast_joins"]:
+                if name in SMJ_DELIBERATE:
+                    notes.append(f"- `{name}`: {a['smj_joins']} sort-merge "
+                                 f"join(s) in the static plan — deliberate: "
+                                 f"{SMJ_DELIBERATE[name]}")
+                else:
+                    notes.append(f"- `{name}`: {a['smj_joins']} sort-merge "
+                                 "join(s), no broadcast — check whether a "
+                                 "side is small enough to broadcast at "
+                                 "target SF.")
+    finally:
+        spark.stop()
 
     lines = [
         "# PLANS — physical-plan audit of every driver query",
@@ -131,8 +142,8 @@ def main() -> None:
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines[:40]))
-    spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
