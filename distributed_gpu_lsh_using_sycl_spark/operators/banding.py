@@ -9,7 +9,15 @@ self-join puts a hot bucket's O(n²) pair generation in ONE task.
 
 Skew policy (explicit, AQE skew-join as backstop):
 
-1. ``bucket_stats`` — groupBy (band_id, bucket) count (A1 analog).
+1. ``band_plan`` — the one place the plan is materialized: the
+   (band_id, bucket) occupancy (``bucket_stats``, A1 analog) filtered to
+   the buckets any decision touches (``over_threshold_stats``) is
+   ``localCheckpoint``-ed ONCE, and the same job observes two numbers
+   (``DataFrame.observe``, no extra job): how many buckets crossed
+   ``plan_threshold`` and the largest ``cnt``. Zero crossings -> the
+   candidate join takes the plain self-join fast path; a largest bucket
+   at or under ``max_bucket_size`` -> nothing was dropped, so the drop
+   accounting needs no job.
 2. buckets over ``max_bucket_size`` are deterministically down-sampled
    (hash filter) — a degenerate bucket (e.g. empty-ish captions all
    hashing together) would emit O(n²) pairs at 10^12 scale; the dropped
@@ -30,7 +38,9 @@ path, no special-casing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
@@ -62,9 +72,9 @@ def _downsample_keep(cfg: LshConfig):
 
 def plan_threshold(cfg: LshConfig) -> int:
     """The single cnt threshold above which a bucket influences the pair
-    plan: min(hot_bucket_threshold, max_bucket_size-if-on). Shared by
-    ``over_threshold_stats`` and ``candidate_pairs_from_bands`` so the
-    pre-filtered stats frame and the pair plan's own filter can never
+    plan: min(hot_bucket_threshold, max_bucket_size-if-on). Both ways
+    ``band_plan`` filters stats (its own ``over_threshold_stats`` or a
+    caller's materialized ``bucket_stats``) use it, so they can never
     disagree — a bucket missing from the broadcast plan coalesces cnt to
     0 downstream, which reads as "under the cap" and silently skips its
     down-sample."""
@@ -77,73 +87,82 @@ def plan_threshold(cfg: LshConfig) -> int:
 def over_threshold_stats(bands: DataFrame, cfg: LshConfig) -> DataFrame:
     """``bucket_stats`` filtered to every bucket any salt/cap decision
     needs: cnt > ``plan_threshold(cfg)``. Small by the skew assumption
-    (hot + degenerate buckets are by definition few), so callers
-    localCheckpoint it and feed the SAME frame to both
-    ``candidate_pairs_from_bands`` and ``downsample_dropped`` — the
-    full-width stats shuffle then runs ONCE per banding frame instead of
-    once per consumer (the pipeline previously re-ran it just to count
-    drops)."""
+    (hot + degenerate buckets are by definition few); ``band_plan``
+    materializes it once per banding frame for both the candidate join
+    and the drop accounting."""
     return bucket_stats(bands).filter(F.col("cnt") > plan_threshold(cfg))
 
 
+@dataclass(frozen=True)
+class BandPlan:
+    """A banding frame's materialized over-threshold stats (``over``)
+    plus the two numbers observed while materializing them: ``n_over``
+    buckets crossed ``plan_threshold`` and the largest of them holds
+    ``max_cnt`` members (0 when none crossed)."""
+    over: DataFrame
+    n_over: int
+    max_cnt: int
+
+
+def band_plan(bands: DataFrame, cfg: LshConfig,
+              stats: DataFrame | None = None) -> BandPlan:
+    """Materialize ``over_threshold_stats(bands, cfg)`` once, observing
+    its row count and max ``cnt`` on the same job. ``stats``: an
+    already-materialized ``bucket_stats`` frame of ``bands`` (e.g. a
+    caller's guardrail stats) — only filtered here, no second stats
+    shuffle."""
+    over = (over_threshold_stats(bands, cfg) if stats is None
+            else stats.filter(F.col("cnt") > plan_threshold(cfg)))
+    obs = Observation()
+    over = over.observe(obs, F.count(F.lit(1)).alias("n"),
+                        F.max("cnt").alias("max_cnt")).localCheckpoint(eager=True)
+    m = obs.get
+    return BandPlan(over, int(m["n"]), int(m["max_cnt"] or 0))
+
+
 def downsample_dropped(bands: DataFrame, cfg: LshConfig,
-                       stats: DataFrame | None = None) -> DataFrame:
+                       plan: BandPlan | None = None) -> DataFrame:
     """Per-bucket drop accounting for the ``max_bucket_size`` cap —
     (band_id, bucket, cnt, dropped). Empty when the cap is off or no
     bucket is degenerate. The no-silent-caps rule: callers (the pipeline)
     aggregate + record this; it shares the exact predicate used by
-    ``candidate_pairs_from_bands``. Pass the ``over_threshold_stats``
-    frame as ``stats`` to skip the full stats shuffle (a broadcast join +
-    partial agg is all that remains)."""
+    ``candidate_pairs_from_bands``. Pass the ``band_plan`` the candidate
+    join used to skip the full stats shuffle (a broadcast join + partial
+    agg is all that remains); a plan whose ``max_cnt`` is at or under the
+    cap already proves the count is zero, so callers need not run this."""
     if cfg.max_bucket_size <= 0:
         return (bands.sparkSession.createDataFrame(
             [], "band_id int, bucket long, cnt long, dropped long"))
-    if stats is None:
-        stats = bucket_stats(bands)
+    stats = bucket_stats(bands) if plan is None else plan.over
     degen = stats.filter(F.col("cnt") > cfg.max_bucket_size)
-    # no degenerate bucket -> the drop count is provably zero; skip the
-    # bands-wide join+agg job (callers pass the materialized
-    # over_threshold_stats frame, so this probe costs ~nothing)
-    if not degen.head(1):
-        return (bands.sparkSession.createDataFrame(
-            [], "band_id int, bucket long, cnt long, dropped long"))
-    dropped = (bands.join(F.broadcast(degen), ["band_id", "bucket"])
-               .filter(~_downsample_keep(cfg))
-               .groupBy("band_id", "bucket", "cnt")
-               .agg(F.count("*").alias("dropped")))
-    return dropped
+    return (bands.join(F.broadcast(degen), ["band_id", "bucket"])
+            .filter(~_downsample_keep(cfg))
+            .groupBy("band_id", "bucket", "cnt")
+            .agg(F.count("*").alias("dropped")))
 
 
 def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
                                source: str = "minhash",
-                               stats: DataFrame | None = None) -> DataFrame:
+                               plan: BandPlan | None = None) -> DataFrame:
     """(image_id, band_id, bucket) -> distinct candidate pairs (a < b).
 
     One aggregation for stats, one salted self-join, one (a, b) distinct.
     The distinct is the reference's dedup-before-distance rewrite
-    (hash_tables.hpp:547-557): never verify a pair twice. ``stats``
-    (an ``over_threshold_stats`` frame) skips the stats aggregation —
-    only buckets past the hot threshold influence the plan, so the
-    filtered frame is exactly equivalent.
+    (hash_tables.hpp:547-557): never verify a pair twice. ``plan`` (the
+    ``band_plan`` of ``bands``) is built here when not given; callers
+    that also run the drop accounting build it once and pass it in.
     """
-    stats_was_none = stats is None
-    if stats_was_none:
-        stats = bucket_stats(bands)
-    # The broadcast plan must carry EVERY bucket any decision touches —
-    # hot buckets (salted) AND degenerate-but-not-hot buckets (possible
-    # when max_bucket_size < hot_bucket_threshold): a bucket absent from
-    # the plan coalesces cnt to 0 downstream, which the keep-predicate
-    # reads as "under the cap", silently skipping the down-sample while
-    # downsample_dropped (driven by the same stats) reports its members
-    # as dropped. plan_threshold is the one shared definition (equal to
-    # over_threshold_stats' filter, so passing that frame in makes this a
-    # no-op); still few rows by the skew assumption, so the broadcast
-    # stands.
-    over = stats.filter(F.col("cnt") > plan_threshold(cfg))
-    if stats_was_none:
-        # materialize the (tiny, filtered) plan frame so the emptiness
-        # probe below and the broadcast share one stats shuffle
-        over = over.localCheckpoint(eager=True)
+    if plan is None:
+        plan = band_plan(bands, cfg)
+    # The broadcast plan carries EVERY bucket any decision touches — hot
+    # buckets (salted) AND degenerate-but-not-hot buckets (possible when
+    # max_bucket_size < hot_bucket_threshold): a bucket absent from the
+    # plan coalesces cnt to 0 downstream, which the keep-predicate reads
+    # as "under the cap", silently skipping the down-sample while
+    # downsample_dropped (driven by the same plan) reports its members
+    # as dropped. plan_threshold is the one shared definition; still few
+    # rows by the skew assumption, so the broadcast stands.
+    #
     # FAST PATH: when NO bucket crosses the plan threshold (the common
     # case away from degenerate corpora — true for every sf0.1 banding
     # frame measured), every m is 1 and every salt is 0, so the salted
@@ -151,7 +170,7 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
     # join directly skips the broadcast build, the per-row salt hash and
     # the two sequence-explodes — same pair set by construction (the
     # m=1 grid joins on (band, bucket, 0, 0)).
-    if not over.head(1):
+    if plan.n_over == 0:
         left = bands.select("band_id", "bucket", F.col("image_id").alias("a"))
         right = bands.select("band_id", "bucket", F.col("image_id").alias("b"))
         return (left.join(right, ["band_id", "bucket"])
@@ -169,10 +188,10 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
              .cast("int"),
         ),
     ).otherwise(F.lit(1))
-    plan = over.select("band_id", "bucket", "cnt", m_col.alias("m"))
+    salts = plan.over.select("band_id", "bucket", "cnt", m_col.alias("m"))
 
     b = (
-        bands.join(F.broadcast(plan), ["band_id", "bucket"], "left")
+        bands.join(F.broadcast(salts), ["band_id", "bucket"], "left")
         .withColumn("m", F.coalesce(F.col("m"), F.lit(1)))
         .withColumn("cnt", F.coalesce(F.col("cnt"), F.lit(0)))
     )

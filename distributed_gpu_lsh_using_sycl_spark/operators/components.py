@@ -15,7 +15,7 @@ plans/pipeline.py provides cross-run resumability.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -46,16 +46,19 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
+def _checkpoint_observed(edges: DataFrame) -> tuple[DataFrame, int, int]:
+    """``localCheckpoint`` an edge set and observe, on that same job, its
+    edge count and an order-free checksum -> (edges, n, checksum)."""
     # pmod before sum: ANSI mode (Spark 4 default) makes a raw sum of
     # xxhash64 values an ARITHMETIC_OVERFLOW; values < 2^31 keep the sum
     # exact up to ~4e9 edges per convergence check.
-    row = edges.agg(
-        F.count("*").alias("n"),
+    obs = Observation()
+    edges = edges.observe(
+        obs, F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(2_147_483_647))),
-                   F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+                   F.lit(0)).alias("h")).localCheckpoint(eager=True)
+    m = obs.get
+    return edges, int(m["n"]), int(m["h"])
 
 
 def _small_graph_components(cur: DataFrame) -> DataFrame:
@@ -105,13 +108,15 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     Converges when the canonical edge set is stable; at convergence every
     edge points directly at its component's minimum, so the edge set IS
     the assignment for non-root members and roots map to themselves.
+    Raises ``RuntimeError`` when ``max_iter`` rounds pass without that.
     Only nodes that appear in edges are returned — callers left-join the
     full vertex set and coalesce to self (singleton semantics; the
     reference's "own id = not found" convention, nearest_neighbors.cpp:131,
     without the dummy-point artifact).
 
     ``small_graph_threshold`` (0 = off, the default): when the distinct
-    edge count is at or under it, solve with driver-side union-find
+    edge count (observed on the entry checkpoint's own job) is at or
+    under it, solve with driver-side union-find
     instead of the star loop — identical assignments, none of the loop's
     per-round scheduling latency. Callers that run CC CONTINUOUSLY over
     wave-scale edge sets (the streaming reconcile) opt in with an
@@ -119,31 +124,25 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     remains the default and the only path past the threshold, so the
     10^12-scale contract is unchanged.
     """
-    cur = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    cur = cur.localCheckpoint(eager=True)
-    if small_graph_threshold > 0 and cur.count() <= small_graph_threshold:
+    cur, n_edges, _ = _checkpoint_observed(
+        edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct())
+    if small_graph_threshold > 0 and n_edges <= small_graph_threshold:
         return _small_graph_components(cur)
     prev_sig = None
-    converged = False
     for _ in range(max_iter):
         # one checkpoint per (large-star ∘ small-star) round: lineage stays
         # bounded at two star ops while halving the materialization jobs
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-        sig = _edge_checksum(cur)
+        cur, *sig = _checkpoint_observed(_small_star(_large_star(cur)))
         if sig == prev_sig:
-            converged = True
             break
         prev_sig = sig
-    if not converged:
-        # an exhausted iteration budget is NOT convergence — callers must
-        # be able to tell a truncated assignment from a fixed point.
-        import warnings
-
-        warnings.warn(
+    else:
+        # an exhausted iteration budget is NOT convergence: fail loudly
+        # rather than return a truncated assignment
+        raise RuntimeError(
             f"connected_components exhausted max_iter={max_iter} without the "
-            "edge set stabilizing; the returned assignment may be incomplete "
-            "(raise max_iter — large-star/small-star needs O(log^2 n) rounds)",
-            RuntimeWarning, stacklevel=2)
+            "edge set stabilizing (raise max_iter — large-star/small-star "
+            "needs O(log^2 n) rounds)")
     # stars: b is the root (minimum). Members:
     members = cur.select(F.col("a").alias("image_id"), F.col("b").alias("cluster_id"))
     roots = cur.select(F.col("b").alias("image_id"), F.col("b").alias("cluster_id")).distinct()

@@ -200,22 +200,28 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
     """
     import logging
 
+    from pyspark.sql import Observation
+
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
-        bucket_stats, candidate_pairs_from_bands, plan_threshold)
+        band_plan, bucket_stats, candidate_pairs_from_bands)
 
     cfg = cfg or LshConfig()
     en = with_norm(e.select(F.col(id_col).alias("vec_id"),
                             F.col(vec_col).alias("v")),
                    "v").localCheckpoint(eager=True)
     bands = hyperplane_bands(en, n_bands, bits, seed, dims=dims)
-    stats = None
+    plan = None
     if guard_ratio > 0:
-        stats = bucket_stats(bands).localCheckpoint(eager=True)
-        row = stats.agg(
+        # the guardrail's mass and n are observed on the stats checkpoint
+        # job itself; band_plan then only filters the materialized stats
+        obs = Observation()
+        stats = bucket_stats(bands).observe(
+            obs,
             F.coalesce(F.sum(F.col("cnt") * (F.col("cnt") - 1) / 2),
                        F.lit(0.0)).alias("mass"),
             F.coalesce(F.sum(F.when(F.col("band_id") == 0, F.col("cnt"))),
-                       F.lit(0)).alias("n")).collect()[0]
+                       F.lit(0)).alias("n")).localCheckpoint(eager=True)
+        row = obs.get
         mass, n = float(row["mass"]), int(row["n"])
         brute_pairs = n * (n - 1) / 2.0
         if mass >= guard_ratio * brute_pairs:
@@ -225,9 +231,9 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
                 "tau=%s, %dx%d bands) — taking the exact tiled plan",
                 mass, guard_ratio, brute_pairs, tau, n_bands, bits)
             return _neardup_pairs_exact(en, tau, n)
-        stats = stats.filter(F.col("cnt") > plan_threshold(cfg))
+        plan = band_plan(bands, cfg, stats=stats)
     cands = candidate_pairs_from_bands(bands, cfg, source="hyperplane",
-                                       stats=stats)
+                                       plan=plan)
     va = en.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
                    F.col("norm").alias("na"))
     vb = en.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),

@@ -195,35 +195,36 @@ class DedupPipeline:
 
         def banded_candidates(stage: str, bands_df: DataFrame,
                               source: str) -> None:
-            # ONE stats shuffle per banding frame: the over-threshold
-            # occupancy (hot + degenerate buckets, small by the skew
-            # assumption) is materialized once and feeds BOTH the salted
-            # candidate join and the drop accounting — round 4 re-ran the
-            # banding + stats work per modality just to count drops.
+            # ONE stats shuffle per banding frame: banding.band_plan
+            # materializes the over-threshold occupancy (hot + degenerate
+            # buckets, small by the skew assumption) once and observes its
+            # bucket count and largest bucket on that same job. The count
+            # picks the candidate join's fast path; the largest bucket
+            # decides whether the drop accounting has anything to count.
             # Built INSIDE the stage lambda: a resumed run whose stage is
             # DONE must not pay the stats shuffle (its drop count was
             # recorded by the original run).
-            shared_box: dict = {}
+            plan_box: dict = {}
 
             def build() -> DataFrame:
-                shared_box["stats"] = banding.over_threshold_stats(
-                    bands_df, cfg).localCheckpoint(eager=True)
+                plan_box["plan"] = banding.band_plan(bands_df, cfg)
                 return banding.candidate_pairs_from_bands(
-                    bands_df, cfg, source=source,
-                    stats=shared_box["stats"])
+                    bands_df, cfg, source=source, plan=plan_box["plan"])
 
             t[stage] = self._stage(stage, build)
-            if cfg.max_bucket_size <= 0 or "stats" not in shared_box:
+            if cfg.max_bucket_size <= 0 or "plan" not in plan_box:
                 return
-            shared = shared_box["stats"]
+            plan = plan_box["plan"]
             # no-silent-caps: the degenerate-bucket down-sample's exact
-            # drop count goes into metrics (broadcast join + partial agg
-            # over the shared stats — no second stats shuffle).
+            # drop count goes into metrics. No bucket over the cap proves
+            # it zero with no job; otherwise one broadcast join + partial
+            # agg over the plan's stats (no second stats shuffle).
             t0 = time.perf_counter()
-            n_dropped = (banding.downsample_dropped(bands_df, cfg,
-                                                    stats=shared)
-                         .agg(F.coalesce(F.sum("dropped"), F.lit(0)))
-                         .collect()[0][0])
+            n_dropped = 0
+            if plan.max_cnt > cfg.max_bucket_size:
+                n_dropped = (banding.downsample_dropped(bands_df, cfg, plan)
+                             .agg(F.coalesce(F.sum("dropped"), F.lit(0)))
+                             .collect()[0][0])
             self._record(f"{stage}:dropped", "INFO", int(n_dropped),
                          int((time.perf_counter() - t0) * 1000))
 

@@ -6,15 +6,24 @@ every multi-KB image blob parquet -> JVM column vector -> InternalRow ->
 Arrow batch -> Python socket -> pandas before the decode UDF ever sees
 it — four full passes over the corpus's largest column through a
 memory-bandwidth-bound host. This path instead has Spark plan only the
-SPLITS (one row per parquet row group, the same granularity as Spark's
-own scan partitions) and reads the blob bytes with pyarrow INSIDE the
-Python stage that consumes them, so the bytes take exactly one hop:
-page cache/object store -> Arrow -> numpy. Measured on the bench
-fixture (96k images, 64 files, local[8] pinned): 9.9s -> ~6s for the
-full signature+banding stage; at local[32] it matches the host's own
-no-framework throughput roof. On a real cluster each task reads its
-split straight from the object store — the exact shape of Spark's
-native scan, minus the JVM detour for the blob column.
+SPLITS (one row per parquet row group, the parquet unit of independent
+IO) and reads the blob bytes with pyarrow INSIDE the Python stage that
+consumes them, so the bytes take exactly one hop: page cache/object
+store -> Arrow -> numpy. Measured on the bench fixture (96k images, 64
+files, local[8] pinned): 9.9s -> ~6s for the full signature+banding
+stage; at local[32] it matches the host's own no-framework throughput
+roof. On a real cluster each task reads its splits straight from the
+object store — the shape of Spark's native scan, minus the JVM detour
+for the blob column.
+
+Task sizing follows Spark's own scan rule: one task per
+``spark.sql.files.maxPartitionBytes`` of row-group bytes (read from the
+parquet footers), but never fewer tasks than ``defaultParallelism`` and
+never more than there are row groups (``scan_partitions``). Every
+Python task start costs a fixed ~0.3-0.45 s on a 4-CPU host, so a small
+table runs as one wave (16 row groups at parallelism 4: 4 tasks, not
+16 in four waves) while a corpus-scale table still gets one task per
+~128 MB.
 
 Signatures are bit-identical to operators/signatures.compute_signatures
 (the shingle/CRC chain has an exact Python twin, the minhash/simhash
@@ -60,20 +69,38 @@ def _sig_schema(id_type: T.DataType) -> T.StructType:
 _SPLIT_SCHEMA = "file string, row_group int"
 
 
-def parquet_splits(path: str) -> list[tuple[str, int]]:
-    """(file, row_group) split list for a parquet file/directory — the
-    same work-unit granularity Spark's own scan uses (a row group is the
-    parquet unit of independent IO). pyarrow.dataset handles dirs,
-    single files, and object-store URIs alike."""
+def _row_groups(path: str) -> list[tuple[str, int, int]]:
+    """(file, row_group, on-disk bytes) for every row group under a
+    parquet file/directory, from the footers alone. pyarrow.dataset
+    handles dirs, single files, and object-store URIs alike."""
     import pyarrow.dataset as ds
 
-    out: list[tuple[str, int]] = []
+    out: list[tuple[str, int, int]] = []
     for frag in ds.dataset(path, format="parquet").get_fragments():
-        n_rgs = frag.metadata.num_row_groups
-        out.extend((frag.path, rg) for rg in range(n_rgs))
+        md = frag.metadata
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            size = sum(g.column(c).total_compressed_size
+                       for c in range(g.num_columns))
+            out.append((frag.path, rg, size))
     if not out:
         raise ValueError(f"no parquet row groups under {path!r}")
     return out
+
+
+def parquet_splits(path: str) -> list[tuple[str, int]]:
+    """(file, row_group) split list for a parquet file/directory — a row
+    group is the parquet unit of independent IO."""
+    return [(f, rg) for f, rg, _ in _row_groups(path)]
+
+
+def scan_partitions(n_splits: int, total_bytes: int, parallelism: int,
+                    max_partition_bytes: int) -> int:
+    """Task count for a blob scan: Spark's scan rule (one task per
+    ``max_partition_bytes``), at least ``parallelism`` tasks so every
+    core has work, at most one task per split, and never fewer than 1."""
+    by_bytes = -(-total_bytes // max_partition_bytes)
+    return max(1, min(n_splits, max(parallelism, by_bytes)))
 
 
 #: rows per in-worker read slice. The blob work is sliced WELL below the
@@ -144,24 +171,26 @@ def compute_split(file: str, rg: int, cfg: LshConfig,
 
 def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
                     with_image: bool = True,
-                    id_col: str = "image_id", text_col: str = "caption",
-                    splits_per_partition: int = 1) -> DataFrame:
+                    id_col: str = "image_id", text_col: str = "caption"
+                    ) -> DataFrame:
     """Fused scan+signature stage over a parquet image table: returns the
     same DataFrame as ``compute_signatures(spark.read.parquet(path))``
     — (image_id, shingles, minhash, buckets, phash, simhash) — without
     moving blob bytes through the JVM.
 
-    Spark plans (file, row_group) splits as a tiny DataFrame, one task
-    per ``splits_per_partition`` splits; each task pyarrow-reads only
-    the pruned columns of its row groups and runs the shared numpy
-    signature kernels. Scale shape: splits ≈ Spark scan partitions, so
-    parallelism, locality hints, and AQE behave exactly as for a native
-    scan; only small signature rows ever enter the JVM.
+    Spark plans the (file, row_group) splits as a tiny DataFrame sliced
+    evenly into ``scan_partitions`` tasks — one per
+    ``spark.sql.files.maxPartitionBytes`` of row-group bytes, at least
+    ``defaultParallelism``, at most one per split. Each task
+    pyarrow-reads only the pruned columns of its row groups and runs the
+    shared numpy signature kernels; only small signature rows ever enter
+    the JVM.
     """
     import pyarrow.dataset as ds
     import pyarrow.types as pat
 
-    splits = parquet_splits(path)
+    row_groups = _row_groups(path)
+    splits = [(f, rg) for f, rg, _ in row_groups]
     arrow_id = ds.dataset(path, format="parquet").schema.field(id_col).type
     # Map the id column by Arrow TYPE FAMILY, not by the type's string
     # form: signed ints (and unsigned up to uint32, which fit a long) ->
@@ -192,10 +221,13 @@ def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
                                     with_image=want_image,
                                     id_col=id_name, text_col=text_name)
 
-    n_parts = max(1, (len(splits) + splits_per_partition - 1) // splits_per_partition)
+    n_parts = scan_partitions(
+        len(splits), sum(size for _, _, size in row_groups),
+        spark.sparkContext.defaultParallelism,
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
     # parallelize slices the split list exactly evenly (no hash-collision
-    # skew: with splits == partitions a hash repartition leaves ~1/e of
-    # the tasks empty and doubles up others — measured stragglers)
+    # skew: a hash repartition leaves ~1/e of the tasks empty and doubles
+    # up others — measured stragglers)
     splits_df = spark.createDataFrame(
         spark.sparkContext.parallelize(splits, n_parts), _SPLIT_SCHEMA)
     return (splits_df.mapInPandas(read_splits, schema=_sig_schema(id_type))

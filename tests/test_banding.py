@@ -200,3 +200,43 @@ def test_candidate_pairs_fast_path_equals_salted(spark):
            candidate_pairs_from_bands(bands, cfg).collect()}
     want = {(a, b) for a in range(150) for b in range(150) if a < b}
     assert got == want
+
+
+def _caption_frame(spark, n_same: int, n_distinct: int):
+    """n_same copies of one caption (a bucket of n_same members in every
+    band) plus n_distinct random-word captions."""
+    rng = np.random.Generator(np.random.PCG64(3))
+    words = [f"w{i}" for i in range(5000)]
+    rows = [(i, "one caption repeated verbatim across many rows")
+            for i in range(n_same)]
+    rows += [(n_same + i, " ".join(rng.choice(words, 12)))
+             for i in range(n_distinct)]
+    return spark.createDataFrame(rows, "image_id long, caption string")
+
+
+def test_pipeline_records_exact_drop_count(spark):
+    """DedupPipeline records as cand_minhash:dropped exactly the total of
+    downsample_dropped over its bands when a bucket exceeds the cap, and
+    0 when none does."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
+        downsample_dropped)
+    from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
+
+    cfg = LshConfig(max_bucket_size=10, hot_bucket_threshold=8, n_salts=2)
+
+    def dropped_metric(res):
+        rows = [m["rows"] for m in res.metrics
+                if m["stage"] == "cand_minhash:dropped"]
+        assert len(rows) == 1
+        return rows[0]
+
+    res = run_dedup(spark, _caption_frame(spark, 40, 30), cfg,
+                    with_image=False)
+    want = (downsample_dropped(res["bands"], cfg)
+            .agg(F.sum("dropped")).collect()[0][0])
+    assert want > 0
+    assert dropped_metric(res) == want
+
+    res = run_dedup(spark, _caption_frame(spark, 1, 30), cfg,
+                    with_image=False)
+    assert dropped_metric(res) == 0

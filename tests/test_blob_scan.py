@@ -130,3 +130,23 @@ def test_parquet_splits_cover_all_row_groups(fixture_parquet):
     total = sum(
         pq.ParquetFile(f).metadata.row_group(rg).num_rows for f, rg in splits)
     assert total == 180
+
+
+def test_scan_partitions_rule():
+    """One task per max_partition_bytes of row-group bytes, at least
+    parallelism tasks, at most one per split, never fewer than one."""
+    cap = 128 << 20
+    assert blob_scan.scan_partitions(16, 5 << 20, 4, cap) == 4
+    assert blob_scan.scan_partitions(100, 10 * cap, 4, cap) == 10
+    assert blob_scan.scan_partitions(100, 10 * cap + 1, 4, cap) == 11
+    assert blob_scan.scan_partitions(3, 10 * cap, 4, cap) == 3
+    assert blob_scan.scan_partitions(2, 0, 8, cap) == 2
+    assert blob_scan.scan_partitions(1, 0, 0, cap) == 1
+    assert blob_scan.scan_partitions(0, 0, 0, cap) == 1
+
+
+def test_scan_signatures_small_input_is_one_wave(spark, fixture_parquet):
+    n_splits = len(blob_scan.parquet_splits(fixture_parquet))
+    sigs = blob_scan.scan_signatures(spark, fixture_parquet, CFG)
+    assert sigs.rdd.getNumPartitions() == min(
+        n_splits, spark.sparkContext.defaultParallelism)

@@ -79,3 +79,42 @@ def test_small_graph_path_equals_distributed(spark, seed):
             for r in connected_components(
                 edf, small_graph_threshold=1).collect()}
     assert over == dist
+
+
+def test_small_graph_threshold_boundary(spark, monkeypatch):
+    """The small-graph decision compares the DISTINCT edge count (self
+    loops and repeated edges removed) with the threshold: at the count
+    union-find runs, one below it the star loop runs, and both give the
+    same assignments as the union-find oracle."""
+    from distributed_gpu_lsh_using_sycl_spark.operators import components
+
+    calls = []
+    real = components._small_graph_components
+    monkeypatch.setattr(components, "_small_graph_components",
+                        lambda cur: calls.append(1) or real(cur))
+    edges = [(f"v{i:03d}", f"v{i + 1:03d}") for i in range(0, 20, 2)]
+    edges += [("v000", "v002"), ("v005", "v009"), ("v030", "v031")]
+    n_distinct = len(set(edges))
+    edf = spark.createDataFrame(
+        edges + edges[:4] + [("v007", "v007")], ["a", "b"])
+    want = _union_find_clusters(sorted({x for e in edges for x in e}), edges)
+
+    got = {}
+    for thr in (n_distinct, n_distinct - 1):
+        got[thr] = {r["image_id"]: r["cluster_id"] for r in
+                    components.connected_components(
+                        edf, small_graph_threshold=thr).collect()}
+    assert calls == [1]  # only the threshold == count run took union-find
+    assert got[n_distinct] == got[n_distinct - 1] == want
+
+
+def test_cc_raises_when_max_iter_exhausted(spark):
+    """An exhausted iteration budget is not convergence: CC fails loudly
+    instead of returning a partial assignment."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.components import (
+        connected_components)
+
+    path = [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(64)]
+    edf = spark.createDataFrame(path, ["a", "b"])
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edf, max_iter=1).collect()
