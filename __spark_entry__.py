@@ -810,17 +810,15 @@ def q_kmeans_clusters(spark, sf, k: int = 8, n_iter: int = 6):
 
 
 def q_cc_clusters(spark, sf):
-    """Connected components (large-star/small-star, operators/components)
-    under the hard correctness signal: edges = exact-dup pairs ∪
-    substring-containment pairs (both SQL-derivable, and containment
-    CHAINS — a⊂b, b⊂c — make non-trivial components), clusters = component
-    minimum, singletons = self. Oracle: DuckDB recursive-CTE transitive
+    """Connected components (operators/components: driver union-find up to
+    SMALL_GRAPH_EDGES, large-star/small-star past it) under the hard
+    correctness signal: edges = exact-dup pairs ∪ substring-containment
+    pairs (both SQL-derivable, and containment CHAINS — a⊂b, b⊂c — make
+    non-trivial components), clusters = component minimum, singletons =
+    self. Oracle: DuckDB recursive-CTE transitive
     closure with min-aggregation."""
     from distributed_gpu_lsh_using_sycl_spark.operators.components import (
         assign_clusters)
-
-    from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import (
-        CC_SMALL_GRAPH_EDGES)
 
     d = _t(spark, sf, "documents")
     exact = q_dedup_exact_pairs(spark, sf)
@@ -829,13 +827,11 @@ def q_cc_clusters(spark, sf):
     # dup assignments are a few % of |V| in this workload — broadcast
     # the CC side so the final join is a broadcast hash join over the
     # vertex scan instead of a |V|-scale sort-merge (PLANS.md note).
-    # small_graph_threshold: the SAME driver union-find fast path (and
-    # bound) the pipeline and the streaming reconcile already use —
-    # identical assignments (pinned in tests/test_components.py); the
-    # star loop engages automatically past the bound.
+    # assign_clusters takes the driver union-find fast path up to its
+    # SMALL_GRAPH_EDGES bound and the star loop past it (identical
+    # assignments, pinned in tests/test_components.py).
     return (assign_clusters(d, edges, id_col="doc_id",
-                            broadcast_assignments=True,
-                            small_graph_threshold=CC_SMALL_GRAPH_EDGES)
+                            broadcast_assignments=True)
             .select(F.col("image_id").alias("doc_id"), "cluster_id"))
 
 

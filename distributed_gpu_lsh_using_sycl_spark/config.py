@@ -6,13 +6,21 @@ Mirrors the reference's ``locality_sensitive_hashing_options`` struct
 north rule adds (shingling, verification thresholds, salting / skew
 handling, checkpointing). One dataclass = the single source of truth —
 "identical shingle/signature/band-row config" parity hinges on this.
+
+Execution choices the engine derives from sizes it observes are NOT
+fields here; each has one owner that computes it: the CC union-find vs
+star-loop bound (``operators/components.SMALL_GRAPH_EDGES``), the
+streaming partition count (``streaming/e2e._adaptive_partitions``), the
+blob-scan task count and read slice (``sources/blob_scan``), the near-dup
+guardrail (``operators/embedding.neardup_pairs_lsh``) and the Arrow batch
+size (a session setting, ``sources/tables.get_spark``).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -115,14 +123,10 @@ class LshConfig:
     #: target shuffle partitions; sized so post-shuffle partitions fit in
     #: executor memory at the target SF (driver may override).
     shuffle_partitions: int = 32
-    #: Arrow max records per batch for pandas UDFs.
-    arrow_batch_size: int = 4096
 
     # ---- io ----
     #: table format: "parquet" (sandbox) or "iceberg" (cluster).
     table_format: str = "parquet"
-
-    extra: dict = field(default_factory=dict)
 
     @property
     def signature_len(self) -> int:

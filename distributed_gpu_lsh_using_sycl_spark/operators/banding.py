@@ -232,22 +232,6 @@ def _band_widths(n_bands: int) -> list[int]:
     return [base + (1 if i < rem else 0) for i in range(n_bands)]
 
 
-def simhash_band_cols(simhash_col, n_bands: int = 9):
-    """Split a 64-bit simhash/phash into n_bands bit-bands for exact-match
-    blocking. Pigeonhole: the bands partition all 64 bits, so
-    hamming(x, y) < n_bands ⇒ at least one band equal. With
-    n_bands = hamming_threshold + 1 blocking recall is exactly 1.0 at the
-    verification boundary (pairs at hamming == threshold are guaranteed a
-    shared band)."""
-    out, off = [], 0
-    for i, width in enumerate(_band_widths(n_bands)):
-        mask = (1 << width) - 1
-        out.append(F.shiftrightunsigned(simhash_col, off)
-                   .bitwiseAND(F.lit(mask)).alias(f"hb{i}"))
-        off += width
-    return out
-
-
 def hash_band_pairs(signatures: DataFrame, hash_col: str, cfg: LshConfig,
                     source: str, n_bands: int | None = None,
                     combine: int = 2) -> DataFrame:

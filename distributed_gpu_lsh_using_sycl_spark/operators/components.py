@@ -18,6 +18,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+#: Distinct-edge count at or under which ``assign_clusters`` solves CC with
+#: driver-side union-find instead of the star loop. The collect is
+#: Arrow-backed id pairs, tens of MB at this bound. In a dedup workload
+#: verified edges are O(duplicates), a small fraction of |V|, so the fast
+#: path removes ~4 rounds x ~10 shuffle stages of fixed scheduling latency
+#: (measured 2.2s -> ~0.2s at 256 edges on local[32]) whenever the graph is
+#: driver-sized anyway; past the bound the distributed loop engages, so the
+#: 10^12-row contract is unchanged. Read at call time (tests patch it).
+SMALL_GRAPH_EDGES = 200_000
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each u: m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u), v > u."""
@@ -67,10 +77,8 @@ def _small_graph_components(cur: DataFrame) -> DataFrame:
     contract (component min as cluster id, only edge-touched nodes
     returned; equality with the distributed loop is pinned in
     tests/test_components.py). One collect bounded by the caller's
-    explicit threshold; O(E α(E)) driver work replaces ~4 rounds × ~10
-    shuffle stages of fixed scheduling latency — the dominant CC cost
-    when the verified-edge set is wave-sized (measured 2.2s → ~0.2s at
-    256 edges on local[32])."""
+    threshold (SMALL_GRAPH_EDGES); O(E α(E)) driver work replaces the
+    star loop's per-round scheduling latency."""
     # Arrow-backed toPandas + plain python lists: far leaner per edge
     # than a list of Row objects at the upper end of the caller's bound.
     pdf = cur.toPandas()
@@ -114,15 +122,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     reference's "own id = not found" convention, nearest_neighbors.cpp:131,
     without the dummy-point artifact).
 
-    ``small_graph_threshold`` (0 = off, the default): when the distinct
-    edge count (observed on the entry checkpoint's own job) is at or
-    under it, solve with driver-side union-find
-    instead of the star loop — identical assignments, none of the loop's
-    per-round scheduling latency. Callers that run CC CONTINUOUSLY over
-    wave-scale edge sets (the streaming reconcile) opt in with an
-    explicit driver-memory-bounded threshold; the distributed loop
-    remains the default and the only path past the threshold, so the
-    10^12-scale contract is unchanged.
+    ``small_graph_threshold`` (0 = off): when the distinct edge count
+    (observed on the entry checkpoint's own job) is at or under it, solve
+    with driver-side union-find instead of the star loop — identical
+    assignments, none of the loop's per-round scheduling latency. The
+    engine's one caller, ``assign_clusters``, passes SMALL_GRAPH_EDGES;
+    the arguments exist so tests can force either path.
     """
     cur, n_edges, _ = _checkpoint_observed(
         edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct())
@@ -151,11 +156,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
 
 
 def assign_clusters(vertices: DataFrame, edges: DataFrame,
-                    id_col: str = "image_id", max_iter: int = 50,
-                    broadcast_assignments: bool | None = None,
-                    small_graph_threshold: int = 0) -> DataFrame:
+                    id_col: str = "image_id",
+                    broadcast_assignments: bool | None = None) -> DataFrame:
     """Full assignment over a vertex table: component min for connected
-    nodes, self for singletons.
+    nodes, self for singletons. Edge sets of at most SMALL_GRAPH_EDGES
+    distinct edges are solved by driver union-find, larger ones by the
+    star loop (the same assignments either way).
 
     ``broadcast_assignments``: the left-join's small side is the CC
     output (non-singleton nodes only — in a dedup workload a small
@@ -166,8 +172,7 @@ def assign_clusters(vertices: DataFrame, edges: DataFrame,
     threshold — the safe setting when the duplicate fraction is unknown
     (a 30%-dup 10^12-row corpus's assignment table is NOT
     broadcastable)."""
-    cc = connected_components(edges, max_iter=max_iter,
-                              small_graph_threshold=small_graph_threshold)
+    cc = connected_components(edges, small_graph_threshold=SMALL_GRAPH_EDGES)
     if broadcast_assignments:
         cc = F.broadcast(cc)
     return (vertices.select(F.col(id_col).alias("image_id")).distinct()

@@ -176,8 +176,7 @@ def _neardup_pairs_exact(en: DataFrame, tau: float, n: int,
 def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
                       n_bands: int = 32, bits: int = 6, seed: int = 7,
                       id_col: str = "vec_id", vec_col: str = "v",
-                      dims: int | None = None,
-                      guard_ratio: float = 1.0) -> DataFrame:
+                      dims: int | None = None) -> DataFrame:
     """Scale path for cosine near-dup pairs: banded hyperplane LSH
     candidates (salted) + exact cosine verify, (a, b, sim) with sim
     rounded to 6 and filtered on the ROUNDED value (oracle contract).
@@ -190,13 +189,13 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
     SELECTIVITY GUARDRAIL (the no-silent-caps rule applied to
     selectivity): before the candidate self-join, the expected candidate
     mass Σ C(cnt, 2) is read off the already-needed bucket stats; when it
-    reaches ``guard_ratio`` × C(n, 2) — banding would enumerate at least
-    the brute-force pair mass, as happens at a low ``tau`` operating
-    point — the operator LOGS the collapse and takes the exact tiled plan
+    reaches C(n, 2) — banding would enumerate at least the brute-force
+    pair mass, as happens at a low ``tau`` operating point — the operator
+    LOGS the collapse and takes the exact tiled plan
     (``_neardup_pairs_exact``) instead. The result is identical either
     way (LSH-then-verify reproduces the brute set; both paths share the
     same fold/round float chain), so only the execution strategy
-    switches. ``guard_ratio <= 0`` disables the guard (always LSH).
+    switches; the guard is always on.
     """
     import logging
 
@@ -210,28 +209,26 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
                             F.col(vec_col).alias("v")),
                    "v").localCheckpoint(eager=True)
     bands = hyperplane_bands(en, n_bands, bits, seed, dims=dims)
-    plan = None
-    if guard_ratio > 0:
-        # the guardrail's mass and n are observed on the stats checkpoint
-        # job itself; band_plan then only filters the materialized stats
-        obs = Observation()
-        stats = bucket_stats(bands).observe(
-            obs,
-            F.coalesce(F.sum(F.col("cnt") * (F.col("cnt") - 1) / 2),
-                       F.lit(0.0)).alias("mass"),
-            F.coalesce(F.sum(F.when(F.col("band_id") == 0, F.col("cnt"))),
-                       F.lit(0)).alias("n")).localCheckpoint(eager=True)
-        row = obs.get
-        mass, n = float(row["mass"]), int(row["n"])
-        brute_pairs = n * (n - 1) / 2.0
-        if mass >= guard_ratio * brute_pairs:
-            logging.getLogger(__name__).warning(
-                "neardup_pairs_lsh: banding selectivity collapsed "
-                "(expected candidate mass %.0f >= %.2f x brute %.0f at "
-                "tau=%s, %dx%d bands) — taking the exact tiled plan",
-                mass, guard_ratio, brute_pairs, tau, n_bands, bits)
-            return _neardup_pairs_exact(en, tau, n)
-        plan = band_plan(bands, cfg, stats=stats)
+    # the guardrail's mass and n are observed on the stats checkpoint
+    # job itself; band_plan then only filters the materialized stats
+    obs = Observation()
+    stats = bucket_stats(bands).observe(
+        obs,
+        F.coalesce(F.sum(F.col("cnt") * (F.col("cnt") - 1) / 2),
+                   F.lit(0.0)).alias("mass"),
+        F.coalesce(F.sum(F.when(F.col("band_id") == 0, F.col("cnt"))),
+                   F.lit(0)).alias("n")).localCheckpoint(eager=True)
+    row = obs.get
+    mass, n = float(row["mass"]), int(row["n"])
+    brute_pairs = n * (n - 1) / 2.0
+    if mass >= brute_pairs:
+        logging.getLogger(__name__).warning(
+            "neardup_pairs_lsh: banding selectivity collapsed "
+            "(expected candidate mass %.0f >= brute %.0f at "
+            "tau=%s, %dx%d bands) — taking the exact tiled plan",
+            mass, brute_pairs, tau, n_bands, bits)
+        return _neardup_pairs_exact(en, tau, n)
+    plan = band_plan(bands, cfg, stats=stats)
     cands = candidate_pairs_from_bands(bands, cfg, source="hyperplane",
                                        plan=plan)
     va = en.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),

@@ -20,6 +20,8 @@ reference's distributed hash tables.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -77,7 +79,7 @@ def lsh_kneighbors(e: DataFrame, k: int, family: str = "random_projections",
 
     cfg = cfg or LshConfig()
     if cfg.max_bucket_size:
-        cfg = LshConfig(**{**_cfg_dict(cfg), "max_bucket_size": 0})
+        cfg = dataclasses.replace(cfg, max_bucket_size=0)
     src = (e.select(F.col(id_col).alias("vec_id"),
                     F.col(vec_col).cast("array<double>").alias("v"))
            .localCheckpoint(eager=True))
@@ -119,11 +121,6 @@ def lsh_kneighbors(e: DataFrame, k: int, family: str = "random_projections",
                     F.coalesce(ranked.m, slots.vec_id).alias("neighbor_id"),
                     F.round(F.coalesce(ranked.d, F.lit(-1.0)), 6)
                     .alias("dist_sq")))
-
-
-def _cfg_dict(cfg: LshConfig) -> dict:
-    from dataclasses import asdict
-    return asdict(cfg)
 
 
 def knn_recall(pred: DataFrame, truth: DataFrame) -> DataFrame:

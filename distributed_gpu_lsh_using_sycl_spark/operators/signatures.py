@@ -108,6 +108,25 @@ def minhash_buckets_batch(crc_arrays: list[np.ndarray], cfg: LshConfig,
     return sig_list, bucket_list
 
 
+def text_signature_batch(captions, cfg: LshConfig, a: np.ndarray,
+                         b: np.ndarray) -> tuple[list, list, list]:
+    """The whole text signature chain for one batch of captions (None =
+    NULL) -> (shingles, minhash, buckets) lists: shingle CRCs via
+    ``shingle_crcs_py``, then ``minhash_buckets_batch``. A NULL caption
+    gets NULL shingles, the MinHash of the empty set and NULL buckets.
+    Shared by the text signature UDF and the blob scan, so both emit the
+    same rows (parity pinned in tests/test_blob_scan.py and
+    tests/test_banding.py)."""
+    k = cfg.shingle_size
+    crcs = [np.zeros(0, dtype=np.uint64) if c is None
+            else np.asarray(shingle_crcs_py(c, k), dtype=np.uint64)
+            for c in captions]
+    sig_list, bucket_list = minhash_buckets_batch(crcs, cfg, a, b)
+    shingles = [None if c is None else arr.view(np.int64).tolist()
+                for c, arr in zip(captions, crcs)]
+    return shingles, sig_list, bucket_list
+
+
 # --------------------------------------------------------------------------- #
 # Text signature: shingles + MinHash + band buckets (one pandas UDF)
 # --------------------------------------------------------------------------- #
@@ -121,24 +140,14 @@ _TEXT_SIG_SCHEMA = T.StructType([
 
 def make_text_signature_udf(cfg: LshConfig):
     """Series(text) -> struct(shingles, minhash, buckets): the WHOLE text
-    signature chain in one Arrow hop, using ``shingle_crcs_py`` — the
-    exact Python twin of the JVM shingle chain (parity pinned in
-    tests/test_blob_scan.py) — plus the shared minhash batch kernel.
-    Mirrors blob_scan._compute_batch's null handling exactly (NULL
-    caption -> shingles NULL, buckets NULL). Measured ~1.4x the JVM
-    shingle chain + separate minhash UDF at sf0.1 (one Arrow hop, no
-    interpreted higher-order functions)."""
+    signature chain (``text_signature_batch``) in one Arrow hop.
+    Measured ~1.4x the JVM shingle chain + separate minhash UDF at sf0.1
+    (one Arrow hop, no interpreted higher-order functions)."""
     a, b = H.minhash_params(cfg.seed, cfg.signature_len, cfg.signature_pool_size)
-    k = cfg.shingle_size
 
     @F.pandas_udf(_TEXT_SIG_SCHEMA)
     def text_sig_udf(texts: pd.Series) -> pd.DataFrame:
-        crcs = [np.zeros(0, dtype=np.uint64) if t is None
-                else np.asarray(shingle_crcs_py(t, k), dtype=np.uint64)
-                for t in texts]
-        sig_list, bucket_list = minhash_buckets_batch(crcs, cfg, a, b)
-        sh = [None if t is None else arr.view(np.int64).tolist()
-              for t, arr in zip(texts, crcs)]
+        sh, sig_list, bucket_list = text_signature_batch(texts, cfg, a, b)
         return pd.DataFrame({"shingles": sh, "minhash": sig_list,
                              "buckets": bucket_list})
 
@@ -209,6 +218,23 @@ def make_simhash_udf(cfg: LshConfig):
 # the signature stage
 # --------------------------------------------------------------------------- #
 
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin a BATCH frame across the session's parallelism when
+    its scan plans fewer partitions than cores: tiny inputs (one small
+    parquet file, one row group) otherwise run every narrow stage above
+    the first exchange, Python UDFs included, on ONE task. Inputs already
+    at or above the core count (any real table at scale) pass through and
+    pay no shuffle. Streaming frames also pass through: they cannot be
+    asked for a partition count, and micro-batch sizing is the source's
+    job."""
+    if df.isStreaming:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 def compute_signatures(images: DataFrame, cfg: LshConfig,
                        id_col: str = "image_id", text_col: str = "caption",
                        with_image: bool = True) -> DataFrame:
@@ -224,19 +250,9 @@ def compute_signatures(images: DataFrame, cfg: LshConfig,
     minhash batch kernel. tests/test_banding.py recomputes the output
     from the JVM shingle chain plus local numpy, NULL captions included.
     """
-    # Tiny inputs (one small parquet file) arrive as a single partition,
-    # which would serialize the whole UDF chain onto one core. Widen ONLY
-    # in that case — a real corpus already has >= parallelism splits and
-    # must not pay a full (bytes+caption) shuffle here. Streaming inputs
-    # can't be asked for partition counts (and micro-batch sizing is the
-    # source's job), so they pass through untouched.
-    if not images.isStreaming:
-        target = images.sparkSession.sparkContext.defaultParallelism
-        if images.rdd.getNumPartitions() < target:
-            images = images.repartition(target)
     sig_udf = make_text_signature_udf(cfg)
     out = (
-        images
+        spread(images)
         .withColumn("sg", sig_udf(F.col(text_col)))
         .select(
             F.col(id_col).alias("image_id"),

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+from distributed_gpu_lsh_using_sycl_spark.operators.signatures import spread
 
 _MOD = np.uint64((1 << 31) - 1)
 _BASE = np.uint64(131)
@@ -104,19 +105,6 @@ def _winnowed_hashes(text: str, L: int, stride: int) -> np.ndarray:
     return np.unique(mins).astype(np.int64)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the frame across the session's parallelism when the
-    upstream scan plans fewer partitions than cores — a single-row-group
-    parquet file otherwise runs every narrow stage above the first
-    exchange (the fingerprint UDF included) on ONE task. The projection
-    is (id, text) only, so the exchange moves a few MB; inputs already at
-    or above core count (any real table at scale) pass through untouched."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def window_hash_df(docs: DataFrame, cfg: LshConfig,
                    id_col: str = "image_id", text_col: str = "caption") -> DataFrame:
     """(id, text) -> exploded (image_id, whash): winnowed window
@@ -129,7 +117,7 @@ def window_hash_df(docs: DataFrame, cfg: LshConfig,
         return pd.Series([_winnowed_hashes(t or "", L, stride).tolist()
                           for t in texts])
 
-    return (_spread(docs.select(F.col(id_col).alias("image_id"),
+    return (spread(docs.select(F.col(id_col).alias("image_id"),
                                 F.col(text_col).alias("text")))
             .withColumn("whash", F.explode(win_udf(F.col("text"))))
             .select("image_id", "whash"))
@@ -162,9 +150,7 @@ def substring_candidates(docs: DataFrame, cfg: LshConfig,
 def suffix_array(s: np.ndarray) -> np.ndarray:
     """Suffix array by prefix doubling (O(n log^2 n), numpy lexsort)."""
     n = len(s)
-    rank = np.argsort(s, kind="stable")
     # initial ranks from values
-    order = np.empty(n, dtype=np.int64)
     sa = np.argsort(s, kind="stable")
     vals = s[sa]
     r = np.zeros(n, dtype=np.int64)
@@ -265,16 +251,17 @@ def shares_window(a: str, b: str, L: int) -> bool:
     ``lcs_fast(a, b) >= L`` (an LCS of length >= L contains a length-L
     window and vice versa; property-pinned in tests) at a fraction of the
     cost: one window-set probe at k=L instead of lcs_fast's ~log2(len)
-    binary-search probes. This is the verify's whole question — the exact
-    LCS length is never consumed downstream."""
+    binary-search probes, over window sets memoized by ``_window_set``.
+    This is the verify's whole question — the exact LCS length is never
+    consumed downstream — and ``verify_substring_pairs`` runs this very
+    function per candidate pair (NULL text as "")."""
     if len(a) > len(b):
         a, b = b, a
     if len(a) < L:
         return False
     if a in b:
         return True  # len(a) >= L here, so containment implies a window
-    wa = {a[i:i + L] for i in range(len(a) - L + 1)}
-    return any(b[i:i + L] in wa for i in range(len(b) - L + 1))
+    return not _window_set(a, L).isdisjoint(_window_set(b, L))
 
 
 def verify_substring_pairs(cands: DataFrame, docs: DataFrame, cfg: LshConfig,
@@ -283,8 +270,8 @@ def verify_substring_pairs(cands: DataFrame, docs: DataFrame, cfg: LshConfig,
     pairs with a true shared length-L window (kills the window-hash
     join's collision + short-gram false positives).
 
-    The probe is exact (raw length-L windows, no hashes — collision and
-    short-gram candidates die here) and AMORTIZED: a doc participates in
+    The probe is ``shares_window``: exact (raw length-L windows, no
+    hashes — collision and short-gram candidates die here) and AMORTIZED: a doc participates in
     many candidate pairs, so its frozen window set is built once per
     worker (LRU on the text) and each pair costs one C-level
     ``isdisjoint``. A JVM variant (``arrays_overlap`` over substring
@@ -301,18 +288,8 @@ def verify_substring_pairs(cands: DataFrame, docs: DataFrame, cfg: LshConfig,
 
     @F.pandas_udf(T.BooleanType())
     def shares_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(ta, tb):
-            x, y = x or "", y or ""
-            if len(x) > len(y):
-                x, y = y, x
-            if len(x) < L:
-                out.append(False)
-            elif x in y:
-                out.append(True)
-            else:
-                out.append(not _window_set(x, L).isdisjoint(_window_set(y, L)))
-        return pd.Series(out, dtype="bool")
+        return pd.Series([shares_window(x or "", y or "", L)
+                          for x, y in zip(ta, tb)], dtype="bool")
 
     return (withs
             .filter(shares_udf("text_a", "text_b"))

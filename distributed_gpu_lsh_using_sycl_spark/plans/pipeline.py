@@ -35,17 +35,6 @@ from distributed_gpu_lsh_using_sycl_spark.sources.tables import TableIO
 STAGES = ("signatures", "bands", "cand_minhash", "cand_simhash", "cand_phash",
           "cand_substring", "pairs", "edges", "clusters")
 
-#: default verified-edge bound for the clusters stage's driver union-find
-#: fast path (connected_components small_graph_threshold; same bound and
-#: rationale as streaming/e2e.RECONCILE_SMALL_GRAPH_EDGES: ~tens of MB of
-#: Arrow-collected id pairs at the bound). In a dedup workload verified
-#: edges are O(duplicates), a small fraction of |V| — a corpus whose edge
-#: set exceeds this takes the distributed star loop automatically, so the
-#: 10^12-row contract is unchanged; the fast path only removes ~4 rounds
-#: x ~10 shuffle stages of fixed scheduling latency when the graph is
-#: driver-sized anyway. Pass cc_small_graph_edges=0 to force the loop.
-CC_SMALL_GRAPH_EDGES = 200_000
-
 
 @dataclass
 class PipelineResult:
@@ -62,27 +51,21 @@ class DedupPipeline:
 
     With ``io=None`` the stages stay lazy/in-memory (tests); with a
     TableIO every stage is materialized + manifest-tracked and a rerun
-    resumes after the last completed stage.
+    resumes after the last completed stage. Execution strategy is not
+    configured here: the clusters stage's union-find vs star-loop choice
+    belongs to ``components.assign_clusters`` (SMALL_GRAPH_EDGES).
     """
 
     def __init__(self, spark: SparkSession, cfg: LshConfig,
                  io: TableIO | None = None, with_image: bool = True,
                  id_col: str = "image_id", text_col: str = "caption",
-                 scan_path: str | None = None,
-                 cc_small_graph_edges: int = CC_SMALL_GRAPH_EDGES):
+                 scan_path: str | None = None):
         self.spark = spark
         self.cfg = cfg
         self.io = io
         self.with_image = with_image
         self.id_col = id_col
         self.text_col = text_col
-        #: verified-edge count at or under which the clusters stage solves
-        #: CC with driver-side union-find instead of the star loop — an
-        #: execution-strategy knob (identical assignments, pinned in
-        #: tests/test_components.py), NOT a semantic one, so it stays out
-        #: of the config hash. See connected_components's docstring; the
-        #: streaming reconcile uses the same bound for the same reason.
-        self.cc_small_graph_edges = cc_small_graph_edges
         #: parquet path of the input table, when known: the signature
         #: stage then uses the blob-scan pushdown (sources/blob_scan.py)
         #: so image bytes never transit the JVM — bit-identical
@@ -267,8 +250,7 @@ class DedupPipeline:
         t["clusters"] = self._stage(
             "clusters",
             lambda: components.assign_clusters(
-                images, t["edges"], id_col=self.id_col,
-                small_graph_threshold=self.cc_small_graph_edges))
+                images, t["edges"], id_col=self.id_col))
 
         if self.io:
             mdf = self.spark.createDataFrame(
@@ -290,13 +272,12 @@ class DedupPipeline:
 def run_dedup(spark: SparkSession, images: DataFrame, cfg: LshConfig | None = None,
               warehouse: str | None = None, with_image: bool = True,
               id_col: str = "image_id", text_col: str = "caption",
-              scan_path: str | None = None,
-              cc_small_graph_edges: int = CC_SMALL_GRAPH_EDGES) -> PipelineResult:
+              scan_path: str | None = None) -> PipelineResult:
     cfg = cfg or LshConfig()
     io = TableIO(spark, warehouse, cfg.table_format) if warehouse else None
     return DedupPipeline(spark, cfg, io=io, with_image=with_image,
-                         id_col=id_col, text_col=text_col, scan_path=scan_path,
-                         cc_small_graph_edges=cc_small_graph_edges).run(images)
+                         id_col=id_col, text_col=text_col,
+                         scan_path=scan_path).run(images)
 
 
 def _main() -> None:

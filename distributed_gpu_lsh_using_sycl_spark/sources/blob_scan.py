@@ -50,7 +50,7 @@ from pyspark.sql import types as T
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
-    minhash_buckets_batch, shingle_crcs_py, simhash_batch)
+    simhash_batch, text_signature_batch)
 
 
 def _sig_schema(id_type: T.DataType) -> T.StructType:
@@ -119,17 +119,10 @@ def _compute_batch(t, cfg: LshConfig, a: np.ndarray, b: np.ndarray,
                    with_image: bool, id_col: str, text_col: str) -> pd.DataFrame:
     """Signature frame for one in-memory Arrow batch/table slice."""
     caps = t.column(text_col).to_pylist()
-    k = cfg.shingle_size
-    # NULL caption: shingles = NULL (not []) and minhash over an empty
-    # set — mirror compute_signatures' text UDF exactly
-    crcs = [np.zeros(0, dtype=np.uint64) if c is None
-            else np.asarray(shingle_crcs_py(c, k), dtype=np.uint64)
-            for c in caps]
-    sig_list, bucket_list = minhash_buckets_batch(crcs, cfg, a, b)
+    shingles, sig_list, bucket_list = text_signature_batch(caps, cfg, a, b)
     out = {
         "image_id": t.column(id_col).to_pylist(),
-        "shingles": [None if c is None else arr.view(np.int64).tolist()
-                     for c, arr in zip(caps, crcs)],
+        "shingles": shingles,
         "minhash": sig_list,
         "buckets": bucket_list,
     }
@@ -145,22 +138,22 @@ def _compute_batch(t, cfg: LshConfig, a: np.ndarray, b: np.ndarray,
 
 def compute_split(file: str, rg: int, cfg: LshConfig,
                   a: np.ndarray, b: np.ndarray, with_image: bool = True,
-                  id_col: str = "image_id", text_col: str = "caption",
-                  slice_rows: int = SLICE_ROWS) -> pd.DataFrame:
+                  id_col: str = "image_id", text_col: str = "caption"
+                  ) -> pd.DataFrame:
     """Scan one parquet row group and compute its signature frame — the
     entire per-split work of the fused stage in one framework-free
     function. Called by scan_signatures' mapInPandas tasks AND verbatim
     by bench.py's host-ceiling control, so the stage-vs-ceiling
     comparison is over literally the same code. The row group is
-    streamed in ``slice_rows`` batches (see SLICE_ROWS) so blob bytes
-    never pile up in the worker."""
+    streamed in SLICE_ROWS batches so blob bytes never pile up in the
+    worker."""
     import pyarrow.parquet as pq
 
     cols = [id_col, text_col] + (["phash", "bytes"] if with_image else [])
     frames = [
         _compute_batch(batch, cfg, a, b, with_image, id_col, text_col)
         for batch in pq.ParquetFile(file).iter_batches(
-            batch_size=slice_rows, row_groups=[rg], columns=cols)
+            batch_size=SLICE_ROWS, row_groups=[rg], columns=cols)
     ]
     if not frames:
         return _compute_batch(

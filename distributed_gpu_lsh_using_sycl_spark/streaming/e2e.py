@@ -234,18 +234,9 @@ def _parquet_dir_has_data(path: str) -> bool:
                for _, _, files in os.walk(path) for f in files)
 
 
-#: Default bound for the reconcile's driver union-find fast path: edge
-#: sets at or under this are solved driver-side (Arrow-collected id
-#: pairs — tens of MB at the bound), larger ones take the distributed
-#: star loop. Callers with bigger drivers raise it per call.
-RECONCILE_SMALL_GRAPH_EDGES = 200_000
-
-
 def _reconcile(spark: SparkSession, sigs: DataFrame,
                cands: DataFrame, cfg: LshConfig,
-               adjudicated_dir: str | None = None,
-               small_graph_threshold: int = RECONCILE_SMALL_GRAPH_EDGES,
-               ) -> tuple[DataFrame, int]:
+               adjudicated_dir: str | None = None) -> tuple[DataFrame, int]:
     """Accumulated signatures + candidate pairs -> (full cluster
     assignment, n pairs newly verified this cycle).
 
@@ -255,7 +246,9 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
     Jaccard/Hamming predicates, and the new verdicts are appended.
     Signatures are immutable once written (exactly-once ingest, one
     signature per image_id), so a verdict never needs revisiting. CC
-    stays global over ALL verified edges (singletons = self)."""
+    stays global over ALL verified edges (singletons = self); at
+    wave-scale edge counts ``assign_clusters`` solves it with its driver
+    union-find fast path, past its bound with the star loop."""
     from distributed_gpu_lsh_using_sycl_spark.operators.components import (
         assign_clusters)
     from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
@@ -291,15 +284,8 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
     else:
         all_verdicts = new_verdicts
         n_new = -1  # not tracked in the non-persistent mode
-    # Reconcile cycles run CONTINUOUSLY; at wave-scale edge counts the
-    # star loop's ~4 rounds of shuffle-stage scheduling latency dominate
-    # CC (measured 2.2s for 256 edges). Opt into the driver union-find
-    # fast path under a caller-tunable bound (identical assignments,
-    # pinned in tests); past the bound the distributed loop engages
-    # automatically.
     return (assign_clusters(sigs, verified_edges(all_verdicts),
-                            id_col="image_id",
-                            small_graph_threshold=small_graph_threshold),
+                            id_col="image_id"),
             n_new)
 
 
@@ -307,23 +293,25 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
                           warehouse: str, cfg: LshConfig | None = None,
                           with_image: bool = False,
                           timeout_s: int = 600,
-                          state_partitions: int | None = None,
-                          reconcile: bool = True,
-                          ingest_partitions: int | None = None,
-                          small_graph_threshold: int =
-                          RECONCILE_SMALL_GRAPH_EDGES) -> dict:
+                          reconcile: bool = True) -> dict:
     """One incremental dedup cycle over ``input_dir`` (a parquet dir that
     accumulates input files between cycles). Returns
-    ``{"clusters": DataFrame, "n_signatures": int, "n_candidates": int}``
-    — clusters is also written to ``<warehouse>/clusters``.
+    ``{"clusters": DataFrame, "n_signatures": int, "n_candidates": int,
+    "n_new_adjudicated": int}`` — clusters is also written to
+    ``<warehouse>/clusters``; n_new_adjudicated counts the candidate
+    pairs verified (or rejected) for the first time in this cycle.
+
+    Both streaming stages run on one partition count derived from the
+    wave's input bytes (``_adaptive_partitions``); the CC strategy is
+    ``assign_clusters``' own. Neither is a parameter.
 
     ``reconcile=False`` drains stages 1+2 only (signatures + candidate
-    state advance; clusters table left as-is, returned as None). A
-    scheduler ingesting many small waves between reads runs drain-only
-    cycles and reconciles once per read window: CC is a global fixpoint
-    over ACCUMULATED edges, so the final reconcile alone produces the
-    same clusters as reconciling every wave (asserted in
-    tests/test_resume_and_streaming.py)."""
+    state advance; clusters table left as-is, returned as None, and no
+    n_new_adjudicated key). A scheduler ingesting many small waves
+    between reads runs drain-only cycles and reconciles once per read
+    window: CC is a global fixpoint over ACCUMULATED edges, so the final
+    reconcile alone produces the same clusters as reconciling every wave
+    (asserted in tests/test_resume_and_streaming.py)."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
         signature_stream)
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
@@ -333,40 +321,29 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     sigs_dir = os.path.join(warehouse, "signatures")
     pairs_dir = os.path.join(warehouse, "cand_pairs")
 
-    # ingest_partitions: spread the signature UDF when waves land as few
-    # files (see signature_stream — the file source parallelizes by file,
-    # so a narrow wave otherwise signs on a fraction of the cores).
-    # Default: SCALE-ADAPTIVE from the wave's bytes (_adaptive_partitions)
-    # — a core-count constant over-partitions small waves (32 state
-    # commits + 32 files per micro-batch for a 2 MB wave) and a
-    # fixed small number would serialize big ones.
-    if ingest_partitions is None:
-        ingest_partitions = _adaptive_partitions(spark, input_dir)
-    if state_partitions is None:
-        state_partitions = ingest_partitions
+    # One byte-derived partition count for both stages (see
+    # _adaptive_partitions). The ingest stage repartitions to it because
+    # the file source parallelizes by file, so a wave landing as few
+    # files would otherwise sign on a fraction of the cores; a
+    # core-count constant instead over-partitions small waves (32 state
+    # commits + 32 files per micro-batch for a 2 MB wave).
+    parts = _adaptive_partitions(spark, input_dir)
     q = signature_stream(spark, input_dir, sigs_dir,
                          os.path.join(warehouse, "ckpt_sigs"), cfg,
-                         with_image=with_image, available_now=True,
-                         ingest_partitions=ingest_partitions)
+                         with_image=with_image, ingest_partitions=parts)
     _await_drained(q, timeout_s)
     # The stateful join's state-store partition count is captured from
     # spark.sql.shuffle.partitions at the query's FIRST start and pinned
-    # in the checkpoint; this knob overrides it for the candidate stream
-    # only. Default: the same scale-adaptive count as the ingest stage.
-    # (History: round 5 measured fewer partitions strictly SLOWER — the
-    # stage was bound by the per-row Python emit, so shrinking partitions
-    # forfeited task parallelism. Round 6 vectorized the emit's common
-    # path, after which the per-partition fixed costs — state-store
-    # get/commit, delta files, task launches — dominate small waves and
-    # the byte-derived count measured ~2x faster on the sf0.1 two-wave
-    # cycle; big waves still grow to the session parallelism.)
+    # in the checkpoint, so it is set for the candidate stream only.
+    # Per-partition fixed costs (state-store get/commit, delta files, task
+    # launches) dominate small waves: the byte-derived count measured ~2x
+    # faster than the core count on the sf0.1 two-wave cycle, and big
+    # waves still grow to the session parallelism.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(state_partitions or prev))
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
         q = candidate_pair_stream(spark, sigs_dir, pairs_dir,
-                                  os.path.join(warehouse, "ckpt_pairs"), cfg,
-                                  available_now=True)
+                                  os.path.join(warehouse, "ckpt_pairs"), cfg)
         _await_drained(q, timeout_s)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -386,8 +363,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
                 "n_candidates": _parquet_dir_rows(pairs_dir)}
     clusters, n_new = _reconcile(
         spark, sigs, cands, cfg,
-        adjudicated_dir=os.path.join(warehouse, "adjudicated"),
-        small_graph_threshold=small_graph_threshold)
+        adjudicated_dir=os.path.join(warehouse, "adjudicated"))
     out_dir = os.path.join(warehouse, "clusters")
     # a handful of right-sized files instead of one per shuffle
     # partition: the table is O(|V|) skinny rows, and every consumer

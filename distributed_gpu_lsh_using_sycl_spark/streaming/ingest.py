@@ -16,6 +16,11 @@ readStream unchanged, which is exactly why the stage split puts banding
 Checkpointing: Spark's own streaming checkpoint (offsets + sink commit
 log) gives exactly-once file processing; the pipeline manifest governs
 the downstream batch stages.
+
+Trigger: every run is an availableNow drain — it signs every file present
+at start and stops. Continuous operation is a scheduler re-running the
+drain per wave (``streaming/e2e.streaming_dedup_cycle``), not a
+long-running query.
 """
 
 from __future__ import annotations
@@ -39,41 +44,31 @@ IMAGES_SCHEMA = T.StructType([
 
 def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
                      checkpoint_dir: str, cfg: LshConfig | None = None,
-                     with_image: bool = True, available_now: bool = True,
-                     max_files_per_trigger: int | None = None,
+                     with_image: bool = True,
                      ingest_partitions: int | None = None):
-    """readStream(parquet dir) -> compute_signatures -> append parquet.
-
-    ``available_now=True`` drains everything currently present and stops
-    (the testable batch-incremental mode); False runs continuously.
-    ``max_files_per_trigger`` splits a drain into smaller micro-batches;
-    leave None for throughput (signing is stateless, so splitting only
-    adds per-batch commit overhead) and set it in continuous mode when
-    per-batch latency, not drain throughput, is the target.
+    """readStream(parquet dir) -> compute_signatures -> append parquet,
+    drained with an availableNow trigger (everything currently present,
+    then stop). Signing is stateless, so the drain runs as few
+    micro-batches as the source allows: splitting it would only add
+    per-batch commit overhead.
 
     ``ingest_partitions`` repartitions each micro-batch BEFORE the
     signature UDF. The file source parallelizes by input file/row-group,
     so a wave landing as FEW files signs on as few cores (measured: a
     one-file 2.5k-doc wave ran the whole signature stage on 1 of 32
-    cores, 3.5s vs ~1.2s repartitioned) — set it to the executor core
-    count when waves arrive narrow. Leave None when waves land wide
-    (parallel upstream writers — the production shape), where the extra
-    shuffle of raw bytes would only cost.
+    cores, 3.5s vs ~1.2s repartitioned). ``streaming_dedup_cycle`` sets
+    it from the wave's bytes; None skips the shuffle.
     Returns the StreamingQuery.
     """
     cfg = cfg or LshConfig()
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
+    stream = spark.readStream.schema(IMAGES_SCHEMA).parquet(input_dir)
     if ingest_partitions:
         stream = stream.repartition(ingest_partitions)
     sigs = compute_signatures(stream, cfg, with_image=with_image)
-    writer = (sigs.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (sigs.writeStream
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())

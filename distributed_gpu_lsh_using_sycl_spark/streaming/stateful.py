@@ -27,6 +27,10 @@ State discipline at 10^12-image scale (the part that matters):
 
 The reference is single-shot batch (main.cpp:46-55); this is new surface
 for the continuous-ingest regime, same contract as the batch operator.
+The stream is always drained with an availableNow trigger; continuous
+ingest is a scheduler re-running the drain per wave
+(``streaming/e2e.streaming_dedup_cycle``), and the state carries across
+drains through the checkpoint.
 """
 
 from __future__ import annotations
@@ -75,8 +79,8 @@ def _state_layout_stamp(cfg: LshConfig | None = None) -> str:
     either way, resuming a checkpoint written under different values
     makes prior members invisible to new arrivals (silently MISSED
     pairs, no error at all), so all of them must refuse a mismatched
-    resume. Perf-only knobs (Arrow batch size, salting, shuffle width)
-    deliberately stay out: they cannot move a row's key."""
+    resume. Perf-only knobs (salting, shuffle width) deliberately stay
+    out: they cannot move a row's key."""
     if cfg is None:
         return str(STATE_FORMAT_VERSION)
     keydef = (f"g{cfg.state_group_buckets}:sh{cfg.shingle_size}"
@@ -241,20 +245,18 @@ def incremental_candidates(bands_stream: DataFrame,
 
 def candidate_pair_stream(spark, input_dir: str, out_dir: str,
                           checkpoint_dir: str, cfg: LshConfig | None = None,
-                          available_now: bool = True,
                           max_files_per_trigger: int | None = None):
     """readStream(signatures parquet: image_id, buckets array<long>) ->
-    explode bands -> stateful incremental bucket join -> append parquet.
-    Returns the StreamingQuery.
+    explode bands -> stateful incremental bucket join -> append parquet,
+    drained with an availableNow trigger. Returns the StreamingQuery.
 
-    ``max_files_per_trigger`` splits a drain into smaller micro-batches.
+    ``max_files_per_trigger`` splits the drain into smaller micro-batches.
     Leave None for drain throughput: EVERY micro-batch pays one state
     get+commit and one Python emit per touched key, and a full drain
     touches ~every coarse key, so k micro-batches cost ~k× the stateful
-    stage's per-key overhead for the same admitted members (the pair set
-    itself is trigger-invariant — asserted in
-    tests/test_resume_and_streaming.py). Set it in continuous mode when
-    per-batch latency or per-batch state-delta size is the target."""
+    stage's per-key overhead for the same admitted members. The pair set
+    itself is trigger-invariant, which is what setting it checks
+    (tests/test_resume_and_streaming.py)."""
     cfg = cfg or LshConfig()
     _check_state_version(checkpoint_dir, cfg)
     sigs_schema = T.StructType([
@@ -269,12 +271,10 @@ def candidate_pair_stream(spark, input_dir: str, out_dir: str,
              .filter(F.col("buckets").isNotNull())
              .select("image_id",
                      F.posexplode("buckets").alias("band_id", "bucket")))
-    pairs = incremental_candidates(bands, cfg)
-    writer = (pairs.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (incremental_candidates(bands, cfg).writeStream
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())

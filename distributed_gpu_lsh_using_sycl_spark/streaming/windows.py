@@ -46,20 +46,19 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
 
 def windowed_stream(spark: SparkSession, input_dir: str, out_dir: str,
                     checkpoint_dir: str, window: str = "1 hour",
-                    watermark_delay: str = "2 hours",
-                    available_now: bool = True):
-    """readStream(parquet dir) -> watermarked windowed agg -> append sink.
-    availableNow drains current files and stops (testable mode)."""
+                    watermark_delay: str = "2 hours"):
+    """readStream(parquet dir) -> watermarked windowed agg -> append sink,
+    drained with an availableNow trigger (current files, then stop); a
+    scheduler re-runs the drain as files land."""
     stream = (spark.readStream
               .schema(EVENTS_SCHEMA)
               .option("maxFilesPerTrigger", 8)
               .parquet(input_dir))
-    agg = windowed_event_counts(stream, window, watermark_delay)
-    writer = (agg.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (windowed_event_counts(stream, window, watermark_delay)
+            .writeStream
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())

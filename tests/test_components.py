@@ -20,10 +20,21 @@ def _union_find_clusters(n_ids, edges):
     return {i: find(i) for i in n_ids}
 
 
-@pytest.mark.parametrize("seed,n,p", [(1, 60, 0.03), (2, 100, 0.01), (3, 40, 0.15)])
-def test_cc_matches_union_find(spark, seed, n, p):
-    from distributed_gpu_lsh_using_sycl_spark.operators.components import assign_clusters
+def _assign_both_paths(monkeypatch, vdf, edf):
+    """assign_clusters under its own bound (driver union-find at these
+    sizes) and with the bound forced to 0 (the star loop)."""
+    from distributed_gpu_lsh_using_sycl_spark.operators import components
 
+    out = []
+    for bound in (components.SMALL_GRAPH_EDGES, 0):
+        monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", bound)
+        out.append({r["image_id"]: r["cluster_id"]
+                    for r in components.assign_clusters(vdf, edf).collect()})
+    return out
+
+
+@pytest.mark.parametrize("seed,n,p", [(1, 60, 0.03), (2, 100, 0.01), (3, 40, 0.15)])
+def test_cc_matches_union_find(spark, monkeypatch, seed, n, p):
     rng = np.random.Generator(np.random.PCG64(seed))
     ids = [f"v{i:04d}" for i in range(n)]
     edges = [(ids[i], ids[j]) for i in range(n) for j in range(i + 1, n)
@@ -32,25 +43,22 @@ def test_cc_matches_union_find(spark, seed, n, p):
 
     vdf = spark.createDataFrame([(i,) for i in ids], ["image_id"])
     edf = spark.createDataFrame(edges or [("v0000", "v0000")], ["a", "b"])
-    got = {r["image_id"]: r["cluster_id"]
-           for r in assign_clusters(vdf, edf).collect()}
-    assert got == expect
+    for got in _assign_both_paths(monkeypatch, vdf, edf):
+        assert got == expect
 
 
-def test_cc_chain_and_star(spark):
+def test_cc_chain_and_star(spark, monkeypatch):
     """A long path (worst case for propagation) and a star collapse to one
-    cluster rooted at the min."""
-    from distributed_gpu_lsh_using_sycl_spark.operators.components import assign_clusters
-
+    cluster rooted at the min, on both CC paths."""
     chain = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(30)]
     star = [("s000", f"s{i:03d}") for i in range(1, 10)]
     ids = sorted({x for e in chain + star for x in e}) + ["lonely"]
     vdf = spark.createDataFrame([(i,) for i in ids], ["image_id"])
     edf = spark.createDataFrame(chain + star, ["a", "b"])
-    got = {r["image_id"]: r["cluster_id"] for r in assign_clusters(vdf, edf).collect()}
-    assert {got[f"c{i:03d}"] for i in range(31)} == {"c000"}
-    assert {got[f"s{i:03d}"] for i in range(10)} == {"s000"}
-    assert got["lonely"] == "lonely"
+    for got in _assign_both_paths(monkeypatch, vdf, edf):
+        assert {got[f"c{i:03d}"] for i in range(31)} == {"c000"}
+        assert {got[f"s{i:03d}"] for i in range(10)} == {"s000"}
+        assert got["lonely"] == "lonely"
 
 
 @pytest.mark.parametrize("seed", [7, 11])
@@ -106,6 +114,37 @@ def test_small_graph_threshold_boundary(spark, monkeypatch):
                         edf, small_graph_threshold=thr).collect()}
     assert calls == [1]  # only the threshold == count run took union-find
     assert got[n_distinct] == got[n_distinct - 1] == want
+
+
+def test_assign_clusters_small_graph_takes_union_find(spark, monkeypatch):
+    """With no argument, assign_clusters solves a graph under
+    components.SMALL_GRAPH_EDGES by driver union-find: the star loop
+    never runs, and the assignment equals the oracle."""
+    from distributed_gpu_lsh_using_sycl_spark.operators import components
+
+    calls = {"union_find": 0, "star": 0}
+    real_uf, real_star = (components._small_graph_components,
+                          components._large_star)
+
+    def uf(cur):
+        calls["union_find"] += 1
+        return real_uf(cur)
+
+    def star(e):
+        calls["star"] += 1
+        return real_star(e)
+
+    monkeypatch.setattr(components, "_small_graph_components", uf)
+    monkeypatch.setattr(components, "_large_star", star)
+    edges = [("v01", "v02"), ("v02", "v03"), ("v05", "v04")]
+    ids = sorted({x for e in edges for x in e}) + ["v09"]
+    vdf = spark.createDataFrame([(i,) for i in ids], ["image_id"])
+    edf = spark.createDataFrame(edges, ["a", "b"])
+    got = {r["image_id"]: r["cluster_id"]
+           for r in components.assign_clusters(vdf, edf).collect()}
+    assert calls == {"union_find": 1, "star": 0}
+    assert len(edges) <= components.SMALL_GRAPH_EDGES
+    assert got == _union_find_clusters(ids, edges)
 
 
 def test_cc_raises_when_max_iter_exhausted(spark):

@@ -142,19 +142,27 @@ def test_singletons_are_self_clusters(pipeline_result):
             assert r["cluster_id"] == r["image_id"]
 
 
-def test_cc_fast_path_matches_star_loop(spark, oracle_truth, pipeline_result):
-    """The pipeline's clusters stage defaults to the CC small-graph fast
-    path (driver union-find at <= CC_SMALL_GRAPH_EDGES verified edges);
-    forcing the distributed star loop (threshold 0) must produce the
-    identical assignment — the threshold is an execution-strategy knob,
-    never a semantic one."""
+def test_cc_fast_path_matches_star_loop(spark, oracle_truth, pipeline_result,
+                                       monkeypatch):
+    """The pipeline's clusters stage takes the CC small-graph fast path
+    (driver union-find at <= components.SMALL_GRAPH_EDGES verified
+    edges); forcing the distributed star loop (bound 0) must produce the
+    identical assignment — the bound is an execution strategy, never a
+    semantic one."""
+    from distributed_gpu_lsh_using_sycl_spark.operators import components
     from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
 
+    rounds = []
+    real = components._large_star
+    monkeypatch.setattr(components, "_large_star",
+                        lambda e: rounds.append(1) or real(e))
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
     images, _, _, _ = oracle_truth
     df = spark.createDataFrame(images)
-    loop = run_dedup(spark, df, CFG, cc_small_graph_edges=0)
-    fast = {(r["image_id"], r["cluster_id"])
-            for r in pipeline_result["clusters"].collect()}
+    loop = run_dedup(spark, df, CFG)
     slow = {(r["image_id"], r["cluster_id"])
             for r in loop["clusters"].collect()}
+    assert rounds  # the star loop really ran
+    fast = {(r["image_id"], r["cluster_id"])
+            for r in pipeline_result["clusters"].collect()}
     assert fast == slow

@@ -82,14 +82,14 @@ def test_streaming_incremental_signatures(spark, tmp_path_factory):
     spark.createDataFrame(chunk1).write.mode("overwrite").parquet(os.path.join(inp, "c1"))
 
     cfg = LshConfig()
-    q = signature_stream(spark, inp + "/*", out, ckpt, cfg, available_now=True)
+    q = signature_stream(spark, inp + "/*", out, ckpt, cfg)
     q.awaitTermination(300)
     got1 = spark.read.parquet(out)
     assert got1.count() == 40
 
     # second chunk lands; incremental run signs ONLY the new files
     spark.createDataFrame(chunk2).write.mode("overwrite").parquet(os.path.join(inp, "c2"))
-    q = signature_stream(spark, inp + "/*", out, ckpt, cfg, available_now=True)
+    q = signature_stream(spark, inp + "/*", out, ckpt, cfg)
     q.awaitTermination(300)
     got = spark.read.parquet(out)
     assert got.count() == 60
@@ -372,7 +372,7 @@ def test_adjudicated_compaction_bounds_files(spark, tmp_path_factory,
 def test_adjudicated_reuse_survives_perf_only_config_change(
         spark, tmp_path_factory):
     """The adjudicated fingerprint covers only verdict-semantic fields:
-    retuning a perf knob (here arrow_batch_size) against the same
+    retuning a perf knob (here n_salts) against the same
     warehouse must KEEP the persisted verdicts — a full-config hash would
     brick every warehouse on any tuning change even though the verdicts
     remain valid."""
@@ -391,7 +391,7 @@ def test_adjudicated_reuse_survives_perf_only_config_change(
     r1 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
     assert r1["n_new_adjudicated"] > 0
 
-    tuned = dataclasses.replace(CFG, arrow_batch_size=512)
+    tuned = dataclasses.replace(CFG, n_salts=CFG.n_salts * 2)
     r2 = streaming_dedup_cycle(spark, inp + "/*", wh, tuned)
     # same wave, perf-only retune: every pair is already adjudicated
     assert r2["n_new_adjudicated"] == 0

@@ -119,3 +119,53 @@ def test_winnowed_candidates_verify_to_identical_pairs(spark):
     for stride in (4, 8):
         got = pairs(dataclasses.replace(base, substring_winnow_stride=stride))
         assert got == want, stride
+
+
+def test_verify_substring_pairs_equals_brute_force(spark):
+    """The full substring pass at the default config (winnowed candidates,
+    then the verify), verify_substring_pairs(substring_candidates(docs)),
+    keeps exactly the pairs that brute-force shares_window finds over
+    EVERY pair of docs: NULL, shorter-than-L, containment, repeated and
+    non-ASCII captions included (NULL compared as ""). Pairs sharing
+    exactly L - 1 chars are winnowed candidates the verify must reject;
+    pairs sharing exactly L chars must survive it."""
+    import itertools
+
+    from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+    from distributed_gpu_lsh_using_sycl_spark.operators.suffix import (
+        shares_window, substring_candidates, verify_substring_pairs)
+
+    cfg = LshConfig()
+    L = cfg.min_substring_len
+    base = "the quick brown fox jumps over the lazy dog"
+    s23, s24 = "ABCDEFGHIJKLMNOPQRSTUVW", "0123456789abcdefghijklmn"
+    assert (len(s23), len(s24)) == (L - 1, L)
+    jp = "日本語のテキストはここにあります。これは重複検出のための長い文です"
+    texts = [
+        None,
+        "",
+        "short text",                              # shorter than L
+        base,
+        "prefix " + base + " suffix",              # contains base
+        base[5:35],                                # contained in base
+        base,                                      # exact repeat
+        "jumps over the lazy dog and runs away",   # L - 1 chars with base
+        "completely unrelated words here, none shared at all",
+        "naïve café déjà vu — über straße ünïcödé",
+        "zz naïve café déjà vu — über zz",         # non-ASCII, > L shared
+        jp,
+        "前置き" + jp + "後置き",                   # non-ASCII containment
+        "x" + s23 + "x",
+        "y" + s23 + "y",                           # exactly L - 1 shared
+        "left " + s24,
+        s24 + " right",                            # exactly L shared
+    ]
+    rows = list(enumerate(texts))
+    docs = spark.createDataFrame(rows, "image_id long, caption string")
+    want = {(i, j) for (i, a), (j, b) in itertools.combinations(rows, 2)
+            if shares_window(a or "", b or "", L)}
+    got = {(r["a"], r["b"]) for r in verify_substring_pairs(
+        substring_candidates(docs, cfg), docs, cfg).collect()}
+    assert {(3, 4), (9, 10), (11, 12), (15, 16)} <= want
+    assert not {(3, 7), (13, 14)} & want
+    assert got == want
