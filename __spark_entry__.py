@@ -112,24 +112,31 @@ def q_ngram_jaccard_pairs(spark, sf):
             .select("a", "b", "jaccard"))
 
 
-def q_dedup_minhash_lsh_pairs(spark, sf):
-    """MinHash-banded LSH candidates + exact Jaccard verification — must
-    reproduce the brute-force set (oracle = same SQL as ngram_jaccard)."""
+def _minhash_jaccard_pairs(sigs, cfg):
+    """Shared body of the two MinHash pair queries: banded candidates ->
+    ``attach_features`` -> ``verify_pairs``, kept at Jaccard >= tau. Pass
+    ``sigs`` eagerly checkpointed: the candidate join launches
+    stats/left/right stages concurrently, and a lazy persist would
+    recompute the signature chain in each (see plans/pipeline.py)."""
     from distributed_gpu_lsh_using_sycl_spark.operators import banding, pairs
-    from distributed_gpu_lsh_using_sycl_spark.operators.signatures import compute_signatures
 
-    cfg = _dedup_cfg()
-    d = _t(spark, sf, "documents")
-    # eager localCheckpoint: the candidate join launches stats/left/right
-    # stages concurrently — a lazy persist would recompute the UDF chain
-    # in each (see plans/pipeline.py for the same note)
-    sigs = compute_signatures(d, cfg, id_col="doc_id", text_col="text",
-                              with_image=False).localCheckpoint(eager=True)
     bands = banding.explode_bands(sigs)
     cands = banding.candidate_pairs_from_bands(bands, cfg, source="minhash")
     verified = pairs.verify_pairs(pairs.attach_features(cands, sigs), cfg)
     return (verified.filter(F.col("jaccard") >= JACCARD_TAU)
             .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
+
+
+def q_dedup_minhash_lsh_pairs(spark, sf):
+    """MinHash-banded LSH candidates + exact Jaccard verification — must
+    reproduce the brute-force set (oracle = same SQL as ngram_jaccard)."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.signatures import compute_signatures
+
+    cfg = _dedup_cfg()
+    d = _t(spark, sf, "documents")
+    sigs = compute_signatures(d, cfg, id_col="doc_id", text_col="text",
+                              with_image=False).localCheckpoint(eager=True)
+    return _minhash_jaccard_pairs(sigs, cfg)
 
 
 def q_dedup_minhash_blobscan_pairs(spark, sf):
@@ -139,7 +146,6 @@ def q_dedup_minhash_blobscan_pairs(spark, sf):
     numpy kernels compute shingle CRC / minhash there, so this row hash-
     gates the fused scan path against the same brute-force Jaccard
     oracle the JVM-shingled variant uses."""
-    from distributed_gpu_lsh_using_sycl_spark.operators import banding, pairs
     from distributed_gpu_lsh_using_sycl_spark.sources import blob_scan
 
     cfg = _dedup_cfg()
@@ -147,11 +153,7 @@ def q_dedup_minhash_blobscan_pairs(spark, sf):
     sigs = blob_scan.scan_signatures(spark, path, cfg, with_image=False,
                                      id_col="doc_id", text_col="text") \
         .localCheckpoint(eager=True)
-    bands = banding.explode_bands(sigs)
-    cands = banding.candidate_pairs_from_bands(bands, cfg, source="minhash")
-    verified = pairs.verify_pairs(pairs.attach_features(cands, sigs), cfg)
-    return (verified.filter(F.col("jaccard") >= JACCARD_TAU)
-            .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
+    return _minhash_jaccard_pairs(sigs, cfg)
 
 
 def q_dedup_substring_pairs(spark, sf):
@@ -164,18 +166,16 @@ def q_dedup_substring_pairs(spark, sf):
     the 5.53s every-window record; the verified pair set is
     stride-invariant by the winnowing guarantee, pinned in tests)."""
     from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+    from distributed_gpu_lsh_using_sycl_spark.operators.pairs import pair_features
     from distributed_gpu_lsh_using_sycl_spark.operators.suffix import substring_candidates
 
     cfg = LshConfig(min_substring_len=SUBSTR_L, substring_winnow_stride=4)
     d = _t(spark, sf, "documents")
     cands = substring_candidates(d, cfg, id_col="doc_id", text_col="text")
-    t = d.select("doc_id", "text")
-    withs = (cands
-             .join(t.select(F.col("doc_id").alias("a"), F.col("text").alias("ta")), "a")
-             .join(t.select(F.col("doc_id").alias("b"), F.col("text").alias("tb")), "b"))
-    return (withs
-            .filter(F.least(F.length("ta"), F.length("tb")) >= SUBSTR_L)
-            .filter(F.col("ta").contains(F.col("tb")) | F.col("tb").contains(F.col("ta")))
+    ta, tb = F.col("text_a"), F.col("text_b")
+    return (pair_features(cands, d, ("text",), id_col="doc_id")
+            .filter(F.least(F.length(ta), F.length(tb)) >= SUBSTR_L)
+            .filter(ta.contains(tb) | tb.contains(ta))
             .select("a", "b"))
 
 
@@ -202,15 +202,16 @@ def q_lcs_window_pairs(spark, sf):
 
 
 def q_doc_simhash_pairs(spark, sf):
-    """Text SimHash near-dup pairs (hamming <= 8) — banded blocking +
-    exact popcount verify. FULLY oracle-checked: the simhash chain is
-    one Arrow kernel (parity_hash.doc_simhash_col — u32 hash_combine char
-    fold per shingle, hi/lo word derivation, bit votes) and the DuckDB
-    oracle (doc_simhash_oracle_sql) recomputes the identical chain in SQL
-    plus a brute-force popcount over all pairs, so the banded blocking's
-    exact-recall guarantee (hash_band_pairs) is value-hash verified."""
+    """Text SimHash near-dup pairs (hamming <= the default
+    ``LshConfig.hamming_threshold``, 8) via ``banding.hamming_pairs``.
+    FULLY oracle-checked: the simhash chain is one Arrow kernel
+    (parity_hash.doc_simhash_col — u32 hash_combine char fold per
+    shingle, hi/lo word derivation, bit votes) and the DuckDB oracle
+    (doc_simhash_oracle_sql) recomputes the identical chain in SQL plus a
+    brute-force popcount over all pairs, so the banded blocking's
+    exact-recall guarantee is value-hash verified."""
     from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
-    from distributed_gpu_lsh_using_sycl_spark.operators.banding import hash_band_pairs
+    from distributed_gpu_lsh_using_sycl_spark.operators.banding import hamming_pairs
     from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
         doc_simhash_col)
 
@@ -219,16 +220,7 @@ def q_doc_simhash_pairs(spark, sf):
     sigs = (d.select(F.col("doc_id").alias("image_id"),
                      doc_simhash_col(F.col("text"), SHINGLE_K).alias("simhash"))
             .localCheckpoint(eager=True))
-    cands = hash_band_pairs(sigs, "simhash", LshConfig(), source="simhash")
-    sh = sigs.select(F.col("image_id"), F.col("simhash"))
-    withs = (cands
-             .join(sh.select(F.col("image_id").alias("a"), F.col("simhash").alias("ha")), "a")
-             .join(sh.select(F.col("image_id").alias("b"), F.col("simhash").alias("hb")), "b"))
-    return (withs
-            .withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("int"))
-            .filter(F.col("hamming") <= 8)
-            .select(F.col("a").cast("long").alias("a"),
-                    F.col("b").cast("long").alias("b"), "hamming"))
+    return hamming_pairs(sigs, "simhash", LshConfig(), source="simhash")
 
 
 # --------------------------------------------------------------------------- #
@@ -267,7 +259,7 @@ def _export_read_back(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
 
 def _hamming_pairs_oracle(name: str, threshold: int | None = None) -> str:
     """Brute-force (a, b, hamming) over an exported (image_id, fp)
-    parquet — the oracle twin of hash_band_pairs + popcount verify.
+    parquet — the oracle twin of banding.hamming_pairs.
     The threshold comes from the SAME config the Spark queries use, so a
     future cfg change cannot desync query from oracle."""
     if threshold is None:
@@ -305,9 +297,9 @@ def _image_fixture(spark) -> DataFrame:
 
 
 def _image_hash_pairs(spark, sf, hash_col: str) -> DataFrame:
-    """Shared body: signature stage -> bit-band blocking -> exact popcount
-    verify. The simhash path decodes pixels (multimodal decode + block
-    features + simhash, vectorized); the phash path reads the STORED
+    """Shared body: signature stage -> ``banding.hamming_pairs``. The
+    simhash path decodes pixels (multimodal decode + block features +
+    simhash, vectorized); the phash path reads the STORED
     perceptual-hash column straight off the scan — no decode, no Python,
     pure column pruning. Result-identical to routing through the
     signature stage: compute_signatures passes the stored phash column
@@ -315,7 +307,7 @@ def _image_hash_pairs(spark, sf, hash_col: str) -> DataFrame:
     simhash from it. At 10^12 images, decoding pixels to fetch a stored
     column is the wrong plan."""
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
-        hash_band_pairs)
+        hamming_pairs)
     from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
         compute_signatures)
 
@@ -331,16 +323,7 @@ def _image_hash_pairs(spark, sf, hash_col: str) -> DataFrame:
     sigs = _export_read_back(
         sigs.select("image_id", F.col(hash_col).alias("fp")),
         f"image_{hash_col}_pairs", sf)
-    cands = hash_band_pairs(sigs, "fp", cfg, source=hash_col)
-    h = sigs.select("image_id", F.col("fp").alias("h"))
-    withs = (cands
-             .join(h.select(F.col("image_id").alias("a"), F.col("h").alias("ha")), "a")
-             .join(h.select(F.col("image_id").alias("b"), F.col("h").alias("hb")), "b"))
-    return (withs
-            .withColumn("hamming",
-                        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("int"))
-            .filter(F.col("hamming") <= cfg.hamming_threshold)
-            .select("a", "b", "hamming"))
+    return hamming_pairs(sigs, "fp", cfg, source=hash_col)
 
 
 def q_image_simhash_pairs(spark, sf):
@@ -371,7 +354,7 @@ def q_audio_neardup_pairs(spark, sf):
     ids = _t(spark, sf, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     return audio_neardup_pairs(
-        synth_audio_df(ids), hamming_threshold=_dedup_cfg().hamming_threshold,
+        synth_audio_df(ids), _dedup_cfg(),
         export_sigs_path=_oracle_export_path("audio_neardup_pairs", sf))
 
 
@@ -474,23 +457,14 @@ def q_token_freq_topk(spark, sf, k: int = 100):
 # embeddings: similarity search
 # --------------------------------------------------------------------------- #
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def _with_norm(e):
-    """Precompute ||v|| once per row — the pairwise join must never
-    recompute norms per pair (3x work; at 10^12 pairs it is the
-    difference between feasible and not). Same float ops as the oracle
-    (sqrt of a self-dot), just factored out."""
-    return e.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-
-
 def q_knn_brute_topk(spark, sf, k: int = 5):
     """Brute-force cosine top-k (the oracle-runtime analog of the
     reference's sklearn brute k-NN oracle). Ranking on ROUNDED sim with
     id tie-break keeps both engines' orderings identical."""
-    e = _with_norm(_t(spark, sf, "embeddings").select(
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
+        cosine_col, dot_col, with_norm)
+
+    e = with_norm(_t(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")))
     cores = spark.sparkContext.defaultParallelism
     a = e.repartition(cores).select(F.col("vec_id").alias("vec_id"),
@@ -498,8 +472,8 @@ def q_knn_brute_topk(spark, sf, k: int = 5):
     b = e.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("vb"),
                  F.col("norm").alias("nb"))
     sims = (a.join(b, F.col("vec_id") != F.col("neighbor_id"))
-            .withColumn("sim", F.round(_dot(F.col("va"), F.col("vb"))
-                                       / (F.col("na") * F.col("nb")), 6)))
+            .withColumn("sim", cosine_col(dot_col(F.col("va"), F.col("vb")),
+                                          F.col("na"), F.col("nb"))))
     w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (sims.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
@@ -519,7 +493,10 @@ def q_knn_block_matmul_topk(spark, sf, k: int = 5):
 
 
 def q_embedding_neardup_pairs(spark, sf):
-    e = _with_norm(_t(spark, sf, "embeddings").select(
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
+        cosine_col, dot_col, with_norm)
+
+    e = with_norm(_t(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")))
     cores = spark.sparkContext.defaultParallelism
     a = e.repartition(cores).select(F.col("vec_id").alias("a"),
@@ -527,8 +504,8 @@ def q_embedding_neardup_pairs(spark, sf):
     b = e.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),
                  F.col("norm").alias("nb"))
     return (a.join(b, F.col("a") < F.col("b"))
-            .withColumn("sim", F.round(_dot(F.col("va"), F.col("vb"))
-                                       / (F.col("na") * F.col("nb")), 6))
+            .withColumn("sim", cosine_col(dot_col(F.col("va"), F.col("vb")),
+                                          F.col("na"), F.col("nb")))
             .filter(F.col("sim") >= NEARDUP_COS)
             .select("a", "b", "sim"))
 
@@ -1221,6 +1198,7 @@ def _kmeans_oracle() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
+    from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
     from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
         ann_oracle_sql, doc_simhash_oracle_sql, entropy_oracle_sql,
         ivf_kcenter_oracle_sql, ivf_oracle_sql, ivfpq_kcenter_oracle_sql,
@@ -1231,7 +1209,7 @@ def oracle_sql() -> dict[str, str]:
                               "video_neardup_pairs.parquet", "*.parquet")
     return {
         "doc_simhash_pairs": doc_simhash_oracle_sql(
-            k=SHINGLE_K, hamming_threshold=8),
+            k=SHINGLE_K, hamming_threshold=LshConfig().hamming_threshold),
         # binary-decode queries: each Spark query exports its computed
         # fingerprints (and continues from the read-back copy), so the
         # oracle brute-forces the pair stage over the exact values used —

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
+    hamming_col, pair_features)
 
 
 def explode_bands(signatures: DataFrame, buckets_col: str = "buckets") -> DataFrame:
@@ -232,12 +234,14 @@ def _band_widths(n_bands: int) -> list[int]:
     return [base + (1 if i < rem else 0) for i in range(n_bands)]
 
 
-def hash_band_pairs(signatures: DataFrame, hash_col: str, cfg: LshConfig,
-                    source: str, n_bands: int | None = None,
-                    combine: int = 2) -> DataFrame:
-    """Candidate pairs from bit-banding a 64-bit hash column (simhash or
-    phash). Reuses the salted-pair machinery by mapping each (band, value)
-    block to the (band_id, bucket) shape.
+def bit_bands(signatures: DataFrame, hash_col: str, cfg: LshConfig,
+              n_bands: int | None = None, combine: int = 2) -> DataFrame:
+    """Bit-banding of a 64-bit hash column (simhash, phash, audio
+    fingerprint) into the (image_id, band_id, bucket) shape the salted
+    pair machinery joins on — exposed so callers can also run the drop
+    accounting (``downsample_dropped``) over the SAME banding a capped
+    candidate join saw (the pipeline's no-silent-caps rule applies to the
+    bit-band paths exactly as to the MinHash path).
 
     Pigeonhole with combined keys (multi-index hashing): with
     ``n_bands = hamming_threshold + combine`` bands partitioning all 64
@@ -251,20 +255,7 @@ def hash_band_pairs(signatures: DataFrame, hash_col: str, cfg: LshConfig,
     10^9. Pairing bands (C(10,2) = 45 keys of ~13 bits) trades 5x more
     exploded rows for ~2^6x sparser buckets: same exact guarantee, an
     order of magnitude fewer candidate pairs (measured 835k -> ~80k on
-    the sf0.1 documents). combine=1 keeps the classic one-band scheme.
-    """
-    bands = bit_bands(signatures, hash_col, cfg, n_bands=n_bands,
-                      combine=combine)
-    return candidate_pairs_from_bands(bands, cfg, source=source)
-
-
-def bit_bands(signatures: DataFrame, hash_col: str, cfg: LshConfig,
-              n_bands: int | None = None, combine: int = 2) -> DataFrame:
-    """The (image_id, band_id, bucket) frame hash_band_pairs joins on —
-    exposed so callers can also run the drop accounting
-    (``downsample_dropped``) over the SAME banding a capped candidate
-    join saw (the pipeline's no-silent-caps rule applies to the bit-band
-    paths exactly as to the MinHash path)."""
+    the sf0.1 documents). combine=1 keeps the classic one-band scheme."""
     if n_bands is None:
         n_bands = cfg.hamming_threshold + combine
     base = signatures.filter(F.col(hash_col).isNotNull()).select(
@@ -285,3 +276,19 @@ def bit_bands(signatures: DataFrame, hash_col: str, cfg: LshConfig,
         raise ValueError(f"combine must be 1 or 2, got {combine}")
     return base.select(
         "image_id", F.posexplode(F.array(*keys)).alias("band_id", "bucket"))
+
+
+def hamming_pairs(sigs: DataFrame, hash_col: str, cfg: LshConfig,
+                  source: str) -> DataFrame:
+    """(image_id, <hash_col>) -> (a, b, hamming): every pair within
+    ``cfg.hamming_threshold`` bits. Bit-band blocking, the salted
+    candidate join, ``pair_features`` and an exact popcount filter. The
+    band count and the filter read the same threshold, so the pigeonhole
+    guarantee (``bit_bands``) always covers every pair the filter keeps:
+    the result is the brute-force popcount set."""
+    cands = candidate_pairs_from_bands(bit_bands(sigs, hash_col, cfg), cfg,
+                                       source=source)
+    return (pair_features(cands, sigs, (hash_col,))
+            .withColumn("hamming", hamming_col(hash_col).cast("int"))
+            .filter(F.col("hamming") <= cfg.hamming_threshold)
+            .select("a", "b", "hamming"))

@@ -43,7 +43,8 @@ def _large_star(edges: DataFrame) -> DataFrame:
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Direct edges high→low; for each u: m = min(N(u) ∪ {u}); emit (x, m)
-    for x ∈ N(u) ∪ {u}, x ≠ m."""
+    for x ∈ N(u) ∪ {u}, x ≠ m. Not yet distinct: ``_checkpoint_observed``
+    dedups the round's output."""
     hi_lo = edges.select(
         F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
     ).filter(F.col("u") != F.col("v"))
@@ -52,23 +53,31 @@ def _small_star(edges: DataFrame) -> DataFrame:
         F.col("v").alias("x"), "m"
     ).unionAll(mins.select(F.col("u").alias("x"), "m"))
     return (nodes.filter(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("a"), F.col("m").alias("b"))
-            .distinct())
+            .select(F.col("x").alias("a"), F.col("m").alias("b")))
 
 
-def _checkpoint_observed(edges: DataFrame) -> tuple[DataFrame, int, int]:
-    """``localCheckpoint`` an edge set and observe, on that same job, its
-    edge count and an order-free checksum -> (edges, n, checksum)."""
-    # pmod before sum: ANSI mode (Spark 4 default) makes a raw sum of
-    # xxhash64 values an ARITHMETIC_OVERFLOW; values < 2^31 keep the sum
-    # exact up to ~4e9 edges per convergence check.
+def _checkpoint_observed(edges: DataFrame, prev: DataFrame | None = None
+                         ) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` the DISTINCT (a, b) rows of ``edges`` and
+    observe one number on that same job -> (edges, n). Without ``prev``, n
+    is the edge count. With ``prev`` (the previous round's checkpointed
+    edges), n is the EXACT number of edges in one set but not the other —
+    0 iff the sets are equal, with no checksum two different sets could
+    tie on. Both sets go through the one grouping the distinct needs
+    anyway, each row tagged with its side, so the comparison adds no
+    shuffle and no job."""
     obs = Observation()
-    edges = edges.observe(
-        obs, F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(2_147_483_647))),
-                   F.lit(0)).alias("h")).localCheckpoint(eager=True)
-    m = obs.get
-    return edges, int(m["n"]), int(m["h"])
+    if prev is None:
+        edges = edges.distinct().observe(obs, F.count(F.lit(1)).alias("n"))
+    else:
+        edges = (edges.withColumn("side", F.lit(1))
+                 .unionByName(prev.withColumn("side", F.lit(2)))
+                 .groupBy("a", "b").agg(F.bit_or("side").alias("sides"))
+                 .observe(obs, F.count_if(F.col("sides") != 3).alias("n"))
+                 .filter(F.col("sides") != 2)
+                 .select("a", "b"))
+    edges = edges.localCheckpoint(eager=True)
+    return edges, int(obs.get["n"])
 
 
 def _small_graph_components(cur: DataFrame) -> DataFrame:
@@ -113,9 +122,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
                          small_graph_threshold: int = 0) -> DataFrame:
     """Undirected edges (a, b) -> assignments (image_id, cluster_id).
 
-    Converges when the canonical edge set is stable; at convergence every
-    edge points directly at its component's minimum, so the edge set IS
-    the assignment for non-root members and roots map to themselves.
+    Converges when a round leaves the edge set unchanged (an exact
+    changed-edge count of 0, observed on the round's checkpoint job); then
+    every edge points directly at its component's minimum, so the edge
+    set IS the assignment for non-root members and roots map to themselves.
     Raises ``RuntimeError`` when ``max_iter`` rounds pass without that.
     Only nodes that appear in edges are returned — callers left-join the
     full vertex set and coalesce to self (singleton semantics; the
@@ -129,18 +139,17 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     engine's one caller, ``assign_clusters``, passes SMALL_GRAPH_EDGES;
     the arguments exist so tests can force either path.
     """
-    cur, n_edges, _ = _checkpoint_observed(
-        edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct())
+    cur, n_edges = _checkpoint_observed(
+        edges.select("a", "b").filter(F.col("a") != F.col("b")))
     if small_graph_threshold > 0 and n_edges <= small_graph_threshold:
         return _small_graph_components(cur)
-    prev_sig = None
     for _ in range(max_iter):
         # one checkpoint per (large-star ∘ small-star) round: lineage stays
-        # bounded at two star ops while halving the materialization jobs
-        cur, *sig = _checkpoint_observed(_small_star(_large_star(cur)))
-        if sig == prev_sig:
+        # bounded at two star ops while halving the materialization jobs;
+        # the same job counts the edges this round changed
+        cur, changed = _checkpoint_observed(_small_star(_large_star(cur)), cur)
+        if changed == 0:
             break
-        prev_sig = sig
     else:
         # an exhausted iteration budget is NOT convergence: fail loudly
         # rather than return a truncated assignment

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+from distributed_gpu_lsh_using_sycl_spark.operators.pairs import pair_features
 
 #: per-cell kernel chunking: bound the (query-chunk x members) work
 #: matrices at ~this many elements (x8 bytes), so cogrouped cells of any
@@ -53,6 +54,13 @@ def with_norm(e: DataFrame, vec_col: str = "v") -> DataFrame:
     """Precompute ||v|| once per row — pairwise stages must never
     recompute norms per pair."""
     return e.withColumn("norm", F.sqrt(dot_col(F.col(vec_col), F.col(vec_col))))
+
+
+def cosine_col(dot, na, nb):
+    """Cosine similarity from a fold dot product and both norms, rounded
+    to 6 digits — the value every cosine filter and ranking compares, and
+    the rounding the DuckDB oracles apply."""
+    return F.round(dot / (na * nb), 6)
 
 
 def hyperplane_planes(seed: int, n_planes: int, dims: int) -> np.ndarray:
@@ -98,7 +106,7 @@ def _neardup_pairs_exact(en: DataFrame, tau: float, n: int,
     no driver data movement), but the dot products are ``hashing.seqdot``
     — the bit-identical vectorized twin of the JVM fold the LSH verify
     uses — and the kernel only PRE-FILTERS with a 2e-6 slack on the
-    np-rounded sim; the exact ``F.round(dot/(na*nb), 6) >= tau`` filter
+    np-rounded sim; the exact ``cosine_col(dot, na, nb) >= tau`` filter
     runs JVM-side on the raw fold values, so the emitted pair set is the
     brute-force set under the identical float chain."""
     import math as _math
@@ -167,8 +175,8 @@ def _neardup_pairs_exact(en: DataFrame, tau: float, n: int,
     allp = grid.mapInPandas(
         cell_pairs, schema="a long, b long, dotab double, na double, nb double")
     return (allp
-            .withColumn("sim", F.round(F.col("dotab")
-                                       / (F.col("na") * F.col("nb")), 6))
+            .withColumn("sim", cosine_col(F.col("dotab"), F.col("na"),
+                                          F.col("nb")))
             .filter(F.col("sim") >= F.lit(tau))
             .select("a", "b", "sim"))
 
@@ -231,13 +239,9 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
     plan = band_plan(bands, cfg, stats=stats)
     cands = candidate_pairs_from_bands(bands, cfg, source="hyperplane",
                                        plan=plan)
-    va = en.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
-                   F.col("norm").alias("na"))
-    vb = en.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),
-                   F.col("norm").alias("nb"))
-    return (cands.join(va, "a").join(vb, "b")
-            .withColumn("sim", F.round(dot_col(F.col("va"), F.col("vb"))
-                                       / (F.col("na") * F.col("nb")), 6))
+    return (pair_features(cands, en, ("v", "norm"), id_col="vec_id")
+            .withColumn("sim", cosine_col(dot_col(F.col("v_a"), F.col("v_b")),
+                                          F.col("norm_a"), F.col("norm_b")))
             .filter(F.col("sim") >= F.lit(tau))
             .select("a", "b", "sim"))
 
@@ -284,14 +288,10 @@ def ann_topk_lsh(e: DataFrame, k: int = 5, n_tables: int = 8, bits: int = 6,
     # The checkpoint sits ON the sim frame: both union branches read the
     # materialized (a, b, sim) rows, so the salted join and the fold run
     # exactly once (a union over a lazy frame runs it once per branch).
-    va = en.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
-                   F.col("norm").alias("na"))
-    vb = en.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),
-                   F.col("norm").alias("nb"))
-    und = (pairs.join(va, "a").join(vb, "b")
+    und = (pair_features(pairs, en, ("v", "norm"), id_col="vec_id")
            .select("a", "b",
-                   F.round(dot_col(F.col("va"), F.col("vb"))
-                           / (F.col("na") * F.col("nb")), 6).alias("sim"))
+                   cosine_col(dot_col(F.col("v_a"), F.col("v_b")),
+                              F.col("norm_a"), F.col("norm_b")).alias("sim"))
            .localCheckpoint(eager=True))
     sims = (und.select(F.col("a").alias("vec_id"),
                        F.col("b").alias("neighbor_id"), "sim")
@@ -724,9 +724,8 @@ def ivf_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
                       F.posexplode(cdots("v")).alias("ci", "dotc"))
             .select("vec_id",
                     F.element_at(ids_arr, F.col("ci") + 1).alias("cent_id"),
-                    F.round(F.col("dotc")
-                            / (F.col("norm")
-                               * F.element_at(cn_arr, F.col("ci") + 1)), 6)
+                    cosine_col(F.col("dotc"), F.col("norm"),
+                               F.element_at(cn_arr, F.col("ci") + 1))
                     .alias("csim")))
     wq = W.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
     ranked = simc.withColumn("rn", F.row_number().over(wq))
@@ -771,7 +770,7 @@ def ivf_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
             qid = qc["q_id"].to_numpy()
             qn = qc["qnorm"].to_numpy(dtype=np.float64)
             # Per-query pruning WITH SLACK: the global rank orders by
-            # F.round(dot/(na*nb), 6) desc. np.round may differ from the
+            # cosine_col(dot, na, nb) desc. np.round may differ from the
             # JVM round by at most one 1e-6 grid step, so keeping every
             # member within 2e-6 of the row's k-th np-rounded sim
             # provably retains this cell's contribution to the JVM
@@ -794,7 +793,7 @@ def ivf_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
                            f"q {idt}, m {idt}, dotqm double, "
                            f"na double, nb double"))
     out = sims.withColumn(
-        "sim", F.round(F.col("dotqm") / (F.col("na") * F.col("nb")), 6))
+        "sim", cosine_col(F.col("dotqm"), F.col("na"), F.col("nb")))
     w = W.partitionBy("q").orderBy(F.col("sim").desc(), F.col("m"))
     return (out.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)

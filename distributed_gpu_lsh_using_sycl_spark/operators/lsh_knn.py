@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+from distributed_gpu_lsh_using_sycl_spark.operators.pairs import pair_features
 
 FAMILIES = ("random_projections", "entropy_based", "mixed")
 
@@ -99,10 +100,8 @@ def lsh_kneighbors(e: DataFrame, k: int, family: str = "random_projections",
     # union branches read the materialized (a, b, d) rows, so the salted
     # join AND the fold execute exactly once (a bare union of two selects
     # over a lazy frame runs the subtree once per branch).
-    va = src.select(F.col("vec_id").alias("a"), F.col("v").alias("va"))
-    vb = src.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"))
-    dund = (und.join(va, "a").join(vb, "b")
-            .select("a", "b", _dsq(F.col("va"), F.col("vb")).alias("d"))
+    dund = (pair_features(und, src, ("v",), id_col="vec_id")
+            .select("a", "b", _dsq(F.col("v_a"), F.col("v_b")).alias("d"))
             .localCheckpoint(eager=True))
     cand = (dund.select(F.col("a").alias("q"), F.col("b").alias("m"), "d")
             .union(dund.select(F.col("b").alias("q"), F.col("a").alias("m"),

@@ -7,7 +7,7 @@ Design, shared with the image path: modality payloads are opaque
 feature-extract run once per Arrow batch inside numpy (pandas UDF /
 mapInPandas — zero per-row Python at the Spark row level); near-dup
 candidates then ride the SAME banded machinery as every other 64-bit
-fingerprint (banding.hash_band_pairs — salted, skew-split, exact recall
+fingerprint (banding.hamming_pairs — salted, skew-split, exact recall
 at the hamming threshold). The deterministic SAUD/SVID codecs stand in
 for libsndfile/libav (not importable in this container) behind the same
 2-function swap seam as SIMG (av_codec module docstring).
@@ -69,11 +69,10 @@ def audio_features_col():
 
 
 def audio_neardup_pairs(audio: DataFrame, cfg: LshConfig | None = None,
-                        hamming_threshold: int | None = None,
                         export_sigs_path: str | None = None) -> DataFrame:
     """(a, b, hamming) audio near-dup pairs via the 64-bit energy-delta
-    fingerprint + the shared banded blocking (exact recall at the
-    threshold) + popcount verify.
+    fingerprint + ``banding.hamming_pairs`` (exact recall at
+    ``cfg.hamming_threshold``).
 
     ``export_sigs_path``: optionally persist the computed (image_id, fp)
     fingerprints to parquet and continue the plan from the READ-BACK copy
@@ -81,17 +80,9 @@ def audio_neardup_pairs(audio: DataFrame, cfg: LshConfig | None = None,
     then brute-force the banding+verify stage over the exact values this
     query used; the decode stays pinned by pytest."""
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
-        hash_band_pairs)
-
-    import dataclasses
+        hamming_pairs)
 
     cfg = cfg or LshConfig()
-    ham = cfg.hamming_threshold if hamming_threshold is None else hamming_threshold
-    if ham != cfg.hamming_threshold:
-        # band count must be sized from the SAME threshold the verify
-        # filter uses, or the exact-recall pigeonhole guarantee silently
-        # voids for ham > cfg.hamming_threshold
-        cfg = dataclasses.replace(cfg, hamming_threshold=ham)
     sigs = (audio.select(F.col("audio_id").alias("image_id"),
                          audio_features_col()(F.col("bytes"))["fingerprint"]
                          .alias("fp"))
@@ -99,19 +90,7 @@ def audio_neardup_pairs(audio: DataFrame, cfg: LshConfig | None = None,
     if export_sigs_path:
         sigs.write.mode("overwrite").parquet(export_sigs_path)
         sigs = audio.sparkSession.read.parquet(export_sigs_path)
-    cands = hash_band_pairs(sigs, "fp", cfg, source="audio_fp")
-    s = sigs.select("image_id", "fp")
-    withs = (cands
-             .join(s.select(F.col("image_id").alias("a"),
-                            F.col("fp").alias("ha")), "a")
-             .join(s.select(F.col("image_id").alias("b"),
-                            F.col("fp").alias("hb")), "b"))
-    return (withs
-            .withColumn("hamming",
-                        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-                        .cast("int"))
-            .filter(F.col("hamming") <= ham)
-            .select("a", "b", "hamming"))
+    return hamming_pairs(sigs, "fp", cfg, source="audio_fp")
 
 
 def video_frame_hashes(video: DataFrame, every_k: int = 2) -> DataFrame:

@@ -854,7 +854,7 @@ def doc_simhash_oracle_sql(k: int = 3, hamming_threshold: int = 8,
     ENTIRE simhash chain recomputed in DuckDB — shingling, the uint32
     hash_combine char fold, the hi/lo word derivation and the bit votes
     are all re-expressed in SQL, so the Spark side's banded blocking
-    (hash_band_pairs, recall exactly 1.0 at the threshold) must reproduce
+    (banding.hamming_pairs, recall exactly 1.0 at the threshold) must reproduce
     this set value-for-value."""
     fold = (f"list_reduce(list_prepend({k}::BIGINT, "
             f"list_transform(string_split(sg, ''), c -> ord(c)::BIGINT)), "

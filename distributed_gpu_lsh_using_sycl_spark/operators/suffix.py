@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+from distributed_gpu_lsh_using_sycl_spark.operators.pairs import pair_features
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import spread
 
 _MOD = np.uint64((1 << 31) - 1)
@@ -282,9 +283,7 @@ def verify_substring_pairs(cands: DataFrame, docs: DataFrame, cfg: LshConfig,
     net win even though shorter grams admit more candidates."""
     L = cfg.min_substring_len
     d = docs.select(F.col(id_col).alias("image_id"), F.col(text_col).alias("text"))
-    withs = (cands
-             .join(d.select(F.col("image_id").alias("a"), F.col("text").alias("text_a")), "a")
-             .join(d.select(F.col("image_id").alias("b"), F.col("text").alias("text_b")), "b"))
+    withs = pair_features(cands, d, ("text",))
 
     @F.pandas_udf(T.BooleanType())
     def shares_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:

@@ -60,7 +60,13 @@ def test_hash_band_pairs_guarantee(spark):
     pairs AT the threshold; a pair with at most one clean band is missed
     under combine=2 (no clean band-pair exists)."""
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
-        _band_widths, hash_band_pairs)
+        _band_widths, bit_bands, candidate_pairs_from_bands)
+
+    def blocked(df, combine=2):
+        bands = bit_bands(df, "simhash", cfg, combine=combine)
+        return {(r["a"], r["b"]) for r in
+                candidate_pairs_from_bands(bands, cfg, "simhash")
+                .select("a", "b").collect()}
 
     cfg = LshConfig()  # hamming_threshold = 8; combine=2 -> 10 bands
     widths = _band_widths(cfg.hamming_threshold + 2)
@@ -82,17 +88,62 @@ def test_hash_band_pairs_guarantee(spark):
         ["image_id", "h"],
     ).select("image_id", F.col("h").cast("long").alias("simhash"),
              F.col("h").cast("long").alias("phash"), F.lit(None).alias("shingles"))
-    pairs = {(r["a"], r["b"]) for r in
-             hash_band_pairs(df, "simhash", cfg, "simhash").select("a", "b").collect()}
+    pairs = blocked(df)
     assert ("a", "b") in pairs
     assert ("a", "d") in pairs  # the boundary case a t-band split would miss
     assert ("a", "c") not in pairs
 
     # combine=1 (classic single-band keys) keeps the same boundary guarantee
-    pairs1 = {(r["a"], r["b"]) for r in
-              hash_band_pairs(df, "simhash", cfg, "simhash", combine=1)
-              .select("a", "b").collect()}
-    assert ("a", "d") in pairs1
+    assert ("a", "d") in blocked(df, combine=1)
+
+
+def test_hamming_pairs_band_count_follows_threshold(spark):
+    """``hamming_pairs`` at a non-default threshold equals a brute-force
+    popcount over all pairs. The input holds a pair at hamming 10 with one
+    flipped bit in each of the first 10 bands of the 12-band partition
+    that threshold 10 sizes (+2 combine). Those bits are the band starts
+    of the 10-band partition the default threshold 8 would size, so that
+    banding leaves no clean band and would miss the pair."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
+        _band_widths, hamming_pairs)
+
+    cfg = LshConfig(hamming_threshold=10)
+
+    def starts(n_bands):
+        w = _band_widths(n_bands)
+        return [sum(w[:i]) for i in range(n_bands)]
+
+    bits = starts(8 + 2)
+    band_of = [max(i for i, o in enumerate(starts(10 + 2)) if o <= b)
+               for b in bits]
+    assert len(set(band_of)) == 10  # one flipped bit in each of 10 bands
+    base = 0x0123456789ABCDEF
+    spread = base
+    for b in bits:
+        spread ^= 1 << b
+    rng = np.random.Generator(np.random.PCG64(10))
+    hashes = {"base": base, "spread": spread,
+              "over": spread ^ (1 << 63),  # hamming 11 from base
+              "near": base ^ 0b111}
+    for i in range(40):  # random codes, each with a planted twin at 3..12 bits
+        h = int(rng.integers(0, 2**63))
+        hashes[f"r{i:02d}"] = h
+        flip = rng.choice(64, size=3 + i % 10, replace=False)
+        hashes[f"t{i:02d}"] = h ^ int(sum(1 << int(f) for f in flip))
+    signed = {k: v - (1 << 64) if v >= 1 << 63 else v
+              for k, v in hashes.items()}
+    df = spark.createDataFrame(sorted(signed.items()), "image_id string, h long")
+    got = {(r["a"], r["b"], r["hamming"])
+           for r in hamming_pairs(df, "h", cfg, "simhash").collect()}
+    ids = sorted(hashes)
+    want = set()
+    for i, x in enumerate(ids):
+        for y in ids[i + 1:]:
+            d = bin(hashes[x] ^ hashes[y]).count("1")
+            if d <= cfg.hamming_threshold:
+                want.add((x, y, d))
+    assert ("base", "spread", 10) in want
+    assert got == want
 
 
 def test_downsample_dropped_accounting(spark):

@@ -157,3 +157,34 @@ def test_cc_raises_when_max_iter_exhausted(spark):
     edf = spark.createDataFrame(path, ["a", "b"])
     with pytest.raises(RuntimeError, match="max_iter=1"):
         connected_components(edf, max_iter=1).collect()
+
+
+def test_star_loop_runs_to_exact_fixpoint_on_checksum_ties(spark, monkeypatch):
+    """The star loop stops only when a round changes no edge. With every
+    edge hashing alike, an (edge count, hash sum) checksum ties between
+    any two rounds of equal size, and a path keeps its edge count for
+    rounds while its edges still move. The loop must run the same rounds
+    as without the tie and match union-find."""
+    from pyspark.sql import functions as F
+
+    from distributed_gpu_lsh_using_sycl_spark.operators import components
+
+    path = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(30)]
+    ids = sorted({x for e in path for x in e})
+    edf = spark.createDataFrame(path, ["a", "b"])
+    real_star = components._large_star
+    rounds = []
+
+    def star(e):
+        rounds[-1] += 1
+        return real_star(e)
+
+    monkeypatch.setattr(components, "_large_star", star)
+    for tie in (False, True):
+        if tie:
+            monkeypatch.setattr(F, "xxhash64", lambda *c: F.lit(0).cast("long"))
+        rounds.append(0)
+        got = {r["image_id"]: r["cluster_id"]
+               for r in components.connected_components(edf).collect()}
+        assert got == _union_find_clusters(ids, path)
+    assert rounds[0] == rounds[1] > 2

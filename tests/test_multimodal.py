@@ -57,7 +57,7 @@ def test_audio_neardup_pairs_spark(spark):
                          8000, len(s), "ogg"))
     df = spark.createDataFrame(rows, AUDIO_SCHEMA)
     pairs = {(r["a"], r["b"]) for r in
-             audio_neardup_pairs(df, hamming_threshold=8).collect()}
+             audio_neardup_pairs(df).collect()}
     for i in range(5):
         assert (i, 100 + i) in pairs, f"planted audio dup {i} missed"
 
