@@ -801,14 +801,11 @@ def q_cc_clusters(spark, sf):
     exact = q_dedup_exact_pairs(spark, sf)
     subs = q_dedup_substring_pairs(spark, sf)
     edges = exact.unionByName(subs).distinct()
-    # dup assignments are a few % of |V| in this workload — broadcast
-    # the CC side so the final join is a broadcast hash join over the
-    # vertex scan instead of a |V|-scale sort-merge (PLANS.md note).
     # assign_clusters takes the driver union-find fast path up to its
-    # SMALL_GRAPH_EDGES bound and the star loop past it (identical
+    # SMALL_GRAPH_EDGES bound (every sf here) and broadcasts that result
+    # into the vertex join; past the bound the star loop runs (identical
     # assignments, pinned in tests/test_components.py).
-    return (assign_clusters(d, edges, id_col="doc_id",
-                            broadcast_assignments=True)
+    return (assign_clusters(d, edges, id_col="doc_id")
             .select(F.col("image_id").alias("doc_id"), "cluster_id"))
 
 

@@ -12,18 +12,22 @@ Skew policy (explicit, AQE skew-join as backstop):
 1. ``band_plan`` — the one place the plan is materialized: the
    (band_id, bucket) occupancy (``bucket_stats``, A1 analog) filtered to
    the buckets any decision touches (``over_threshold_stats``) is
-   ``localCheckpoint``-ed ONCE, and the same job observes two numbers
+   ``localCheckpoint``-ed ONCE, and the same job observes three numbers
    (``DataFrame.observe``, no extra job): how many buckets crossed
-   ``plan_threshold`` and the largest ``cnt``. Zero crossings -> the
-   candidate join takes the plain self-join fast path; a largest bucket
-   at or under ``max_bucket_size`` -> nothing was dropped, so the drop
-   accounting needs no job.
+   ``plan_threshold``, the largest ``cnt`` and the frame's row count.
+   Zero crossings -> the candidate join takes the plain self-join fast
+   path; a largest bucket at or under ``max_bucket_size`` -> nothing was
+   dropped, so the drop accounting needs no job; a row count whose
+   default-size estimate fits the session's broadcast threshold -> the
+   join broadcasts its build side (``_build_side``). ``stack_bands``
+   puts several families in one frame, so one plan and one join serve
+   them all.
 2. buckets over ``max_bucket_size`` are deterministically down-sampled
    (hash filter) — a degenerate bucket (e.g. empty-ish captions all
    hashing together) would emit O(n²) pairs at 10^12 scale; the dropped
    count is reported, never silent: ``downsample_dropped`` computes the
    exact per-bucket drop counts and the pipeline records the total into
-   its ``metrics`` table (stage ``cand_*:dropped``).
+   its ``metrics`` table (``cand_<family>:dropped``, one per family).
 3. buckets over ``hot_bucket_threshold`` get ``m = clamp(ceil(cnt/thr),
    1, n_salts)`` salts; each member takes salt s = xxhash64(id) % m and
    is replicated into the (s, t) salt-pair grid:
@@ -39,8 +43,9 @@ path, no special-casing.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
@@ -98,28 +103,84 @@ def over_threshold_stats(bands: DataFrame, cfg: LshConfig) -> DataFrame:
 @dataclass(frozen=True)
 class BandPlan:
     """A banding frame's materialized over-threshold stats (``over``)
-    plus the two numbers observed while materializing them: ``n_over``
-    buckets crossed ``plan_threshold`` and the largest of them holds
-    ``max_cnt`` members (0 when none crossed)."""
+    plus the three numbers observed while materializing them: ``n_over``
+    buckets crossed ``plan_threshold``, the largest of them holds
+    ``max_cnt`` members (0 when none crossed), and the frame holds
+    ``rows`` rows (the candidate join's broadcast decision)."""
     over: DataFrame
     n_over: int
     max_cnt: int
+    rows: int
 
 
 def band_plan(bands: DataFrame, cfg: LshConfig,
               stats: DataFrame | None = None) -> BandPlan:
     """Materialize ``over_threshold_stats(bands, cfg)`` once, observing
-    its row count and max ``cnt`` on the same job. ``stats``: an
-    already-materialized ``bucket_stats`` frame of ``bands`` (e.g. a
-    caller's guardrail stats) — only filtered here, no second stats
-    shuffle."""
-    over = (over_threshold_stats(bands, cfg) if stats is None
-            else stats.filter(F.col("cnt") > plan_threshold(cfg)))
+    on the same job its row count and max ``cnt``, and the row count of
+    ``bands`` itself. ``stats``: an already-materialized ``bucket_stats``
+    frame of ``bands`` (e.g. a caller's guardrail stats) — only filtered
+    here, no second stats shuffle; its ``cnt`` total is the row count."""
+    size = Observation()
+    if stats is None:
+        over = over_threshold_stats(
+            bands.observe(size, F.count(F.lit(1)).alias("rows")), cfg)
+    else:
+        over = (stats.observe(size, F.sum("cnt").alias("rows"))
+                .filter(F.col("cnt") > plan_threshold(cfg)))
     obs = Observation()
     over = over.observe(obs, F.count(F.lit(1)).alias("n"),
                         F.max("cnt").alias("max_cnt")).localCheckpoint(eager=True)
     m = obs.get
-    return BandPlan(over, int(m["n"]), int(m["max_cnt"] or 0))
+    return BandPlan(over, int(m["n"]), int(m["max_cnt"] or 0),
+                    int(size.get["rows"] or 0))
+
+
+def _build_side(side: DataFrame, rows: int) -> DataFrame:
+    """``side`` hinted for broadcast when ``rows`` rows of its schema fit
+    the session's ``spark.sql.autoBroadcastJoinThreshold``, sized the
+    way Spark sizes a row it has no statistics for (8 bytes + each
+    field's default size). The planner cannot estimate a frame exploded
+    from a Python scan, so without an observed count such a join is
+    always shuffled, however small."""
+    limit = side.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    size = rows * (8 + side._jdf.schema().defaultSize())
+    return F.broadcast(side) if size <= limit else side
+
+
+def _distinct_pairs(joined: DataFrame, source: str | Column) -> DataFrame:
+    """Joined (a, b) member pairs -> distinct canonical (a, b, source).
+    A ``source`` column (evaluated on the joined rows) names each row's
+    banding family; the distinct then also collects every family that
+    found the pair, "+"-joined in sorted order (the
+    ``pairs.merge_candidates`` format), in the same aggregation."""
+    canon = [F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")]
+    joined = joined.filter(F.col("a") != F.col("b"))
+    if isinstance(source, str):
+        return (joined.select(*canon).distinct()
+                .withColumn("source", F.lit(source)))
+    return (joined.select(*canon, source.alias("source"))
+            .groupBy("a", "b")
+            .agg(F.array_join(F.array_sort(F.collect_set("source")), "+")
+                 .alias("source")))
+
+
+def stack_bands(families: dict[str, DataFrame]) -> tuple[DataFrame, Column]:
+    """Several families' (image_id, band_id, bucket) frames -> one frame
+    and the column naming each row's family, for ONE ``band_plan`` and
+    ONE ``candidate_pairs_from_bands`` over all of them. Family ``i`` of
+    ``n`` maps band ``j`` to ``j * n + i``, so a (band_id, bucket) key —
+    and with it every bucket, salt and cap decision — never spans
+    families, and ``pmod(band_id, n)`` recovers the family."""
+    names = list(families)
+    n = len(names)
+    stacked = reduce(DataFrame.unionByName, [
+        df.select("image_id", (F.col("band_id") * n + i).alias("band_id"),
+                  "bucket")
+        for i, df in enumerate(families.values())])
+    family = F.element_at(F.array(*map(F.lit, names)),
+                          F.pmod(F.col("band_id"), F.lit(n)) + 1)
+    return stacked, family
 
 
 def downsample_dropped(bands: DataFrame, cfg: LshConfig,
@@ -144,7 +205,7 @@ def downsample_dropped(bands: DataFrame, cfg: LshConfig,
 
 
 def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
-                               source: str = "minhash",
+                               source: str | Column = "minhash",
                                plan: BandPlan | None = None) -> DataFrame:
     """(image_id, band_id, bucket) -> distinct candidate pairs (a < b).
 
@@ -153,6 +214,10 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
     (hash_tables.hpp:547-557): never verify a pair twice. ``plan`` (the
     ``band_plan`` of ``bands``) is built here when not given; callers
     that also run the drop accounting build it once and pass it in.
+    ``source``: a name, or the family column of ``stack_bands`` (the
+    distinct then lists every family that found the pair). The join's
+    build side is broadcast when the plan's observed row count fits the
+    session's broadcast threshold (``_build_side``).
     """
     if plan is None:
         plan = band_plan(bands, cfg)
@@ -175,12 +240,9 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
     if plan.n_over == 0:
         left = bands.select("band_id", "bucket", F.col("image_id").alias("a"))
         right = bands.select("band_id", "bucket", F.col("image_id").alias("b"))
-        return (left.join(right, ["band_id", "bucket"])
-                .filter(F.col("a") != F.col("b"))
-                .select(F.least("a", "b").alias("a"),
-                        F.greatest("a", "b").alias("b"))
-                .distinct()
-                .withColumn("source", F.lit(source)))
+        return _distinct_pairs(
+            left.join(_build_side(right, plan.rows), ["band_id", "bucket"]),
+            source)
 
     m_col = F.when(
         F.col("cnt") > cfg.hot_bucket_threshold,
@@ -215,15 +277,12 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
     # The grid guarantees each unordered pair meets with the smaller-salt
     # member on the left — which says nothing about id order, so CANONICALIZE
     # (least/greatest), don't filter on a < b (that would drop every pair
-    # whose smaller id carries the larger salt).
-    pairs = (
-        left.join(right, ["band_id", "bucket", "s", "t"])
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .withColumn("source", F.lit(source))
-    )
-    return pairs
+    # whose smaller id carries the larger salt). A member takes at most
+    # n_salts right-role rows.
+    return _distinct_pairs(
+        left.join(_build_side(right, plan.rows * cfg.n_salts),
+                  ["band_id", "bucket", "s", "t"]),
+        source)
 
 
 def _band_widths(n_bands: int) -> list[int]:

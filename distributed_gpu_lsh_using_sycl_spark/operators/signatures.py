@@ -109,47 +109,58 @@ def minhash_buckets_batch(crc_arrays: list[np.ndarray], cfg: LshConfig,
 
 
 def text_signature_batch(captions, cfg: LshConfig, a: np.ndarray,
-                         b: np.ndarray) -> tuple[list, list, list]:
+                         b: np.ndarray, with_windows: bool = False) -> dict:
     """The whole text signature chain for one batch of captions (None =
-    NULL) -> (shingles, minhash, buckets) lists: shingle CRCs via
-    ``shingle_crcs_py``, then ``minhash_buckets_batch``. A NULL caption
-    gets NULL shingles, the MinHash of the empty set and NULL buckets.
-    Shared by the text signature UDF and the blob scan, so both emit the
-    same rows (parity pinned in tests/test_blob_scan.py and
-    tests/test_banding.py)."""
+    NULL) -> {"shingles", "minhash", "buckets"[, "whash"]} column lists:
+    shingle CRCs via ``shingle_crcs_py``, then ``minhash_buckets_batch``;
+    with ``with_windows`` also the winnowed window fingerprints of the
+    substring pass (``suffix.winnowed_hashes_batch``), so a pipeline that
+    bands both families reads each caption in one Python pass. A NULL
+    caption gets NULL shingles, the MinHash of the empty set, NULL
+    buckets and no fingerprints. Shared by the text signature UDF and the
+    blob scan, so both emit the same rows (parity pinned in
+    tests/test_blob_scan.py and tests/test_banding.py)."""
     k = cfg.shingle_size
     crcs = [np.zeros(0, dtype=np.uint64) if c is None
             else np.asarray(shingle_crcs_py(c, k), dtype=np.uint64)
             for c in captions]
     sig_list, bucket_list = minhash_buckets_batch(crcs, cfg, a, b)
-    shingles = [None if c is None else arr.view(np.int64).tolist()
-                for c, arr in zip(captions, crcs)]
-    return shingles, sig_list, bucket_list
+    cols = {"shingles": [None if c is None else arr.view(np.int64).tolist()
+                         for c, arr in zip(captions, crcs)],
+            "minhash": sig_list, "buckets": bucket_list}
+    if with_windows:
+        from distributed_gpu_lsh_using_sycl_spark.operators.suffix import (
+            winnowed_hashes_batch)
+        cols["whash"] = winnowed_hashes_batch(
+            captions, cfg.min_substring_len, cfg.substring_winnow_stride)
+    return cols
 
 
 # --------------------------------------------------------------------------- #
 # Text signature: shingles + MinHash + band buckets (one pandas UDF)
 # --------------------------------------------------------------------------- #
 
-_TEXT_SIG_SCHEMA = T.StructType([
+#: the window fingerprints ``text_signature_batch(with_windows=True)`` adds
+WHASH_FIELD = T.StructField("whash", T.ArrayType(T.LongType()), False)
+
+_TEXT_SIG_FIELDS = [
     T.StructField("shingles", T.ArrayType(T.LongType()), True),
     T.StructField("minhash", T.ArrayType(T.LongType()), False),
     T.StructField("buckets", T.ArrayType(T.LongType()), True),
-])
+]
 
 
-def make_text_signature_udf(cfg: LshConfig):
-    """Series(text) -> struct(shingles, minhash, buckets): the WHOLE text
-    signature chain (``text_signature_batch``) in one Arrow hop.
-    Measured ~1.4x the JVM shingle chain + separate minhash UDF at sf0.1
-    (one Arrow hop, no interpreted higher-order functions)."""
+def make_text_signature_udf(cfg: LshConfig, with_windows: bool = False):
+    """Series(text) -> struct(shingles, minhash, buckets[, whash]): the
+    WHOLE text signature chain (``text_signature_batch``) in one Arrow
+    hop. Measured ~1.4x the JVM shingle chain + separate minhash UDF at
+    sf0.1 (one Arrow hop, no interpreted higher-order functions)."""
     a, b = H.minhash_params(cfg.seed, cfg.signature_len, cfg.signature_pool_size)
+    schema = T.StructType(_TEXT_SIG_FIELDS + ([WHASH_FIELD] if with_windows else []))
 
-    @F.pandas_udf(_TEXT_SIG_SCHEMA)
+    @F.pandas_udf(schema)
     def text_sig_udf(texts: pd.Series) -> pd.DataFrame:
-        sh, sig_list, bucket_list = text_signature_batch(texts, cfg, a, b)
-        return pd.DataFrame({"shingles": sh, "minhash": sig_list,
-                             "buckets": bucket_list})
+        return pd.DataFrame(text_signature_batch(texts, cfg, a, b, with_windows))
 
     return text_sig_udf
 
@@ -237,8 +248,11 @@ def spread(df: DataFrame) -> DataFrame:
 
 def compute_signatures(images: DataFrame, cfg: LshConfig,
                        id_col: str = "image_id", text_col: str = "caption",
-                       with_image: bool = True) -> DataFrame:
-    """images -> signatures(image_id, shingles, minhash, buckets, simhash, phash).
+                       with_image: bool = True,
+                       with_windows: bool = False) -> DataFrame:
+    """images -> signatures(image_id, shingles, minhash, buckets[, whash],
+    simhash, phash); ``whash`` (the substring pass's window fingerprints)
+    only with ``with_windows``.
 
     Column pruning note: only (id, caption[, bytes, phash]) are read —
     with parquet/Iceberg the scan never materializes ``bytes`` unless the
@@ -250,7 +264,7 @@ def compute_signatures(images: DataFrame, cfg: LshConfig,
     minhash batch kernel. tests/test_banding.py recomputes the output
     from the JVM shingle chain plus local numpy, NULL captions included.
     """
-    sig_udf = make_text_signature_udf(cfg)
+    sig_udf = make_text_signature_udf(cfg, with_windows)
     out = (
         spread(images)
         .withColumn("sg", sig_udf(F.col(text_col)))
@@ -259,6 +273,7 @@ def compute_signatures(images: DataFrame, cfg: LshConfig,
             F.col("sg.shingles").alias("shingles"),
             F.col("sg.minhash").alias("minhash"),
             F.col("sg.buckets").alias("buckets"),
+            *([F.col("sg.whash").alias("whash")] if with_windows else []),
             *([F.col("phash"), F.col("bytes")] if with_image else []),
         )
     )

@@ -4,22 +4,25 @@ At 10^12 rows you cannot build one global suffix array; the distributed
 decomposition (the standard one from suffix-array-based training-data
 dedup) is:
 
-1. **Candidate generation** — every caption emits the rolling polynomial
-   hashes of ALL of its length-L character windows (L =
-   ``min_substring_len``), computed in one vectorized numpy pass per
-   Arrow batch (prefix-hash trick: O(len) per doc, zero per-row Python).
-   Two captions sharing any substring of length ≥ L share a window hash,
-   so the equi-join on (window_hash) is a complete blocking scheme —
-   recall 1.0 by construction, modulo 31-bit hash collisions which only
-   ADD candidates.
-2. **Exact verification** — for each candidate pair, a suffix-array
-   longest-common-substring check over the two captions (suffix array by
-   prefix-doubling + Kasai LCP, numpy), inside a pandas-grouped UDF.
+1. **Candidate generation** — every caption emits the winnowed rolling
+   polynomial hashes of its character windows (L = ``min_substring_len``,
+   see ``_winnowed_hashes``), computed by ``winnowed_hashes_batch`` in
+   one vectorized numpy pass per Arrow batch. Two captions sharing any
+   substring of length ≥ L share a fingerprint, so the equi-join on the
+   fingerprint is a complete blocking scheme — recall 1.0 by
+   construction, modulo 31-bit hash collisions which only ADD
+   candidates. The batch pipeline gets the fingerprints from its
+   signature pass (``text_signature_batch(with_windows=True)``) and
+   bands them with the other families (``window_bands``); the driver
+   queries run ``substring_candidates``.
+2. **Exact verification** — ``window_verdict``: for each candidate pair,
+   an exact shared length-L window probe (``shares_window``, equivalent
+   to a longest-common-substring ≥ L check) in one pandas UDF.
    Collisions are eliminated here, so the hash width costs nothing in
    precision.
 
 Full-containment pairs (caption_a inside caption_b) are the verified
-subset with lcs == len(shorter); they're flagged separately.
+subset one text of which contains the other; they're flagged separately.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ import functools as _functools
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -106,41 +109,75 @@ def _winnowed_hashes(text: str, L: int, stride: int) -> np.ndarray:
     return np.unique(mins).astype(np.int64)
 
 
+def winnowed_hashes_batch(texts, L: int, stride: int) -> list[np.ndarray]:
+    """``_winnowed_hashes(t or "", L, stride)`` for every text of a batch
+    (None = NULL), bit-identical, in one numpy pass over the batch's
+    concatenated codepoints instead of one pass per text: the k-gram
+    hashes run over the whole buffer, the ``stride``-wide minimum over
+    the hash array, and only start positions whose length-L span stays
+    inside one text are kept. Each row's distinct values come from one
+    sort of (row, hash) keys."""
+    texts = [t or "" for t in texts]
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    k = L - stride + 1
+    if stride <= 1 or k < _MIN_GRAM:
+        k, stride = L, 1  # the all-windows scheme, as _winnowed_hashes
+    c = _codepoints("".join(texts))
+    ends = np.cumsum(lens)
+    if len(c) < L:
+        return [np.zeros(0, dtype=np.int64) for _ in texts]
+    h = _gram_hashes(c, k)
+    if stride > 1:
+        h = np.lib.stride_tricks.sliding_window_view(h, stride).min(axis=1)
+    # h[i] covers codepoints [i, i + L): keep starts whose span ends
+    # inside the text they start in
+    row = np.repeat(np.arange(len(texts)), lens)[:len(h)]
+    keep = np.arange(len(h)) + L <= ends[row]
+    key = np.unique((row[keep].astype(np.uint64) << np.uint64(32)) | h[keep])
+    vals = (key & np.uint64(0xFFFFFFFF)).astype(np.int64)
+    cuts = np.searchsorted(key >> np.uint64(32), np.arange(1, len(texts)))
+    return np.split(vals, cuts)
+
+
 def window_hash_df(docs: DataFrame, cfg: LshConfig,
                    id_col: str = "image_id", text_col: str = "caption") -> DataFrame:
-    """(id, text) -> exploded (image_id, whash): winnowed window
-    fingerprints (see ``_winnowed_hashes``; stride <= 1 = every window)."""
+    """(id, text) -> (image_id, whash array): winnowed window fingerprints
+    per text (``winnowed_hashes_batch``; stride <= 1 = every window)."""
     L = cfg.min_substring_len
     stride = cfg.substring_winnow_stride
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def win_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([_winnowed_hashes(t or "", L, stride).tolist()
-                          for t in texts])
+        return pd.Series(winnowed_hashes_batch(texts, L, stride))
 
     return (spread(docs.select(F.col(id_col).alias("image_id"),
                                 F.col(text_col).alias("text")))
-            .withColumn("whash", F.explode(win_udf(F.col("text"))))
-            .select("image_id", "whash"))
+            .select("image_id", win_udf(F.col("text")).alias("whash")))
+
+
+def window_bands(fingerprints: DataFrame) -> DataFrame:
+    """(image_id, whash array) -> the window family's banding frame
+    (image_id, band_id = -1, bucket = fingerprint): a fingerprint shared
+    by a crowd (boilerplate strings) is exactly a hot LSH bucket."""
+    return fingerprints.select("image_id", F.lit(-1).alias("band_id"),
+                               F.explode("whash").alias("bucket"))
 
 
 def substring_candidates(docs: DataFrame, cfg: LshConfig,
                          id_col: str = "image_id", text_col: str = "caption") -> DataFrame:
     """Distinct (a, b) candidate pairs sharing ≥1 length-L window hash.
 
-    Reuses the salted-band machinery for skew: a window hash shared by a
-    crowd (boilerplate strings) is exactly a hot LSH bucket. The exploded
-    fingerprint frame feeds the plan three ways (bucket-stats agg + both
-    sides of the salted self-join) — materialize it once (localCheckpoint)
-    instead of running the fingerprint UDF per consumer.
+    Reuses the salted-band machinery for skew (``window_bands``). The
+    exploded fingerprint frame feeds the plan three ways (bucket-stats
+    agg + both sides of the salted self-join) — materialize it once
+    (localCheckpoint) instead of running the fingerprint UDF per
+    consumer.
     """
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
         candidate_pairs_from_bands)
 
-    wh = window_hash_df(docs, cfg, id_col, text_col)
-    bands = (wh.select("image_id", F.lit(-1).alias("band_id"),
-                       F.col("whash").alias("bucket"))
-             .localCheckpoint(eager=True))
+    bands = window_bands(window_hash_df(docs, cfg, id_col, text_col)) \
+        .localCheckpoint(eager=True)
     return candidate_pairs_from_bands(bands, cfg, source="substring")
 
 
@@ -254,7 +291,7 @@ def shares_window(a: str, b: str, L: int) -> bool:
     cost: one window-set probe at k=L instead of lcs_fast's ~log2(len)
     binary-search probes, over window sets memoized by ``_window_set``.
     This is the verify's whole question — the exact LCS length is never
-    consumed downstream — and ``verify_substring_pairs`` runs this very
+    consumed downstream — and ``window_verdict`` runs this very
     function per candidate pair (NULL text as "")."""
     if len(a) > len(b):
         a, b = b, a
@@ -265,34 +302,52 @@ def shares_window(a: str, b: str, L: int) -> bool:
     return not _window_set(a, L).isdisjoint(_window_set(b, L))
 
 
+def window_verdict(pairs: DataFrame, cfg: LshConfig,
+                   found: Column | None = None) -> DataFrame:
+    """(…, text_a, text_b) pairs -> the same rows plus ``window``, the
+    window family's verdict on each pair: "substring" when the two texts
+    share a length-L window and one contains the other (a dup by
+    itself), "window" when they share one but neither contains the
+    other (a candidate the Jaccard/Hamming verify still decides), NULL
+    when they share none (a hash collision or short-gram candidate) or
+    ``found`` (default: every row) is false for the row.
+
+    The probe is ``shares_window``: exact (raw length-L windows, no
+    hashes) and AMORTIZED: a text participates in many candidate pairs,
+    so its frozen window set is built once per worker (LRU on the text)
+    and each pair costs one C-level ``isdisjoint``. A JVM variant
+    (``arrays_overlap`` over substring arrays) was measured 5-13x
+    SLOWER — higher-order functions are interpreted per element, so 280
+    UTF8String windows per row per side beat the one Arrow hop they
+    save. This verify stays cheap enough that winnowed candidate
+    generation (see ``_winnowed_hashes``) is a net win even though
+    shorter grams admit more candidates. The UDF is marked
+    nondeterministic only so the optimizer never copies it into a
+    filter on ``window``: one Python operator per verify."""
+    L = cfg.min_substring_len
+
+    @F.pandas_udf(T.BooleanType())
+    def shares_udf(ta: pd.Series, tb: pd.Series, on: pd.Series) -> pd.Series:
+        return pd.Series([bool(f) and shares_window(x or "", y or "", L)
+                          for x, y, f in zip(ta, tb, on)], dtype="bool")
+
+    ta, tb = F.col("text_a"), F.col("text_b")
+    shares = shares_udf.asNondeterministic()(
+        ta, tb, F.lit(True) if found is None else found)
+    return pairs.withColumn(
+        "window", F.when(shares, F.when(ta.contains(tb) | tb.contains(ta),
+                                        F.lit("substring"))
+                         .otherwise(F.lit("window"))))
+
+
 def verify_substring_pairs(cands: DataFrame, docs: DataFrame, cfg: LshConfig,
                            id_col: str = "image_id", text_col: str = "caption") -> DataFrame:
     """(a, b) candidates -> (a, b, contains, source), keeping exactly the
-    pairs with a true shared length-L window (kills the window-hash
-    join's collision + short-gram false positives).
-
-    The probe is ``shares_window``: exact (raw length-L windows, no
-    hashes — collision and short-gram candidates die here) and AMORTIZED: a doc participates in
-    many candidate pairs, so its frozen window set is built once per
-    worker (LRU on the text) and each pair costs one C-level
-    ``isdisjoint``. A JVM variant (``arrays_overlap`` over substring
-    arrays) was measured 5-13x SLOWER — higher-order functions are
-    interpreted per element, so 280 UTF8String windows per row per side
-    beat the one Arrow hop they save. This verify stays cheap enough
-    that winnowed candidate generation (see ``_winnowed_hashes``) is a
-    net win even though shorter grams admit more candidates."""
-    L = cfg.min_substring_len
+    pairs with a true shared length-L window (``window_verdict`` not
+    NULL; kills the window-hash join's collision + short-gram false
+    positives)."""
     d = docs.select(F.col(id_col).alias("image_id"), F.col(text_col).alias("text"))
-    withs = pair_features(cands, d, ("text",))
-
-    @F.pandas_udf(T.BooleanType())
-    def shares_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        return pd.Series([shares_window(x or "", y or "", L)
-                          for x, y in zip(ta, tb)], dtype="bool")
-
-    return (withs
-            .filter(shares_udf("text_a", "text_b"))
-            .withColumn("contains",
-                        F.col("text_b").contains(F.col("text_a"))
-                        | F.col("text_a").contains(F.col("text_b")))
-            .select("a", "b", "contains", F.lit("substring").alias("source")))
+    return (window_verdict(pair_features(cands, d, ("text",)), cfg)
+            .filter(F.col("window").isNotNull())
+            .select("a", "b", (F.col("window") == "substring").alias("contains"),
+                    F.lit("substring").alias("source")))

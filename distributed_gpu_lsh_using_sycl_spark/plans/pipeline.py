@@ -2,10 +2,17 @@
 
 Stage graph (each stage = one materialized table, the unit of resume):
 
-    images ─► signatures ─► bands ─► cand_minhash ─┐
-                 │  ├──────────────► cand_simhash ─┤
-                 │  └──────────────► cand_phash  ──┼─► pairs ─► edges ─► clusters
-    images ────────────────────────► cand_substr ──┘
+    images ─► signatures ─► bands ─┐
+                 ├─ window fingerprints ─┼─► candidates ─► pairs ─► edges ─► clusters
+                 └─ simhash/phash bit-bands ─┘
+
+One Python pass reads each caption (the signature stage also returns
+the substring pass's window fingerprints), one banding frame stacks
+every family, and one band plan and one candidate self-join serve them
+all; the join's pair distinct lists the families that found each pair.
+The pairs stage resolves the window family by ``suffix.window_verdict``
+and verifies; the clusters stage takes its vertices from the signature
+table (one row per input row, already materialized).
 
 Resumability (north rule): every stage write is recorded in a manifest
 (``lineage`` table: run_id, stage, config_hash, input_snapshot, status,
@@ -32,8 +39,7 @@ from distributed_gpu_lsh_using_sycl_spark.operators import banding, components, 
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import compute_signatures
 from distributed_gpu_lsh_using_sycl_spark.sources.tables import TableIO
 
-STAGES = ("signatures", "bands", "cand_minhash", "cand_simhash", "cand_phash",
-          "cand_substring", "pairs", "edges", "clusters")
+STAGES = ("signatures", "bands", "candidates", "pairs", "edges", "clusters")
 
 
 @dataclass
@@ -128,9 +134,11 @@ class DedupPipeline:
         materializes the verified-edge chain exactly once anyway — so
         laziness costs no recompute on the main path, while eager
         staging pays real block-manager writes for the wide signature
-        and band frames. Operators whose output feeds multiple
-        consumers checkpoint internally (substring_candidates'
-        fingerprint frame; connected_components' edge set)."""
+        and band frames. The signature frame, which feeds the band plan,
+        both sides of the candidate join and the pair features, is the
+        one frame ``run`` checkpoints itself; operators whose output
+        feeds multiple consumers checkpoint internally (band_plan's
+        stats; connected_components' edge set)."""
         if self._done(name):
             df = self.io.read(name)
             self._record(name, "SKIPPED", None, 0)
@@ -158,15 +166,18 @@ class DedupPipeline:
                 from distributed_gpu_lsh_using_sycl_spark.sources import blob_scan
                 return blob_scan.scan_signatures(
                     self.spark, self.scan_path, cfg, with_image=self.with_image,
-                    id_col=self.id_col, text_col=self.text_col)
+                    id_col=self.id_col, text_col=self.text_col,
+                    with_windows=True)
             return compute_signatures(images, cfg, id_col=self.id_col,
                                       text_col=self.text_col,
-                                      with_image=self.with_image)
+                                      with_image=self.with_image,
+                                      with_windows=True)
 
         t["signatures"] = self._stage("signatures", build_signatures)
         sigs = t["signatures"]
         if not self.io:
-            # signatures feed bands + both sides of the rehydration join;
+            # signatures feed the bands, the window fingerprints, the
+            # bit-bands, both sides of the rehydration join and the vertices;
             # without a materialized stage table the pandas UDFs recompute
             # 3x. A lazy persist() is NOT enough: the candidate job's
             # stats/left/right stages launch concurrently and each computes
@@ -175,82 +186,74 @@ class DedupPipeline:
             sigs = t["signatures"] = sigs.localCheckpoint(eager=True)
 
         t["bands"] = self._stage("bands", lambda: banding.explode_bands(sigs))
-
-        def banded_candidates(stage: str, bands_df: DataFrame,
-                              source: str) -> None:
-            # ONE stats shuffle per banding frame: banding.band_plan
-            # materializes the over-threshold occupancy (hot + degenerate
-            # buckets, small by the skew assumption) once and observes its
-            # bucket count and largest bucket on that same job. The count
-            # picks the candidate join's fast path; the largest bucket
-            # decides whether the drop accounting has anything to count.
-            # Built INSIDE the stage lambda: a resumed run whose stage is
-            # DONE must not pay the stats shuffle (its drop count was
-            # recorded by the original run).
-            plan_box: dict = {}
-
-            def build() -> DataFrame:
-                plan_box["plan"] = banding.band_plan(bands_df, cfg)
-                return banding.candidate_pairs_from_bands(
-                    bands_df, cfg, source=source, plan=plan_box["plan"])
-
-            t[stage] = self._stage(stage, build)
-            if cfg.max_bucket_size <= 0 or "plan" not in plan_box:
-                return
-            plan = plan_box["plan"]
-            # no-silent-caps: the degenerate-bucket down-sample's exact
-            # drop count goes into metrics. No bucket over the cap proves
-            # it zero with no job; otherwise one broadcast join + partial
-            # agg over the plan's stats (no second stats shuffle).
-            t0 = time.perf_counter()
-            n_dropped = 0
-            if plan.max_cnt > cfg.max_bucket_size:
-                n_dropped = (banding.downsample_dropped(bands_df, cfg, plan)
-                             .agg(F.coalesce(F.sum("dropped"), F.lit(0)))
-                             .collect()[0][0])
-            self._record(f"{stage}:dropped", "INFO", int(n_dropped),
-                         int((time.perf_counter() - t0) * 1000))
-
-        banded_candidates("cand_minhash", t["bands"], "minhash")
-
+        # Every banding family in ONE frame: MinHash bands, the substring
+        # pass's window fingerprints (computed by the signature pass) and,
+        # with images, the SimHash/pHash bit-bands. One band_plan (one
+        # stats shuffle, whose job also observes the frame's row count for
+        # the broadcast decision) and one candidate self-join serve all of
+        # them; its pair distinct lists the families that found each pair.
+        families = {"minhash": t["bands"], "substring": suffix.window_bands(sigs)}
         if self.with_image:
-            banded_candidates("cand_simhash",
-                              banding.bit_bands(sigs, "simhash", cfg),
-                              "simhash")
-            banded_candidates("cand_phash",
-                              banding.bit_bands(sigs, "phash", cfg),
-                              "phash")
+            families["simhash"] = banding.bit_bands(sigs, "simhash", cfg)
+            families["phash"] = banding.bit_bands(sigs, "phash", cfg)
+        fused, family = banding.stack_bands(families)
+        # Built INSIDE the stage lambda: a resumed run whose stage is DONE
+        # must not pay the stats shuffle (its drop counts were recorded by
+        # the original run).
+        plan_box: dict = {}
 
-        docs = images.select(F.col(self.id_col).alias("image_id"),
-                             F.col(self.text_col).alias("caption"))
-        # Containment (caption embedded verbatim) is a dup by itself; a
-        # merely-shared length-L window is only a CANDIDATE signal that
-        # still must pass the Jaccard/Hamming verify (auto-verifying it
-        # transitively over-merged clusters: a 97-doc blob on synthetic
-        # text). Both flow into the pair stage under distinct sources.
-        t["cand_substring"] = self._stage(
-            "cand_substring",
-            lambda: suffix.verify_substring_pairs(
-                suffix.substring_candidates(docs, cfg), docs, cfg)
-            .select("a", "b",
-                    F.when(F.col("contains"), F.lit("substring"))
-                     .otherwise(F.lit("window")).alias("source")))
+        def build_candidates() -> DataFrame:
+            plan_box["plan"] = banding.band_plan(fused, cfg)
+            return banding.candidate_pairs_from_bands(
+                fused, cfg, source=family, plan=plan_box["plan"])
+
+        t["candidates"] = self._stage("candidates", build_candidates)
+        if cfg.max_bucket_size > 0 and "plan" in plan_box:
+            # no-silent-caps: the degenerate-bucket down-sample's exact drop
+            # count per family goes into metrics. No bucket over the cap
+            # proves every count zero with no job; otherwise one broadcast
+            # join + partial agg over the plan's stats (no second stats
+            # shuffle).
+            plan = plan_box["plan"]
+            t0 = time.perf_counter()
+            dropped: dict = {}
+            if plan.max_cnt > cfg.max_bucket_size:
+                dropped = dict(
+                    banding.downsample_dropped(fused, cfg, plan)
+                    .groupBy(family.alias("family"))
+                    .agg(F.sum("dropped")).collect())
+            millis = int((time.perf_counter() - t0) * 1000)
+            for name in families:
+                self._record(f"cand_{name}:dropped", "INFO",
+                             int(dropped.get(name, 0)), millis)
 
         def build_pairs() -> DataFrame:
-            cands = [t["cand_minhash"].select("a", "b", "source"),
-                     t["cand_substring"]]
-            if self.with_image:
-                cands += [t["cand_simhash"].select("a", "b", "source"),
-                          t["cand_phash"].select("a", "b", "source")]
-            merged = pairs.merge_candidates(*cands)
-            return pairs.verify_pairs(pairs.attach_features(merged, sigs), cfg)
+            # The window family's pairs are resolved by the substring
+            # verdict (suffix.window_verdict): a shared length-L window
+            # makes a pair a "window" candidate for the Jaccard/Hamming
+            # verify (a merely-shared window auto-verified transitively
+            # over-merged clusters: a 97-doc blob on synthetic text),
+            # containment makes it a "substring" dup by itself, and no
+            # shared window drops the family (a hash-collision or
+            # short-gram candidate) — and the pair with it when no other
+            # family found it.
+            docs = images.select(F.col(self.id_col).alias("image_id"),
+                                 F.col(self.text_col).alias("text"))
+            fams = F.split("source", "[+]")
+            cands = suffix.window_verdict(
+                pairs.pair_features(t["candidates"], docs, ("text",)), cfg,
+                found=F.array_contains(fams, "substring"))
+            source = F.array_join(F.array_sort(F.array_append(
+                F.array_remove(fams, "substring"), F.col("window"))), "+")
+            cands = (cands.select("a", "b", source.alias("source"))
+                     .filter(F.col("source") != ""))
+            return pairs.verify_pairs(pairs.attach_features(cands, sigs), cfg)
 
         t["pairs"] = self._stage("pairs", build_pairs)
         t["edges"] = self._stage("edges", lambda: pairs.verified_edges(t["pairs"]))
         t["clusters"] = self._stage(
             "clusters",
-            lambda: components.assign_clusters(
-                images, t["edges"], id_col=self.id_col))
+            lambda: components.assign_clusters(sigs, t["edges"]))
 
         if self.io:
             mdf = self.spark.createDataFrame(

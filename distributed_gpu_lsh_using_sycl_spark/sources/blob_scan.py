@@ -50,10 +50,10 @@ from pyspark.sql import types as T
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
-    simhash_batch, text_signature_batch)
+    WHASH_FIELD, simhash_batch, text_signature_batch)
 
 
-def _sig_schema(id_type: T.DataType) -> T.StructType:
+def _sig_schema(id_type: T.DataType, with_windows: bool) -> T.StructType:
     """Signature schema, id type inferred from the table (image ids are
     strings; the documents table keys by int64 doc_id)."""
     return T.StructType([
@@ -61,6 +61,7 @@ def _sig_schema(id_type: T.DataType) -> T.StructType:
         T.StructField("shingles", T.ArrayType(T.LongType()), True),
         T.StructField("minhash", T.ArrayType(T.LongType()), False),
         T.StructField("buckets", T.ArrayType(T.LongType()), True),
+        *([WHASH_FIELD] if with_windows else []),
         T.StructField("phash", T.LongType(), True),
         T.StructField("simhash", T.LongType(), True),
     ])
@@ -116,16 +117,12 @@ SLICE_ROWS = 512
 
 
 def _compute_batch(t, cfg: LshConfig, a: np.ndarray, b: np.ndarray,
-                   with_image: bool, id_col: str, text_col: str) -> pd.DataFrame:
+                   with_image: bool, id_col: str, text_col: str,
+                   with_windows: bool) -> pd.DataFrame:
     """Signature frame for one in-memory Arrow batch/table slice."""
     caps = t.column(text_col).to_pylist()
-    shingles, sig_list, bucket_list = text_signature_batch(caps, cfg, a, b)
-    out = {
-        "image_id": t.column(id_col).to_pylist(),
-        "shingles": shingles,
-        "minhash": sig_list,
-        "buckets": bucket_list,
-    }
+    out = {"image_id": t.column(id_col).to_pylist(),
+           **text_signature_batch(caps, cfg, a, b, with_windows)}
     if with_image:
         ph = t.column("phash").to_numpy().astype(np.int64).view(np.uint64)
         out["phash"] = ph.view(np.int64)
@@ -138,8 +135,8 @@ def _compute_batch(t, cfg: LshConfig, a: np.ndarray, b: np.ndarray,
 
 def compute_split(file: str, rg: int, cfg: LshConfig,
                   a: np.ndarray, b: np.ndarray, with_image: bool = True,
-                  id_col: str = "image_id", text_col: str = "caption"
-                  ) -> pd.DataFrame:
+                  id_col: str = "image_id", text_col: str = "caption",
+                  with_windows: bool = False) -> pd.DataFrame:
     """Scan one parquet row group and compute its signature frame — the
     entire per-split work of the fused stage in one framework-free
     function. Called by scan_signatures' mapInPandas tasks AND verbatim
@@ -151,25 +148,26 @@ def compute_split(file: str, rg: int, cfg: LshConfig,
 
     cols = [id_col, text_col] + (["phash", "bytes"] if with_image else [])
     frames = [
-        _compute_batch(batch, cfg, a, b, with_image, id_col, text_col)
+        _compute_batch(batch, cfg, a, b, with_image, id_col, text_col,
+                       with_windows)
         for batch in pq.ParquetFile(file).iter_batches(
             batch_size=SLICE_ROWS, row_groups=[rg], columns=cols)
     ]
     if not frames:
         return _compute_batch(
             pq.ParquetFile(file).read_row_group(rg, columns=cols),
-            cfg, a, b, with_image, id_col, text_col)
+            cfg, a, b, with_image, id_col, text_col, with_windows)
     return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
 
 def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
                     with_image: bool = True,
-                    id_col: str = "image_id", text_col: str = "caption"
-                    ) -> DataFrame:
+                    id_col: str = "image_id", text_col: str = "caption",
+                    with_windows: bool = False) -> DataFrame:
     """Fused scan+signature stage over a parquet image table: returns the
     same DataFrame as ``compute_signatures(spark.read.parquet(path))``
-    — (image_id, shingles, minhash, buckets, phash, simhash) — without
-    moving blob bytes through the JVM.
+    — (image_id, shingles, minhash, buckets[, whash], phash, simhash) —
+    without moving blob bytes through the JVM.
 
     Spark plans the (file, row_group) splits as a tiny DataFrame sliced
     evenly into ``scan_partitions`` tasks — one per
@@ -212,7 +210,8 @@ def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
             for file, rg in zip(pdf["file"], pdf["row_group"]):
                 yield compute_split(file, int(rg), cfg, a, b,
                                     with_image=want_image,
-                                    id_col=id_name, text_col=text_name)
+                                    id_col=id_name, text_col=text_name,
+                                    with_windows=with_windows)
 
     n_parts = scan_partitions(
         len(splits), sum(size for _, _, size in row_groups),
@@ -223,6 +222,5 @@ def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
     # up others — measured stragglers)
     splits_df = spark.createDataFrame(
         spark.sparkContext.parallelize(splits, n_parts), _SPLIT_SCHEMA)
-    return (splits_df.mapInPandas(read_splits, schema=_sig_schema(id_type))
-            .select("image_id", "shingles", "minhash", "buckets",
-                    "phash", "simhash"))
+    return splits_df.mapInPandas(read_splits,
+                                 schema=_sig_schema(id_type, with_windows))

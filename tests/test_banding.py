@@ -291,3 +291,26 @@ def test_pipeline_records_exact_drop_count(spark):
     res = run_dedup(spark, _caption_frame(spark, 1, 30), cfg,
                     with_image=False)
     assert dropped_metric(res) == 0
+
+
+def test_pipeline_records_substring_drop_count(spark):
+    """The window family is capped like every other family and its drop
+    count is recorded: 40 copies of one caption of at least L characters
+    put 40 members in each of its window buckets, and cand_substring:dropped
+    equals the total of downsample_dropped over the window bands."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
+        downsample_dropped)
+    from distributed_gpu_lsh_using_sycl_spark.operators.suffix import (
+        window_bands)
+    from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
+
+    cfg = LshConfig(max_bucket_size=10, hot_bucket_threshold=8, n_salts=2)
+    frame = _caption_frame(spark, 40, 30)
+    assert len(frame.first().caption) >= cfg.min_substring_len
+    res = run_dedup(spark, frame, cfg, with_image=False)
+    want = (downsample_dropped(window_bands(res["signatures"]), cfg)
+            .agg(F.sum("dropped")).collect()[0][0])
+    assert want > 0
+    got = [m["rows"] for m in res.metrics
+           if m["stage"] == "cand_substring:dropped"]
+    assert got == [want]

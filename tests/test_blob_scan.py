@@ -112,6 +112,39 @@ def test_scan_signatures_null_and_edge_captions(spark, tmp_path):
     assert dict(fast.dtypes)["image_id"] == "bigint"
 
 
+def test_scan_signatures_window_fingerprints(spark, tmp_path):
+    """with_windows: both signature paths add ``whash`` equal to
+    suffix._winnowed_hashes of each caption (NULL as ""), including NULL,
+    empty, below-L and non-ASCII captions, and the other columns do not
+    change."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.suffix import (
+        _winnowed_hashes)
+
+    path = str(tmp_path / "win.parquet")
+    caps = [None, "", "x" * (CFG.min_substring_len - 1),
+            "x" * CFG.min_substring_len,
+            "ÜNICODE captions déjà vu with enough characters to winnow",
+            "the quick brown fox jumps over the lazy dog again and again"]
+    spark.createDataFrame(list(enumerate(caps)), "doc_id long, text string") \
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    want = {i: _winnowed_hashes(c or "", CFG.min_substring_len,
+                                CFG.substring_winnow_stride).tolist()
+            for i, c in enumerate(caps)}
+    kw = dict(id_col="doc_id", text_col="text", with_image=False)
+    for with_windows in (False, True):
+        fast = blob_scan.scan_signatures(spark, path, CFG,
+                                         with_windows=with_windows, **kw)
+        ref = compute_signatures(spark.read.parquet(path), CFG,
+                                 with_windows=with_windows, **kw)
+        assert ("whash" in fast.columns) == ("whash" in ref.columns) \
+            == with_windows
+        assert _key(fast.drop("whash")) == _key(ref.drop("whash"))
+        if with_windows:
+            for df in (fast, ref):
+                assert {r.image_id: list(r.whash)
+                        for r in df.collect()} == want
+
+
 def test_pipeline_scan_path_same_clusters(spark, fixture_parquet):
     from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
 

@@ -188,3 +188,31 @@ def test_star_loop_runs_to_exact_fixpoint_on_checksum_ties(spark, monkeypatch):
                for r in components.connected_components(edf).collect()}
         assert got == _union_find_clusters(ids, path)
     assert rounds[0] == rounds[1] > 2
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_union_find_output_keeps_id_type_and_non_null(spark, id_type):
+    """The union-find result, built from pandas through Arrow, keeps the
+    edge id type and the non-null schema, also when there are no edges,
+    and assign_clusters broadcasts it."""
+    from distributed_gpu_lsh_using_sycl_spark.operators import components
+
+    ids = [3, 1, 2, 7, 5] if id_type == "long" else ["c", "a", "b", "g", "e"]
+    edges = [(ids[0], ids[1]), (ids[1], ids[2]), (ids[3], ids[4])]
+    schema = f"a {id_type}, b {id_type}"
+    want_fields = [("image_id", id_type), ("cluster_id", id_type)]
+    for rows in (edges, []):
+        out = components.connected_components(
+            spark.createDataFrame(rows, schema), small_graph_threshold=10)
+        assert [(f.name, f.dataType.simpleString().replace("bigint", "long"),
+                 f.nullable) for f in out.schema.fields] == \
+            [(n, t, False) for n, t in want_fields]
+        assert {r["image_id"]: r["cluster_id"] for r in out.collect()} == \
+            {k: v for k, v in _union_find_clusters(ids, rows).items()
+             if any(k in e for e in rows)}
+    vdf = spark.createDataFrame([(i,) for i in ids], f"image_id {id_type}")
+    got = components.assign_clusters(vdf, spark.createDataFrame(edges, schema))
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    assert {r["image_id"]: r["cluster_id"] for r in got.collect()} == \
+        _union_find_clusters(ids, edges)

@@ -166,3 +166,102 @@ def test_cc_fast_path_matches_star_loop(spark, oracle_truth, pipeline_result,
     fast = {(r["image_id"], r["cluster_id"])
             for r in pipeline_result["clusters"].collect()}
     assert fast == slow
+
+
+def _chain_pairs(spark, df, cfg, with_image):
+    """The pairs table as the separate-stage chain computes it: one
+    candidate join per family, substring_candidates ->
+    verify_substring_pairs, merge_candidates, attach_features,
+    verify_pairs."""
+    from pyspark.sql import functions as F
+
+    from distributed_gpu_lsh_using_sycl_spark.operators import banding, pairs
+    from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
+        compute_signatures)
+    from distributed_gpu_lsh_using_sycl_spark.operators.suffix import (
+        substring_candidates, verify_substring_pairs)
+
+    sigs = compute_signatures(df, cfg, with_image=with_image) \
+        .localCheckpoint(eager=True)
+    cands = [banding.candidate_pairs_from_bands(
+        banding.explode_bands(sigs), cfg, source="minhash")]
+    if with_image:
+        cands += [banding.candidate_pairs_from_bands(
+            banding.bit_bands(sigs, h, cfg), cfg, source=h)
+            for h in ("simhash", "phash")]
+    docs = df.select("image_id", "caption")
+    cands.append(
+        verify_substring_pairs(substring_candidates(docs, cfg), docs, cfg)
+        .select("a", "b", F.when(F.col("contains"), F.lit("substring"))
+                .otherwise(F.lit("window")).alias("source")))
+    return pairs.verify_pairs(
+        pairs.attach_features(pairs.merge_candidates(*cands), sigs), cfg)
+
+
+@pytest.mark.parametrize("with_image,hot", [(True, 64), (False, 64), (False, 2)])
+def test_fused_pipeline_equals_chain(spark, monkeypatch, oracle_truth,
+                                     with_image, hot):
+    """One banding frame, one band plan and one candidate join give the
+    pairs table, column for column, that the separate-stage chain gives;
+    hot_bucket_threshold=2 runs the salted grid."""
+    import dataclasses
+
+    from distributed_gpu_lsh_using_sycl_spark.operators import banding
+    from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
+
+    plans = []
+    real_plan = banding.band_plan
+
+    def band_plan(*a, **kw):
+        plans.append(real_plan(*a, **kw))
+        return plans[-1]
+
+    monkeypatch.setattr(banding, "band_plan", band_plan)
+    images, _, _, _ = oracle_truth
+    df = spark.createDataFrame(images)
+    cfg = dataclasses.replace(CFG, hot_bucket_threshold=hot)
+    res = run_dedup(spark, df, cfg, with_image=with_image)
+    assert len(plans) == 1
+    assert (plans[0].n_over > 0) == (hot == 2)  # salted grid iff hot=2
+    monkeypatch.undo()
+    got = res["pairs"]
+    want = _chain_pairs(spark, df, cfg, with_image)
+    assert got.columns == want.columns
+    got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+    assert len(got_rows) > 0
+    assert got_rows == want_rows
+    sources = {r["source"] for r in got_rows}
+    assert {"minhash", "substring"} & {x for s in sources for x in s.split("+")}
+
+
+def test_window_only_pair_without_shared_window_is_dropped(spark):
+    """A pair that only the window family finds, through a short-gram
+    fingerprint (the texts share 23 characters, not a length-24 window),
+    with Jaccard >= tau: the window verdict drops it, so it is not in the
+    pairs table even though the Jaccard verify alone would pass it."""
+    from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
+    from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
+        text_signature_batch)
+    from distributed_gpu_lsh_using_sycl_spark.operators.suffix import (
+        _winnowed_hashes, shares_window)
+    from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
+
+    a_text, b_text = " red fox ran up to mea a", "b red fox ran up to mea "
+    L = CFG.min_substring_len
+    assert not shares_window(a_text, b_text, L)
+    assert set(_winnowed_hashes(a_text, L, CFG.substring_winnow_stride)) & \
+        set(_winnowed_hashes(b_text, L, CFG.substring_winnow_stride))
+    p, q = H.minhash_params(CFG.seed, CFG.signature_len, CFG.signature_pool_size)
+    sig = text_signature_batch([a_text, b_text], CFG, p, q)
+    assert not set(sig["buckets"][0]) & set(sig["buckets"][1])  # not MinHash
+    sa, sb = map(set, sig["shingles"])
+    assert len(sa & sb) / len(sa | sb) >= CFG.jaccard_threshold
+    rows = [("p0", a_text), ("p1", b_text),
+            ("p2", "an unrelated caption about something else entirely")]
+    df = spark.createDataFrame(rows, "image_id string, caption string")
+    res = run_dedup(spark, df, CFG, with_image=False)
+    assert [(r.a, r.b, r.source) for r in res["candidates"].collect()] == \
+        [("p0", "p1", "substring")]
+    assert res["pairs"].count() == 0
+    assert {r.image_id: r.cluster_id for r in res["clusters"].collect()} == \
+        {"p0": "p0", "p1": "p1", "p2": "p2"}

@@ -92,6 +92,34 @@ def test_winnowed_fingerprints_guarantee_and_pair_set():
     assert _winnowed_hashes(t, L, 8).size < _window_hashes(t, L).size
 
 
+def test_winnowed_hashes_batch_bit_identical():
+    """The batch winnow kernel equals _winnowed_hashes(t or "") row by row
+    (values and dtype) over NULL, empty, L - 1, exactly-L and non-ASCII
+    texts, at strides 2 and 5 and at the all-windows fallbacks (stride 1,
+    stride >= L)."""
+    import numpy as np
+
+    from distributed_gpu_lsh_using_sycl_spark.operators.suffix import (
+        _winnowed_hashes, winnowed_hashes_batch)
+
+    L = 24
+    rng = np.random.Generator(np.random.PCG64(11))
+    words = ["the", "quick", "déjà", "vu", "ÜNICODE", "中文字", "a", "fox"]
+    texts = [None, "", "y" * (L - 1), "y" * L, None, "z" * (L + 1)]
+    texts += [" ".join(rng.choice(words, int(rng.integers(0, 25))))
+              for _ in range(300)]
+    texts += ["x" * (L - 1)]
+    for stride in (1, 2, 5, L, L + 3):
+        got = winnowed_hashes_batch(texts, L, stride)
+        assert len(got) == len(texts)
+        for t, g in zip(texts, got):
+            want = _winnowed_hashes(t or "", L, stride)
+            assert g.dtype == want.dtype and np.array_equal(g, want), \
+                (t, stride)
+    assert winnowed_hashes_batch([], L, 2) == []
+    assert [g.size for g in winnowed_hashes_batch(["ab", None], L, 2)] == [0, 0]
+
+
 def test_winnowed_candidates_verify_to_identical_pairs(spark):
     """End-to-end: the VERIFIED substring pair set is identical at any
     winnow stride (candidates differ; the verify makes them converge) —

@@ -30,12 +30,11 @@ sys.path.insert(0, REPO)
 #: joins AQE would convert at runtime show as SMJ here).
 SMJ_DELIBERATE = {
     "e2e_caption_dedup": (
-        "the final clusters join uses assign_clusters' AQE-decided mode "
-        "(components.py docstring) — the CC side is a few % of |V| in "
-        "this corpus and AQE converts to broadcast at runtime, but a "
-        "high-dup-fraction corpus's assignment table is NOT "
-        "broadcastable, so the generic pipeline must not force the hint "
-        "the way the known-small cc_clusters query does."),
+        "past SMALL_GRAPH_EDGES the clusters join takes the star loop's "
+        "output in assign_clusters' AQE-decided mode (components.py "
+        "docstring): a high-dup-fraction corpus's assignment table is "
+        "NOT broadcastable, so only the driver-sized union-find result "
+        "is broadcast-hinted."),
     "lsh_knn": (
         "the not-found slot fill (slots left-join ranked) joins two "
         "n*k-row frames — BOTH n-scale at the target SF, so neither "
