@@ -43,8 +43,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 
@@ -63,15 +64,30 @@ def _await_drained(q, timeout_s: int) -> None:
             f"{timeout_s}s; stopped it rather than read partial stage tables")
 
 
-#: Adjudicated-table layout/semantics version. BUMP whenever the
-#: verify_pairs output schema changes — persisted verdicts written under
-#: another layout must not be silently reused.
+#: Adjudicated-table layout/semantics version. BUMP (and update
+#: _adj_schema) whenever the verify_pairs output schema changes —
+#: persisted verdicts written under another layout must not be silently
+#: reused.
 ADJ_FORMAT_VERSION = 1
 _ADJ_STAMP_FILE = "_DLSH_ADJ_FINGERPRINT"
 #: Compact the adjudicated table once its parquet part-file count passes
 #: this bound — append-only waves otherwise grow file listings and footer
 #: reads without limit at scheduler cycle counts (thousands of waves).
 _ADJ_COMPACT_FILES = 48
+
+
+def _adj_schema(id_type: T.DataType) -> T.StructType:
+    """The adjudicated table's layout, as ``verify_pairs`` writes it for
+    ``id_type`` ids. Declared rather than inferred: reading the table
+    with it costs no footer job."""
+    return T.StructType([
+        T.StructField("a", id_type), T.StructField("b", id_type),
+        T.StructField("jaccard", T.DoubleType()),
+        T.StructField("hamming_phash", T.IntegerType()),
+        T.StructField("hamming_simhash", T.IntegerType()),
+        T.StructField("source", T.StringType()),
+        T.StructField("verified", T.BooleanType()),
+    ])
 
 
 def _adj_fingerprint(cfg: LshConfig) -> str:
@@ -248,7 +264,11 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
     signature per image_id), so a verdict never needs revisiting. CC
     stays global over ALL verified edges (singletons = self); at
     wave-scale edge counts ``assign_clusters`` solves it with its driver
-    union-find fast path, past its bound with the star loop."""
+    union-find fast path, past its bound with the star loop.
+
+    The persisted verdicts are read with ``_adj_schema`` and the wave's
+    verdict count is observed on its checkpoint job: no footer or count
+    job."""
     from distributed_gpu_lsh_using_sycl_spark.operators.components import (
         assign_clusters)
     from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
@@ -264,7 +284,8 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
         _check_adj_fingerprint(adjudicated_dir, cfg)
         _compact_adjudicated(spark, adjudicated_dir)  # before any read
         if _parquet_dir_has_data(adjudicated_dir):
-            prior = spark.read.parquet(adjudicated_dir)
+            prior = spark.read.schema(_adj_schema(id_type)).parquet(
+                adjudicated_dir)
             pairs = pairs.join(prior.select("a", "b"), ["a", "b"],
                                "left_anti")
     new_verdicts = verify_pairs(attach_features(pairs, sigs), cfg)
@@ -272,10 +293,12 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
         # Materialize the wave ONCE before appending: the append must not
         # share a plan with a read of the same directory (on an object
         # store — or with plan recomputation — the write job could list
-        # its own partial output). The checkpointed copy also yields the
-        # wave-size metric for free, with no full-table counts.
-        new_verdicts = new_verdicts.localCheckpoint(eager=True)
-        n_new = new_verdicts.count()
+        # its own partial output). The checkpoint job also observes the
+        # wave-size metric, with no count job.
+        obs = Observation()
+        new_verdicts = (new_verdicts.observe(obs, F.count(F.lit(1)).alias("n"))
+                        .localCheckpoint(eager=True))
+        n_new = int(obs.get["n"])
         new_verdicts.write.mode("append").parquet(adjudicated_dir)
         # prior's file index was pinned before the append; union it with
         # the materialized wave instead of re-listing the whole table.
@@ -313,7 +336,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     reconcile alone produces the same clusters as reconciling every wave
     (asserted in tests/test_resume_and_streaming.py)."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
-        signature_stream)
+        signature_frame, signature_stream)
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
         candidate_pair_stream)
 
@@ -348,13 +371,18 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    sigs = spark.read.parquet(sigs_dir)
+    # Every table is read with the schema it was written with: an
+    # inferred schema costs one footer job per read. The signature schema
+    # is the stream's own (analysis only, no job).
+    sigs = spark.read.schema(
+        signature_frame(spark, input_dir, cfg, with_image=with_image).schema
+    ).parquet(sigs_dir)
     # An empty-so-far candidate table is normal (no pair emitted yet ->
     # all singletons); any OTHER read failure (corrupt/partial parquet,
     # permissions, transient FS error) must propagate — swallowing it
     # would silently overwrite the clusters table with all-singletons.
     if _parquet_dir_has_data(pairs_dir):
-        cands = spark.read.parquet(pairs_dir).select("a", "b")
+        cands = spark.read.schema("a string, b string").parquet(pairs_dir)
     else:
         cands = spark.createDataFrame([], "a string, b string")
     if not reconcile:
@@ -369,7 +397,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     # partition: the table is O(|V|) skinny rows, and every consumer
     # re-reads it (listing + footer cost per cycle)
     clusters.coalesce(4).write.mode("overwrite").parquet(out_dir)
-    return {"clusters": spark.read.parquet(out_dir),
+    return {"clusters": spark.read.schema(clusters.schema).parquet(out_dir),
             "n_signatures": _parquet_dir_rows(sigs_dir),
             "n_candidates": _parquet_dir_rows(pairs_dir),
             "n_new_adjudicated": n_new}

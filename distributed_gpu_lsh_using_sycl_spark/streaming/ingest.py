@@ -25,7 +25,7 @@ long-running query.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
@@ -42,29 +42,38 @@ IMAGES_SCHEMA = T.StructType([
 ])
 
 
-def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
-                     checkpoint_dir: str, cfg: LshConfig | None = None,
-                     with_image: bool = True,
-                     ingest_partitions: int | None = None):
-    """readStream(parquet dir) -> compute_signatures -> append parquet,
-    drained with an availableNow trigger (everything currently present,
-    then stop). Signing is stateless, so the drain runs as few
-    micro-batches as the source allows: splitting it would only add
-    per-batch commit overhead.
+def signature_frame(spark: SparkSession, input_dir: str,
+                    cfg: LshConfig | None = None, with_image: bool = True,
+                    ingest_partitions: int | None = None) -> DataFrame:
+    """The streaming frame ``signature_stream`` writes: readStream(parquet
+    dir) -> compute_signatures. Building it runs no job, so its
+    ``schema`` is the signature table's schema for free.
 
     ``ingest_partitions`` repartitions each micro-batch BEFORE the
     signature UDF. The file source parallelizes by input file/row-group,
     so a wave landing as FEW files signs on as few cores (measured: a
     one-file 2.5k-doc wave ran the whole signature stage on 1 of 32
     cores, 3.5s vs ~1.2s repartitioned). ``streaming_dedup_cycle`` sets
-    it from the wave's bytes; None skips the shuffle.
-    Returns the StreamingQuery.
-    """
+    it from the wave's bytes; None skips the shuffle."""
     cfg = cfg or LshConfig()
     stream = spark.readStream.schema(IMAGES_SCHEMA).parquet(input_dir)
     if ingest_partitions:
         stream = stream.repartition(ingest_partitions)
-    sigs = compute_signatures(stream, cfg, with_image=with_image)
+    return compute_signatures(stream, cfg, with_image=with_image)
+
+
+def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
+                     checkpoint_dir: str, cfg: LshConfig | None = None,
+                     with_image: bool = True,
+                     ingest_partitions: int | None = None):
+    """``signature_frame`` -> append parquet, drained with an availableNow
+    trigger (everything currently present, then stop). Signing is
+    stateless, so the drain runs as few micro-batches as the source
+    allows: splitting it would only add per-batch commit overhead.
+    Returns the StreamingQuery.
+    """
+    sigs = signature_frame(spark, input_dir, cfg, with_image=with_image,
+                           ingest_partitions=ingest_partitions)
     return (sigs.writeStream
             .format("parquet")
             .option("path", out_dir)

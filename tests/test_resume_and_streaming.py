@@ -243,6 +243,31 @@ def test_streaming_drain_only_then_reconcile_equals_batch(
     assert sum(1 for k, v in want.items() if k != v) > 0
 
 
+def test_streaming_cycle_job_count(spark, tmp_path_factory):
+    """A warm reconciling cycle submits a pinned number of Spark jobs,
+    micro-batch jobs included, counted from the app status store. The
+    tables are read with known schemas (no footer jobs) and the verdict
+    count is observed on its checkpoint job (no count jobs): 21 jobs
+    before, 15 after. A new job in the cycle shows here first."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        streaming_dedup_cycle)
+    from perfbench.sparkstats import StatusStore
+
+    base = tmp_path_factory.mktemp("cycle_jobs")
+    inp = str(base / "in")
+    wh = str(base / "wh")
+    images, _ = make_fixture_pandas(80, seed=42)
+    spark.createDataFrame(images.iloc[:50]).write.parquet(
+        os.path.join(inp, "w1"))
+    streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    spark.createDataFrame(images.iloc[50:]).write.parquet(
+        os.path.join(inp, "w2"))
+    store = StatusStore(spark)
+    r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    assert r["n_new_adjudicated"] > 0
+    assert len(store.new_jobs()) == 15
+
+
 def test_state_checkpoint_version_guard(tmp_path):
     """A checkpoint written under another state layout (schema or
     grouping key changed) must be refused with a clear error, not

@@ -1,0 +1,102 @@
+"""The Python worker daemon's zip-directory guard (sources/worker_daemon)."""
+
+import os
+import sys
+import zipfile
+import zipimport
+
+import pytest
+
+from distributed_gpu_lsh_using_sycl_spark.sources import worker_daemon
+
+STDLIB_INVALIDATE = zipimport.zipimporter.invalidate_caches
+
+
+def _write_zip(path, names):
+    with zipfile.ZipFile(path, "w") as z:
+        for n in names:
+            z.writestr(f"{n}.py", f"NAME = {n!r}\n")
+
+
+@pytest.fixture
+def reads(monkeypatch):
+    """Counts central-directory reads, per archive path."""
+    counts = {}
+    real = zipimport._read_directory
+
+    def counting(archive):
+        counts[archive] = counts.get(archive, 0) + 1
+        return real(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return counts
+
+
+def test_import_installs_nothing():
+    assert zipimport.zipimporter.invalidate_caches is STDLIB_INVALIDATE
+
+
+def test_install_is_a_no_op_from_python_3_13(monkeypatch):
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    worker_daemon.install()
+    assert zipimport.zipimporter.invalidate_caches is STDLIB_INVALIDATE
+
+
+def test_guard_rereads_only_a_changed_archive(tmp_path, reads):
+    path = str(tmp_path / "lib.zip")
+    _write_zip(path, ["m1"])
+    imp = zipimport.zipimporter(path)
+    reads.clear()  # the constructor's read
+    guard = worker_daemon.guarded_invalidate(STDLIB_INVALIDATE)
+    guard(imp)  # first sight: the stdlib read
+    assert reads.pop(path) == 1
+
+    # unchanged archive: no read
+    guard(imp)
+    guard(imp)
+    assert reads.get(path, 0) == 0
+    assert imp.find_spec("m1") is not None
+
+    # rewritten in place with one more module: read once, m2 resolves
+    _write_zip(path, ["m1", "m2"])
+    assert imp.find_spec("m2") is None  # stale until invalidated
+    guard(imp)
+    assert reads.pop(path) == 1
+    assert imp.find_spec("m2") is not None
+    guard(imp)
+    assert reads.get(path, 0) == 0
+
+
+def test_guard_on_deleted_archive_matches_stdlib(tmp_path):
+    path = str(tmp_path / "gone.zip")
+    _write_zip(path, ["m1"])
+    guarded = zipimport.zipimporter(path)
+    stdlib = zipimport.zipimporter(path)
+    guard = worker_daemon.guarded_invalidate(STDLIB_INVALIDATE)
+    guard(guarded)
+    os.remove(path)
+
+    STDLIB_INVALIDATE(stdlib)
+    guard(guarded)  # no raise
+    assert stdlib._files == guarded._files == {}
+    assert path not in zipimport._zip_directory_cache
+    assert guarded.find_spec("m1") is None
+
+
+def test_session_workers_run_the_guard(spark):
+    """Python workers of a ``get_spark`` session start from the engine's
+    daemon, so the guard is what their per-task invalidation calls."""
+    def probe(batches):
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {"module": [zipimport.zipimporter.invalidate_caches.__module__]})
+
+    got = {r["module"] for r in spark.range(8, numPartitions=4)
+           .mapInPandas(probe, "module string").collect()}
+    want = worker_daemon.__name__ if sys.version_info < (3, 13) else "zipimport"
+    assert got == {want}
