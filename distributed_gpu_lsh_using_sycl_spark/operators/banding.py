@@ -19,9 +19,9 @@ Skew policy (explicit, AQE skew-join as backstop):
    path; a largest bucket at or under ``max_bucket_size`` -> nothing was
    dropped, so the drop accounting needs no job; a row count whose
    default-size estimate fits the session's broadcast threshold -> the
-   join broadcasts its build side (``_build_side``). ``stack_bands``
-   puts several families in one frame, so one plan and one join serve
-   them all.
+   join broadcasts its build side (``pairs.broadcast_if_fits``).
+   ``stack_bands`` puts several families in one frame, so one plan and
+   one join serve them all.
 2. buckets over ``max_bucket_size`` are deterministically down-sampled
    (hash filter) — a degenerate bucket (e.g. empty-ish captions all
    hashing together) would emit O(n²) pairs at 10^12 scale; the dropped
@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
-    hamming_col, pair_features)
+    broadcast_if_fits, hamming_col, pair_features)
 
 
 def explode_bands(signatures: DataFrame, buckets_col: str = "buckets") -> DataFrame:
@@ -135,17 +135,12 @@ def band_plan(bands: DataFrame, cfg: LshConfig,
                     int(size.get["rows"] or 0))
 
 
-def _build_side(side: DataFrame, rows: int) -> DataFrame:
-    """``side`` hinted for broadcast when ``rows`` rows of its schema fit
-    the session's ``spark.sql.autoBroadcastJoinThreshold``, sized the
-    way Spark sizes a row it has no statistics for (8 bytes + each
-    field's default size). The planner cannot estimate a frame exploded
-    from a Python scan, so without an observed count such a join is
-    always shuffled, however small."""
-    limit = side.sparkSession._jsparkSession.sessionState().conf() \
-        .autoBroadcastJoinThreshold()
-    size = rows * (8 + side._jdf.schema().defaultSize())
-    return F.broadcast(side) if size <= limit else side
+def _fixed_width_bytes(side: DataFrame, rows: int) -> int:
+    """``rows`` rows of ``side``'s schema, sized the way Spark sizes a row
+    it has no statistics for (8 bytes + each field's default size) —
+    close enough for the candidate join's (band_id, bucket, id) sides,
+    whose only variable-width field is a short id."""
+    return rows * (8 + side._jdf.schema().defaultSize())
 
 
 def _distinct_pairs(joined: DataFrame, source: str | Column) -> DataFrame:
@@ -217,7 +212,7 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
     ``source``: a name, or the family column of ``stack_bands`` (the
     distinct then lists every family that found the pair). The join's
     build side is broadcast when the plan's observed row count fits the
-    session's broadcast threshold (``_build_side``).
+    session's broadcast threshold (``pairs.broadcast_if_fits``).
     """
     if plan is None:
         plan = band_plan(bands, cfg)
@@ -241,7 +236,9 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
         left = bands.select("band_id", "bucket", F.col("image_id").alias("a"))
         right = bands.select("band_id", "bucket", F.col("image_id").alias("b"))
         return _distinct_pairs(
-            left.join(_build_side(right, plan.rows), ["band_id", "bucket"]),
+            left.join(broadcast_if_fits(right,
+                                        _fixed_width_bytes(right, plan.rows)),
+                      ["band_id", "bucket"]),
             source)
 
     m_col = F.when(
@@ -280,7 +277,8 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
     # whose smaller id carries the larger salt). A member takes at most
     # n_salts right-role rows.
     return _distinct_pairs(
-        left.join(_build_side(right, plan.rows * cfg.n_salts),
+        left.join(broadcast_if_fits(
+            right, _fixed_width_bytes(right, plan.rows * cfg.n_salts)),
                   ["band_id", "bucket", "s", "t"]),
         source)
 

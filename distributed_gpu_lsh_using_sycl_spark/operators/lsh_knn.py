@@ -22,12 +22,13 @@ from __future__ import annotations
 
 import dataclasses
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
-from distributed_gpu_lsh_using_sycl_spark.operators.pairs import pair_features
+from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
+    feature_bytes, pair_features)
 
 FAMILIES = ("random_projections", "entropy_based", "mixed")
 
@@ -81,8 +82,12 @@ def lsh_kneighbors(e: DataFrame, k: int, family: str = "random_projections",
     cfg = cfg or LshConfig()
     if cfg.max_bucket_size:
         cfg = dataclasses.replace(cfg, max_bucket_size=0)
-    src = (e.select(F.col(id_col).alias("vec_id"),
-                    F.col(vec_col).cast("array<double>").alias("v"))
+    src = e.select(F.col(id_col).alias("vec_id"),
+                   F.col(vec_col).cast("array<double>").alias("v"))
+    # the checkpoint job also observes the bytes the re-rank rehydrates,
+    # which decides that join's broadcast (pairs.broadcast_if_fits)
+    size = Observation()
+    src = (src.observe(size, feature_bytes(src, ("v",), "vec_id").alias("b"))
            .localCheckpoint(eager=True))
     # buckets feed stats + both sides of the salted self-join, and the
     # pair set feeds both directions of the union — materialize each once
@@ -100,7 +105,8 @@ def lsh_kneighbors(e: DataFrame, k: int, family: str = "random_projections",
     # union branches read the materialized (a, b, d) rows, so the salted
     # join AND the fold execute exactly once (a bare union of two selects
     # over a lazy frame runs the subtree once per branch).
-    dund = (pair_features(und, src, ("v",), id_col="vec_id")
+    dund = (pair_features(und, src, ("v",), id_col="vec_id",
+                          size=size.get["b"])
             .select("a", "b", _dsq(F.col("v_a"), F.col("v_b")).alias("d"))
             .localCheckpoint(eager=True))
     cand = (dund.select(F.col("a").alias("q"), F.col("b").alias("m"), "d")

@@ -11,6 +11,14 @@ Everything here is JVM-side built-ins (array_intersect / bit_count in
 whole-stage codegen) — no Python in the verify hot path at all, which
 beats even a pandas UDF.
 
+``broadcast_if_fits`` is the engine's one broadcast rule for joins whose
+build side the planner cannot size (frames produced by a Python scan, or
+checkpointed from one): a caller passes the size it observed, and the
+side is broadcast when that fits ``spark.sql.autoBroadcastJoinThreshold``.
+The candidate join passes rows x default row size (``banding``); a
+feature frame passes ``feature_bytes``, observed on the job that
+checkpoints it.
+
 Like the reference defers sqrt until after search (deferred-monotone
 rewrite, nearest_neighbors.cpp:126-135), we compute thresholds on integer
 intersection counts / popcounts and only materialize the float jaccard in
@@ -19,29 +27,95 @@ the output.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 
+#: bytes per element of the fixed-width types a feature column holds
+_WIDTH = {T.LongType: 8, T.DoubleType: 8, T.TimestampType: 8,
+          T.IntegerType: 4, T.FloatType: 4, T.DateType: 4,
+          T.ShortType: 2, T.ByteType: 1, T.BooleanType: 1}
+
+
+def broadcast_if_fits(side: DataFrame, size: int) -> DataFrame:
+    """``side`` hinted for broadcast when ``size`` (bytes, observed by the
+    caller) fits the session's ``spark.sql.autoBroadcastJoinThreshold``.
+    The planner cannot estimate a frame produced by a Python scan (or a
+    checkpoint of one), so without an observed size such a join is
+    planned as a shuffle, however small, and at best converted by AQE
+    after the shuffle has run."""
+    limit = side.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    return F.broadcast(side) if size <= limit else side
+
+
+def _field_bytes(field: T.StructField) -> Column:
+    """Upper bound on one field's bytes in an UnsafeRow: an 8-byte slot
+    plus the word-aligned variable part — a string's UTF-8 bytes, an
+    array's 8-byte length, its null bits (8 bytes per 64 elements) and
+    its elements."""
+    t, c = field.dataType, F.col(field.name)
+    if type(t) in _WIDTH:
+        return F.lit(8)
+    if isinstance(t, (T.StringType, T.BinaryType)):
+        return 15 + F.coalesce(F.octet_length(c), F.lit(0))
+    if isinstance(t, T.ArrayType) and type(t.elementType) in _WIDTH:
+        n = F.when(c.isNull(), 0).otherwise(F.size(c))
+        return 31 + n * (_WIDTH[type(t.elementType)] + 1)
+    raise TypeError(f"no byte bound for feature column {field.name!r} of "
+                    f"type {t.simpleString()}")
+
+
+def feature_bytes(frame: DataFrame, cols: tuple[str, ...],
+                  id_col: str = "image_id") -> Column:
+    """Aggregate bounding the bytes of ``frame.select(id_col, *cols)``, the
+    feature side ``pair_features`` builds: per row the null bits plus
+    ``_field_bytes`` of each column, summed. Observe it on the job that
+    materializes ``frame`` (``DataFrame.observe``, no extra job) and pass
+    the value to ``pair_features(size=...)``. Unlike the planner's
+    default sizes (20 bytes per string, 8 per array) it counts what the
+    rows hold."""
+    fields = [frame.schema[c] for c in (id_col, *cols)]
+    row = F.lit(8 * (-(-len(fields) // 64)))
+    for f in fields:
+        row = row + _field_bytes(f)
+    return F.coalesce(F.sum(row), F.lit(0)).cast("long")
+
 
 def pair_features(pairs: DataFrame, feats: DataFrame, cols: tuple[str, ...],
-                  id_col: str = "image_id") -> DataFrame:
+                  id_col: str = "image_id", size: int | None = None) -> DataFrame:
     """Rehydrate (a, b) pairs with both ids' features: adds ``<c>_a`` and
     ``<c>_b`` for each ``c`` in ``cols``. Two inner hash-joins on id, ``a``
-    first — at 1000-executor scale this is the standard rehydration
-    pattern, and both joins share the exchange when ``feats`` is
-    bucketed by id."""
+    first. ``size``: the caller's observed ``feature_bytes`` of
+    ``feats``; both sides then follow ``broadcast_if_fits`` and, being the
+    same projection under other names, share one broadcast exchange.
+    Without it the planner decides, as for any frame it cannot size."""
     def side(s: str) -> DataFrame:
-        return feats.select(F.col(id_col).alias(s),
-                            *[F.col(c).alias(f"{c}_{s}") for c in cols])
+        df = feats.select(F.col(id_col).alias(s),
+                          *[F.col(c).alias(f"{c}_{s}") for c in cols])
+        return df if size is None else broadcast_if_fits(df, size)
 
     return pairs.join(side("a"), "a").join(side("b"), "b")
 
 
-def attach_features(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
-    """The dedup verify's rehydration: shingles, phash and simhash."""
-    return pair_features(pairs, signatures, ("shingles", "phash", "simhash"))
+def dedup_features(signatures: DataFrame) -> tuple[str, ...]:
+    """The columns ``attach_features`` rehydrates from ``signatures``: the
+    caption (``text``) when the frame carries it, shingles, phash and
+    simhash."""
+    return (("text",) if "text" in signatures.columns else ()) + (
+        "shingles", "phash", "simhash")
+
+
+def attach_features(pairs: DataFrame, signatures: DataFrame,
+                    size: int | None = None) -> DataFrame:
+    """The dedup verify's rehydration (``dedup_features``), the window
+    verdict's texts included when the signatures carry them. ``size``:
+    the observed ``feature_bytes`` of those columns (see
+    ``pair_features``)."""
+    return pair_features(pairs, signatures, dedup_features(signatures),
+                         size=size)
 
 
 def hamming_col(c: str):

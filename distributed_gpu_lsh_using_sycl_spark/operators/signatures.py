@@ -142,6 +142,10 @@ def text_signature_batch(captions, cfg: LshConfig, a: np.ndarray,
 
 #: the window fingerprints ``text_signature_batch(with_windows=True)`` adds
 WHASH_FIELD = T.StructField("whash", T.ArrayType(T.LongType()), False)
+#: what a signature frame built ``with_windows`` carries besides the
+#: fingerprints: the caption itself, as ``text``, so the pairs stage
+#: rehydrates the window verdict's texts in the same join as the shingles
+WINDOW_FIELDS = [WHASH_FIELD, T.StructField("text", T.StringType(), True)]
 
 _TEXT_SIG_FIELDS = [
     T.StructField("shingles", T.ArrayType(T.LongType()), True),
@@ -250,9 +254,9 @@ def compute_signatures(images: DataFrame, cfg: LshConfig,
                        id_col: str = "image_id", text_col: str = "caption",
                        with_image: bool = True,
                        with_windows: bool = False) -> DataFrame:
-    """images -> signatures(image_id, shingles, minhash, buckets[, whash],
-    simhash, phash); ``whash`` (the substring pass's window fingerprints)
-    only with ``with_windows``.
+    """images -> signatures(image_id, shingles, minhash, buckets[, whash,
+    text], simhash, phash); ``whash`` (the substring pass's window
+    fingerprints) and ``text`` (the caption) only with ``with_windows``.
 
     Column pruning note: only (id, caption[, bytes, phash]) are read —
     with parquet/Iceberg the scan never materializes ``bytes`` unless the
@@ -273,7 +277,8 @@ def compute_signatures(images: DataFrame, cfg: LshConfig,
             F.col("sg.shingles").alias("shingles"),
             F.col("sg.minhash").alias("minhash"),
             F.col("sg.buckets").alias("buckets"),
-            *([F.col("sg.whash").alias("whash")] if with_windows else []),
+            *([F.col("sg.whash").alias("whash"),
+               F.col(text_col).alias("text")] if with_windows else []),
             *([F.col("phash"), F.col("bytes")] if with_image else []),
         )
     )

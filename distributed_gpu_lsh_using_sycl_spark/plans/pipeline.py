@@ -31,7 +31,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
@@ -79,6 +79,8 @@ class DedupPipeline:
         self.scan_path = scan_path
         self.run_id = uuid.uuid4().hex[:12]
         self.metrics: list[dict] = []
+        #: stage -> the values its materializing job observed (``_stage``)
+        self.observed: dict[str, dict] = {}
         self._manifest_path = (
             os.path.join(io.warehouse, "_manifest.json") if io and io.fmt == "parquet" else None
         )
@@ -123,36 +125,56 @@ class DedupPipeline:
                 and m["stages"].get(stage, {}).get("status") == "DONE"
                 and self.io.exists(stage))
 
-    def _stage(self, name: str, build) -> DataFrame:
+    def _stage(self, name: str, build, observe=None,
+               needs: tuple[str, ...] = ()) -> DataFrame:
         """Run or resume one stage; materialize via TableIO when present.
 
-        With io=None the stage stays LAZY — deliberately. An eager
-        per-stage ``localCheckpoint`` variant was A/B'd (interleaved,
-        same session, sf0.1 and 10x): it LOSES at 10x (min wall 61.72s
-        eager vs 45.98s lazy), because the no-warehouse graph is
-        consumed through connected_components' entry checkpoint, which
+        The materializing job observes the stage's row count
+        (``DataFrame.observe``, no count job), and a written table is
+        re-read with the schema it was written with (no footer-inference
+        job). ``observe``: built frame -> further named aggregates the same
+        job observes; their values and ``rows`` land in
+        ``self.observed[name]``, and without a warehouse such a stage is
+        materialized by an eager ``localCheckpoint``. ``needs``: columns a
+        DONE table must have to be reused — one written before the stage
+        gained them is rebuilt.
+
+        Otherwise, with io=None the stage stays LAZY — deliberately. An
+        eager per-stage ``localCheckpoint`` variant was A/B'd
+        (interleaved, same session, sf0.1 and 10x): it LOSES at 10x (min
+        wall 61.72s eager vs 45.98s lazy), because the no-warehouse graph
+        is consumed through connected_components' entry checkpoint, which
         materializes the verified-edge chain exactly once anyway — so
-        laziness costs no recompute on the main path, while eager
-        staging pays real block-manager writes for the wide signature
-        and band frames. The signature frame, which feeds the band plan,
-        both sides of the candidate join and the pair features, is the
-        one frame ``run`` checkpoints itself; operators whose output
-        feeds multiple consumers checkpoint internally (band_plan's
-        stats; connected_components' edge set)."""
+        laziness costs no recompute on the main path, while eager staging
+        pays real block-manager writes for the wide band frames. The
+        signature frame, which feeds the band plan, both sides of the
+        candidate join and the pair features, is the one stage ``run``
+        observes; operators whose output feeds multiple consumers
+        checkpoint internally (band_plan's stats; connected_components'
+        edge set)."""
         if self._done(name):
             df = self.io.read(name)
-            self._record(name, "SKIPPED", None, 0)
-            return df
+            if set(needs) <= set(df.columns):
+                self._record(name, "SKIPPED", None, 0)
+                return df
         t0 = time.perf_counter()
         df = build()
+        if not self.io and observe is None:
+            self._record(name, "LAZY", None, int((time.perf_counter() - t0) * 1000))
+            return df
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                        *(observe(df) if observe else []))
         if self.io:
             self.io.write(df, name)
-            out = self.io.read(name)
-            rows = out.count()
-            self._record(name, "DONE", rows, int((time.perf_counter() - t0) * 1000))
-            return out
-        self._record(name, "LAZY", None, int((time.perf_counter() - t0) * 1000))
-        return df
+            out = self.io.read(name, schema=df.schema)
+        else:
+            out = df.localCheckpoint(eager=True)
+        self.observed[name] = obs.get
+        self._record(name, "DONE" if self.io else "CHECKPOINTED",
+                     int(self.observed[name]["rows"]),
+                     int((time.perf_counter() - t0) * 1000))
+        return out
 
     # ------------------------------------------------------------------ #
     # the plan
@@ -173,17 +195,22 @@ class DedupPipeline:
                                       with_image=self.with_image,
                                       with_windows=True)
 
-        t["signatures"] = self._stage("signatures", build_signatures)
+        # The signature frame feeds the bands, the window fingerprints, the
+        # bit-bands, the rehydration and the vertices; without a
+        # materialized stage the pandas UDFs recompute 3x. A lazy persist()
+        # is NOT enough: the candidate job's stats/left/right stages launch
+        # concurrently and each computes the uncached partitions (measured
+        # 3 duplicate UDF stages), so the stage is materialized once, up
+        # front. The same job observes the byte size of the columns the
+        # pairs stage rehydrates, which decides that join's broadcast.
+        t["signatures"] = self._stage(
+            "signatures", build_signatures, needs=("text",),
+            observe=lambda df: [pairs.feature_bytes(
+                df, pairs.dedup_features(df)).alias("feature_bytes")])
         sigs = t["signatures"]
-        if not self.io:
-            # signatures feed the bands, the window fingerprints, the
-            # bit-bands, both sides of the rehydration join and the vertices;
-            # without a materialized stage table the pandas UDFs recompute
-            # 3x. A lazy persist() is NOT enough: the candidate job's
-            # stats/left/right stages launch concurrently and each computes
-            # the uncached partitions (measured 3 duplicate UDF stages) —
-            # eager localCheckpoint materializes exactly once, up front.
-            sigs = t["signatures"] = sigs.localCheckpoint(eager=True)
+        feature_size = self.observed.get("signatures", {}).get("feature_bytes")
+        if feature_size is not None:
+            self._record("signatures:feature_bytes", "INFO", feature_size, 0)
 
         t["bands"] = self._stage("bands", lambda: banding.explode_bands(sigs))
         # Every banding family in ONE frame: MinHash bands, the substring
@@ -228,26 +255,25 @@ class DedupPipeline:
                              int(dropped.get(name, 0)), millis)
 
         def build_pairs() -> DataFrame:
-            # The window family's pairs are resolved by the substring
-            # verdict (suffix.window_verdict): a shared length-L window
-            # makes a pair a "window" candidate for the Jaccard/Hamming
-            # verify (a merely-shared window auto-verified transitively
-            # over-merged clusters: a 97-doc blob on synthetic text),
-            # containment makes it a "substring" dup by itself, and no
-            # shared window drops the family (a hash-collision or
-            # short-gram candidate) — and the pair with it when no other
-            # family found it.
-            docs = images.select(F.col(self.id_col).alias("image_id"),
-                                 F.col(self.text_col).alias("text"))
+            # One rehydration serves the window verdict and the verify: the
+            # signatures carry each caption as ``text``. The window
+            # family's pairs are resolved by the substring verdict
+            # (suffix.window_verdict): a shared length-L window makes a
+            # pair a "window" candidate for the Jaccard/Hamming verify (a
+            # merely-shared window auto-verified transitively over-merged
+            # clusters: a 97-doc blob on synthetic text), containment
+            # makes it a "substring" dup by itself, and no shared window
+            # drops the family (a hash-collision or short-gram candidate)
+            # — and the pair with it when no other family found it.
             fams = F.split("source", "[+]")
             cands = suffix.window_verdict(
-                pairs.pair_features(t["candidates"], docs, ("text",)), cfg,
-                found=F.array_contains(fams, "substring"))
+                pairs.attach_features(t["candidates"], sigs, size=feature_size),
+                cfg, found=F.array_contains(fams, "substring"))
             source = F.array_join(F.array_sort(F.array_append(
                 F.array_remove(fams, "substring"), F.col("window"))), "+")
-            cands = (cands.select("a", "b", source.alias("source"))
-                     .filter(F.col("source") != ""))
-            return pairs.verify_pairs(pairs.attach_features(cands, sigs), cfg)
+            return pairs.verify_pairs(
+                cands.withColumn("source", source)
+                .filter(F.col("source") != ""), cfg)
 
         t["pairs"] = self._stage("pairs", build_pairs)
         t["edges"] = self._stage("edges", lambda: pairs.verified_edges(t["pairs"]))

@@ -50,7 +50,7 @@ from pyspark.sql import types as T
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
-    WHASH_FIELD, simhash_batch, text_signature_batch)
+    WINDOW_FIELDS, simhash_batch, text_signature_batch)
 
 
 def _sig_schema(id_type: T.DataType, with_windows: bool) -> T.StructType:
@@ -61,7 +61,7 @@ def _sig_schema(id_type: T.DataType, with_windows: bool) -> T.StructType:
         T.StructField("shingles", T.ArrayType(T.LongType()), True),
         T.StructField("minhash", T.ArrayType(T.LongType()), False),
         T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        *([WHASH_FIELD] if with_windows else []),
+        *(WINDOW_FIELDS if with_windows else []),
         T.StructField("phash", T.LongType(), True),
         T.StructField("simhash", T.LongType(), True),
     ])
@@ -123,6 +123,8 @@ def _compute_batch(t, cfg: LshConfig, a: np.ndarray, b: np.ndarray,
     caps = t.column(text_col).to_pylist()
     out = {"image_id": t.column(id_col).to_pylist(),
            **text_signature_batch(caps, cfg, a, b, with_windows)}
+    if with_windows:
+        out["text"] = caps
     if with_image:
         ph = t.column("phash").to_numpy().astype(np.int64).view(np.uint64)
         out["phash"] = ph.view(np.int64)
@@ -166,7 +168,8 @@ def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
                     with_windows: bool = False) -> DataFrame:
     """Fused scan+signature stage over a parquet image table: returns the
     same DataFrame as ``compute_signatures(spark.read.parquet(path))``
-    — (image_id, shingles, minhash, buckets[, whash], phash, simhash) —
+    — (image_id, shingles, minhash, buckets[, whash, text], phash,
+    simhash) —
     without moving blob bytes through the JVM.
 
     Spark plans the (file, row_group) splits as a tiny DataFrame sliced

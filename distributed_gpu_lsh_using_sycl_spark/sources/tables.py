@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from distributed_gpu_lsh_using_sycl_spark.sources import worker_daemon
 
@@ -27,6 +28,21 @@ _MALLOC_ENV = {
     "MALLOC_TRIM_THRESHOLD_": str(256 * 1024 * 1024),
 }
 os.environ.update(_MALLOC_ENV)
+
+
+#: the Python workers' module path, a session conf
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+#: the directory holding this package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
+
+def _with_package_root(path: str | None) -> str:
+    """``path`` (a PYTHONPATH value, or None) with the package's root
+    first, once: workers import the engine from wherever the driver runs."""
+    rest = [p for p in (path or "").split(os.pathsep)
+            if p and os.path.abspath(p) != _PACKAGE_ROOT]
+    return os.pathsep.join([_PACKAGE_ROOT] + rest)
 
 
 def get_spark(app_name: str = "dlsh", parallelism: int | None = None,
@@ -52,9 +68,13 @@ def get_spark(app_name: str = "dlsh", parallelism: int | None = None,
     fixed cost per Python task on CPython < 3.13; see that module). It is
     not a setting: it keeps the stdlib's import semantics, and there is
     no workload for which re-reading unchanged archives is the better
-    choice. Under spark-submit the deployment owns worker set-up (its
-    ``--py-files`` reach workers per task, not at daemon start), so the
-    session conf is left as submitted."""
+    choice. The daemon and the engine's UDFs import this package, so the
+    package's root directory goes first on the workers' PYTHONPATH
+    (merged with any ``spark.executorEnv.PYTHONPATH`` in ``extra_conf``):
+    a driver run from any working directory gets working workers. Under
+    spark-submit the deployment owns worker set-up (its ``--py-files``
+    reach workers per task, not at daemon start), so the session conf is
+    left as submitted."""
     cores = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = SparkSession.builder
     # under spark-submit (PythonRunner exports the gateway port) the
@@ -63,9 +83,11 @@ def get_spark(app_name: str = "dlsh", parallelism: int | None = None,
     # local run; everywhere else default to local[cores]. Worker set-up
     # belongs to the same owner: only outside spark-submit do the
     # Python workers start from the engine's daemon (see the docstring).
+    extra_conf = dict(extra_conf or {})
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         builder = (builder.master(master or f"local[{cores}]")
                    .config("spark.python.daemon.module", worker_daemon.__name__))
+        extra_conf[_WORKER_PATH] = _with_package_root(extra_conf.get(_WORKER_PATH))
     builder = (
         builder
         .appName(app_name)
@@ -97,7 +119,7 @@ def get_spark(app_name: str = "dlsh", parallelism: int | None = None,
     )
     for k, v in _MALLOC_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -136,10 +158,14 @@ class TableIO:
         else:
             df.write.mode("append").parquet(self._path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """``schema``: the one the table was written with, when known — a
+        parquet read then infers nothing (no footer job). Iceberg tables
+        carry their own."""
         if self.fmt == "iceberg":
             return self.spark.read.format("iceberg").load(f"{self.warehouse}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
 
     def exists(self, name: str) -> bool:
         if self.fmt == "iceberg":

@@ -336,7 +336,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     reconcile alone produces the same clusters as reconciling every wave
     (asserted in tests/test_resume_and_streaming.py)."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
-        signature_frame, signature_stream)
+        signature_stream)
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
         candidate_pair_stream)
 
@@ -355,6 +355,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
                          os.path.join(warehouse, "ckpt_sigs"), cfg,
                          with_image=with_image, ingest_partitions=parts)
     _await_drained(q, timeout_s)
+    sig_schema = q.schema
     # The stateful join's state-store partition count is captured from
     # spark.sql.shuffle.partitions at the query's FIRST start and pinned
     # in the checkpoint, so it is set for the candidate stream only.
@@ -373,10 +374,8 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
 
     # Every table is read with the schema it was written with: an
     # inferred schema costs one footer job per read. The signature schema
-    # is the stream's own (analysis only, no job).
-    sigs = spark.read.schema(
-        signature_frame(spark, input_dir, cfg, with_image=with_image).schema
-    ).parquet(sigs_dir)
+    # is the one the drain wrote.
+    sigs = spark.read.schema(sig_schema).parquet(sigs_dir)
     # An empty-so-far candidate table is normal (no pair emitted yet ->
     # all singletons); any OTHER read failure (corrupt/partial parquet,
     # permissions, transient FS error) must propagate — swallowing it

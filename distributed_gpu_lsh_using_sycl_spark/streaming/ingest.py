@@ -25,8 +25,9 @@ long-running query.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import compute_signatures
@@ -42,42 +43,44 @@ IMAGES_SCHEMA = T.StructType([
 ])
 
 
-def signature_frame(spark: SparkSession, input_dir: str,
-                    cfg: LshConfig | None = None, with_image: bool = True,
-                    ingest_partitions: int | None = None) -> DataFrame:
-    """The streaming frame ``signature_stream`` writes: readStream(parquet
-    dir) -> compute_signatures. Building it runs no job, so its
-    ``schema`` is the signature table's schema for free.
+class SignatureQuery(StreamingQuery):
+    """The drain ``signature_stream`` started, plus ``schema``: the schema
+    of the rows it writes, for reading the table back without inferring
+    it."""
+
+    def __init__(self, jsq, schema: T.StructType):
+        super().__init__(jsq)
+        self.schema = schema
+
+
+def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
+                     checkpoint_dir: str, cfg: LshConfig | None = None,
+                     with_image: bool = True,
+                     ingest_partitions: int | None = None) -> SignatureQuery:
+    """readStream(parquet dir) -> compute_signatures -> append parquet,
+    drained with an availableNow trigger (everything currently present,
+    then stop). Signing is stateless, so the drain runs as few
+    micro-batches as the source allows: splitting it would only add
+    per-batch commit overhead. Returns the StreamingQuery, with the
+    schema it writes.
 
     ``ingest_partitions`` repartitions each micro-batch BEFORE the
     signature UDF. The file source parallelizes by input file/row-group,
     so a wave landing as FEW files signs on as few cores (measured: a
     one-file 2.5k-doc wave ran the whole signature stage on 1 of 32
     cores, 3.5s vs ~1.2s repartitioned). ``streaming_dedup_cycle`` sets
-    it from the wave's bytes; None skips the shuffle."""
+    it from the wave's bytes; None skips the shuffle.
+    """
     cfg = cfg or LshConfig()
     stream = spark.readStream.schema(IMAGES_SCHEMA).parquet(input_dir)
     if ingest_partitions:
         stream = stream.repartition(ingest_partitions)
-    return compute_signatures(stream, cfg, with_image=with_image)
-
-
-def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
-                     checkpoint_dir: str, cfg: LshConfig | None = None,
-                     with_image: bool = True,
-                     ingest_partitions: int | None = None):
-    """``signature_frame`` -> append parquet, drained with an availableNow
-    trigger (everything currently present, then stop). Signing is
-    stateless, so the drain runs as few micro-batches as the source
-    allows: splitting it would only add per-batch commit overhead.
-    Returns the StreamingQuery.
-    """
-    sigs = signature_frame(spark, input_dir, cfg, with_image=with_image,
-                           ingest_partitions=ingest_partitions)
-    return (sigs.writeStream
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    sigs = compute_signatures(stream, cfg, with_image=with_image)
+    q = (sigs.writeStream
+         .format("parquet")
+         .option("path", out_dir)
+         .option("checkpointLocation", checkpoint_dir)
+         .outputMode("append")
+         .trigger(availableNow=True)
+         .start())
+    return SignatureQuery(q._jsq, sigs.schema)

@@ -2,6 +2,7 @@
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -67,6 +68,43 @@ def test_resume_skips_done_stages_and_is_identical(spark, images_df, tmp_path_fa
     assert lineage.select("stage").distinct().count() >= 9
     metrics = spark.read.parquet(os.path.join(wh, "metrics"))
     assert metrics.filter("status = 'DONE'").count() >= 9
+
+
+def test_warehouse_stages_observe_rows_and_rebuild_old_signatures(
+        spark, images_df, tmp_path_factory):
+    """A fresh warehouse run records each stage's row count from the
+    stage's own write job: the manifest rows equal the tables' counts. A
+    signatures table written before the stage carried ``text`` is
+    rebuilt on resume instead of failing the pairs stage that reads it."""
+    from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import (
+        STAGES, run_dedup)
+
+    wh = str(tmp_path_factory.mktemp("wh_rows"))
+    c1 = _clusters_dict(run_dedup(spark, images_df, CFG, warehouse=wh))
+    mpath = os.path.join(wh, "_manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    for stage in STAGES:
+        assert manifest["stages"][stage]["rows"] == \
+            spark.read.parquet(os.path.join(wh, stage)).count()
+
+    # the old layout: same table without ``text``, crashed after it
+    sig_dir = os.path.join(wh, "signatures")
+    old_dir = str(tmp_path_factory.mktemp("old_layout") / "signatures")
+    spark.read.parquet(sig_dir).drop("text").write.parquet(old_dir)
+    shutil.rmtree(sig_dir)
+    shutil.copytree(old_dir, sig_dir)
+    for stage in ("pairs", "edges", "clusters"):
+        manifest["stages"][stage]["status"] = "CRASHED"
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    r2 = run_dedup(spark, images_df, CFG, warehouse=wh)
+    statuses = {m["stage"]: m["status"] for m in r2.metrics}
+    assert statuses["signatures"] == "DONE"
+    assert statuses["candidates"] == "SKIPPED"
+    assert statuses["pairs"] == "DONE"
+    assert "text" in spark.read.parquet(sig_dir).columns
+    assert _clusters_dict(r2) == c1
 
 
 def test_streaming_incremental_signatures(spark, tmp_path_factory):

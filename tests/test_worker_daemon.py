@@ -100,3 +100,29 @@ def test_session_workers_run_the_guard(spark):
            .mapInPandas(probe, "module string").collect()}
     want = worker_daemon.__name__ if sys.version_info < (3, 13) else "zipimport"
     assert got == {want}
+
+
+def test_workers_import_the_engine_from_any_directory(tmp_path):
+    """A driver started outside the repository, with no PYTHONPATH, runs a
+    Python stage through ``get_spark``: the session puts the package's
+    root on the workers' path, so the daemon and the task import it."""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = "\n".join([
+        "import sys",
+        f"sys.path.insert(0, {root!r})",
+        "from distributed_gpu_lsh_using_sycl_spark.sources.tables import get_spark",
+        "spark = get_spark('elsewhere', parallelism=1)",
+        "n = (spark.range(4, numPartitions=1)",
+        "     .mapInPandas(lambda it: it, 'id long').count())",
+        "spark.stop()",
+        "print('ROWS', n)",
+    ])
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT",
+                        "PYSPARK_GATEWAY_SECRET")}
+    env["SPARK_DRIVER_MEMORY"] = "512m"
+    run = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True, timeout=300)
+    assert "ROWS 4" in run.stdout, run.stderr[-3000:]
