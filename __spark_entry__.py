@@ -523,8 +523,7 @@ def q_ann_lsh_topk(spark, sf, k: int = 5):
 
     e = _t(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    return ann_topk_lsh(e, k=k, n_tables=8, bits=6, seed=11, jvm_fold=True,
-                        dims=EMB_DIMS)
+    return ann_topk_lsh(e, k=k, n_tables=8, bits=6, seed=11, dims=EMB_DIMS)
 
 
 def q_embedding_neardup_lsh_pairs(spark, sf):
@@ -824,9 +823,8 @@ def q_e2e_caption_dedup(spark, sf):
     from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
 
     docs_path = os.path.join(sf, "documents.parquet")
-    res = run_dedup(spark, spark.read.parquet(docs_path), _dedup_cfg(),
-                    with_image=False, id_col="doc_id", text_col="text",
-                    scan_path=docs_path)
+    res = run_dedup(spark, None, _dedup_cfg(), with_image=False,
+                    id_col="doc_id", text_col="text", scan_path=docs_path)
     return (res["clusters"]
             .select(F.col("image_id").alias("doc_id"), "cluster_id"))
 

@@ -12,9 +12,10 @@ Skew policy (explicit, AQE skew-join as backstop):
 1. ``band_plan`` — the one place the plan is materialized: the
    (band_id, bucket) occupancy (``bucket_stats``, A1 analog) filtered to
    the buckets any decision touches (``over_threshold_stats``) is
-   ``localCheckpoint``-ed ONCE, and the same job observes three numbers
+   ``localCheckpoint``-ed ONCE, and the same job observes four numbers
    (``DataFrame.observe``, no extra job): how many buckets crossed
-   ``plan_threshold``, the largest ``cnt`` and the frame's row count.
+   ``plan_threshold``, the largest ``cnt``, the frame's row count and
+   its pair mass Σ C(cnt, 2) (the near-dup guardrail's input).
    Zero crossings -> the candidate join takes the plain self-join fast
    path; a largest bucket at or under ``max_bucket_size`` -> nothing was
    dropped, so the drop accounting needs no job; a row count whose
@@ -79,60 +80,57 @@ def _downsample_keep(cfg: LshConfig):
 
 def plan_threshold(cfg: LshConfig) -> int:
     """The single cnt threshold above which a bucket influences the pair
-    plan: min(hot_bucket_threshold, max_bucket_size-if-on). Both ways
-    ``band_plan`` filters stats (its own ``over_threshold_stats`` or a
-    caller's materialized ``bucket_stats``) use it, so they can never
-    disagree — a bucket missing from the broadcast plan coalesces cnt to
-    0 downstream, which reads as "under the cap" and silently skips its
-    down-sample."""
+    plan: min(hot_bucket_threshold, max_bucket_size-if-on). A bucket
+    missing from the broadcast plan coalesces cnt to 0 downstream, which
+    reads as "under the cap" and silently skips its down-sample, so every
+    salt and cap decision reads this one value."""
     thr = cfg.hot_bucket_threshold
     if cfg.max_bucket_size > 0:
         thr = min(thr, cfg.max_bucket_size)
     return thr
 
 
-def over_threshold_stats(bands: DataFrame, cfg: LshConfig) -> DataFrame:
-    """``bucket_stats`` filtered to every bucket any salt/cap decision
-    needs: cnt > ``plan_threshold(cfg)``. Small by the skew assumption
-    (hot + degenerate buckets are by definition few); ``band_plan``
-    materializes it once per banding frame for both the candidate join
-    and the drop accounting."""
-    return bucket_stats(bands).filter(F.col("cnt") > plan_threshold(cfg))
+def over_threshold_stats(stats: DataFrame, cfg: LshConfig) -> DataFrame:
+    """A ``bucket_stats`` frame filtered to every bucket any salt/cap
+    decision needs: cnt > ``plan_threshold(cfg)``. Small by the skew
+    assumption (hot + degenerate buckets are by definition few);
+    ``band_plan`` materializes it once per banding frame for both the
+    candidate join and the drop accounting."""
+    return stats.filter(F.col("cnt") > plan_threshold(cfg))
 
 
 @dataclass(frozen=True)
 class BandPlan:
     """A banding frame's materialized over-threshold stats (``over``)
-    plus the three numbers observed while materializing them: ``n_over``
+    plus the four numbers observed while materializing them: ``n_over``
     buckets crossed ``plan_threshold``, the largest of them holds
-    ``max_cnt`` members (0 when none crossed), and the frame holds
-    ``rows`` rows (the candidate join's broadcast decision)."""
+    ``max_cnt`` members (0 when none crossed), the frame holds ``rows``
+    rows (the candidate join's broadcast decision), and its buckets hold
+    ``mass`` = Σ C(cnt, 2) member pairs before any salt or cap, the
+    candidate mass a caller can weigh against a brute-force plan."""
     over: DataFrame
     n_over: int
     max_cnt: int
     rows: int
+    mass: int
 
 
-def band_plan(bands: DataFrame, cfg: LshConfig,
-              stats: DataFrame | None = None) -> BandPlan:
-    """Materialize ``over_threshold_stats(bands, cfg)`` once, observing
-    on the same job its row count and max ``cnt``, and the row count of
-    ``bands`` itself. ``stats``: an already-materialized ``bucket_stats``
-    frame of ``bands`` (e.g. a caller's guardrail stats) — only filtered
-    here, no second stats shuffle; its ``cnt`` total is the row count."""
-    size = Observation()
-    if stats is None:
-        over = over_threshold_stats(
-            bands.observe(size, F.count(F.lit(1)).alias("rows")), cfg)
-    else:
-        over = (stats.observe(size, F.sum("cnt").alias("rows"))
-                .filter(F.col("cnt") > plan_threshold(cfg)))
+def band_plan(bands: DataFrame, cfg: LshConfig) -> BandPlan:
+    """Materialize ``over_threshold_stats`` of ``bands`` once. The same
+    job observes, over all buckets, the row count and pair mass, and how
+    many buckets cross ``plan_threshold`` and the largest of them."""
+    cnt = F.col("cnt")
+    crossed = cnt > plan_threshold(cfg)
     obs = Observation()
-    over = over.observe(obs, F.count(F.lit(1)).alias("n"),
-                        F.max("cnt").alias("max_cnt")).localCheckpoint(eager=True)
+    stats = bucket_stats(bands).observe(
+        obs, F.sum(cnt).alias("rows"),
+        (F.sum(cnt * (cnt - 1)) / 2).alias("mass"),
+        F.count(F.when(crossed, 1)).alias("n"),
+        F.max(F.when(crossed, cnt)).alias("max_cnt"))
+    over = over_threshold_stats(stats, cfg).localCheckpoint(eager=True)
     m = obs.get
     return BandPlan(over, int(m["n"]), int(m["max_cnt"] or 0),
-                    int(size.get["rows"] or 0))
+                    int(m["rows"] or 0), int(m["mass"] or 0))
 
 
 def _fixed_width_bytes(side: DataFrame, rows: int) -> int:

@@ -8,18 +8,24 @@ verify. The reference always probes L hash tables (OR-construction,
 ``hash_tables.hpp:566-578``); we keep that structure — each *band* here is
 one table of sign-bit hyperplane hashes (Charikar SimHash for cosine).
 
+One probe path serves both LSH operators: the normed feature frame is
+checkpointed once with its observed bytes (``pairs.checkpoint_features``),
+hashed by the one sign-bit kernel (``parity_hash.hyperplane_buckets_df``),
+joined through ``banding.candidate_pairs_from_bands`` and rehydrated by
+``pairs.pair_features``; ANN ranks with ``pairs.ranked_neighbours``.
+
 Scale design:
 - bucket joins go through ``banding.candidate_pairs_from_bands`` — the
   salted, hot-bucket-split, degenerate-capped machinery — so a hot bucket
   never puts O(n²) pair generation in one task;
 - verification is JVM-side (``aggregate``/``zip_with`` dot product in
   whole-stage codegen) over pre-computed norms, no Python per pair;
-- the exact kNN path never materializes the full table on the driver: it
-  iterates fixed-size broadcast tiles (driver holds ONE tile), computes
-  per-tile top-k in a BLAS matmul per Arrow batch, and re-ranks the tile
-  union with a window — correct because the global top-k under the total
-  order (-sim, neighbor_id) is contained in the union of per-tile top-k
-  under the same order.
+- the exact kNN path (``knn_topk_tiled``) never moves vectors through the
+  driver: both sides are packed into fixed-size blocks, the query-block ×
+  neighbour-tile grid is an executor-side crossJoin whose every row is one
+  bounded matmul, and a window re-ranks the per-cell top-k — correct
+  because the global top-k under the total order (-sim, neighbor_id) is
+  contained in the union of per-cell top-k under the same order.
 """
 
 from __future__ import annotations
@@ -34,7 +40,10 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
-from distributed_gpu_lsh_using_sycl_spark.operators.pairs import pair_features
+from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
+    checkpoint_features, pair_features, ranked_neighbours)
+from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
+    hyperplane_buckets_df)
 
 #: per-cell kernel chunking: bound the (query-chunk x members) work
 #: matrices at ~this many elements (x8 bytes), so cogrouped cells of any
@@ -71,29 +80,21 @@ def hyperplane_planes(seed: int, n_planes: int, dims: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dims))
 
 
-def hyperplane_bands(e: DataFrame, n_bands: int, bits: int, seed: int,
-                     id_col: str = "vec_id", vec_col: str = "v",
-                     dims: int | None = None) -> DataFrame:
-    """(id, vec) -> exploded (image_id, band_id, bucket): n_bands tables of
-    ``bits`` sign bits each. One Arrow-batched matmul per batch."""
-    if dims is None:  # a probe here would run a hidden Spark job per
-        # pipeline construction; require the caller to state the width
-        raise ValueError(
-            "dims is required: pass the embedding width explicitly "
-            "(e.g. dims=64 for the testdata embeddings table)")
-    planes = hyperplane_planes(seed, n_bands * bits, dims)
-    weights = (1 << np.arange(bits)).astype(np.int64)
+def _normed_features(e: DataFrame, id_col: str,
+                     vec_col: str) -> tuple[DataFrame, int]:
+    """(vec_id, v, norm), checkpointed with its observed feature bytes
+    (``pairs.checkpoint_features``): the probe's hash input, its verify's
+    feature side and the exact plan's input."""
+    return checkpoint_features(
+        with_norm(e.select(F.col(id_col).alias("vec_id"),
+                           F.col(vec_col).alias("v"))),
+        ("v", "norm"), "vec_id")
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def buckets_udf(vs: pd.Series) -> pd.Series:
-        m = np.asarray(vs.tolist(), dtype=np.float64)
-        signs = (m @ planes.T) > 0  # (n, n_bands*bits)
-        b = signs.reshape(len(m), n_bands, bits) @ weights
-        return pd.Series(b.tolist())
 
-    return (e.select(F.col(id_col).alias("image_id"),
-                     buckets_udf(F.col(vec_col)).alias("bk"))
-            .select("image_id", F.posexplode("bk").alias("band_id", "bucket")))
+def _pair_cosine():
+    """Rounded cosine of a rehydrated (v, norm) pair."""
+    return cosine_col(dot_col(F.col("v_a"), F.col("v_b")),
+                      F.col("norm_a"), F.col("norm_b"))
 
 
 def _neardup_pairs_exact(en: DataFrame, tau: float, n: int,
@@ -109,14 +110,12 @@ def _neardup_pairs_exact(en: DataFrame, tau: float, n: int,
     np-rounded sim; the exact ``cosine_col(dot, na, nb) >= tau`` filter
     runs JVM-side on the raw fold values, so the emitted pair set is the
     brute-force set under the identical float chain."""
-    import math as _math
-
     from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 
     spark = en.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    n_tiles = max(1, _math.ceil(n / tile_target),
-                  min(int(_math.isqrt(2 * cores)) + 1, max(1, n)))
+    n_tiles = max(1, math.ceil(n / tile_target),
+                  min(int(math.isqrt(2 * cores)) + 1, max(1, n)))
     pack_schema = "gid long, ids binary, mat binary, norms binary, nrows long"
 
     def pack(key, pdf):
@@ -195,53 +194,39 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
     (asserted in tests/test_embedding.py with non-empty truth).
 
     SELECTIVITY GUARDRAIL (the no-silent-caps rule applied to
-    selectivity): before the candidate self-join, the expected candidate
-    mass Σ C(cnt, 2) is read off the already-needed bucket stats; when it
-    reaches C(n, 2) — banding would enumerate at least the brute-force
-    pair mass, as happens at a low ``tau`` operating point — the operator
-    LOGS the collapse and takes the exact tiled plan
-    (``_neardup_pairs_exact``) instead. The result is identical either
-    way (LSH-then-verify reproduces the brute set; both paths share the
-    same fold/round float chain), so only the execution strategy
-    switches; the guard is always on.
+    selectivity): the band plan observes the expected candidate mass
+    Σ C(cnt, 2) over all buckets and the band rows (n per band) on its
+    one stats job; when the mass reaches C(n, 2) — banding would
+    enumerate at least the brute-force pair mass, as happens at a low
+    ``tau`` operating point — the operator LOGS the collapse and takes
+    the exact tiled plan (``_neardup_pairs_exact``) instead. The result
+    is identical either way (LSH-then-verify reproduces the brute set;
+    both paths share the same fold/round float chain), so only the
+    execution strategy switches; the guard is always on.
     """
     import logging
 
-    from pyspark.sql import Observation
-
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
-        band_plan, bucket_stats, candidate_pairs_from_bands)
+        band_plan, candidate_pairs_from_bands)
 
     cfg = cfg or LshConfig()
-    en = with_norm(e.select(F.col(id_col).alias("vec_id"),
-                            F.col(vec_col).alias("v")),
-                   "v").localCheckpoint(eager=True)
-    bands = hyperplane_bands(en, n_bands, bits, seed, dims=dims)
-    # the guardrail's mass and n are observed on the stats checkpoint
-    # job itself; band_plan then only filters the materialized stats
-    obs = Observation()
-    stats = bucket_stats(bands).observe(
-        obs,
-        F.coalesce(F.sum(F.col("cnt") * (F.col("cnt") - 1) / 2),
-                   F.lit(0.0)).alias("mass"),
-        F.coalesce(F.sum(F.when(F.col("band_id") == 0, F.col("cnt"))),
-                   F.lit(0)).alias("n")).localCheckpoint(eager=True)
-    row = obs.get
-    mass, n = float(row["mass"]), int(row["n"])
+    en, size = _normed_features(e, id_col, vec_col)
+    bands = hyperplane_buckets_df(en, n_bands, bits, seed, dims=dims)
+    plan = band_plan(bands, cfg)
+    n = plan.rows // n_bands
     brute_pairs = n * (n - 1) / 2.0
-    if mass >= brute_pairs:
+    if plan.mass >= brute_pairs:
         logging.getLogger(__name__).warning(
             "neardup_pairs_lsh: banding selectivity collapsed "
-            "(expected candidate mass %.0f >= brute %.0f at "
+            "(expected candidate mass %d >= brute %.0f at "
             "tau=%s, %dx%d bands) — taking the exact tiled plan",
-            mass, brute_pairs, tau, n_bands, bits)
+            plan.mass, brute_pairs, tau, n_bands, bits)
         return _neardup_pairs_exact(en, tau, n)
-    plan = band_plan(bands, cfg, stats=stats)
     cands = candidate_pairs_from_bands(bands, cfg, source="hyperplane",
                                        plan=plan)
-    return (pair_features(cands, en, ("v", "norm"), id_col="vec_id")
-            .withColumn("sim", cosine_col(dot_col(F.col("v_a"), F.col("v_b")),
-                                          F.col("norm_a"), F.col("norm_b")))
+    return (pair_features(cands, en, ("v", "norm"), id_col="vec_id",
+                          size=size)
+            .withColumn("sim", _pair_cosine())
             .filter(F.col("sim") >= F.lit(tau))
             .select("a", "b", "sim"))
 
@@ -249,58 +234,36 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
 def ann_topk_lsh(e: DataFrame, k: int = 5, n_tables: int = 8, bits: int = 6,
                  seed: int = 11, cfg: LshConfig | None = None,
                  id_col: str = "vec_id", vec_col: str = "v",
-                 jvm_fold: bool = False, dims: int | None = None) -> DataFrame:
+                 dims: int | None = None) -> DataFrame:
     """Approximate cosine top-k: L sign-bit hash tables (OR-construction,
     the reference's L-table probe, hash_tables.hpp:566-578), salted bucket
     join, exact re-rank of the candidate union.
 
     Candidates come from the same salted pair machinery as every other
     bucket join (hot buckets split, degenerate buckets capped) and are
-    expanded to both directions before ranking. Points whose buckets are
-    empty yield fewer than k rows — the ANN contract (recall vs the brute
-    oracle is measured in tests, ≥ 0.9 on clustered data).
+    ranked in both directions. Points whose buckets are empty yield fewer
+    than k rows — the ANN contract. The sign bits are the sequential-fold
+    kernel's, so the DuckDB oracle (parity_hash.ann_oracle_sql)
+    reproduces every row, misses included; recall vs the brute top-k is
+    ≥ 0.9 on clustered data (tests/test_embedding.py).
     """
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
         candidate_pairs_from_bands)
 
     cfg = cfg or LshConfig()
-    en = with_norm(e.select(F.col(id_col).alias("vec_id"),
-                            F.col(vec_col).alias("v")),
-                   "v").localCheckpoint(eager=True)
-    if jvm_fold:
-        # sequential-fold projections: bit-identical to the DuckDB oracle
-        # (parity_hash.ann_oracle_sql) — the driver-gated path
-        from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
-            hyperplane_buckets_df)
-
-        bands = hyperplane_buckets_df(en, n_tables, bits, seed, dims=dims)
-    else:
-        bands = hyperplane_bands(en, n_tables, bits, seed, dims=dims)
-    # bands feeds bucket stats AND the salted self-join; the pair set
-    # feeds BOTH directions of the union — materialize each once or the
-    # projection/join subtree executes 2-4x (visible as exchange
-    # multiplication in tools/explain_audit.py)
-    bands = bands.localCheckpoint(eager=True)
+    en, size = _normed_features(e, id_col, vec_col)
+    # bands feed the bucket stats AND the salted self-join: materialize
+    # them once or the projection subtree executes twice
+    bands = hyperplane_buckets_df(en, n_tables, bits, seed, dims=dims) \
+        .localCheckpoint(eager=True)
     pairs = candidate_pairs_from_bands(bands, cfg, source="ann")
-    # compute the (symmetric) rounded sim ONCE per unordered pair, then
-    # fan out both directions — dot and na*nb commute to bit-identical
-    # doubles either way, and the fold is the re-rank's dominant cost.
-    # The checkpoint sits ON the sim frame: both union branches read the
-    # materialized (a, b, sim) rows, so the salted join and the fold run
-    # exactly once (a union over a lazy frame runs it once per branch).
-    und = (pair_features(pairs, en, ("v", "norm"), id_col="vec_id")
-           .select("a", "b",
-                   cosine_col(dot_col(F.col("v_a"), F.col("v_b")),
-                              F.col("norm_a"), F.col("norm_b")).alias("sim"))
-           .localCheckpoint(eager=True))
-    sims = (und.select(F.col("a").alias("vec_id"),
-                       F.col("b").alias("neighbor_id"), "sim")
-            .unionAll(und.select(F.col("b").alias("vec_id"),
-                                 F.col("a").alias("neighbor_id"), "sim")))
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (sims.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("vec_id", "neighbor_id", "rank", "sim"))
+    # dot and na*nb commute to bit-identical doubles, so the rounded
+    # cosine is symmetric and scored once per unordered pair
+    return (ranked_neighbours(
+                pair_features(pairs, en, ("v", "norm"), id_col="vec_id",
+                              size=size),
+                _pair_cosine(), k, descending=True)
+            .withColumnRenamed("score", "sim"))
 
 
 def knn_topk_tiled(e: DataFrame, k: int = 5, tile_target: int = 4096,

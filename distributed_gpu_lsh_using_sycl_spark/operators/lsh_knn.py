@@ -22,13 +22,12 @@ from __future__ import annotations
 
 import dataclasses
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
-    feature_bytes, pair_features)
+    checkpoint_features, pair_features, ranked_neighbours)
 
 FAMILIES = ("random_projections", "entropy_based", "mixed")
 
@@ -82,49 +81,34 @@ def lsh_kneighbors(e: DataFrame, k: int, family: str = "random_projections",
     cfg = cfg or LshConfig()
     if cfg.max_bucket_size:
         cfg = dataclasses.replace(cfg, max_bucket_size=0)
-    src = e.select(F.col(id_col).alias("vec_id"),
-                   F.col(vec_col).cast("array<double>").alias("v"))
     # the checkpoint job also observes the bytes the re-rank rehydrates,
     # which decides that join's broadcast (pairs.broadcast_if_fits)
-    size = Observation()
-    src = (src.observe(size, feature_bytes(src, ("v",), "vec_id").alias("b"))
-           .localCheckpoint(eager=True))
-    # buckets feed stats + both sides of the salted self-join, and the
-    # pair set feeds both directions of the union — materialize each once
-    # (without this the hash-chain subtree executes 2-4x; audit shows the
-    # exchange count collapse in PLANS.md)
+    src, size = checkpoint_features(
+        e.select(F.col(id_col).alias("vec_id"),
+                 F.col(vec_col).cast("array<double>").alias("v")),
+        ("v",), "vec_id")
+    # buckets feed stats + both sides of the salted self-join — materialize
+    # them once (without this the hash-chain subtree executes 2-4x; audit
+    # shows the exchange count collapse in PLANS.md)
     buckets = family_buckets(src, family, cfg, seed, dims=dims) \
         .localCheckpoint(eager=True)
     bands = buckets.select(F.col("vec_id").alias("image_id"),
                            "band_id", "bucket")
     und = candidate_pairs_from_bands(bands, cfg, source=f"knn_{family}")
-    # compute the (symmetric) distance ONCE per unordered pair, then fan
-    # out both directions — (x-y)*(x-y) folds to the bit-identical double
-    # either way, and the fold is the re-rank's dominant cost. The
-    # checkpoint sits ON the distance frame (not the raw pair set): both
-    # union branches read the materialized (a, b, d) rows, so the salted
-    # join AND the fold execute exactly once (a bare union of two selects
-    # over a lazy frame runs the subtree once per branch).
-    dund = (pair_features(und, src, ("v",), id_col="vec_id",
-                          size=size.get["b"])
-            .select("a", "b", _dsq(F.col("v_a"), F.col("v_b")).alias("d"))
-            .localCheckpoint(eager=True))
-    cand = (dund.select(F.col("a").alias("q"), F.col("b").alias("m"), "d")
-            .union(dund.select(F.col("b").alias("q"), F.col("a").alias("m"),
-                               "d")))
-    ranked = (cand
-              .withColumn("rank", F.row_number().over(
-                  W.partitionBy("q").orderBy(F.col("d"), F.col("m"))))
-              .filter(F.col("rank") <= k)
-              .select("q", "rank", "m", "d"))
+    # (x-y)*(x-y) folds to the bit-identical double either way round, so
+    # the distance is symmetric and scored once per unordered pair
+    ranked = ranked_neighbours(
+        pair_features(und, src, ("v",), id_col="vec_id", size=size),
+        _dsq(F.col("v_a"), F.col("v_b")), k)
     slots = src.select("vec_id").withColumn(
         "rank", F.explode(F.sequence(F.lit(1), F.lit(k))))
-    return (slots.join(ranked, (slots.vec_id == ranked.q)
+    return (slots.join(ranked, (slots.vec_id == ranked.vec_id)
                        & (slots.rank == ranked.rank), "left")
             .select(slots.vec_id,
                     slots.rank.cast("int").alias("rank"),
-                    F.coalesce(ranked.m, slots.vec_id).alias("neighbor_id"),
-                    F.round(F.coalesce(ranked.d, F.lit(-1.0)), 6)
+                    F.coalesce(ranked.neighbor_id, slots.vec_id)
+                    .alias("neighbor_id"),
+                    F.round(F.coalesce(ranked.score, F.lit(-1.0)), 6)
                     .alias("dist_sq")))
 
 

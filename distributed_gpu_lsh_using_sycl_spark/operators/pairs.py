@@ -17,7 +17,10 @@ checkpointed from one): a caller passes the size it observed, and the
 side is broadcast when that fits ``spark.sql.autoBroadcastJoinThreshold``.
 The candidate join passes rows x default row size (``banding``); a
 feature frame passes ``feature_bytes``, observed on the job that
-checkpoints it.
+checkpoints it (``checkpoint_features`` for the vector operators).
+
+``ranked_neighbours`` is the ranked tail of the k-NN and ANN probes:
+score each unordered pair once, then rank both directions per point.
 
 Like the reference defers sqrt until after search (deferred-monotone
 rewrite, nearest_neighbors.cpp:126-135), we compute thresholds on integer
@@ -27,9 +30,10 @@ the output.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql import Window as W
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 
@@ -84,6 +88,17 @@ def feature_bytes(frame: DataFrame, cols: tuple[str, ...],
     return F.coalesce(F.sum(row), F.lit(0)).cast("long")
 
 
+def checkpoint_features(frame: DataFrame, cols: tuple[str, ...],
+                        id_col: str = "image_id") -> tuple[DataFrame, int]:
+    """``frame`` checkpointed, and the ``feature_bytes`` of its ``cols``
+    observed on that same job: the feature side of a later
+    ``pair_features(..., size=)``, read once however many plans use it."""
+    size = Observation()
+    frame = (frame.observe(size, feature_bytes(frame, cols, id_col).alias("b"))
+             .localCheckpoint(eager=True))
+    return frame, int(size.get["b"])
+
+
 def pair_features(pairs: DataFrame, feats: DataFrame, cols: tuple[str, ...],
                   id_col: str = "image_id", size: int | None = None) -> DataFrame:
     """Rehydrate (a, b) pairs with both ids' features: adds ``<c>_a`` and
@@ -98,6 +113,28 @@ def pair_features(pairs: DataFrame, feats: DataFrame, cols: tuple[str, ...],
         return df if size is None else broadcast_if_fits(df, size)
 
     return pairs.join(side("a"), "a").join(side("b"), "b")
+
+
+def ranked_neighbours(pairs_with_features: DataFrame, score: Column, k: int,
+                      descending: bool = False) -> DataFrame:
+    """(a, b, features) -> (vec_id, neighbor_id, rank, score): the ``k``
+    best neighbours of each point by ``score`` (``descending`` for a
+    similarity), ties to the smaller neighbour id. ``score`` must be
+    symmetric in a and b: it is computed once per unordered pair, and
+    the checkpoint sits on the scored frame, so both directions of the
+    union read its rows instead of re-running the candidate join and
+    the score (a union of a lazy frame runs it once per branch)."""
+    und = (pairs_with_features.select("a", "b", score.alias("score"))
+           .localCheckpoint(eager=True))
+    both = (und.select(F.col("a").alias("vec_id"),
+                       F.col("b").alias("neighbor_id"), "score")
+            .unionAll(und.select(F.col("b").alias("vec_id"),
+                                 F.col("a").alias("neighbor_id"), "score")))
+    order = F.col("score").desc() if descending else F.col("score").asc()
+    w = W.partitionBy("vec_id").orderBy(order, F.col("neighbor_id"))
+    return (both.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("vec_id", "neighbor_id", "rank", "score"))
 
 
 def dedup_features(signatures: DataFrame) -> tuple[str, ...]:

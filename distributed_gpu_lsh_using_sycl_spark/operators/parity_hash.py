@@ -76,6 +76,17 @@ def _arr_lit(vals) -> str:
     return "[" + ", ".join(repr(float(v)) for v in vals) + "]::DOUBLE[]"
 
 
+def _require_dims(dims: int | None) -> int:
+    """The embedding width every kernel here needs for its parameter
+    draw. Callers state it: reading it off the frame would run a hidden
+    Spark job per plan construction."""
+    if dims is None:
+        raise ValueError(
+            "dims is required: pass the embedding width explicitly "
+            "(e.g. dims=64 for the testdata embeddings table)")
+    return dims
+
+
 def _cutoff_sample(df: DataFrame, cfg: LshConfig, seed: int) -> DataFrame:
     """Deterministic hash-sample of the cut-off learning input
     (cfg.cutoff_sample_rate; see config.py). Partition-count-invariant
@@ -104,11 +115,7 @@ def entropy_buckets_df(e: DataFrame, cfg: LshConfig, seed: int,
     spark = e.sparkSession
     src = e.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
-    if dims is None:  # a probe here would run a hidden Spark job per
-        # pipeline construction; require the caller to state the width
-        raise ValueError(
-            "dims is required: pass the embedding width explicitly "
-            "(e.g. dims=64 for the testdata embeddings table)")
+    dims = _require_dims(dims)
     pool, sel = H.entropy_params(seed, cfg.signature_pool_size, dims,
                                  cfg.num_bands, cfg.rows_per_band)
     cops = cfg.num_cut_off_points
@@ -207,11 +214,7 @@ def mixed_buckets_df(e: DataFrame, cfg: LshConfig, seed: int,
     spark = e.sparkSession
     src = e.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
-    if dims is None:  # a probe here would run a hidden Spark job per
-        # pipeline construction; require the caller to state the width
-        raise ValueError(
-            "dims is required: pass the embedding width explicitly "
-            "(e.g. dims=64 for the testdata embeddings table)")
+    dims = _require_dims(dims)
     pool, sel = H.mixed_params(seed, cfg.signature_pool_size, dims, cfg.w,
                                cfg.num_bands, cfg.rows_per_band)
     cops = cfg.num_cut_off_points
@@ -313,11 +316,7 @@ def rp_buckets_df(e: DataFrame, cfg: LshConfig,
     + the u32 hash_combine), so the DuckDB oracle (rp_oracle_sql,
     list_reduce fold) hash-matches bit-exactly; the numpy recomputation
     in tests/test_parity_hash.py pins the same chain in pytest."""
-    if dims is None:  # a probe here would run a hidden Spark job per
-        # pipeline construction; require the caller to state the width
-        raise ValueError(
-            "dims is required: pass the embedding width explicitly "
-            "(e.g. dims=64 for the testdata embeddings table)")
+    dims = _require_dims(dims)
     funcs = H.random_projection_pool(
         cfg.seed, cfg.num_bands, cfg.rows_per_band,
         cfg.signature_pool_size, dims, cfg.w)
@@ -419,15 +418,12 @@ from slots s left join r on r.q = s.vec_id and r.rank = s.rank"""
 def hyperplane_buckets_df(e: DataFrame, n_tables: int, bits: int, seed: int,
                           id_col: str = "vec_id", vec_col: str = "v",
                           dims: int | None = None) -> DataFrame:
-    """(id, vec) -> (image_id, band_id, bucket): sign-bit buckets with
-    SEQUENTIAL fold-dot projections (one hashing.seqdot Arrow kernel per
-    batch) — bit-identical to the DuckDB oracle (ann_oracle_sql),
-    drop-in for embedding.hyperplane_bands."""
-    if dims is None:  # a probe here would run a hidden Spark job per
-        # pipeline construction; require the caller to state the width
-        raise ValueError(
-            "dims is required: pass the embedding width explicitly "
-            "(e.g. dims=64 for the testdata embeddings table)")
+    """(id, vec) -> (image_id, band_id, bucket): ``n_tables`` tables of
+    ``bits`` sign bits each (Charikar SimHash for cosine), the one
+    sign-bit kernel of the vector operators. Projections are SEQUENTIAL
+    fold dots (one hashing.seqdot Arrow kernel per batch), bit-identical
+    to the DuckDB oracle (ann_oracle_sql)."""
+    dims = _require_dims(dims)
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
         hyperplane_planes)
 

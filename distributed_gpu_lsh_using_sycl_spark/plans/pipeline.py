@@ -179,7 +179,11 @@ class DedupPipeline:
     # ------------------------------------------------------------------ #
     # the plan
     # ------------------------------------------------------------------ #
-    def run(self, images: DataFrame) -> PipelineResult:
+    def run(self, images: DataFrame | None = None) -> PipelineResult:
+        """``images`` feeds the signature stage; with ``scan_path`` set the
+        stage reads that path itself and ``images`` may be None."""
+        if images is None and not self.scan_path:
+            raise ValueError("run needs an images frame or a scan_path")
         cfg = self.cfg
         t: dict[str, DataFrame] = {}
 
@@ -298,7 +302,8 @@ class DedupPipeline:
         return PipelineResult(tables=t, metrics=self.metrics, run_id=self.run_id)
 
 
-def run_dedup(spark: SparkSession, images: DataFrame, cfg: LshConfig | None = None,
+def run_dedup(spark: SparkSession, images: DataFrame | None,
+              cfg: LshConfig | None = None,
               warehouse: str | None = None, with_image: bool = True,
               id_col: str = "image_id", text_col: str = "caption",
               scan_path: str | None = None) -> PipelineResult:
@@ -330,8 +335,7 @@ def _main() -> None:
     cfg = LshConfig(**overrides)
     spark = get_spark("dedup-pipeline", parallelism=args.cores,
                       shuffle_partitions=cfg.shuffle_partitions)
-    images = spark.read.parquet(args.input)
-    res = run_dedup(spark, images, cfg, warehouse=args.out,
+    res = run_dedup(spark, None, cfg, warehouse=args.out,
                     with_image=not args.no_image, scan_path=args.input)
     n = res["clusters"].filter(F.col("image_id") != F.col("cluster_id")).count()
     print(json.dumps({"run_id": res.run_id, "dup_rows": n,

@@ -6,16 +6,19 @@ batch. This operator keeps the bucket membership AS STREAM STATE
 (``applyInPandasWithState`` keyed by (band_id, bucket)) and emits, per
 micro-batch, exactly the NEW candidate pairs: each previously-unseen
 member pairs with the members already in state plus its new-batch
-predecessors. The union over batches equals the batch bucket join's pair
-set (asserted in tests/test_resume_and_streaming.py), so downstream
-verify/CC stay unchanged.
+predecessors. While no bucket reaches the cap (below), the union over
+batches equals the batch bucket join's pair set (asserted in
+tests/test_resume_and_streaming.py), so downstream verify/CC stay
+unchanged.
 
 State discipline at 10^12-image scale (the part that matters):
 - state per key is a bounded member list: buckets at ``max_bucket_size``
-  stop admitting members (the batch path's degenerate-bucket cap — a
-  boilerplate bucket would otherwise grow state AND emit O(n²) pairs
-  forever); the drop is counted in the emitted rows' ``dropped`` column
-  of the companion stats stream, never silent;
+  stop admitting members (a boilerplate bucket would otherwise grow
+  state AND emit O(n²) pairs forever). The stream keeps the FIRST
+  ``max_bucket_size`` arrivals and drops later ones without counting
+  them: no output column or stats stream reports the drop. The batch
+  cap (``banding._downsample_keep``) keeps a hash-chosen subset instead,
+  so drain == batch holds only while every bucket stays under the cap;
 - keys are (band_id, bucket % state_group_buckets) — bucket-congruent
   packing of the batch-banding shuffle key, so state still spreads
   across executors like the batch shuffle while per-key overhead is

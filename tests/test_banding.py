@@ -42,6 +42,31 @@ def test_salted_pairs_equal_naive(spark):
     assert got == _naive_pairs(rows)
 
 
+def test_band_plan_observes_mass_and_rows(spark):
+    """band_plan's observed ``mass`` and ``rows`` equal Σ C(cnt, 2) and
+    Σ cnt of bucket_stats over ALL buckets of a skewed frame, whether the
+    plan takes the fast path (no bucket over the threshold) or the salted
+    grid."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
+        band_plan, bucket_stats)
+
+    rng = np.random.Generator(np.random.PCG64(9))
+    rows = [(f"x{i:03d}", 0, 999) for i in range(60)]
+    rows += [(f"y{i:03d}", 1, 7) for i in range(12)]
+    rows += [(f"z{i:03d}", int(rng.integers(0, 4)), int(rng.integers(0, 50)))
+             for i in range(80)]
+    bands = spark.createDataFrame(rows, ["image_id", "band_id", "bucket"])
+    cnts = [r["cnt"] for r in bucket_stats(bands).collect()]
+    for cfg, n_over in ((LshConfig(hot_bucket_threshold=100,
+                                   max_bucket_size=0), 0),
+                        (LshConfig(hot_bucket_threshold=8, n_salts=4,
+                                   max_bucket_size=0), 2)):
+        plan = band_plan(bands, cfg)
+        assert plan.n_over == n_over
+        assert plan.rows == sum(cnts) == len(rows)
+        assert plan.mass == sum(c * (c - 1) // 2 for c in cnts)
+
+
 def test_bucket_cap_downsamples_degenerate_bucket(spark):
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
         candidate_pairs_from_bands)

@@ -90,9 +90,48 @@ def test_ann_topk_recall(spark, pts):
     assert recall >= 0.9, f"ANN recall {recall:.3f} < 0.9"
 
 
+def test_ann_topk_lsh_equals_oracle_sql(spark, pts):
+    """ann_topk_lsh == parity_hash.ann_oracle_sql row for row (ids, ranks
+    and sims), at the driver query's tables, bits and seed: the sign-bit
+    kernel folds like DuckDB, so the approximation's misses agree too."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import ann_topk_lsh
+    from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
+        ann_oracle_sql)
+
+    dims = pts.shape[1]
+    got = sorted(tuple(r) for r in ann_topk_lsh(
+        _df(spark, pts), k=5, n_tables=8, bits=6, seed=11,
+        dims=dims).collect())
+    want = sorted(_duck(pts).execute(ann_oracle_sql(
+        8, 6, 11, dims, 5, table="emb", vec_col="v")).fetchall())
+    assert len(got) > len(pts)
+    assert got == want
+
+
+def test_neardup_lsh_branch_job_count(spark, pts):
+    """A warm pass of the near-dup LSH branch submits a pinned number of
+    jobs (status store): the band plan's one stats job also observes the
+    guardrail's pair mass and row count, and the verify broadcasts the
+    feature checkpoint from its observed bytes. 9 jobs before, 7 after.
+    A new job in the operator shows here first."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
+        neardup_pairs_lsh)
+    from perfbench.sparkstats import StatusStore
+
+    def run():
+        return neardup_pairs_lsh(_df(spark, pts), tau=0.8,
+                                 dims=pts.shape[1]).collect()
+
+    run()
+    store = StatusStore(spark)
+    assert run()
+    assert len(store.new_jobs()) == 7
+
+
 def test_knn_tiled_exact(spark, pts):
-    """Tiled broadcast kNN == brute top-k EXACTLY (ranks, ids, sims),
-    with a tile size that forces several tiles."""
+    """Tiled kNN (an executor-side crossJoin grid of packed blocks) ==
+    brute top-k EXACTLY (ranks, ids, sims), with a tile size that forces
+    several tiles."""
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
         knn_topk_tiled)
 

@@ -1,6 +1,7 @@
 """The plan tool (tools/explain_audit.py) validates every ``--only``
 name before it starts a Spark session, and exits non-zero naming the
-unknown ones."""
+unknown ones; its markers cover the SQL executions a query runs while
+building its frame."""
 
 import importlib.util
 import os
@@ -11,6 +12,13 @@ TOOL = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                     "tools", "explain_audit.py")
 
 
+def _tool():
+    spec = importlib.util.spec_from_file_location("explain_audit", TOOL)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    return tool
+
+
 def test_explain_audit_rejects_unknown_query_before_spark(monkeypatch, capsys):
     from distributed_gpu_lsh_using_sycl_spark.sources import tables
 
@@ -18,11 +26,30 @@ def test_explain_audit_rejects_unknown_query_before_spark(monkeypatch, capsys):
         raise AssertionError("Spark session started before --only was validated")
 
     monkeypatch.setattr(tables, "get_spark", no_spark)
-    spec = importlib.util.spec_from_file_location("explain_audit", TOOL)
-    tool = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(tool)
+    tool = _tool()
 
     with pytest.raises(SystemExit) as exc:
         tool.main(["--only", "no_such_query"])
     assert exc.value.code != 0
     assert "no_such_query" in capsys.readouterr().err
+
+
+def test_explain_audit_counts_executions_the_query_ran(spark):
+    """A join inside a checkpoint job reaches the audit: the checkpoint's
+    execution is counted in ``execs`` and its shuffle and join in the
+    markers, though the final frame's plan only scans the checkpoint."""
+    from pyspark.sql import functions as F
+
+    def build():
+        a = spark.range(200).withColumn("k", F.col("id") % 7)
+        b = spark.range(7).withColumnRenamed("id", "k")
+        joined = a.join(F.broadcast(b), "k").groupBy("k").count()
+        return joined.localCheckpoint(eager=True).select("k")
+
+    tool = _tool()
+    final_only = tool._markers(
+        build()._jdf.queryExecution().executedPlan().toString())
+    assert final_only["exchanges"] == final_only["bcast_joins"] == 0
+    got = tool.audit_query(spark, build)
+    assert got["execs"] >= 1
+    assert got["exchanges"] >= 1 and got["bcast_joins"] >= 1

@@ -40,15 +40,16 @@ def _with_plans(spark, action):
                  if e.executionId() not in seen]
 
 
-def _caption_pass(spark, path):
+def _caption_pass(spark, path, frame=True):
     """One caption-only pass as the caption_dedup benchmark runs it: the
     pipeline over the blob scan, then the clusters collect. Returns the
-    result, its clusters and the plans it ran."""
+    result, its clusters and the plans it ran. ``frame=False`` passes no
+    input frame, as the pipeline CLI and the driver query do."""
     from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
 
     def run():
-        res = run_dedup(spark, spark.read.parquet(path), CFG,
-                        with_image=False, scan_path=path)
+        images = spark.read.parquet(path) if frame else None
+        res = run_dedup(spark, images, CFG, with_image=False, scan_path=path)
         return res, sorted(res["clusters"].collect())
 
     (res, clusters), plans = _with_plans(spark, run)
@@ -88,6 +89,26 @@ def test_caption_pass_job_count(spark, caption_parquet):
     store = StatusStore(spark)
     _caption_pass(spark, caption_parquet)
     assert len(store.new_jobs()) == 13
+
+
+def test_scan_path_pass_needs_no_input_frame(spark, caption_parquet):
+    """With ``scan_path`` set the pipeline never reads its input frame, so
+    a caller may pass None: the clusters are identical and the pass
+    submits one job fewer (the frame's parquet schema inference). With
+    neither a frame nor a scan path the pipeline refuses to run."""
+    from distributed_gpu_lsh_using_sycl_spark.plans.pipeline import run_dedup
+    from perfbench.sparkstats import StatusStore
+
+    jobs, clusters = [], []
+    for frame in (True, False):
+        _caption_pass(spark, caption_parquet, frame)
+        store = StatusStore(spark)
+        clusters.append(_caption_pass(spark, caption_parquet, frame)[1])
+        jobs.append(len(store.new_jobs()))
+    assert clusters[0] and clusters[0] == clusters[1]
+    assert jobs[1] == jobs[0] - 1
+    with pytest.raises(ValueError):
+        run_dedup(spark, None, CFG, with_image=False)
 
 
 def test_caption_pass_plans_read_input_once(spark, caption_parquet):
@@ -130,20 +151,15 @@ def test_caption_heavy_side_is_not_broadcast(spark):
     per string) fits a 64 KB threshold, the observed bytes do not, so the
     rehydration is not broadcast; with the threshold above the observed
     bytes it is. The observed size bounds the captions' real bytes."""
-    from pyspark.sql import Observation
-
     from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
-        feature_bytes, pair_features)
+        checkpoint_features, pair_features)
 
     rows = [(f"id{i:02d}", f"caption {i:02d} " * 360) for i in range(40)]
     # an RDD-backed frame: the planner has no size for it, as for the
     # signature checkpoint
     feats = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
                                   "image_id string, text string")
-    obs = Observation()
-    feats = (feats.observe(obs, feature_bytes(feats, ("text",)).alias("b"))
-             .localCheckpoint(eager=True))
-    size = obs.get["b"]
+    feats, size = checkpoint_features(feats, ("text",))
     text_bytes = sum(len(t.encode()) for _, t in rows)
     default_estimate = len(rows) * (8 + feats._jdf.schema().defaultSize())
     limit = 64 * 1024

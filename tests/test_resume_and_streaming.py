@@ -196,6 +196,31 @@ def test_stateful_incremental_candidates(spark, images_df, tmp_path_factory):
     assert got_split == batch
 
 
+def test_stateful_cap_admits_first_cap_members(spark, tmp_path_factory):
+    """A bucket of cap + 5 identical signatures: the stateful join admits
+    exactly ``max_bucket_size`` members and emits C(cap, 2) pairs; the
+    five later arrivals pair with nothing. (The batch join keeps a
+    hash-chosen subset instead, banding._downsample_keep.)"""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
+        candidate_pair_stream)
+
+    cap = 6
+    cfg = LshConfig(num_bands=1, max_bucket_size=cap)
+    base = tmp_path_factory.mktemp("stateful_cap")
+    in_dir = str(base / "sigs_in")
+    spark.createDataFrame([(f"s{i:02d}", [5]) for i in range(cap + 5)],
+                          "image_id string, buckets array<long>") \
+        .coalesce(1).write.parquet(in_dir)
+    out_dir = str(base / "pairs_out")
+    q = candidate_pair_stream(spark, in_dir, out_dir, str(base / "ckpt"), cfg)
+    q.awaitTermination(120)
+    rows = spark.read.parquet(out_dir).collect()
+    members = {r["a"] for r in rows} | {r["b"] for r in rows}
+    assert len(members) == cap
+    assert len(rows) == len({(r["a"], r["b"]) for r in rows}) \
+        == cap * (cap - 1) // 2
+
+
 def test_streaming_e2e_dedup_equals_batch(spark, tmp_path_factory):
     """Full streaming chain: incremental signature ingest → stateful
     bucket join → batch verify+CC reconcile, over TWO input waves. After

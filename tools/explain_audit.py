@@ -1,6 +1,12 @@
 """Physical-plan audit: .explain() every driver query and extract the
 scale-relevant markers into PLANS.md.
 
+A query's markers cover its final frame AND every SQL execution it ran
+while building that frame (checkpoint jobs, driver-side collects), read
+from the SQL status store: operators join inside checkpoint jobs, which
+the final frame's plan only shows as a scan of the checkpoint. The
+``execs`` column counts those executions.
+
 The 100-TB questions, made greppable per query:
 - does the scan prune columns (ReadSchema) and push filters
   (PushedFilters)?
@@ -56,13 +62,41 @@ MARKERS = {
 }
 
 
-def audit_one(df) -> dict:
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def _markers(plan: str) -> dict:
     out = {k: len(re.findall(p, plan)) for k, p in MARKERS.items()}
     out["wholestage"] = len(set(re.findall(r"\*\((\d+)\)", plan)))
-    out["read_schema"] = sorted(set(re.findall(r"ReadSchema: struct<([^>]*)>", plan)))
-    out["pushed"] = sorted(set(re.findall(r"PushedFilters: \[([^\]]*)\]", plan)))
-    out["plan"] = plan
+    return out
+
+
+def _executions(spark) -> list:
+    """Every SQL execution in the status store, once the listener bus has
+    delivered the events of those that ran."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def audit_query(spark, build) -> dict:
+    """Markers summed over the frame ``build()`` returns and over every
+    SQL execution ``build`` ran, whose plans the status store records in
+    the same (simple) form as ``executedPlan().toString()``."""
+    mode = "spark.sql.ui.explainMode"
+    prev = spark.conf.get(mode)
+    spark.conf.set(mode, "simple")
+    try:
+        seen = {e.executionId() for e in _executions(spark)}
+        df = build()
+        ran = [e.physicalPlanDescription() for e in _executions(spark)
+               if e.executionId() not in seen]
+    finally:
+        spark.conf.set(mode, prev)
+    plans = [df._jdf.queryExecution().executedPlan().toString(), *ran]
+    out = {k: sum(_markers(p)[k] for p in plans) for k in MARKERS}
+    text = "\n".join(plans)
+    out["read_schema"] = sorted(set(re.findall(r"ReadSchema: struct<([^>]*)>", text)))
+    out["pushed"] = sorted(set(re.findall(r"PushedFilters: \[([^\]]*)\]", text)))
+    out["execs"] = len(ran)
+    out["plan"] = plans[0]
     return out
 
 
@@ -93,12 +127,12 @@ def main(argv: list[str] | None = None) -> int:
     try:
         for name in names:
             try:
-                a = audit_one(qs[name](spark, args.sf))
+                a = audit_query(spark, lambda: qs[name](spark, args.sf))
             except Exception as exc:  # noqa: BLE001 — audit must cover the rest
                 rows.append((name, f"ERR {type(exc).__name__}",
-                             "", "", "", "", ""))
+                             "", "", "", "", "", ""))
                 continue
-            rows.append((name, a["exchanges"], a["wholestage"],
+            rows.append((name, a["execs"], a["exchanges"], a["wholestage"],
                          a["bcast_joins"], a["smj_joins"], a["python"],
                          "; ".join(a["read_schema"])[:80]))
             if a["smj_joins"] and not a["bcast_joins"]:
@@ -118,12 +152,14 @@ def main(argv: list[str] | None = None) -> int:
         "# PLANS — physical-plan audit of every driver query",
         "",
         f"Generated by `tools/explain_audit.py` at {args.sf}, "
-        f"local[{args.cores}]. Columns: shuffle Exchanges, "
-        "WholeStageCodegen spans, broadcast joins, sort-merge joins, "
-        "python (Arrow UDF) operators, pruned scan schemas.",
+        f"local[{args.cores}]. Columns: SQL executions the query ran "
+        "while building its frame (checkpoint jobs, collects), then, "
+        "summed over those executions and the final frame: shuffle "
+        "Exchanges, WholeStageCodegen spans, broadcast joins, sort-merge "
+        "joins, python (Arrow UDF) operators, pruned scan schemas.",
         "",
-        "| query | exch | wscg | bcast | smj | py | ReadSchema (pruned scan) |",
-        "|---|---|---|---|---|---|---|",
+        "| query | execs | exch | wscg | bcast | smj | py | ReadSchema (pruned scan) |",
+        "|---|---|---|---|---|---|---|---|",
     ] + [
         "| " + " | ".join(str(c) for c in r) + " |" for r in rows
     ] + [
