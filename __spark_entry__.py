@@ -463,6 +463,7 @@ def q_knn_brute_topk(spark, sf, k: int = 5):
     id tie-break keeps both engines' orderings identical."""
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
         cosine_col, dot_col, with_norm)
+    from distributed_gpu_lsh_using_sycl_spark.operators.pairs import top_k
 
     e = with_norm(_t(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")))
@@ -474,18 +475,19 @@ def q_knn_brute_topk(spark, sf, k: int = 5):
     sims = (a.join(b, F.col("vec_id") != F.col("neighbor_id"))
             .withColumn("sim", cosine_col(dot_col(F.col("va"), F.col("vb")),
                                           F.col("na"), F.col("nb"))))
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (sims.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+    return (top_k(sims, k, "sim", descending=True)
             .select("vec_id", "neighbor_id", "rank", "sim"))
 
 
 def q_knn_block_matmul_topk(spark, sf, k: int = 5):
-    """Exact cosine top-k via TILED broadcast block-matmul: the driver
-    never holds more than one fixed-size tile of the neighbor side; per-
-    tile top-k (total order (-sim, id)) are unioned and window-re-ranked.
-    Same output contract/oracle as q_knn_brute_topk. See
-    operators/embedding.knn_topk_tiled for the exactness argument."""
+    """Exact cosine top-k as an executor-side block grid: every query
+    block meets every neighbour tile in one cell of
+    operators/embedding.cell_join, whose kernel is one BLAS matmul per
+    query chunk and keeps the cell's top-k under the total order
+    (-sim, id); one window re-ranks the union. No vectors pass through
+    the driver. Same output contract/oracle as q_knn_brute_topk. See
+    operators/embedding.knn_topk_tiled and cell_join for the exactness
+    argument."""
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import knn_topk_tiled
 
     e = _t(spark, sf, "embeddings").select("vec_id", "embedding")
@@ -941,12 +943,13 @@ def q_bucket_offsets(spark, sf):
 
 
 def q_topk_per_group(spark, sf, k: int = 5):
-    """W1 analog: per-group top-k maintenance via window row_number."""
+    """W1 analog: per-group top-k maintenance via window row_number
+    (the engine's one top-k tail, ``pairs.top_k``)."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.pairs import top_k
+
     li = _t(spark, sf, "lineitem")
-    w = W.partitionBy("l_suppkey").orderBy(
-        F.col("l_extendedprice").desc(), "l_orderkey", "l_linenumber")
-    return (li.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+    return (top_k(li, k, "l_extendedprice", descending=True,
+                  point="l_suppkey", ties=("l_orderkey", "l_linenumber"))
             .select("l_suppkey", "rank", "l_orderkey", "l_linenumber",
                     F.round("l_extendedprice", 4).alias("price")))
 

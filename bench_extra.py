@@ -1,8 +1,13 @@
 """Per-query noop-sink timer (guide §1.4 noop-sink isolation) — NOT the
-driver's frozen bench. Prints PER-RUN walls for the named driver queries
-(bench.py prints the min-folded record, which hides this-window
-numbers). Per-layer phases of the pipeline and the streaming cycle come
-from the traced run of ``perfbench/run.py`` instead.
+driver's frozen bench. Prints PER-RUN walls and job counts (Spark status
+store) for the named driver queries, and the median wall of the warm
+passes (every pass after the first); bench.py prints the min-folded
+record, which hides this-window numbers. Per-layer phases of the
+pipeline and the streaming cycle come from the traced run of
+``perfbench/run.py`` instead.
+
+Runs on ``local[SPARK_GRAFT_CPUS]``, by default the number of CPUs this
+process may run on.
 
 Usage:
   python bench_extra.py --queries ivf_topk,lsh_knn --reps 3
@@ -13,6 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -20,7 +26,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def _spark():
@@ -52,20 +58,25 @@ def _warm(spark):
 
 def run_queries(names: list[str], reps: int) -> None:
     import __spark_entry__ as E
+    from perfbench.sparkstats import StatusStore
 
     spark = _spark()
     _warm(spark)
+    store = StatusStore(spark)
     qs = E.queries()
-    out: dict[str, list[float]] = {n: [] for n in names}
+    out = {n: {"passes": [], "jobs": []} for n in names}
     for r in range(reps):
         for name in names:
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.perf_counter()
             _noop(qs[name](spark, SF))
-            out[name].append(round(time.perf_counter() - t0, 2))
+            out[name]["passes"].append(round(time.perf_counter() - t0, 2))
+            out[name]["jobs"].append(len(store.new_jobs()))
             spark.catalog.clearCache()
-    print(json.dumps({n: {"passes": v, "min": min(v)} for n, v in out.items()},
-                     indent=1))
+    for v in out.values():
+        warm = v["passes"][1:]
+        v["warm_median"] = round(statistics.median(warm), 2) if warm else None
+    print(json.dumps({"cpus": CPUS, "sf": SF, "queries": out}, indent=1))
     spark.stop()
 
 

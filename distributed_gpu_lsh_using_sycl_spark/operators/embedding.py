@@ -1,31 +1,23 @@
 """Embedding-similarity operators: hyperplane LSH near-dup, multi-table
-ANN top-k, and tiled exact kNN.
+ANN top-k, IVF / IVF-PQ top-k and exact kNN.
 
-This is the dense-vector analog of the caption/image dedup path, built on
-the same three-stage shape as the reference's search
-(``hash_tables.hpp:388-494``): signature → banded bucket join → exact
-verify. The reference always probes L hash tables (OR-construction,
-``hash_tables.hpp:566-578``); we keep that structure — each *band* here is
-one table of sign-bit hyperplane hashes (Charikar SimHash for cosine).
+This is the dense-vector analog of the caption/image dedup path. The
+reference always probes L hash tables (OR-construction,
+``hash_tables.hpp:566-578``); we keep that structure — each *band* here
+is one table of sign-bit hyperplane hashes (Charikar SimHash for cosine).
 
 One probe path serves both LSH operators: the normed feature frame is
-checkpointed once with its observed bytes (``pairs.checkpoint_features``),
-hashed by the one sign-bit kernel (``parity_hash.hyperplane_buckets_df``),
-joined through ``banding.candidate_pairs_from_bands`` and rehydrated by
-``pairs.pair_features``; ANN ranks with ``pairs.ranked_neighbours``.
+checkpointed once with its observed bytes and its sign-bit buckets
+(``pairs.checkpoint_features``, ``parity_hash.hyperplane_bucket_col``),
+its bands are joined through ``banding.candidate_pairs_from_bands`` (the
+salted, hot-bucket-split, degenerate-capped machinery) and verified
+JVM-side over the pair rehydrated by ``pairs.pair_features``.
 
-Scale design:
-- bucket joins go through ``banding.candidate_pairs_from_bands`` — the
-  salted, hot-bucket-split, degenerate-capped machinery — so a hot bucket
-  never puts O(n²) pair generation in one task;
-- verification is JVM-side (``aggregate``/``zip_with`` dot product in
-  whole-stage codegen) over pre-computed norms, no Python per pair;
-- the exact kNN path (``knn_topk_tiled``) never moves vectors through the
-  driver: both sides are packed into fixed-size blocks, the query-block ×
-  neighbour-tile grid is an executor-side crossJoin whose every row is one
-  bounded matmul, and a window re-ranks the per-cell top-k — correct
-  because the global top-k under the total order (-sim, neighbor_id) is
-  contained in the union of per-cell top-k under the same order.
+One cell operator, ``cell_join``, serves the IVF-flat re-rank, the IVF-PQ
+ADC, the exact top-k grid (``knn_topk_tiled``) and the exact near-dup
+fallback (``_neardup_pairs_exact``), each with its own keying and kernel;
+its docstring holds the exactness arguments they share. Every top-k ends
+in ``pairs.top_k``.
 """
 
 from __future__ import annotations
@@ -34,23 +26,26 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql import Window as W
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
-    checkpoint_features, pair_features, ranked_neighbours)
+    broadcast_if_fits, checkpoint_features, pair_features, ranked_neighbours,
+    top_k)
 from distributed_gpu_lsh_using_sycl_spark.operators.parity_hash import (
-    hyperplane_buckets_df)
+    hyperplane_bands, hyperplane_bucket_col)
 
 #: per-cell kernel chunking: bound the (query-chunk x members) work
-#: matrices at ~this many elements (x8 bytes), so cogrouped cells of any
-#: size run in constant memory. Tests shrink it to force multi-chunk
-#: paths; row-local selection makes chunking output-invariant.
+#: matrices at ~this many elements (x8 bytes), so cells of any size run
+#: in constant memory. Tests shrink it to force multi-chunk paths.
 CELL_CHUNK_ELEMS = 4 << 20
 CELL_CHUNK_MIN_ROWS = 256
+#: rows per tile of the exact grids: the near-dup fallback's tile and
+#: ``knn_topk_tiled``'s default
+TILE_ROWS = 1024
 
 
 def dot_col(a, b):
@@ -80,15 +75,27 @@ def hyperplane_planes(seed: int, n_planes: int, dims: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dims))
 
 
-def _normed_features(e: DataFrame, id_col: str,
-                     vec_col: str) -> tuple[DataFrame, int]:
-    """(vec_id, v, norm), checkpointed with its observed feature bytes
-    (``pairs.checkpoint_features``): the probe's hash input, its verify's
-    feature side and the exact plan's input."""
+def _normed_features(e: DataFrame, id_col: str, vec_col: str,
+                     *extra: Column) -> tuple[DataFrame, int]:
+    """(vec_id, v, norm, *extra), checkpointed with its observed feature
+    bytes (``pairs.checkpoint_features``): the probe's hash input, its
+    verify's feature side and the exact and IVF plans' input."""
     return checkpoint_features(
         with_norm(e.select(F.col(id_col).alias("vec_id"),
-                           F.col(vec_col).alias("v"))),
+                           F.col(vec_col).alias("v"))).select("*", *extra),
         ("v", "norm"), "vec_id")
+
+
+def _hashed_features(e: DataFrame, id_col: str, vec_col: str, n_tables: int,
+                     bits: int, seed: int,
+                     dims: int | None) -> tuple[DataFrame, DataFrame, int]:
+    """``_normed_features`` carrying each row's sign-bit buckets, the
+    bands posexploded from that checkpoint, and its feature bytes. The
+    sign-bit kernel runs on the checkpoint's job only: the band plan's
+    stats job and the candidate join both read the checkpointed buckets."""
+    en, size = _normed_features(e, id_col, vec_col, hyperplane_bucket_col(
+        F.col("v"), n_tables, bits, seed, dims).alias("bk"))
+    return en, hyperplane_bands(en), size
 
 
 def _pair_cosine():
@@ -97,83 +104,130 @@ def _pair_cosine():
                       F.col("norm_a"), F.col("norm_b"))
 
 
-def _neardup_pairs_exact(en: DataFrame, tau: float, n: int,
-                         tile_target: int = 1024) -> DataFrame:
+def _seq_cosine(q: dict, m: dict) -> tuple[np.ndarray, np.ndarray]:
+    """(fold dots, np-rounded cosines) of a query chunk against a cell's
+    members: ``hashing.seqdot`` is the JVM fold's bit-identical twin, the
+    rounding is a pre-filter only (see ``cell_join``)."""
+    D = H.seqdot(q["v"], m["v"])
+    return D, np.round(D / (q["norm"][:, None] * m["norm"][None, :]), 6)
+
+
+def cell_join(queries: DataFrame, members: DataFrame, kernel,
+              schema: str) -> DataFrame:
+    """The one per-cell operator of the vector search (the reference's
+    search loop, ``hash_tables.hpp:388-494``: key each point to its
+    cells, run one bounded kernel per cell, merge per-point top-k).
+
+    ``queries`` and ``members`` are (cell, id, payload...) frames, a row
+    repeated once per cell it is keyed to; ``cell`` is an int, and cells
+    numbered 0, 1, 2, ... spread evenly over the join's tasks: cell c
+    goes to task c mod (2 x cores), whatever its hash (the hashes of
+    small integers pile several cells into one task). One cogroup brings
+    each cell's rows into one task, where every column becomes a numpy
+    array (an array column a 2-D one, floating arrays as float64). The
+    members are sorted by id, so a kernel's column rank within the cell
+    is the id order, and ``kernel(q, m)`` runs over query chunks of at most
+    ``CELL_CHUNK_ELEMS // len(m)`` rows (never fewer than
+    ``CELL_CHUNK_MIN_ROWS``), so a cell of any size runs in bounded
+    memory. ``q`` and ``m`` are dicts of column arrays; the kernel
+    returns a pandas frame of ``schema``'s columns.
+
+    Exactness, for every caller:
+    - a kernel selects per query row (its top-k, or a threshold), so
+      chunking never changes its output;
+    - top-k restriction: a kernel that keeps each query's cell top-k
+      under a TOTAL order (score, then neighbour id) loses no global
+      winner, because every row of a query's global top-k is in the top-k
+      of its own cell under the same order; ``pairs.top_k`` re-ranks the
+      union under that order. Ties at the boundary score are broken
+      identically everywhere;
+    - rounding slack: the cosine kernels (IVF-flat, exact near-dup) fold
+      with ``hashing.seqdot`` but round with ``np.round``, which may
+      differ from the JVM round by one 1e-6 step. They keep every
+      candidate within 2e-6 of their cut (the k-th sim, or tau) and emit
+      the raw fold values, and the exact ``cosine_col`` filter and rank
+      run JVM-side, so the result is the oracle's under the identical
+      float chain. The integer ADC (IVF-PQ) and the rounded-integer key
+      of the exact grid have no rounding to allow for.
+    """
+    names = T.DataType.fromDDL(schema).names
+    # captured at plan-build time (closure cells pickle by value, so a
+    # driver-side override reaches the executor workers)
+    chunk_elems, chunk_min = CELL_CHUNK_ELEMS, CELL_CHUNK_MIN_ROWS
+
+    def arrays(pdf):
+        out = {}
+        for c, s in pdf.items():
+            a = np.asarray(s.tolist()) if s.dtype == object else s.to_numpy()
+            out[c] = (a.astype(np.float64, copy=False)
+                      if a.dtype.kind == "f" else a)
+        return out
+
+    def per_cell(qpdf, mpdf):
+        if len(qpdf) == 0 or len(mpdf) == 0:
+            return pd.DataFrame({c: [] for c in names})
+        q, m = arrays(qpdf), arrays(mpdf)
+        order = np.argsort(m["id"], kind="stable")
+        m = {c: a[order] for c, a in m.items()}
+        step = max(chunk_min, chunk_elems // len(order))
+        return pd.concat(
+            [kernel({c: a[lo:lo + step] for c, a in q.items()}, m)
+             for lo in range(0, len(qpdf), step)], ignore_index=True)
+
+    tasks = 2 * queries.sparkSession.sparkContext.defaultParallelism
+
+    # fresh aliases: both sides descend from one frame, and the cogroup
+    # analyzer rejects shared expression ids
+    def by_cell(side):
+        return (side.select(*[F.col(c).alias(c) for c in side.columns])
+                .repartitionById(tasks, "cell").groupBy("cell"))
+
+    return by_cell(queries).cogroup(by_cell(members)) \
+        .applyInPandas(per_cell, schema)
+
+
+def _neardup_pairs_exact(en: DataFrame, tau: float, n: int) -> DataFrame:
     """EXACT cosine near-dup pairs over pre-normed vectors — the fallback
     plan the selectivity guardrail takes when banding would enumerate at
     least the brute-force pair mass anyway (see ``neardup_pairs_lsh``).
 
-    Same tiled block grid as ``knn_topk_tiled`` (bounded per-task memory,
-    no driver data movement), but the dot products are ``hashing.seqdot``
-    — the bit-identical vectorized twin of the JVM fold the LSH verify
-    uses — and the kernel only PRE-FILTERS with a 2e-6 slack on the
-    np-rounded sim; the exact ``cosine_col(dot, na, nb) >= tau`` filter
-    runs JVM-side on the raw fold values, so the emitted pair set is the
-    brute-force set under the identical float chain."""
-    from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
+    Keying: ``pmod(id, T)`` blocks, a cell per (gi, gj) with gi <= gj —
+    the upper triangle of the block grid, numbered row by row, pairs
+    a < b inside diagonal cells — with ``T`` from ``TILE_ROWS`` and at
+    least ~2 cells per core. The kernel pre-filters the seqdot cosine at
+    ``tau`` with the ``cell_join`` rounding slack;
+    ``cosine_col(dot, na, nb) >= tau`` runs JVM-side."""
+    cores = en.sparkSession.sparkContext.defaultParallelism
+    t = max(1, math.ceil(n / TILE_ROWS),
+            min(math.isqrt(2 * cores) + 1, max(1, n)))
+    g = F.pmod("vec_id", F.lit(t)).cast("int")
 
-    spark = en.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    n_tiles = max(1, math.ceil(n / tile_target),
-                  min(int(math.isqrt(2 * cores)) + 1, max(1, n)))
-    pack_schema = "gid long, ids binary, mat binary, norms binary, nrows long"
+    def cell(gi, gj):  # row-major index of (gi, gj) in the upper triangle
+        return (gi * (2 * t + 1 - gi) / 2).cast("int") + gj - gi
 
-    def pack(key, pdf):
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids)
-        ids = ids[order]
-        m = np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
-        nm = pdf["norm"].to_numpy(dtype=np.float64)[order]
-        return pd.DataFrame({"gid": [int(key[0])], "ids": [ids.tobytes()],
-                             "mat": [m.tobytes()], "norms": [nm.tobytes()],
-                             "nrows": [len(ids)]})
+    feats = (F.col("vec_id").alias("id"), "v", "norm")
+    # a block's queries meet blocks gj = gi..t-1, its members gi = 0..gj
+    queries = en.select(F.explode(F.sequence(cell(g, g),
+                                             cell(g, F.lit(t - 1))))
+                        .alias("cell"), *feats)
+    members = en.select(F.explode(F.transform(F.sequence(F.lit(0), g),
+                                              lambda gi: cell(gi, g)))
+                        .alias("cell"), *feats)
+    lo = tau - 2e-6
 
-    packed = (en.select("vec_id", "v", "norm")
-              .groupBy(F.pmod("vec_id", F.lit(n_tiles)).alias("gid"))
-              .applyInPandas(pack, pack_schema)
-              .localCheckpoint(eager=True))
-    left = packed.select(F.col("gid").alias("gi"), F.col("ids").alias("aids"),
-                         F.col("mat").alias("amat"),
-                         F.col("norms").alias("anorm"))
-    right = packed.select(F.col("gid").alias("gj"), F.col("ids").alias("bids"),
-                          F.col("mat").alias("bmat"),
-                          F.col("norms").alias("bnorm"))
-    grid = (left.crossJoin(right).filter(F.col("gi") <= F.col("gj"))
-            .repartition(cores * 2))
-    lo = tau - 2e-6  # slack: np.round vs the JVM round differ by <= one
-    # 1e-6 grid step, so this superset provably contains every pair the
-    # exact JVM filter keeps
+    def kernel(q, m):
+        D, sims = _seq_cosine(q, m)
+        keep = sims >= lo
+        if (q["id"][0] - m["id"][0]) % t == 0:  # a diagonal cell
+            keep &= q["id"][:, None] < m["id"][None, :]
+        ai, bi = np.nonzero(keep)
+        x, y = q["id"][ai], m["id"][bi]
+        return pd.DataFrame({"a": np.minimum(x, y), "b": np.maximum(x, y),
+                             "dotab": D[ai, bi], "na": q["norm"][ai],
+                             "nb": m["norm"][bi]})
 
-    def cell_pairs(batches):
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                aids = np.frombuffer(row.aids, dtype=np.int64)
-                bids = np.frombuffer(row.bids, dtype=np.int64)
-                if not len(aids) or not len(bids):
-                    continue
-                A = np.frombuffer(row.amat).reshape(len(aids), -1)
-                B = np.frombuffer(row.bmat).reshape(len(bids), -1)
-                an = np.frombuffer(row.anorm)
-                bn = np.frombuffer(row.bnorm)
-                D = H.seqdot(A, B)
-                sims = np.round(D / (an[:, None] * bn[None, :]), 6)
-                keep = sims >= lo
-                if row.gi == row.gj:
-                    keep &= aids[:, None] < bids[None, :]
-                ai, bi = np.nonzero(keep)
-                if not len(ai):
-                    continue
-                x, y = aids[ai], bids[bi]
-                outs.append(pd.DataFrame({
-                    "a": np.minimum(x, y), "b": np.maximum(x, y),
-                    "dotab": D[ai, bi], "na": an[ai], "nb": bn[bi]}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    allp = grid.mapInPandas(
-        cell_pairs, schema="a long, b long, dotab double, na double, nb double")
-    return (allp
+    return (cell_join(queries, members, kernel,
+                      "a long, b long, dotab double, na double, nb double")
             .withColumn("sim", cosine_col(F.col("dotab"), F.col("na"),
                                           F.col("nb")))
             .filter(F.col("sim") >= F.lit(tau))
@@ -199,8 +253,8 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
     one stats job; when the mass reaches C(n, 2) — banding would
     enumerate at least the brute-force pair mass, as happens at a low
     ``tau`` operating point — the operator LOGS the collapse and takes
-    the exact tiled plan (``_neardup_pairs_exact``) instead. The result
-    is identical either way (LSH-then-verify reproduces the brute set;
+    the exact plan (``_neardup_pairs_exact``) instead. The result is
+    identical either way (LSH-then-verify reproduces the brute set;
     both paths share the same fold/round float chain), so only the
     execution strategy switches; the guard is always on.
     """
@@ -210,8 +264,8 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
         band_plan, candidate_pairs_from_bands)
 
     cfg = cfg or LshConfig()
-    en, size = _normed_features(e, id_col, vec_col)
-    bands = hyperplane_buckets_df(en, n_bands, bits, seed, dims=dims)
+    en, bands, size = _hashed_features(e, id_col, vec_col, n_bands, bits,
+                                       seed, dims)
     plan = band_plan(bands, cfg)
     n = plan.rows // n_bands
     brute_pairs = n * (n - 1) / 2.0
@@ -219,7 +273,7 @@ def neardup_pairs_lsh(e: DataFrame, tau: float, cfg: LshConfig | None = None,
         logging.getLogger(__name__).warning(
             "neardup_pairs_lsh: banding selectivity collapsed "
             "(expected candidate mass %d >= brute %.0f at "
-            "tau=%s, %dx%d bands) — taking the exact tiled plan",
+            "tau=%s, %dx%d bands) — taking the exact plan",
             plan.mass, brute_pairs, tau, n_bands, bits)
         return _neardup_pairs_exact(en, tau, n)
     cands = candidate_pairs_from_bands(bands, cfg, source="hyperplane",
@@ -251,11 +305,8 @@ def ann_topk_lsh(e: DataFrame, k: int = 5, n_tables: int = 8, bits: int = 6,
         candidate_pairs_from_bands)
 
     cfg = cfg or LshConfig()
-    en, size = _normed_features(e, id_col, vec_col)
-    # bands feed the bucket stats AND the salted self-join: materialize
-    # them once or the projection subtree executes twice
-    bands = hyperplane_buckets_df(en, n_tables, bits, seed, dims=dims) \
-        .localCheckpoint(eager=True)
+    en, bands, size = _hashed_features(e, id_col, vec_col, n_tables, bits,
+                                       seed, dims)
     pairs = candidate_pairs_from_bands(bands, cfg, source="ann")
     # dot and na*nb commute to bit-identical doubles, so the rounded
     # cosine is symmetric and scored once per unordered pair
@@ -266,109 +317,86 @@ def ann_topk_lsh(e: DataFrame, k: int = 5, n_tables: int = 8, bits: int = 6,
             .withColumnRenamed("score", "sim"))
 
 
-def knn_topk_tiled(e: DataFrame, k: int = 5, tile_target: int = 4096,
+def knn_topk_tiled(e: DataFrame, k: int = 5, tile_target: int = TILE_ROWS,
                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """EXACT cosine top-k with NO driver-side data movement: the round-
-    robin block-nested-loop join (the reference's J3 shape,
-    ``knn.hpp``-style all-pairs over blocks) as one executor-side plan.
+    """EXACT cosine top-k as one executor-side grid: the round-robin
+    block-nested-loop join (the reference's J3 shape, ``knn.hpp``-style
+    all-pairs over blocks).
 
-    Both sides are packed into fixed-size blocks (tile = pmod(id, n) —
-    one applyInPandas per side, each block one row of (ids, normalized
-    matrix) bytes); the query-block × neighbor-tile GRID is a crossJoin
-    whose every row is one bounded BLAS matmul inside a single
-    mapInPandas; per-(block, tile) top-k under (-sim, neighbor_id) are
-    re-ranked by a window. Replaces the previous driver loop of
-    O(n_tiles) collect()+broadcast rounds — no driver round-trips, no
-    serial tile schedule, same bounded per-task memory (2 blocks).
-
-    Exactness: the comparator is a TOTAL order, so any global top-k row
-    is within the top-k of its own (block, tile) cell — the union never
-    loses a winner (and ties at the boundary sim are broken identically
-    everywhere, fixing the truncated-argpartition tie hazard of a
-    heuristic candidate slice). O(n²) work by definition of exact kNN —
-    this is the oracle twin; ANN/IVF are the scale paths.
+    Keying: the neighbour side in ``ceil(n / tile_target)`` tiles
+    (``pmod(id, tiles)``), the query side in at least 2 blocks per core
+    (so the grid runs in >= 2 waves of tasks even when there are few
+    tiles); cell = (query block, tile), every block against every tile.
+    ``n`` is observed on the feature checkpoint's job. The kernel is one
+    BLAS matmul of the row-normalized chunk against the tile, rounded to
+    6, and keeps each query's cell top-k under (-sim, neighbor_id) — the
+    ``cell_join`` restriction argument. O(n²) work by definition of exact
+    kNN — this is the oracle twin; ANN/IVF are the scale paths.
     """
-    spark = e.sparkSession
-    src = e.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
-    n = src.count()
-    n_tiles = max(1, math.ceil(n / tile_target))
-    cores = spark.sparkContext.defaultParallelism
-    # finer query blocks keep the grid at >= 2 waves of tasks even when
-    # the neighbor side is a handful of tiles
-    n_qgroups = max(n_tiles, cores * 2)
-    pack_schema = "gid long, ids binary, mat binary, nrows long"
+    rows = Observation()
+    src = (e.select(F.col(id_col).alias("id"),
+                    F.col(vec_col).cast("array<double>").alias("v"))
+           .observe(rows, F.count(F.lit(1)).alias("n"))
+           .localCheckpoint(eager=True))
+    n_tiles = max(1, math.ceil(rows.get["n"] / tile_target))
+    n_q = max(n_tiles, e.sparkSession.sparkContext.defaultParallelism * 2)
+    qb = F.pmod("id", F.lit(n_q)).cast("int")
+    tile = F.pmod("id", F.lit(n_tiles)).cast("int")
+    # cell qb*n_tiles + tile
+    queries = src.select(F.explode(F.sequence(
+        qb * n_tiles, qb * n_tiles + (n_tiles - 1))).alias("cell"), "id", "v")
+    members = src.select(F.explode(F.sequence(
+        tile, tile + (n_q - 1) * n_tiles, F.lit(n_tiles))).alias("cell"),
+        "id", "v")
+    gone = -(1 << 21)  # self-match key: below every real scaled sim
 
-    def pack(key, pdf):
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids)  # canonical in-block layout (id asc), so
-        ids = ids[order]         # the packed tie-break rank is arange
-        m = np.asarray(pdf["emb"].tolist(), dtype=np.float64)[order]
-        mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-        return pd.DataFrame({"gid": [int(key[0])], "ids": [ids.tobytes()],
-                             "mat": [mn.tobytes()], "nrows": [len(ids)]})
+    def kernel(q, m):
+        qids, bids = q["id"], m["id"]
+        Qn = q["v"] / np.linalg.norm(q["v"], axis=1, keepdims=True)
+        Bn = m["v"] / np.linalg.norm(m["v"], axis=1, keepdims=True)
+        sims = np.round(Qn @ Bn.T, 6)
+        nk = min(k, sims.shape[1])
+        # Vectorized EXACT top-k under (-sim, id): sims are rounded to 6
+        # decimals, so scaled = sims*1e6 is an exact integer in
+        # [-1e6, 1e6]; pack (scaled, -rank) into one int64 key whose
+        # DESCENDING order IS the total order — argpartition on an exact
+        # integer key has no float-tie hazard. The members are id-sorted,
+        # so the in-tile id rank is arange (bounded by the tile size —
+        # arbitrary 64-bit ids can never overflow the key).
+        scaled = np.round(sims * 1e6).astype(np.int64)
+        scaled[qids[:, None] == bids[None, :]] = gone
+        key = scaled * (1 << 33) - np.arange(len(bids), dtype=np.int64)[None, :]
+        idx = np.argpartition(-key, nk - 1, axis=1)[:, :nk]
+        order = np.argsort(-np.take_along_axis(key, idx, axis=1),
+                           axis=1, kind="stable")
+        sel = np.take_along_axis(idx, order, axis=1)
+        keep = (np.take_along_axis(scaled, sel, axis=1) != gone).ravel()
+        return pd.DataFrame({
+            "vec_id": np.repeat(qids, sel.shape[1])[keep],
+            "neighbor_id": bids[sel].ravel()[keep],
+            "sim": np.take_along_axis(sims, sel, axis=1).ravel()[keep]})
 
-    packed_t = (src.groupBy(F.pmod("vec_id", F.lit(n_tiles)).alias("gid"))
-                .applyInPandas(pack, pack_schema))
-    packed_q = (src.groupBy(F.pmod("vec_id", F.lit(n_qgroups)).alias("gid"))
-                .applyInPandas(pack, pack_schema))
-    grid = (packed_q.select(F.col("ids").alias("qids"),
-                            F.col("mat").alias("qmat"))
-            .crossJoin(packed_t.select(F.col("ids").alias("tids"),
-                                       F.col("mat").alias("tmat")))
-            .repartition(cores * 2))
-
-    def grid_topk(batches):
-        for pdf in batches:
-            outs = []
-            # per-ROW python here is per-CELL: each row is a whole
-            # block×tile matmul (~tile_target² fused ops), so the loop
-            # overhead is noise
-            for row in pdf.itertuples(index=False):
-                qids = np.frombuffer(row.qids, dtype=np.int64)
-                Qn = np.frombuffer(row.qmat, dtype=np.float64) \
-                    .reshape(len(qids), -1)
-                bids = np.frombuffer(row.tids, dtype=np.int64)
-                Bn = np.frombuffer(row.tmat, dtype=np.float64) \
-                    .reshape(len(bids), -1)
-                sims = np.round(Qn @ Bn.T, 6)
-                nk = min(k, sims.shape[1])
-                # Fully vectorized EXACT top-k under (-sim, id): sims are
-                # rounded to 6 decimals, so scaled = sims*1e6 is an exact
-                # integer in [-1e6, 1e6]; pack (scaled, -rank) into one
-                # int64 key whose DESCENDING order IS the total order —
-                # argpartition on an exact integer key has no float-tie
-                # hazard. Self-matches get a sentinel below every real
-                # key and are dropped at emit. bids are packed ascending,
-                # so the in-tile id rank is arange (bounded by tile size
-                # — arbitrary 64-bit ids can never overflow the key).
-                scaled = np.round(sims * 1e6).astype(np.int64)
-                scaled[qids[:, None] == bids[None, :]] = -(1 << 21)
-                key = scaled * (1 << 33) - np.arange(len(bids),
-                                                     dtype=np.int64)[None, :]
-                if key.shape[1] > nk:
-                    idx = np.argpartition(-key, nk - 1, axis=1)[:, :nk]
-                else:
-                    idx = np.broadcast_to(np.arange(key.shape[1]),
-                                          (len(qids), key.shape[1])).copy()
-                order = np.argsort(-np.take_along_axis(key, idx, axis=1),
-                                   axis=1, kind="stable")
-                sel = np.take_along_axis(idx, order, axis=1)
-                keep = np.take_along_axis(scaled, sel, axis=1) != -(1 << 21)
-                outs.append(pd.DataFrame({
-                    "vec_id": np.repeat(qids, sel.shape[1])[keep.ravel()],
-                    "neighbor_id": bids[sel].ravel()[keep.ravel()],
-                    "sim": np.take_along_axis(sims, sel, axis=1)
-                           .ravel()[keep.ravel()],
-                }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    allc = grid.mapInPandas(
-        grid_topk, schema="vec_id long, neighbor_id long, sim double")
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (allc.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+    idt = src.schema["id"].dataType.simpleString()
+    cells = cell_join(queries, members, kernel,
+                      f"vec_id {idt}, neighbor_id {idt}, sim double")
+    return (top_k(cells, k, "sim", descending=True)
             .select("vec_id", "neighbor_id", "rank", "sim"))
+
+
+def _ivf_cells(en: DataFrame, dists: Column, score: Column, nprobe: int,
+               descending: bool) -> tuple[DataFrame, DataFrame]:
+    """The IVF keying of ``ivf_topk`` and ``ivfpq_topk``: ``dists`` is a
+    per-row array with one value per centroid in centroid-rank order,
+    posexploded to (ci, d); ``score`` is an expression over them (and
+    ``en``'s columns). The cell is the centroid rank ci. Returns (members,
+    queries) as (cell, vec_id): each vector in its best cell, and in its
+    ``nprobe`` best, by score then rank."""
+    ranked = top_k(en.select("*", F.posexplode(dists).alias("ci", "d"))
+                   .select("vec_id", F.col("ci").alias("cell"),
+                           score.alias("score")),
+                   nprobe, "score", descending, ties=("cell",))
+    return (ranked.filter(F.col("rank") == 1).select("cell", "vec_id"),
+            ranked.select("cell", "vec_id"))
 
 
 def kcenter_cents(e: DataFrame, n_centroids: int, rounds: int = 2,
@@ -424,14 +452,34 @@ def kcenter_codebook(e: DataFrame, source: str, n_centroids: int,
         artifact_root=artifact_root)
 
 
-def _collect_cents(cents: DataFrame, rank_col: str) -> list:
-    """Driver-side copy of the (tiny) quantizer table, ordered by rank.
-    Bounded by max(n_centroids, ks) rows — the same driver-size class as
-    the kcenter training picks (kmeans.kcenter_init) and the reference's
-    pool gen + broadcast (random_projections.cpp:29-79). Doubles round-
-    trip py4j bit-exactly, so kernels fold the IDENTICAL values the
-    DuckDB oracles fold."""
-    return sorted(cents.collect(), key=lambda r: r[rank_col])
+def _quantizer(src: DataFrame, cents: DataFrame | None, n: int) -> list:
+    """Driver-side copy of the IVF quantizer, (cent_id, cv, cnorm) rows
+    ordered by cent_id: the injected ``cents`` (cent_id, cv) frame, else
+    the ``n`` smallest-id rows of ``src`` (vec_id, v); cnorm is the JVM
+    fold norm. Bounded by max(n_centroids, ks) rows, like the kcenter
+    training picks and the reference's pool gen + broadcast
+    (random_projections.cpp:29-79). Doubles round-trip py4j bit-exactly,
+    so kernels fold the IDENTICAL values the DuckDB oracles fold."""
+    if cents is None:
+        cents = src.orderBy("vec_id").limit(n).select(
+            F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"))
+    rows = (cents.select(F.col("cent_id").cast("long"),
+                         F.col("cv").cast("array<double>"))
+            .withColumn("cnorm", F.sqrt(dot_col(F.col("cv"), F.col("cv"))))
+            .collect())
+    return sorted(rows, key=lambda r: r["cent_id"])
+
+
+def _rows_udf(fn):
+    """Arrow-batched pandas UDF over an array<double> column: each batch
+    as one (n, d) float64 matrix ``V``, one array<double> row per row of
+    ``fn(V)``."""
+    @F.pandas_udf(T.ArrayType(T.DoubleType()))
+    def udf(vs: pd.Series) -> pd.Series:
+        V = np.asarray(vs.tolist(), dtype=np.float64)
+        return pd.Series(fn(V).tolist() if len(V) else [], dtype=object)
+
+    return udf
 
 
 def ivfpq_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
@@ -461,166 +509,88 @@ def ivfpq_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
       integer sum, so ranking is order-independent and cross-engine
       reproducible; rank by (adc asc, neighbor_id asc).
 
-    Scale shape: coarse and sub-distances are one Arrow-batched
-    hashing.seqdiffsq kernel per batch against the collected (tiny)
-    codebook, no shuffle; the ADC is a per-cell cogrouped integer gather
-    that ships ``n_sub`` small codes per member instead of ``dims``
-    doubles (8 bytes vs 512 at the default config — the point of PQ at
-    100 TB: the shuffled payload is the compressed representation).
-    Cells are ~n/n_centroids and n_centroids grows as sqrt(n), as in
-    ivf_topk.
+    Scale shape: coarse and sub-distances are Arrow-batched
+    hashing.seqdiffsq kernels against the collected (tiny) codebook, run
+    on one checkpoint job; the ADC is a ``cell_join`` integer gather that
+    ships ``n_sub`` small codes per member instead of ``dims`` doubles
+    (8 bytes vs 512 at the default config — the point of PQ at 100 TB:
+    the shuffled payload is the compressed representation), and each
+    query's distance table once per probed cell.
     """
-    assert dims % n_sub == 0, "dims must split evenly into subspaces"
+    if dims % n_sub:
+        raise ValueError(f"ivfpq_topk: dims={dims} does not split into "
+                         f"n_sub={n_sub} equal subspaces")
     sub = dims // n_sub
     n_code = max(n_centroids, ks)
-    en = (e.select(F.col(id_col).alias("vec_id"),
+    src = e.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
-          .localCheckpoint(eager=True))
-    if cents is None:
-        wc = W.orderBy("vec_id")
-        cents = (en.orderBy("vec_id").limit(n_code)
-                 .withColumn("crank", F.row_number().over(wc) - 1)
-                 .select("crank", F.col("v").alias("cv")))
-    else:
-        cents = cents.select(
-            F.col("cent_id").cast("long").alias("crank"),
-            F.col("cv").cast("array<double>").alias("cv"))
-
-    # Arrow-batched coarse/sub-distance folds (guide §4.2):
-    # hashing.seqdiffsq folds in DuckDB list_reduce's order, and the *1e6
-    # fixed-point rounding stays JVM-side on the raw fold values, so
-    # keys/codes match the oracle's (pinned in tests/test_embedding.py).
     # The frame doubles as coarse quantizer AND PQ codebook source:
     # fewer than max(n_centroids, ks) rows would silently underfill the
     # codebook, so the collected rows are validated (no extra job).
-    from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
-
-    crows = _collect_cents(cents, "crank")
+    crows = _quantizer(src, cents, n_code)
     if len(crows) < n_code:
         raise ValueError(
             f"ivfpq_topk cents frame has {len(crows)} rows but must "
             f"carry max(n_centroids={n_centroids}, ks={ks}) = {n_code} "
             "(cent_id order is both cell rank and PQ code rank)")
     C_all = np.asarray([r["cv"] for r in crows], dtype=np.float64)
+    # hashing.seqdiffsq folds in DuckDB list_reduce's order, and the *1e6
+    # fixed-point rounding stays JVM-side on the raw fold values, so
+    # keys/codes match the oracle's (pinned in tests/test_embedding.py)
+    coarse_dsq = _rows_udf(lambda V: H.seqdiffsq(V, C_all[:n_centroids]))
+    sub_dsq = _rows_udf(lambda V: np.hstack([
+        H.seqdiffsq(V[:, s * sub:(s + 1) * sub],
+                    C_all[:ks, s * sub:(s + 1) * sub]) for s in range(n_sub)]))
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def coarse_dsq(vs: pd.Series) -> pd.Series:
-        V = np.asarray(vs.tolist(), dtype=np.float64)
-        if len(V) == 0:
-            return pd.Series([], dtype=object)
-        return pd.Series(H.seqdiffsq(V, C_all[:n_centroids]).tolist())
+    def micros(x):
+        return F.round(x * 1e6, 0).cast("long")
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def sub_dsq(vs: pd.Series) -> pd.Series:
-        V = np.asarray(vs.tolist(), dtype=np.float64)
-        if len(V) == 0:
-            return pd.Series([], dtype=object)
-        out = np.empty((len(V), n_sub * ks), dtype=np.float64)
+    # the checkpoint's job evaluates both kernels: the coarse distances
+    # (posexplode index == centroid rank, C_all is cent_id-ordered) and
+    # the query's distance table, sub-distance micros in (subspace, code)
+    # order
+    pq, size = checkpoint_features(
+        src.select("vec_id", coarse_dsq("v").alias("cd"),
+                   F.transform(sub_dsq("v"), micros).alias("qdt")),
+        ("qdt",), "vec_id")
+    mem_keys, qry_keys = _ivf_cells(pq, F.col("cd"), micros(F.col("d")),
+                                    nprobe, descending=False)
+    # a member's code per subspace: its nearest code, code-rank tie-break
+    codes = F.transform(
+        F.sequence(F.lit(0), F.lit(n_sub - 1)),
+        lambda s: F.array_min(F.transform(
+            F.slice("qdt", s * ks + 1, F.lit(ks)),
+            lambda d, c: d * ks + c)) % ks)
+    never = np.iinfo(np.int64).max  # self-pair sentinel
+
+    def kernel(q, m):
+        # an exact int64 gather-sum: each query's distance table over
+        # every member's codes
+        DT = q["qdt"].reshape(len(q["id"]), n_sub, ks)
+        adc = np.zeros((len(q["id"]), len(m["id"])), dtype=np.int64)
         for s in range(n_sub):
-            out[:, s * ks:(s + 1) * ks] = H.seqdiffsq(
-                V[:, s * sub:(s + 1) * sub],
-                C_all[:ks, s * sub:(s + 1) * sub])
-        return pd.Series(out.tolist())
+            adc += DT[:, s, :][:, m["mcodes"][:, s]]
+        adc = np.where(q["id"][:, None] == m["id"][None, :], never, adc)
+        # stable argsort over id-sorted columns = (adci asc, id asc)
+        nk = min(k, adc.shape[1])
+        sel = np.argsort(adc, axis=1, kind="stable")[:, :nk]
+        keep = (np.take_along_axis(adc, sel, axis=1) != never).ravel()
+        qi = np.repeat(np.arange(len(q["id"])), nk)[keep]
+        mi = sel.ravel()[keep]
+        return pd.DataFrame({"vec_id": q["id"][qi],
+                             "neighbor_id": m["id"][mi],
+                             "adci": adc[qi, mi]})
 
-    # posexplode index == crank (C_all is crank-ordered)
-    csd = (en.select("vec_id",
-                     F.posexplode(coarse_dsq("v")).alias("ci", "draw"))
-           .select("vec_id",
-                   (F.round(F.col("draw") * 1e6, 0).cast("long")
-                    * n_centroids + F.col("ci")).alias("key")))
-    subd_src = (en.select("vec_id",
-                          F.posexplode(sub_dsq("v")).alias("ix", "sraw"))
-                .select("vec_id",
-                        (F.col("ix") / ks).cast("int").alias("sub_m"),
-                        (F.col("ix") % ks).cast("long").alias("c"),
-                        F.round(F.col("sraw") * 1e6, 0).cast("long")
-                        .alias("sdi")))
-
-    wq = W.partitionBy("vec_id").orderBy("key")
-    cranked = (csd.withColumn("rn", F.row_number().over(wq))
-               .withColumn("cell", F.col("key") % n_centroids))
-    assign = cranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("x"), "cell")
-    probes = cranked.filter(F.col("rn") <= nprobe).select(
-        F.col("vec_id").alias("q"), "cell")
-
-    subd = subd_src.localCheckpoint(eager=True)  # feeds codes AND dtable
-    codes = (subd.groupBy("vec_id", "sub_m")
-             .agg((F.min(F.col("sdi") * ks + F.col("c")) % ks).alias("code"))
-             .select(F.col("vec_id").alias("xid"), "sub_m", "code"))
-    dtable = subd.select(F.col("vec_id").alias("qid"),
-                         F.col("sub_m").alias("qm"), "c", "sdi")
-
-    # ---- ADC as a per-cell cogrouped integer gather (guide §8:
-    # decide with small rows — each member ships its 8 codes and each
-    # query its 128-entry distance table ONCE per probed cell, instead
-    # of the 3-way join materializing n_sub rows per candidate pair).
-    # All arithmetic is exact int64 (sum of sdi micros), so per-cell
-    # top-k under the total order (adci asc, id asc) loses nothing
-    # against the global window — the same restriction argument as
-    # knn_topk_tiled, with no float rounding in sight.
-    codes_arr = (codes.groupBy("xid")
-                 .agg(F.transform(
-                     F.array_sort(F.collect_list(
-                         F.struct("sub_m", "code"))),
-                     lambda s: s["code"]).alias("mcodes")))
-    dt_arr = (dtable.groupBy("qid")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(
-                      F.struct("qm", "c", "sdi"))),
-                  lambda s: s["sdi"]).alias("qdt")))
-    mem = (assign.join(codes_arr, F.col("x") == F.col("xid"))
-           .select(F.col("cell").alias("mcell"),
-                   F.col("x").alias("m_id"), "mcodes"))
-    qry = (probes.join(dt_arr, F.col("q") == F.col("qid"))
-           .select(F.col("cell").alias("qcell"),
-                   F.col("q").alias("q_id"), "qdt"))
-    idt = en.schema["vec_id"].dataType.simpleString()
-    chunk_elems, chunk_min = CELL_CHUNK_ELEMS, CELL_CHUNK_MIN_ROWS
-
-    def cell_adc(qpdf, mpdf):
-        cols = ["q", "x", "adci"]
-        if len(qpdf) == 0 or len(mpdf) == 0:
-            return pd.DataFrame({c: [] for c in cols})
-        Cm = np.asarray(mpdf["mcodes"].tolist(), dtype=np.int64)
-        mid = mpdf["m_id"].to_numpy()
-        # canonical member order (id asc) once per cell; query-chunked
-        # so the (nq x nm) ADC matrix stays ~tens of MB at any cell
-        # size (per-query selection is row-local — chunking never
-        # changes the output)
-        mo = np.argsort(mid, kind="stable")
-        mid_s, Cm_s = mid[mo], Cm[mo]
-        step = max(chunk_min, chunk_elems // max(1, len(mid_s)))
-        outs = []
-        for lo in range(0, len(qpdf), step):
-            qc = qpdf.iloc[lo:lo + step]
-            DT = np.asarray(qc["qdt"].tolist(), dtype=np.int64) \
-                .reshape(len(qc), n_sub, ks)
-            qid = qc["q_id"].to_numpy()
-            adc_s = np.zeros((len(qid), len(mid_s)), dtype=np.int64)
-            for s in range(n_sub):
-                adc_s += DT[:, s, :][:, Cm_s[:, s]]
-            # stable argsort on adci over id-ascending columns =
-            # exact (adci asc, id asc) ranking; self-pairs sentineled
-            self_mask = qid[:, None] == mid_s[None, :]
-            adc_s = np.where(self_mask, np.iinfo(np.int64).max, adc_s)
-            nk = min(k, adc_s.shape[1])
-            sel = np.argsort(adc_s, axis=1, kind="stable")[:, :nk]
-            keep = np.take_along_axis(adc_s, sel, axis=1) \
-                != np.iinfo(np.int64).max
-            qi = np.repeat(np.arange(len(qid)), nk)[keep.ravel()]
-            mi = sel.ravel()[keep.ravel()]
-            outs.append(pd.DataFrame({"q": qid[qi], "x": mid_s[mi],
-                                      "adci": adc_s[qi, mi]}))
-        return pd.concat(outs, ignore_index=True)
-
-    adc = (qry.groupBy("qcell").cogroup(mem.groupBy("mcell"))
-           .applyInPandas(cell_adc, f"q {idt}, x {idt}, adci long"))
-    w = W.partitionBy("q").orderBy(F.col("adci").asc(), F.col("x").asc())
-    return (adc.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("q").alias("vec_id"), F.col("x").alias("neighbor_id"),
-                    "rank",
+    tables = broadcast_if_fits(pq.select("vec_id", "qdt"), size)
+    idt = pq.schema["vec_id"].dataType.simpleString()
+    adc = cell_join(
+        qry_keys.join(tables, "vec_id").select(
+            "cell", F.col("vec_id").alias("id"), "qdt"),
+        mem_keys.join(tables, "vec_id").select(
+            "cell", F.col("vec_id").alias("id"), codes.alias("mcodes")),
+        kernel, f"vec_id {idt}, neighbor_id {idt}, adci long")
+    return (top_k(adc, k, "adci")
+            .select("vec_id", "neighbor_id", "rank",
                     (F.col("adci").cast("double") / 1e6).alias("adc_dist")))
 
 
@@ -639,126 +609,56 @@ def ivf_topk(e: DataFrame, k: int = 5, n_centroids: int = 16,
 
     Arrow-batched execution (guide §4.2): the n × n_centroids assignment
     fold is ONE seqdot kernel per Arrow batch against the collected
-    centroid table (no shuffle), and the candidate re-rank is a per-cell
-    cogrouped seqdot matmul — vectors ship to their (nprobe+1) cells ONCE
-    instead of once per candidate pair (guide §8: decide with small rows,
-    move payloads once). hashing.seqdot folds in the same IEEE order as
-    DuckDB's list_reduce, and all rounding/division happens in the JVM on
-    the raw fold values, so the result matches ivf_oracle_sql (and
-    ivf_kcenter_oracle_sql for the kcenter quantizer) bit-for-bit —
-    pinned in tests/test_embedding.py. Cells are ~n/n_centroids and
-    n_centroids grows as √n, so per-task candidate work is
-    O(n/√n · nprobe). Swapping in k-means centroids changes only the
-    `cents` frame, not the plan.
+    centroid table, run on the feature checkpoint's job, and the
+    candidate re-rank is a ``cell_join`` seqdot kernel — vectors ship to
+    their (nprobe+1) cells ONCE instead of once per candidate pair (guide
+    §8: decide with small rows, move payloads once). The result matches
+    ivf_oracle_sql (and ivf_kcenter_oracle_sql for the kcenter quantizer)
+    bit-for-bit — pinned in tests/test_embedding.py. Cells are
+    ~n/n_centroids and n_centroids grows as √n, so per-task candidate
+    work is O(n/√n · nprobe). Swapping in k-means centroids changes only
+    the `cents` frame, not the plan.
     """
-    en = with_norm(e.select(F.col(id_col).alias("vec_id"),
-                            F.col(vec_col).alias("v")),
-                   "v").localCheckpoint(eager=True)
-    if cents is None:
-        cents = (en.orderBy("vec_id").limit(n_centroids)
-                 .select(F.col("vec_id").alias("cent_id"),
-                         F.col("v").alias("cv"),
-                         F.col("norm").alias("cnorm")))
-    else:  # injected quantizer (e.g. kcenter_cents): same fold-norm
-        cents = (cents.select(F.col("cent_id").cast("long"),
-                              F.col("cv").cast("array<double>"))
-                 .withColumn("cnorm",
-                             F.sqrt(dot_col(F.col("cv"), F.col("cv")))))
-
-    from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
-
-    crows = _collect_cents(cents, "cent_id")
+    crows = _quantizer(e.select(F.col(id_col).alias("vec_id"),
+                                F.col(vec_col).alias("v")), cents, n_centroids)
     C = np.asarray([r["cv"] for r in crows], dtype=np.float64)
-    cent_ids = [int(r["cent_id"]) for r in crows]
-    cnorms = [float(r["cnorm"]) for r in crows]
+    # the checkpoint's job runs the centroid dot kernel
+    en, size = _normed_features(e, id_col, vec_col, _rows_udf(
+        lambda V: H.seqdot(V, C))(F.col("v")).alias("cd"))
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def cdots(vs: pd.Series) -> pd.Series:
-        V = np.asarray(vs.tolist(), dtype=np.float64)
-        if len(V) == 0:
-            return pd.Series([], dtype=object)
-        return pd.Series(H.seqdot(V, C).tolist())
-
-    ids_arr = F.array(*[F.lit(i) for i in cent_ids])
-    cn_arr = F.array(*[F.lit(x) for x in cnorms])
+    cnorms = F.array(*[F.lit(float(r["cnorm"])) for r in crows])
     # raw fold dots from the kernel; division + round stay JVM-side so the
     # ranked csim is the identical double ivf_oracle_sql ranks on
-    simc = (en.select("vec_id", "norm",
-                      F.posexplode(cdots("v")).alias("ci", "dotc"))
-            .select("vec_id",
-                    F.element_at(ids_arr, F.col("ci") + 1).alias("cent_id"),
-                    cosine_col(F.col("dotc"), F.col("norm"),
-                               F.element_at(cn_arr, F.col("ci") + 1))
-                    .alias("csim")))
-    wq = W.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
-    ranked = simc.withColumn("rn", F.row_number().over(wq))
-    assign = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", F.col("cent_id").alias("cell"))
-    probes = ranked.filter(F.col("rn") <= nprobe).select(
-        "vec_id", F.col("cent_id").alias("cell"))
-    # fresh-alias the feature side: assign/probes descend from en, so a
-    # bare self-join on vec_id is ambiguous to the analyzer
-    feat = en.select(F.col("vec_id").alias("fid"), "v", "norm")
-    # every column re-aliased per side: qry and mem share lineage (en +
-    # ranked), and the cogroup analyzer rejects shared expression ids
-    mem = (assign.join(feat, F.col("vec_id") == F.col("fid"))
-           .select(F.col("cell").alias("mcell"),
-                   F.col("vec_id").alias("m_id"),
-                   F.col("v").alias("mv"), F.col("norm").alias("mnorm")))
-    qry = (probes.join(feat, F.col("vec_id") == F.col("fid"))
-           .select(F.col("cell").alias("qcell"),
-                   F.col("vec_id").alias("q_id"),
-                   F.col("v").alias("qv"), F.col("norm").alias("qnorm")))
+    mem_keys, qry_keys = _ivf_cells(
+        en, F.col("cd"), cosine_col(F.col("d"), F.col("norm"),
+                                    F.element_at(cnorms, F.col("ci") + 1)),
+        nprobe, descending=True)
+    # the planner cannot size the checkpoint: broadcast it from its
+    # observed bytes, so both joins below read one broadcast
+    feats = broadcast_if_fits(en.select("vec_id", "v", "norm"), size)
+
+    def kernel(q, m):
+        # each query's k-th rounded sim in the cell, kept with the
+        # cell_join rounding slack; self-pairs masked out
+        D, sims = _seq_cosine(q, m)
+        notself = q["id"][:, None] != m["id"][None, :]
+        sims = np.where(notself, sims, -np.inf)
+        nk = min(k, sims.shape[1])
+        kth = -np.partition(-sims, nk - 1, axis=1)[:, nk - 1]
+        qi, mi = np.nonzero(notself & (sims >= kth[:, None] - 2e-6))
+        return pd.DataFrame({"vec_id": q["id"][qi], "neighbor_id": m["id"][mi],
+                             "dot": D[qi, mi], "na": q["norm"][qi],
+                             "nb": m["norm"][mi]})
+
+    def side(keys):
+        return keys.join(feats, "vec_id").select(
+            "cell", F.col("vec_id").alias("id"), "v", "norm")
+
     idt = en.schema["vec_id"].dataType.simpleString()
-    # captured at plan-build time (closure cells pickle by value, so a
-    # driver-side override reaches the executor workers)
-    chunk_elems, chunk_min = CELL_CHUNK_ELEMS, CELL_CHUNK_MIN_ROWS
-
-    def cell_sims(qpdf, mpdf):
-        cols = ["q", "m", "dotqm", "na", "nb"]
-        if len(qpdf) == 0 or len(mpdf) == 0:
-            return pd.DataFrame({c: [] for c in cols})
-        M = np.asarray(mpdf["mv"].tolist(), dtype=np.float64)
-        mid = mpdf["m_id"].to_numpy()
-        mn = mpdf["mnorm"].to_numpy(dtype=np.float64)
-        # query-chunked so the per-cell (nq x nm) matrices stay ~tens of
-        # MB regardless of cell size (per-query pruning is row-local, so
-        # chunking never changes the output)
-        step = max(chunk_min, chunk_elems // max(1, len(mid)))
-        outs = []
-        for lo in range(0, len(qpdf), step):
-            qc = qpdf.iloc[lo:lo + step]
-            Q = np.asarray(qc["qv"].tolist(), dtype=np.float64)
-            D = H.seqdot(Q, M)
-            qid = qc["q_id"].to_numpy()
-            qn = qc["qnorm"].to_numpy(dtype=np.float64)
-            # Per-query pruning WITH SLACK: the global rank orders by
-            # cosine_col(dot, na, nb) desc. np.round may differ from the
-            # JVM round by at most one 1e-6 grid step, so keeping every
-            # member within 2e-6 of the row's k-th np-rounded sim
-            # provably retains this cell's contribution to the JVM
-            # top-k; the JVM window does the exact final ranking.
-            # Self-pairs are masked out.
-            sims = np.round(D / (qn[:, None] * mn[None, :]), 6)
-            notself = qid[:, None] != mid[None, :]
-            sims = np.where(notself, sims, -np.inf)
-            nk = min(k, sims.shape[1])
-            kth = -np.partition(-sims, nk - 1, axis=1)[:, nk - 1]
-            keep = notself & (sims >= kth[:, None] - 2e-6)
-            qi, mi = np.nonzero(keep)
-            outs.append(pd.DataFrame({"q": qid[qi], "m": mid[mi],
-                                      "dotqm": D[qi, mi],
-                                      "na": qn[qi], "nb": mn[mi]}))
-        return pd.concat(outs, ignore_index=True)
-
-    sims = (qry.groupBy("qcell").cogroup(mem.groupBy("mcell"))
-            .applyInPandas(cell_sims,
-                           f"q {idt}, m {idt}, dotqm double, "
-                           f"na double, nb double"))
-    out = sims.withColumn(
-        "sim", cosine_col(F.col("dotqm"), F.col("na"), F.col("nb")))
-    w = W.partitionBy("q").orderBy(F.col("sim").desc(), F.col("m"))
-    return (out.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("q").alias("vec_id"),
-                    F.col("m").alias("neighbor_id"), "rank", "sim"))
+    cands = cell_join(side(qry_keys), side(mem_keys), kernel,
+                      f"vec_id {idt}, neighbor_id {idt}, dot double, "
+                      "na double, nb double")
+    return (top_k(cands.withColumn("sim", cosine_col(
+                F.col("dot"), F.col("na"), F.col("nb"))), k, "sim",
+                  descending=True)
+            .select("vec_id", "neighbor_id", "rank", "sim"))

@@ -20,7 +20,8 @@ feature frame passes ``feature_bytes``, observed on the job that
 checkpoints it (``checkpoint_features`` for the vector operators).
 
 ``ranked_neighbours`` is the ranked tail of the k-NN and ANN probes:
-score each unordered pair once, then rank both directions per point.
+score each unordered pair once, then rank both directions per point
+through ``top_k``, the engine's one directional top-k.
 
 Like the reference defers sqrt until after search (deferred-monotone
 rewrite, nearest_neighbors.cpp:126-135), we compute thresholds on integer
@@ -115,6 +116,21 @@ def pair_features(pairs: DataFrame, feats: DataFrame, cols: tuple[str, ...],
     return pairs.join(side("a"), "a").join(side("b"), "b")
 
 
+def top_k(frame: DataFrame, k: int, score: str, descending: bool = False,
+          point: str = "vec_id",
+          ties: tuple[str, ...] = ("neighbor_id",)) -> DataFrame:
+    """The one directional top-k tail: ``frame``'s rows ranked per
+    ``point`` by ``score`` (``descending`` for a similarity), ties to the
+    smaller ``ties`` columns in turn, numbered 1.. in a ``rank`` column;
+    rows ranked past ``k`` are dropped. Every ranked output of the engine
+    ends here: the IVF probe keying, the per-cell candidates of the cell
+    operators (``embedding.cell_join``) and ``ranked_neighbours``."""
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = W.partitionBy(point).orderBy(order, *ties)
+    return (frame.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def ranked_neighbours(pairs_with_features: DataFrame, score: Column, k: int,
                       descending: bool = False) -> DataFrame:
     """(a, b, features) -> (vec_id, neighbor_id, rank, score): the ``k``
@@ -130,10 +146,7 @@ def ranked_neighbours(pairs_with_features: DataFrame, score: Column, k: int,
                        F.col("b").alias("neighbor_id"), "score")
             .unionAll(und.select(F.col("b").alias("vec_id"),
                                  F.col("a").alias("neighbor_id"), "score")))
-    order = F.col("score").desc() if descending else F.col("score").asc()
-    w = W.partitionBy("vec_id").orderBy(order, F.col("neighbor_id"))
-    return (both.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+    return (top_k(both, k, "score", descending)
             .select("vec_id", "neighbor_id", "rank", "score"))
 
 

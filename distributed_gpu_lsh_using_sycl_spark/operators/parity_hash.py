@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
@@ -415,14 +415,15 @@ from slots s left join r on r.q = s.vec_id and r.rank = s.rank"""
 # Hyperplane (Charikar sign-bit) tables (Arrow kernel) + DuckDB oracle
 # --------------------------------------------------------------------------- #
 
-def hyperplane_buckets_df(e: DataFrame, n_tables: int, bits: int, seed: int,
-                          id_col: str = "vec_id", vec_col: str = "v",
-                          dims: int | None = None) -> DataFrame:
-    """(id, vec) -> (image_id, band_id, bucket): ``n_tables`` tables of
-    ``bits`` sign bits each (Charikar SimHash for cosine), the one
-    sign-bit kernel of the vector operators. Projections are SEQUENTIAL
-    fold dots (one hashing.seqdot Arrow kernel per batch), bit-identical
-    to the DuckDB oracle (ann_oracle_sql)."""
+def hyperplane_bucket_col(vec: Column, n_tables: int, bits: int, seed: int,
+                          dims: int | None = None) -> Column:
+    """Per-row array of ``n_tables`` bucket ids of ``bits`` sign bits each
+    (Charikar SimHash for cosine), the one sign-bit kernel of the vector
+    operators. Projections are SEQUENTIAL fold dots (one hashing.seqdot
+    Arrow kernel per batch), bit-identical to the DuckDB oracle
+    (ann_oracle_sql). Evaluate it on the job that materializes the
+    vectors and posexplode the bands from there (``hyperplane_bands``),
+    so the kernel runs once however many plans read the bands."""
     dims = _require_dims(dims)
     from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
         hyperplane_planes)
@@ -439,11 +440,24 @@ def hyperplane_buckets_df(e: DataFrame, n_tables: int, bits: int, seed: int,
         b = signs.reshape(len(V), n_tables, bits) @ weights
         return pd.Series(b.tolist())
 
-    return (e.select(F.col(id_col).alias("image_id"),
-                     hp_udf(F.col(vec_col).cast("array<double>"))
-                     .alias("bk"))
-            .select("image_id",
-                    F.posexplode("bk").alias("band_id", "bucket")))
+    return hp_udf(vec.cast("array<double>"))
+
+
+def hyperplane_bands(e: DataFrame, id_col: str = "vec_id",
+                     bk_col: str = "bk") -> DataFrame:
+    """(id, bucket array) -> (image_id, band_id, bucket)."""
+    return e.select(F.col(id_col).alias("image_id"),
+                    F.posexplode(bk_col).alias("band_id", "bucket"))
+
+
+def hyperplane_buckets_df(e: DataFrame, n_tables: int, bits: int, seed: int,
+                          id_col: str = "vec_id", vec_col: str = "v",
+                          dims: int | None = None) -> DataFrame:
+    """(id, vec) -> (image_id, band_id, bucket): ``hyperplane_bucket_col``
+    posexploded."""
+    return hyperplane_bands(e.select(
+        id_col, hyperplane_bucket_col(F.col(vec_col), n_tables, bits, seed,
+                                      dims).alias("bk")), id_col)
 
 
 def ann_oracle_sql(n_tables: int, bits: int, seed: int, dims: int, k: int,

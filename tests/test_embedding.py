@@ -406,18 +406,77 @@ def test_neardup_guardrail_low_tau_falls_back(spark, pts):
 
 def test_ivf_kernel_chunked_matches_unchunked(spark, pts, monkeypatch):
     """Shrinking the per-cell kernel chunk bound (forcing many query
-    chunks per cell) changes nothing: per-query selection is row-local,
-    so the chunked output is identical."""
+    chunks per cell) changes no row of any ``cell_join`` caller — IVF,
+    IVF-PQ, the exact top-k grid and the exact near-dup fallback: each
+    kernel selects per query row, so the chunked output is identical."""
     from distributed_gpu_lsh_using_sycl_spark.operators import embedding
 
     e = _df(spark, pts)
-    base = sorted(tuple(r) for r in embedding.ivf_topk(e).collect())
-    basepq = sorted(tuple(r) for r in
-                    embedding.ivfpq_topk(e, dims=pts.shape[1]).collect())
+    emb = e.select("vec_id", F.col("v").alias("embedding"))
+    en = embedding.with_norm(e.select("vec_id", "v"), "v")
+    runs = {
+        "ivf": lambda: embedding.ivf_topk(e),
+        "ivfpq": lambda: embedding.ivfpq_topk(e, dims=pts.shape[1]),
+        "knn": lambda: embedding.knn_topk_tiled(emb, k=4, tile_target=37),
+        "neardup": lambda: embedding._neardup_pairs_exact(en, 0.8, len(pts)),
+    }
+
+    def rows():
+        return {name: sorted(tuple(r) for r in run().collect())
+                for name, run in runs.items()}
+
+    base = rows()
     monkeypatch.setattr(embedding, "CELL_CHUNK_ELEMS", 64)
     monkeypatch.setattr(embedding, "CELL_CHUNK_MIN_ROWS", 2)
-    small = sorted(tuple(r) for r in embedding.ivf_topk(e).collect())
-    smallpq = sorted(tuple(r) for r in
-                     embedding.ivfpq_topk(e, dims=pts.shape[1]).collect())
-    assert small == base
-    assert smallpq == basepq
+    assert rows() == base
+    assert all(base.values())
+
+
+def test_knn_tiled_job_count(spark, pts):
+    """A warm ``knn_topk_tiled`` pass submits a pinned number of jobs
+    (status store): ``n`` is observed on the feature checkpoint's job
+    instead of a ``count()``, and the grid is one cogroup. 8 jobs for the
+    crossJoin grid with its count, 5 for the cell join."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
+        knn_topk_tiled)
+    from perfbench.sparkstats import StatusStore
+
+    e = _df(spark, pts).select("vec_id", F.col("v").alias("embedding"))
+
+    def run():
+        return knn_topk_tiled(e, k=4, tile_target=37).collect()
+
+    run()
+    store = StatusStore(spark)
+    assert run()
+    assert len(store.new_jobs()) == 5
+
+
+def test_neardup_lsh_branch_runs_sign_kernel_once(spark, pts):
+    """A warm τ = 0.8 pass of the near-dup LSH branch evaluates the
+    sign-bit Python kernel in exactly one SQL execution: the buckets are
+    computed on the feature checkpoint's job, and the band plan's stats
+    job and the candidate join read them from there (the kernel ran in
+    both before)."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
+        neardup_pairs_lsh)
+    from tests.test_rehydration import _with_plans
+
+    def run():
+        return neardup_pairs_lsh(_df(spark, pts), tau=0.8,
+                                 dims=pts.shape[1]).collect()
+
+    run()
+    rows, plans = _with_plans(spark, run)
+    assert rows
+    assert sum("ArrowEvalPython" in p for p in plans) == 1
+
+
+def test_ivfpq_rejects_uneven_subspaces(spark, pts):
+    """``dims`` that ``n_sub`` does not divide raises, under ``python -O``
+    too, instead of dropping each subspace's trailing dimensions."""
+    from distributed_gpu_lsh_using_sycl_spark.operators.embedding import (
+        ivfpq_topk)
+
+    with pytest.raises(ValueError, match="n_sub=5"):
+        ivfpq_topk(_df(spark, pts), dims=pts.shape[1], n_sub=5)

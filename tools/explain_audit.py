@@ -13,7 +13,7 @@ The 100-TB questions, made greppable per query:
 - how many shuffles (Exchange) does the plan pay, and are joins
   broadcast where a side is small (BroadcastHashJoin vs SortMergeJoin)?
 - how much of the plan stays inside WholeStageCodegen (JVM, vectorized)
-  vs python workers (ArrowEvalPython / MapInPandas / FlatMapGroupsIn*)?
+  vs python workers (ArrowEvalPython / MapInPandas / FlatMap(Co)GroupsIn*)?
 - is AQE live (AdaptiveSparkPlan) so skew/coalesce re-plans at runtime?
 
 Usage: python tools/explain_audit.py [--sf DIR] [--only name,...]
@@ -58,7 +58,8 @@ MARKERS = {
     "wholestage": r"\*\(\d+\)",
     "bcast_joins": r"BroadcastHashJoin|BroadcastNestedLoopJoin",
     "smj_joins": r"SortMergeJoin",
-    "python": r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|BatchEvalPython",
+    "python": (r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
+               r"|FlatMapCoGroupsInPandas|BatchEvalPython"),
 }
 
 
