@@ -874,9 +874,10 @@ def q_streaming_dedup_clusters(spark, sf):
     d.filter(F.col("image_id").cast("long") % 2 == 0) \
         .write.mode("overwrite").parquet(os.path.join(inp, "w1"))
     # partitioning is scale-adaptive by default (e2e._adaptive_partitions:
-    # derived from the wave's bytes, floor 8, cap at the session cores) —
-    # it spreads the signature UDF off a narrow wave without paying 32
-    # state-store commits + 32 files per micro-batch for a 2 MB wave
+    # a wave signs in place under 384 KiB of new input and is spread over
+    # the cores above it; the state partitions follow the input bytes,
+    # floor 8, cap at the session cores, so a 2 MB wave pays neither 32
+    # state-store commits nor 32 files per micro-batch)
     streaming_dedup_cycle(spark, inp + "/*", wh, cfg, reconcile=False)
     d.filter(F.col("image_id").cast("long") % 2 == 1) \
         .write.mode("overwrite").parquet(os.path.join(inp, "w2"))

@@ -148,11 +148,18 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
 
 
 def _components(edges: DataFrame, small_graph_threshold: int,
-                max_iter: int = 50) -> tuple[DataFrame, bool]:
+                max_iter: int = 50, bound: int | None = None
+                ) -> tuple[DataFrame, bool]:
     """``connected_components`` -> (assignments, whether union-find
-    solved it, i.e. the assignments are driver-sized)."""
-    cur, n_edges = _checkpoint_observed(
-        edges.select("a", "b").filter(F.col("a") != F.col("b")))
+    solved it, i.e. the assignments are driver-sized). ``bound``: an
+    observed upper bound on the distinct edges; at or under the
+    threshold the distinct edges go straight to union-find, with no
+    entry checkpoint to count them."""
+    edges = edges.select("a", "b").filter(F.col("a") != F.col("b"))
+    if small_graph_threshold > 0 and bound is not None \
+            and bound <= small_graph_threshold:
+        return _small_graph_components(edges.distinct()), True
+    cur, n_edges = _checkpoint_observed(edges)
     if small_graph_threshold > 0 and n_edges <= small_graph_threshold:
         return _small_graph_components(cur), True
     for _ in range(max_iter):
@@ -177,11 +184,19 @@ def _components(edges: DataFrame, small_graph_threshold: int,
 
 
 def assign_clusters(vertices: DataFrame, edges: DataFrame,
-                    id_col: str = "image_id") -> DataFrame:
+                    id_col: str = "image_id",
+                    bound: int | None = None) -> DataFrame:
     """Full assignment over a vertex table: component min for connected
     nodes, self for singletons. Edge sets of at most SMALL_GRAPH_EDGES
     distinct edges are solved by driver union-find, larger ones by the
     star loop (the same assignments either way).
+
+    ``bound``: an upper bound on the distinct edges that the caller has
+    already observed, in the sense of ``pairs.pair_features(size=)`` —
+    the candidate rows the edges were verified from, or a band plan's
+    pair mass. At or under SMALL_GRAPH_EDGES the distinct edges are
+    collected straight into union-find; without it (or over the bound)
+    the edges are first checkpointed, and that job counts them.
 
     The left join's small side is the CC output (non-singleton nodes
     only). When union-find solved the graph that side is driver-sized by
@@ -190,7 +205,7 @@ def assign_clusters(vertices: DataFrame, edges: DataFrame,
     output is left to AQE, which converts to broadcast at runtime when
     the materialized side is under the threshold — a 30%-dup
     10^12-row corpus's assignment table is NOT broadcastable."""
-    cc, small = _components(edges, SMALL_GRAPH_EDGES)
+    cc, small = _components(edges, SMALL_GRAPH_EDGES, bound=bound)
     if small:
         cc = F.broadcast(cc)
     return (vertices.select(F.col(id_col).alias("image_id")).distinct()

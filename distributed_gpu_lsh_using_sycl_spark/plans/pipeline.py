@@ -143,7 +143,8 @@ class DedupPipeline:
         eager per-stage ``localCheckpoint`` variant was A/B'd
         (interleaved, same session, sf0.1 and 10x): it LOSES at 10x (min
         wall 61.72s eager vs 45.98s lazy), because the no-warehouse graph
-        is consumed through connected_components' entry checkpoint, which
+        is consumed through connected_components' entry checkpoint (or,
+        under the band plan's bound, its union-find collect), which
         materializes the verified-edge chain exactly once anyway — so
         laziness costs no recompute on the main path, while eager staging
         pays real block-manager writes for the wide band frames. The
@@ -281,9 +282,13 @@ class DedupPipeline:
 
         t["pairs"] = self._stage("pairs", build_pairs)
         t["edges"] = self._stage("edges", lambda: pairs.verified_edges(t["pairs"]))
+        # Σ C(cnt, 2) over the plan's buckets bounds the distinct candidate
+        # pairs, and the verified edges are a subset of them; a resumed
+        # candidates stage built no plan, so CC counts its edges itself.
+        bound = plan_box["plan"].mass if "plan" in plan_box else None
         t["clusters"] = self._stage(
             "clusters",
-            lambda: components.assign_clusters(sigs, t["edges"]))
+            lambda: components.assign_clusters(sigs, t["edges"], bound=bound))
 
         if self.io:
             mdf = self.spark.createDataFrame(

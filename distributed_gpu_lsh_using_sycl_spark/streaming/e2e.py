@@ -41,6 +41,7 @@ run continuously.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -158,13 +159,15 @@ def _check_adj_fingerprint(adjudicated_dir: str, cfg: LshConfig) -> None:
         f.write(want)
 
 
-def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str) -> None:
+def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str,
+                         id_type: T.DataType) -> None:
     """Rewrite the adjudicated table into O(shuffle-partition) files once
     the append-only wave files pass _ADJ_COMPACT_FILES. Runs at cycle
     START (before the prior-verdicts read), so no live plan points at the
     replaced files. distinct() during the rewrite absorbs the duplicate
     rows a crash between append and cluster-write can leave (documented
-    idempotence), shrinking the table to its logical content."""
+    idempotence), shrinking the table to its logical content. The table
+    is read with ``_adj_schema(id_type)``: no footer job."""
     parts = [os.path.join(r, f)
              for r, _, files in os.walk(adjudicated_dir)
              for f in files if f.endswith(".parquet")]
@@ -172,7 +175,8 @@ def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str) -> None:
         return
     import shutil
 
-    df = spark.read.parquet(adjudicated_dir).distinct()
+    df = spark.read.schema(_adj_schema(id_type)).parquet(
+        adjudicated_dir).distinct()
     tmp = adjudicated_dir.rstrip("/") + ".compact.tmp"
     old = adjudicated_dir.rstrip("/") + ".compact.old"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -187,39 +191,127 @@ def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str) -> None:
     shutil.rmtree(old)
 
 
-#: advisory bytes per ingest split for the python signing stage — much
-#: smaller than a scan-stage advisory (the UDF is compute-bound, not
-#: IO-bound), so small waves still fan out across several workers.
+#: advisory bytes per partition when a wave is spread: much smaller than
+#: a scan-stage advisory (the signing UDF is compute-bound, not
+#: IO-bound), so a wave over the crossover still fans out across workers.
 _INGEST_SPLIT_BYTES = 8 * 1024 * 1024
-#: floor so a tiny wave never signs serially (a one-file 2.5k-doc wave
-#: measured 3.5s on 1 core vs ~1.2s spread)
+#: floor of a spread wave's partition count (capped at the session
+#: parallelism), and of the candidate stream's state partitions.
 _MIN_WAVE_PARTITIONS = 8
+#: bytes a drain reads (``_read_bytes``) under which the wave signs in
+#: place: no Exchange, and the file source's own splits (one task for a
+#: one-file wave) sign it. Wall of ``signature_stream(with_image=False)``
+#: drains of one caption file (16 row groups), fresh checkpoint, three
+#: drains per cell after a warm-up, 4-CPU host:
+#:
+#:   wave                 in place      repartition(4)
+#:   1k rows  (0.10 MB)   0.67-0.74 s   0.74-0.80 s
+#:   4k rows  (0.33 MB)   0.86-0.91 s   0.87-1.00 s
+#:   8k rows  (0.64 MB)   1.19-1.37 s   0.88-0.97 s
+#:   16k rows (1.26 MB)   1.68-1.85 s   1.21-1.24 s
+#:
+#: The two cross near 0.36 MB; around the bound they differ by < 0.05 s.
+_IN_PLACE_WAVE_BYTES = 384 * 1024
 
 
-def _adaptive_partitions(spark: SparkSession, input_dir: str) -> int:
-    """SCALE-ADAPTIVE partition count for the streaming stages: derived
-    from the wave's input bytes (advisory-size rule, guide §2.2/§6), not
-    from the local core count. Small waves take few partitions (fewer
-    state-store commits, fewer task launches, fewer output files per
-    micro-batch — measured ~2x on the sf0.1 two-wave cycle vs the
-    core-count constant); big waves grow to the session parallelism
-    exactly as before. Local-FS sizing, same contract as the rest of
-    this module; a URI input falls back to the session parallelism."""
-    par = spark.sparkContext.defaultParallelism
+def _input_files(input_dir: str) -> dict[str, int] | None:
+    """Real path -> size of every data file under the input root (names
+    starting with ``_`` or ``.`` skipped); None for a URI or a missing
+    root. Local-FS sizing, same contract as the rest of this module."""
     root = input_dir[:-2] if input_dir.endswith("/*") else input_dir
     if "://" in root or not os.path.isdir(root):
-        return par
-    total = 0
+        return None
+    out = {}
     for r, _, files in os.walk(root):
         for f in files:
             if not f.startswith(("_", ".")):
+                path = os.path.join(r, f)
                 try:
-                    total += os.path.getsize(os.path.join(r, f))
+                    out[os.path.realpath(path)] = os.path.getsize(path)
                 except OSError:
                     pass
-    want = max(_MIN_WAVE_PARTITIONS,
-               -(-total // _INGEST_SPLIT_BYTES))  # ceil div
-    return int(min(par, want))
+    return out
+
+
+def _drained_files(checkpoint_dir: str) -> set[str]:
+    """Real paths of the input files the signature stream has already
+    drained: every ``path`` its file-source log
+    (``<checkpoint>/sources/0``, batch and ``.compact`` files alike)
+    lists. Empty when the log is missing or any of it is unreadable, so
+    the caller then counts every file as new."""
+    from urllib.parse import unquote, urlparse
+
+    log = os.path.join(checkpoint_dir, "sources", "0")
+    seen: set[str] = set()
+    try:
+        for name in os.listdir(log):
+            if name.startswith(".") or name.endswith(".tmp"):
+                continue
+            with open(os.path.join(log, name)) as f:
+                lines = f.read().splitlines()
+            if not lines or not lines[0].startswith("v"):
+                return set()
+            for line in lines[1:]:
+                if line:
+                    uri = urlparse(json.loads(line)["path"])
+                    seen.add(os.path.realpath(unquote(uri.path)))
+    except (OSError, ValueError, KeyError, TypeError):
+        return set()
+    return seen
+
+
+def _read_bytes(path: str, size: int, with_image: bool) -> int:
+    """Bytes a drain reads from one parquet file: its column chunks as the
+    footer lists them, the image column's only when the drain signs
+    images (the scan prunes it otherwise); the file's ``size`` when the
+    footer is unreadable."""
+    import pyarrow.parquet as _pq
+
+    try:
+        meta = _pq.ParquetFile(path).metadata
+    except (OSError, ValueError):
+        return size
+    total = 0
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        for j in range(rg.num_columns):
+            col = rg.column(j)
+            if with_image or col.path_in_schema != "bytes":
+                total += col.total_compressed_size
+    return total
+
+
+def _adaptive_partitions(par: int, input_dir: str, sigs_checkpoint: str,
+                         with_image: bool) -> tuple[int | None, int]:
+    """-> (ingest partitions, candidate-stream state partitions), sized
+    from bytes (advisory-size rule, guide §2.2/§6), not from the core
+    count, and capped at the session parallelism ``par``.
+
+    The ingest count follows the files this drain will read: those the
+    signature stream's source log (``_drained_files``) does not list
+    yet, sized by ``_read_bytes``. Under ``_IN_PLACE_WAVE_BYTES`` it is
+    None (sign in place, no repartition); otherwise one partition per
+    ``_INGEST_SPLIT_BYTES``, floored at ``_MIN_WAVE_PARTITIONS``.
+
+    The state count follows every input file's size. Spark pins it in
+    the candidate stream's checkpoint at the stream's first start, when
+    all files are new anyway; per-partition fixed costs (state-store
+    get/commit, delta files, task launches) dominate small waves, so few
+    partitions measured ~2x faster than the core count on the sf0.1
+    two-wave cycle. A URI input falls back to ``par`` for both."""
+    files = _input_files(input_dir)
+    if files is None:
+        return par, par
+
+    def spread(nbytes: int) -> int:
+        return int(min(par, max(_MIN_WAVE_PARTITIONS,
+                                -(-nbytes // _INGEST_SPLIT_BYTES))))
+
+    drained = _drained_files(sigs_checkpoint)
+    new = sum(_read_bytes(p, n, with_image)
+              for p, n in files.items() if p not in drained)
+    ingest = None if new < _IN_PLACE_WAVE_BYTES else spread(new)
+    return ingest, spread(sum(files.values()))
 
 
 def _parquet_dir_rows(path: str) -> int:
@@ -252,7 +344,8 @@ def _parquet_dir_has_data(path: str) -> bool:
 
 def _reconcile(spark: SparkSession, sigs: DataFrame,
                cands: DataFrame, cfg: LshConfig,
-               adjudicated_dir: str | None = None) -> tuple[DataFrame, int]:
+               adjudicated_dir: str | None = None,
+               bound: int | None = None) -> tuple[DataFrame, int]:
     """Accumulated signatures + candidate pairs -> (full cluster
     assignment, n pairs newly verified this cycle).
 
@@ -264,11 +357,19 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
     signature per image_id), so a verdict never needs revisiting. CC
     stays global over ALL verified edges (singletons = self); at
     wave-scale edge counts ``assign_clusters`` solves it with its driver
-    union-find fast path, past its bound with the star loop.
+    union-find fast path, past its bound with the star loop. ``bound``:
+    an observed upper bound on the distinct candidate pairs (see
+    ``assign_clusters``).
 
-    The persisted verdicts are read with ``_adj_schema`` and the wave's
-    verdict count is observed on its checkpoint job: no footer or count
-    job."""
+    The append is the one job that materializes the wave's verdicts,
+    and it observes their count. It may read and write the same
+    directory: ``prior``'s file index is listed when ``prior`` is read,
+    before the append, and the write never re-lists it, so the anti-join
+    cannot see the wave's own partial output. CC then re-reads the
+    table, which lists it once, after the commit. A crash between the
+    append and the clusters write leaves the wave's verdicts in the
+    table, and the next cycle's anti-join skips every one of them. Both
+    reads use ``_adj_schema``: no footer or count job."""
     from distributed_gpu_lsh_using_sycl_spark.operators.components import (
         assign_clusters)
     from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
@@ -279,36 +380,25 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
                           F.col("b").cast(id_type).alias("b"))
              .distinct()
              .withColumn("source", F.lit("minhash")))
-    prior = None
     if adjudicated_dir:
         _check_adj_fingerprint(adjudicated_dir, cfg)
-        _compact_adjudicated(spark, adjudicated_dir)  # before any read
+        _compact_adjudicated(spark, adjudicated_dir, id_type)  # before any read
         if _parquet_dir_has_data(adjudicated_dir):
             prior = spark.read.schema(_adj_schema(id_type)).parquet(
                 adjudicated_dir)
             pairs = pairs.join(prior.select("a", "b"), ["a", "b"],
                                "left_anti")
-    new_verdicts = verify_pairs(attach_features(pairs, sigs), cfg)
+    verdicts = verify_pairs(attach_features(pairs, sigs), cfg)
+    n_new = -1  # not tracked in the non-persistent mode
     if adjudicated_dir:
-        # Materialize the wave ONCE before appending: the append must not
-        # share a plan with a read of the same directory (on an object
-        # store — or with plan recomputation — the write job could list
-        # its own partial output). The checkpoint job also observes the
-        # wave-size metric, with no count job.
         obs = Observation()
-        new_verdicts = (new_verdicts.observe(obs, F.count(F.lit(1)).alias("n"))
-                        .localCheckpoint(eager=True))
+        (verdicts.observe(obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("append").parquet(adjudicated_dir))
         n_new = int(obs.get["n"])
-        new_verdicts.write.mode("append").parquet(adjudicated_dir)
-        # prior's file index was pinned before the append; union it with
-        # the materialized wave instead of re-listing the whole table.
-        all_verdicts = (prior.unionByName(new_verdicts)
-                        if prior is not None else new_verdicts)
-    else:
-        all_verdicts = new_verdicts
-        n_new = -1  # not tracked in the non-persistent mode
-    return (assign_clusters(sigs, verified_edges(all_verdicts),
-                            id_col="image_id"),
+        verdicts = spark.read.schema(_adj_schema(id_type)).parquet(
+            adjudicated_dir)
+    return (assign_clusters(sigs, verified_edges(verdicts),
+                            id_col="image_id", bound=bound),
             n_new)
 
 
@@ -324,9 +414,9 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     ``<warehouse>/clusters``; n_new_adjudicated counts the candidate
     pairs verified (or rejected) for the first time in this cycle.
 
-    Both streaming stages run on one partition count derived from the
-    wave's input bytes (``_adaptive_partitions``); the CC strategy is
-    ``assign_clusters``' own. Neither is a parameter.
+    How many tasks sign the wave and how many partitions the candidate
+    stream's state takes are ``_adaptive_partitions``' decision; the CC
+    strategy is ``assign_clusters``' own. Neither is a parameter.
 
     ``reconcile=False`` drains stages 1+2 only (signatures + candidate
     state advance; clusters table left as-is, returned as None, and no
@@ -343,28 +433,24 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     cfg = cfg or LshConfig()
     sigs_dir = os.path.join(warehouse, "signatures")
     pairs_dir = os.path.join(warehouse, "cand_pairs")
+    sigs_ckpt = os.path.join(warehouse, "ckpt_sigs")
 
-    # One byte-derived partition count for both stages (see
-    # _adaptive_partitions). The ingest stage repartitions to it because
-    # the file source parallelizes by file, so a wave landing as few
-    # files would otherwise sign on a fraction of the cores; a
-    # core-count constant instead over-partitions small waves (32 state
-    # commits + 32 files per micro-batch for a 2 MB wave).
-    parts = _adaptive_partitions(spark, input_dir)
-    q = signature_stream(spark, input_dir, sigs_dir,
-                         os.path.join(warehouse, "ckpt_sigs"), cfg,
-                         with_image=with_image, ingest_partitions=parts)
+    # Sized before the drain, from the files it is about to read: a small
+    # wave signs in place (the file source's own splits), a large one is
+    # repartitioned so a wave landing as few files still spreads.
+    ingest_parts, state_parts = _adaptive_partitions(
+        spark.sparkContext.defaultParallelism, input_dir, sigs_ckpt,
+        with_image)
+    q = signature_stream(spark, input_dir, sigs_dir, sigs_ckpt, cfg,
+                         with_image=with_image,
+                         ingest_partitions=ingest_parts)
     _await_drained(q, timeout_s)
     sig_schema = q.schema
     # The stateful join's state-store partition count is captured from
     # spark.sql.shuffle.partitions at the query's FIRST start and pinned
     # in the checkpoint, so it is set for the candidate stream only.
-    # Per-partition fixed costs (state-store get/commit, delta files, task
-    # launches) dominate small waves: the byte-derived count measured ~2x
-    # faster than the core count on the sf0.1 two-wave cycle, and big
-    # waves still grow to the session parallelism.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     try:
         q = candidate_pair_stream(spark, sigs_dir, pairs_dir,
                                   os.path.join(warehouse, "ckpt_pairs"), cfg)
@@ -384,13 +470,18 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
         cands = spark.read.schema("a string, b string").parquet(pairs_dir)
     else:
         cands = spark.createDataFrame([], "a string, b string")
+    # candidate rows from the footers: the returned metric, and the
+    # bound on the verified edges (every verdict comes from one
+    # candidate pair) that lets CC skip its entry checkpoint
+    n_cands = _parquet_dir_rows(pairs_dir)
     if not reconcile:
         return {"clusters": None,
                 "n_signatures": _parquet_dir_rows(sigs_dir),
-                "n_candidates": _parquet_dir_rows(pairs_dir)}
+                "n_candidates": n_cands}
     clusters, n_new = _reconcile(
         spark, sigs, cands, cfg,
-        adjudicated_dir=os.path.join(warehouse, "adjudicated"))
+        adjudicated_dir=os.path.join(warehouse, "adjudicated"),
+        bound=n_cands)
     out_dir = os.path.join(warehouse, "clusters")
     # a handful of right-sized files instead of one per shuffle
     # partition: the table is O(|V|) skinny rows, and every consumer
@@ -398,7 +489,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     clusters.coalesce(4).write.mode("overwrite").parquet(out_dir)
     return {"clusters": spark.read.schema(clusters.schema).parquet(out_dir),
             "n_signatures": _parquet_dir_rows(sigs_dir),
-            "n_candidates": _parquet_dir_rows(pairs_dir),
+            "n_candidates": n_cands,
             "n_new_adjudicated": n_new}
 
 

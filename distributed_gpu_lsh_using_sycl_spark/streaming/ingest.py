@@ -65,11 +65,15 @@ def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
     schema it writes.
 
     ``ingest_partitions`` repartitions each micro-batch BEFORE the
-    signature UDF. The file source parallelizes by input file/row-group,
-    so a wave landing as FEW files signs on as few cores (measured: a
-    one-file 2.5k-doc wave ran the whole signature stage on 1 of 32
-    cores, 3.5s vs ~1.2s repartitioned). ``streaming_dedup_cycle`` sets
-    it from the wave's bytes; None skips the shuffle.
+    signature UDF; None skips the shuffle. The file source parallelizes
+    by input file/row-group, so a wave landing as FEW files signs on as
+    few cores. That costs little on a small wave and more on a large
+    one: on a 4-CPU host a one-file 1k-row wave drained in 0.67-0.74 s
+    in place against 0.74-0.80 s repartitioned, a 16k-row wave in
+    1.68-1.85 s against 1.21-1.24 s (the crossover table at
+    ``e2e._IN_PLACE_WAVE_BYTES``). ``streaming_dedup_cycle`` sets it
+    from the bytes the drain will read: None under the crossover, a
+    spread over it.
     """
     cfg = cfg or LshConfig()
     stream = spark.readStream.schema(IMAGES_SCHEMA).parquet(input_dir)

@@ -147,6 +147,34 @@ def test_assign_clusters_small_graph_takes_union_find(spark, monkeypatch):
     assert got == _union_find_clusters(ids, edges)
 
 
+def test_bound_skips_the_entry_checkpoint(spark, monkeypatch):
+    """A caller's bound at or under SMALL_GRAPH_EDGES sends the distinct
+    edges straight to union-find: ``_checkpoint_observed`` never runs.
+    A bound over it, or none, keeps the entry checkpoint that counts the
+    edges. Every case equals the union-find oracle."""
+    from distributed_gpu_lsh_using_sycl_spark.operators import components
+
+    calls = []
+    real = components._checkpoint_observed
+    monkeypatch.setattr(components, "_checkpoint_observed",
+                        lambda e, prev=None: calls.append(1) or real(e, prev))
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 8)
+    edges = [("v01", "v02"), ("v02", "v03"), ("v05", "v04"),
+             ("v06", "v07"), ("v07", "v08"), ("v01", "v03")]
+    n_distinct = len(edges)
+    ids = sorted({x for e in edges for x in e}) + ["v09"]
+    want = _union_find_clusters(ids, edges)
+    vdf = spark.createDataFrame([(i,) for i in ids], ["image_id"])
+    edf = spark.createDataFrame(edges + edges[:3] + [("v04", "v04")],
+                                ["a", "b"])
+    for bound, checkpoints in ((n_distinct, 0), (8, 0), (9, 1), (None, 1)):
+        calls.clear()
+        got = {r["image_id"]: r["cluster_id"] for r in
+               components.assign_clusters(vdf, edf, bound=bound).collect()}
+        assert len(calls) == checkpoints, bound
+        assert got == want, bound
+
+
 def test_cc_raises_when_max_iter_exhausted(spark):
     """An exhausted iteration budget is not convergence: CC fails loudly
     instead of returning a partial assignment."""

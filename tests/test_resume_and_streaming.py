@@ -310,8 +310,11 @@ def test_streaming_cycle_job_count(spark, tmp_path_factory):
     """A warm reconciling cycle submits a pinned number of Spark jobs,
     micro-batch jobs included, counted from the app status store. The
     tables are read with known schemas (no footer jobs) and the verdict
-    count is observed on its checkpoint job (no count jobs): 21 jobs
-    before, 15 after. A new job in the cycle shows here first."""
+    count is observed on a job that runs anyway (no count jobs): 21 jobs
+    before, 15 after. The wave then signs in place (no repartition job),
+    the verdict append is the job that materializes the wave (no
+    checkpoint job) and the candidate rows bound CC (no entry checkpoint
+    job): 15 before, 12 after. A new job in the cycle shows here first."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         streaming_dedup_cycle)
     from perfbench.sparkstats import StatusStore
@@ -328,7 +331,124 @@ def test_streaming_cycle_job_count(spark, tmp_path_factory):
     store = StatusStore(spark)
     r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
     assert r["n_new_adjudicated"] > 0
-    assert len(store.new_jobs()) == 15
+    assert len(store.new_jobs()) == 12
+
+
+def _caption_wave(path, rows, seed, image_bytes=0):
+    """A one-file parquet wave of ``rows`` random captions of 120 hex
+    characters, each row with ``image_bytes`` random image bytes when
+    non-zero. Written with pyarrow: no Spark."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    cols = {"image_id": [f"img_{seed}_{i:05d}" for i in range(rows)],
+            "caption": [rng.bytes(60).hex() for _ in range(rows)]}
+    if image_bytes:
+        cols["bytes"] = [rng.bytes(image_bytes) for _ in range(rows)]
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.table(cols), path)
+    return path
+
+
+def _source_log(ckpt, batch, paths, body=None):
+    """One batch file of a file-stream source log, as Spark writes it
+    under ``<checkpoint>/sources/0``; ``body`` replaces its content."""
+    log = os.path.join(ckpt, "sources", "0")
+    os.makedirs(log, exist_ok=True)
+    if body is None:
+        body = "v1\n" + "\n".join(json.dumps(
+            {"path": "file://" + p, "timestamp": 0, "batchId": batch})
+            for p in paths)
+    with open(os.path.join(log, str(batch)), "w") as f:
+        f.write(body)
+
+
+def test_wave_sizing_follows_the_new_files(tmp_path):
+    """The ingest partition count follows the bytes the drain will read:
+    the files the signature stream's source log does not list yet. A
+    large first wave spreads; a small second wave then signs in place
+    (sizing from every file, as before, would spread it too). A wave of
+    large images but small captions signs in place unless the drain
+    signs images. An unreadable source log counts every file as new.
+    The state partitions follow every input byte throughout."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        _IN_PLACE_WAVE_BYTES, _MIN_WAVE_PARTITIONS, _adaptive_partitions)
+
+    inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    glob, par = inp + "/*", 16
+    spread = min(par, _MIN_WAVE_PARTITIONS)
+    big = _caption_wave(os.path.join(inp, "w1", "part-0.parquet"), 8000, 1)
+    assert os.path.getsize(big) > _IN_PLACE_WAVE_BYTES
+    # first drain: no source log yet, every file is new
+    assert _adaptive_partitions(par, glob, ckpt, False) == (spread, spread)
+
+    _source_log(ckpt, 0, [big])
+    small = _caption_wave(os.path.join(inp, "w2", "part-0.parquet"), 1000, 2)
+    assert os.path.getsize(big) + os.path.getsize(small) \
+        > _IN_PLACE_WAVE_BYTES
+    assert _adaptive_partitions(par, glob, ckpt, False) == (None, spread)
+
+    _source_log(ckpt, 1, [small])
+    images = _caption_wave(os.path.join(inp, "w3", "part-0.parquet"), 40, 3,
+                           image_bytes=16 * 1024)
+    assert os.path.getsize(images) > _IN_PLACE_WAVE_BYTES
+    assert _adaptive_partitions(par, glob, ckpt, False)[0] is None
+    assert _adaptive_partitions(par, glob, ckpt, True)[0] == spread
+
+    _source_log(ckpt, 1, [], body="not a source log")
+    assert _adaptive_partitions(par, glob, ckpt, False) == (spread, spread)
+
+
+def test_small_wave_signs_without_exchange(spark, tmp_path_factory,
+                                           monkeypatch):
+    """A wave under the crossover signs where it lands: its ingest
+    micro-batch has no Exchange below the signature UDF. With the
+    crossover patched to 0 the same wave is repartitioned first."""
+    import re
+
+    from distributed_gpu_lsh_using_sycl_spark.streaming import e2e
+    from tests.test_rehydration import _with_plans
+
+    images, _ = make_fixture_pandas(30, seed=42)
+    for crossover, exchange in ((e2e._IN_PLACE_WAVE_BYTES, False),
+                                (0, True)):
+        monkeypatch.setattr(e2e, "_IN_PLACE_WAVE_BYTES", crossover)
+        base = tmp_path_factory.mktemp("in_place")
+        inp, wh = str(base / "in"), str(base / "wh")
+        spark.createDataFrame(images).write.parquet(os.path.join(inp, "w1"))
+        _, plans = _with_plans(spark, lambda: e2e.streaming_dedup_cycle(
+            spark, inp + "/*", wh, CFG, reconcile=False))
+        plans = [p for p in plans if "text_sig_udf" in p]  # the ingest
+        assert plans
+        assert all(bool(re.search(r"^\(\d+\) Exchange\b", p, re.M))
+                   == exchange for p in plans)
+
+
+def test_verdict_append_counts_the_wave(spark, tmp_path_factory):
+    """n_new_adjudicated is the row count the cycle appended to the
+    adjudicated table; a cycle with no new wave appends no rows and
+    reports 0, and its clusters are unchanged."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        _parquet_dir_rows, streaming_dedup_cycle)
+
+    base = tmp_path_factory.mktemp("verdicts")
+    inp, wh = str(base / "in"), str(base / "wh")
+    adj = os.path.join(wh, "adjudicated")
+    images, _ = make_fixture_pandas(60, seed=42)
+    rows, clusters = [], []
+    for wave in (images.iloc[:30], images.iloc[30:], None):
+        if wave is not None:
+            spark.createDataFrame(wave).write.parquet(
+                os.path.join(inp, f"w{len(rows)}"))
+        before = _parquet_dir_rows(adj)
+        r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+        rows.append(_parquet_dir_rows(adj) - before)
+        assert r["n_new_adjudicated"] == rows[-1]
+        clusters.append(_clusters_dict(r))
+    assert rows[0] > 0 and rows[1] > 0 and rows[2] == 0
+    assert clusters[2] == clusters[1]
 
 
 def test_state_checkpoint_version_guard(tmp_path):
