@@ -834,8 +834,8 @@ def q_e2e_caption_dedup(spark, sf):
 def q_streaming_dedup_clusters(spark, sf):
     """END-TO-END STRUCTURED STREAMING dedup, value-hash checked: the
     full chain — incremental signature ingest (readStream + streaming
-    checkpoint) → stateful (band,bucket)-keyed incremental bucket join
-    (applyInPandasWithState) → batch verify+CC reconcile — run as TWO
+    checkpoint) → delta bucket join (the wave's bands broadcast, probed
+    by the signature table's) → batch verify+CC reconcile — run as TWO
     availableNow waves (even doc_ids land first, odd second) over the
     documents table (streaming/e2e.py). The DuckDB oracle recomputes the
     SAME semantics non-streamed: brute-force Jaccard>=tau pairs +
@@ -853,10 +853,9 @@ def q_streaming_dedup_clusters(spark, sf):
 
     base = os.path.join("/tmp/dlsh_stream_e2e",
                         os.path.basename(sf.rstrip("/")))
-    # unload loaded state providers + stop the maintenance thread before
-    # touching any checkpoint dir a previous run in this session left —
-    # the async maintenance task otherwise races the deletion and dumps a
-    # stack trace into stderr mid-teardown (streaming/e2e.py helper doc)
+    # the cycle loads no state store; unload any that another stateful
+    # query in this session left, before deleting checkpoint dirs
+    # (streaming/e2e.py helper doc)
     unload_state_stores(spark)
     shutil.rmtree(base, ignore_errors=True)
     inp = os.path.join(base, "in")
@@ -873,20 +872,13 @@ def q_streaming_dedup_clusters(spark, sf):
     cfg = _dedup_cfg()
     d.filter(F.col("image_id").cast("long") % 2 == 0) \
         .write.mode("overwrite").parquet(os.path.join(inp, "w1"))
-    # partitioning is scale-adaptive by default (e2e._adaptive_partitions:
-    # a wave signs in place under 384 KiB of new input and is spread over
-    # the cores above it; the state partitions follow the input bytes,
-    # floor 8, cap at the session cores, so a 2 MB wave pays neither 32
-    # state-store commits nor 32 files per micro-batch)
+    # ingest partitioning is scale-adaptive (e2e._adaptive_partitions: a
+    # wave signs in place under 384 KiB of new input and is spread over
+    # the cores above it)
     streaming_dedup_cycle(spark, inp + "/*", wh, cfg, reconcile=False)
     d.filter(F.col("image_id").cast("long") % 2 == 1) \
         .write.mode("overwrite").parquet(os.path.join(inp, "w2"))
     res = streaming_dedup_cycle(spark, inp + "/*", wh, cfg)
-    # both streams have terminated; drop their state providers now so no
-    # background maintenance outlives this query into the rest of the
-    # session (the returned clusters frame reads a plain parquet table
-    # and does not depend on stream state)
-    unload_state_stores(spark)
     c = res["clusters"]
     canon = c.groupBy("cluster_id").agg(
         F.min(F.col("image_id").cast("long")).alias("canon"))

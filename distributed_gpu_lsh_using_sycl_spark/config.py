@@ -10,8 +10,8 @@ handling, checkpointing). One dataclass = the single source of truth —
 Execution choices the engine derives from sizes it observes are NOT
 fields here; each has one owner that computes it: the CC union-find vs
 star-loop bound (``operators/components.SMALL_GRAPH_EDGES``), the
-streaming partition count (``streaming/e2e._adaptive_partitions``), the
-blob-scan task count and read slice (``sources/blob_scan``), the near-dup
+streaming ingest partition count (``streaming/e2e._adaptive_partitions``),
+the blob-scan task count and read slice (``sources/blob_scan``), the near-dup
 guardrail (``operators/embedding.neardup_pairs_lsh``) and the Arrow batch
 size (a session setting, ``sources/tables.get_spark``).
 """
@@ -76,25 +76,9 @@ class LshConfig:
     #: hard cap on members per (band,bucket) considered for pair generation;
     #: buckets larger than this are (deterministically) down-sampled — at
     #: 10^12 rows a degenerate bucket (empty caption) would otherwise emit
-    #: O(n^2) pairs. 0 disables.
+    #: O(n^2) pairs. The streaming delta join admits a bucket's first
+    #: this-many arrivals instead (streaming/stateful.py). 0 disables.
     max_bucket_size: int = 4096
-    #: streaming stateful bucket join: number of coarse state-key groups
-    #: per band — the state key is (band_id, bucket % this) and each key
-    #: holds a bucket -> members table, so per-key Python/state-store
-    #: overhead is amortized over ~distinct_buckets/this buckets instead
-    #: of paid per (mostly singleton) bucket. Size it so per-key member
-    #: volume stays bounded: ~ expected_rows / (num_bands * target
-    #: members-per-key); <= 0 disables coarsening (exact (band, bucket)
-    #: keys — right for huge deployments where per-key state volume, not
-    #: per-key overhead, binds). Pair semantics are identical either way.
-    #: Round-5 drain sweep (5k-doc signatures, local[32], min of 3 per
-    #: level): G=8 1.84s, 16 1.79, 32 1.84, 64 1.87, 128 2.10, 256 2.28,
-    #: 1024 4.1, per-bucket keys 13.8 — a flat plateau at G∈[8,64]. 32
-    #: sits mid-plateau with total keys = num_bands * 32 (1536 at the
-    #: dedup profile), still >> any local shuffle width; big clusters
-    #: should RAISE it so keys >> executor-cores (the stamp in the
-    #: streaming checkpoint refuses a resumed mismatch).
-    state_group_buckets: int = 32
 
     # ---- determinism ----
     #: single RNG seed for every random draw (pool coefficients, selection);

@@ -54,12 +54,15 @@ from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
     broadcast_if_fits, hamming_col, pair_features)
 
 
-def explode_bands(signatures: DataFrame, buckets_col: str = "buckets") -> DataFrame:
-    """signatures -> (image_id, band_id, bucket); NULL bucket rows (empty
-    docs) never enter a band."""
+def explode_bands(signatures: DataFrame, buckets_col: str = "buckets",
+                  keep: tuple[str, ...] = ()) -> DataFrame:
+    """signatures -> (image_id, *keep, band_id, bucket); NULL bucket rows
+    (empty docs) never enter a band. ``keep`` names columns carried onto
+    every band row of their signature."""
     return (
         signatures
-        .select("image_id", F.posexplode(buckets_col).alias("band_id", "bucket"))
+        .select("image_id", *keep,
+                F.posexplode(buckets_col).alias("band_id", "bucket"))
     )
 
 

@@ -1,4 +1,4 @@
-"""End-to-end STREAMING dedup: incremental signatures → stateful bucket
+"""End-to-end STREAMING dedup: incremental signatures → delta bucket
 join → periodic batch verify + connected-components reconcile.
 
 Composes the three streaming pieces into the continuous-ingest regime's
@@ -8,10 +8,11 @@ is the north rule's resumable-pipeline surface driven by streams):
 1. ``signature_stream`` (streaming/ingest.py) drains newly-landed input
    files into the ``signatures`` stage table — exactly-once via Spark's
    streaming checkpoint; only NEW files are signed.
-2. ``candidate_pair_stream`` (streaming/stateful.py) drains newly-landed
-   signatures through the stateful (band, bucket)-keyed incremental
-   bucket join — each unordered candidate pair is emitted once per
-   bucket across the stream's lifetime.
+2. ``candidate_pair_stream`` (streaming/stateful.py) bands the signature
+   files it has not banded yet and probes the whole table's bands with
+   them — one batch broadcast join per wave, no stream and no state
+   store; each unordered candidate pair is emitted once per bucket
+   across all waves.
 3. An INCREMENTAL batch reconcile: candidate pairs already adjudicated
    (verified or rejected) in a previous cycle are persisted in the
    ``adjudicated`` table; each cycle anti-joins the accumulated
@@ -34,9 +35,9 @@ is the north rule's resumable-pipeline surface driven by streams):
    _ADJ_COMPACT_FILES, so a scheduler running thousands of cycles never
    accretes unbounded small files.
 
-Each ``streaming_dedup_cycle`` call is one availableNow drain of stages
-1+2 plus one reconcile — the "micro-batch dedup" loop a scheduler would
-run continuously.
+Each ``streaming_dedup_cycle`` call is one availableNow drain of stage 1,
+one delta join (stage 2) and one reconcile — the "micro-batch dedup"
+loop a scheduler would run continuously.
 """
 
 from __future__ import annotations
@@ -96,7 +97,7 @@ def _adj_fingerprint(cfg: LshConfig) -> str:
     adjudicated layout version plus the verdict-semantic config fields —
     the thresholds verify_pairs applies and the shingle size the compared
     features were built with. Perf-only knobs (shuffle partitions, Arrow
-    batch size, state grouping, salting) must NOT invalidate the table:
+    batch size, salting) must NOT invalidate the table:
     hashing the full config would brick every existing warehouse on a
     tuning change even though all persisted verdicts remain valid."""
     import hashlib as _hashlib
@@ -115,7 +116,8 @@ def _check_adj_fingerprint(adjudicated_dir: str, cfg: LshConfig) -> None:
     otherwise silently reuse verdicts computed under a different
     jaccard/hamming config and the clusters would come out wrong with no
     error at all (the exact failure _check_state_version guards for the
-    state store). Local-FS only, same contract as _check_state_version."""
+    candidate checkpoint). Local-FS only, same contract as
+    _check_state_version."""
     if "://" in adjudicated_dir:
         raise ValueError(
             f"adjudicated dir {adjudicated_dir!r} is a URI; the config-"
@@ -196,7 +198,7 @@ def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str,
 #: IO-bound), so a wave over the crossover still fans out across workers.
 _INGEST_SPLIT_BYTES = 8 * 1024 * 1024
 #: floor of a spread wave's partition count (capped at the session
-#: parallelism), and of the candidate stream's state partitions.
+#: parallelism).
 _MIN_WAVE_PARTITIONS = 8
 #: bytes a drain reads (``_read_bytes``) under which the wave signs in
 #: place: no Exchange, and the file source's own splits (one task for a
@@ -282,36 +284,27 @@ def _read_bytes(path: str, size: int, with_image: bool) -> int:
 
 
 def _adaptive_partitions(par: int, input_dir: str, sigs_checkpoint: str,
-                         with_image: bool) -> tuple[int | None, int]:
-    """-> (ingest partitions, candidate-stream state partitions), sized
-    from bytes (advisory-size rule, guide §2.2/§6), not from the core
-    count, and capped at the session parallelism ``par``.
+                         with_image: bool) -> int | None:
+    """-> the ingest partition count, sized from bytes (advisory-size
+    rule, guide §2.2/§6), not from the core count, and capped at the
+    session parallelism ``par``.
 
-    The ingest count follows the files this drain will read: those the
+    The count follows the files this drain will read: those the
     signature stream's source log (``_drained_files``) does not list
     yet, sized by ``_read_bytes``. Under ``_IN_PLACE_WAVE_BYTES`` it is
     None (sign in place, no repartition); otherwise one partition per
-    ``_INGEST_SPLIT_BYTES``, floored at ``_MIN_WAVE_PARTITIONS``.
-
-    The state count follows every input file's size. Spark pins it in
-    the candidate stream's checkpoint at the stream's first start, when
-    all files are new anyway; per-partition fixed costs (state-store
-    get/commit, delta files, task launches) dominate small waves, so few
-    partitions measured ~2x faster than the core count on the sf0.1
-    two-wave cycle. A URI input falls back to ``par`` for both."""
+    ``_INGEST_SPLIT_BYTES``, floored at ``_MIN_WAVE_PARTITIONS``. A URI
+    input falls back to ``par``."""
     files = _input_files(input_dir)
     if files is None:
-        return par, par
-
-    def spread(nbytes: int) -> int:
-        return int(min(par, max(_MIN_WAVE_PARTITIONS,
-                                -(-nbytes // _INGEST_SPLIT_BYTES))))
-
+        return par
     drained = _drained_files(sigs_checkpoint)
     new = sum(_read_bytes(p, n, with_image)
               for p, n in files.items() if p not in drained)
-    ingest = None if new < _IN_PLACE_WAVE_BYTES else spread(new)
-    return ingest, spread(sum(files.values()))
+    if new < _IN_PLACE_WAVE_BYTES:
+        return None
+    return int(min(par, max(_MIN_WAVE_PARTITIONS,
+                            -(-new // _INGEST_SPLIT_BYTES))))
 
 
 def _parquet_dir_rows(path: str) -> int:
@@ -410,16 +403,17 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     """One incremental dedup cycle over ``input_dir`` (a parquet dir that
     accumulates input files between cycles). Returns
     ``{"clusters": DataFrame, "n_signatures": int, "n_candidates": int,
-    "n_new_adjudicated": int}`` — clusters is also written to
-    ``<warehouse>/clusters``; n_new_adjudicated counts the candidate
-    pairs verified (or rejected) for the first time in this cycle.
+    "n_cap_dropped": int, "n_new_adjudicated": int}`` — clusters is also
+    written to ``<warehouse>/clusters``; n_cap_dropped counts the wave's
+    bucket members the ``max_bucket_size`` cap refused;
+    n_new_adjudicated counts the candidate pairs verified (or rejected)
+    for the first time in this cycle.
 
-    How many tasks sign the wave and how many partitions the candidate
-    stream's state takes are ``_adaptive_partitions``' decision; the CC
-    strategy is ``assign_clusters``' own. Neither is a parameter.
+    How many tasks sign the wave is ``_adaptive_partitions``' decision;
+    the CC strategy is ``assign_clusters``' own. Neither is a parameter.
 
-    ``reconcile=False`` drains stages 1+2 only (signatures + candidate
-    state advance; clusters table left as-is, returned as None, and no
+    ``reconcile=False`` runs stages 1+2 only (signatures + candidate
+    rows advance; clusters table left as-is, returned as None, and no
     n_new_adjudicated key). A scheduler ingesting many small waves
     between reads runs drain-only cycles and reconciles once per read
     window: CC is a global fixpoint over ACCUMULATED edges, so the final
@@ -438,7 +432,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     # Sized before the drain, from the files it is about to read: a small
     # wave signs in place (the file source's own splits), a large one is
     # repartitioned so a wave landing as few files still spreads.
-    ingest_parts, state_parts = _adaptive_partitions(
+    ingest_parts = _adaptive_partitions(
         spark.sparkContext.defaultParallelism, input_dir, sigs_ckpt,
         with_image)
     q = signature_stream(spark, input_dir, sigs_dir, sigs_ckpt, cfg,
@@ -446,17 +440,9 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
                          ingest_partitions=ingest_parts)
     _await_drained(q, timeout_s)
     sig_schema = q.schema
-    # The stateful join's state-store partition count is captured from
-    # spark.sql.shuffle.partitions at the query's FIRST start and pinned
-    # in the checkpoint, so it is set for the candidate stream only.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    try:
-        q = candidate_pair_stream(spark, sigs_dir, pairs_dir,
-                                  os.path.join(warehouse, "ckpt_pairs"), cfg)
-        _await_drained(q, timeout_s)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _, n_dropped = candidate_pair_stream(
+        spark, sigs_dir, pairs_dir, os.path.join(warehouse, "ckpt_pairs"),
+        cfg)
 
     # Every table is read with the schema it was written with: an
     # inferred schema costs one footer job per read. The signature schema
@@ -477,7 +463,8 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     if not reconcile:
         return {"clusters": None,
                 "n_signatures": _parquet_dir_rows(sigs_dir),
-                "n_candidates": n_cands}
+                "n_candidates": n_cands,
+                "n_cap_dropped": n_dropped}
     clusters, n_new = _reconcile(
         spark, sigs, cands, cfg,
         adjudicated_dir=os.path.join(warehouse, "adjudicated"),
@@ -490,18 +477,19 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     return {"clusters": spark.read.schema(clusters.schema).parquet(out_dir),
             "n_signatures": _parquet_dir_rows(sigs_dir),
             "n_candidates": n_cands,
+            "n_cap_dropped": n_dropped,
             "n_new_adjudicated": n_new}
 
 
 def unload_state_stores(spark: SparkSession) -> None:
     """Stop the executor-side StateStore machinery: unload every loaded
-    provider and cancel the background maintenance task. Call AFTER the
-    streaming queries have terminated and BEFORE deleting their
-    checkpoint dirs — the maintenance thread otherwise keeps snapshotting
-    loaded state asynchronously and races the deletion (observed as a
-    StateStore$MaintenanceTask stack trace on stderr during teardown).
-    Spark lazily restarts the machinery on the next stateful query, so
-    this is safe between runs in one session."""
+    provider and cancel the background maintenance task. No engine query
+    loads a state store any more (the candidate step is a batch join);
+    this stays for callers that tear down checkpoint dirs after running
+    other stateful queries in the session, whose maintenance thread
+    would otherwise race the deletion. Spark lazily restarts the
+    machinery on the next stateful query, so this is safe between runs
+    in one session."""
     spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
 

@@ -143,10 +143,10 @@ def test_streaming_incremental_signatures(spark, tmp_path_factory):
 
 
 def test_stateful_incremental_candidates(spark, images_df, tmp_path_factory):
-    """The stateful streaming bucket join (applyInPandasWithState) must
-    emit, across two availableNow drains, EXACTLY the batch bucket join's
-    canonical pair set — each unordered pair once per (band, bucket),
-    deduped to the same distinct (a, b) set."""
+    """The delta bucket join must emit, across two waves, EXACTLY the
+    batch bucket join's canonical pair set — each unordered pair once per
+    (band, bucket), deduped to the same distinct (a, b) set. The pair set
+    does not depend on how the rows are split into waves."""
     from pyspark.sql import functions as F
 
     from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
@@ -157,10 +157,6 @@ def test_stateful_incremental_candidates(spark, images_df, tmp_path_factory):
         candidate_pair_stream)
 
     base = tmp_path_factory.mktemp("stateful")
-    in_dir = str(base / "sigs_in")
-    out_dir = str(base / "pairs_out")
-    ckpt = str(base / "ckpt")
-    os.makedirs(in_dir)
 
     sigs = (compute_signatures(images_df, CFG, with_image=False)
             .select("image_id", "buckets").localCheckpoint(eager=True))
@@ -168,57 +164,172 @@ def test_stateful_incremental_candidates(spark, images_df, tmp_path_factory):
     batch = {(r["a"], r["b"]) for r in
              candidate_pairs_from_bands(explode_bands(sigs), CFG).collect()}
 
-    half1 = sigs.filter(F.crc32(F.col("image_id")) % 2 == 0)
-    half2 = sigs.filter(F.crc32(F.col("image_id")) % 2 == 1)
-    half1.write.mode("append").parquet(in_dir)
-    q = candidate_pair_stream(spark, in_dir, out_dir, ckpt, CFG)
-    q.awaitTermination(120)
-    half2.write.mode("append").parquet(in_dir)
-    q = candidate_pair_stream(spark, in_dir, out_dir, ckpt, CFG)
-    q.awaitTermination(120)
+    def waves(n):
+        """The same rows signed as ``n`` waves -> the emitted rows."""
+        in_dir, out_dir = str(base / f"in{n}"), str(base / f"out{n}")
+        appended = 0
+        for w in range(n):
+            sigs.filter(F.crc32(F.col("image_id")) % n == w) \
+                .write.mode("append").parquet(in_dir)
+            appended += candidate_pair_stream(
+                spark, in_dir, out_dir, str(base / f"ckpt{n}"), CFG)[0]
+        rows = spark.read.parquet(out_dir).collect()
+        assert appended == len(rows)
+        return rows
 
-    got_rows = spark.read.parquet(out_dir).collect()
-    got = {(r["a"], r["b"]) for r in got_rows}
-    assert got == batch
-    # once per (band,bucket): no duplicate emissions under replay-safe state
+    got_rows = waves(2)
+    assert {(r["a"], r["b"]) for r in got_rows} == batch
+    # once per (band,bucket): no duplicate emissions across waves
     keyed = [(r["a"], r["b"], r["band_id"], r["bucket"]) for r in got_rows]
     assert len(keyed) == len(set(keyed))
-    # trigger-invariance: force 1-file micro-batches over the SAME input;
-    # the emitted distinct pair set must not change (splitting a drain
-    # multiplies per-key state round-trips, never alters the semantics)
-    out_split = str(base / "pairs_out_split")
-    ckpt_split = str(base / "ckpt_split")
-    q = candidate_pair_stream(spark, in_dir, out_split, ckpt_split, CFG,
-                              max_files_per_trigger=1)
-    q.awaitTermination(180)
-    got_split = {(r["a"], r["b"]) for r in
-                 spark.read.parquet(out_split).collect()}
-    assert got_split == batch
+    # wave-split invariance: the same rows as 1 wave and as 3 waves
+    for n in (1, 3):
+        assert {(r["a"], r["b"]) for r in waves(n)} == batch
+
+
+def _c2(n):
+    return n * (n - 1) // 2
 
 
 def test_stateful_cap_admits_first_cap_members(spark, tmp_path_factory):
-    """A bucket of cap + 5 identical signatures: the stateful join admits
+    """A bucket of cap + 5 identical signatures: the delta join admits
     exactly ``max_bucket_size`` members and emits C(cap, 2) pairs; the
-    five later arrivals pair with nothing. (The batch join keeps a
-    hash-chosen subset instead, banding._downsample_keep.)"""
+    five later arrivals pair with nothing and are counted as refused.
+    (The batch join keeps a hash-chosen subset instead,
+    banding._downsample_keep.) A second wave meeting a bucket already at
+    cap - 2 admits exactly its first 2 members, in image_id order."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
         candidate_pair_stream)
 
     cap = 6
     cfg = LshConfig(num_bands=1, max_bucket_size=cap)
     base = tmp_path_factory.mktemp("stateful_cap")
-    in_dir = str(base / "sigs_in")
-    spark.createDataFrame([(f"s{i:02d}", [5]) for i in range(cap + 5)],
-                          "image_id string, buckets array<long>") \
-        .coalesce(1).write.parquet(in_dir)
-    out_dir = str(base / "pairs_out")
-    q = candidate_pair_stream(spark, in_dir, out_dir, str(base / "ckpt"), cfg)
-    q.awaitTermination(120)
+
+    def wave(in_dir, ids, bucket):
+        spark.createDataFrame([(i, [bucket]) for i in ids],
+                              "image_id string, buckets array<long>") \
+            .coalesce(1).write.mode("append").parquet(in_dir)
+
+    in_dir, out_dir = str(base / "sigs_in"), str(base / "pairs_out")
+    wave(in_dir, [f"s{i:02d}" for i in range(cap + 5)], 5)
+    n, dropped = candidate_pair_stream(spark, in_dir, out_dir,
+                                       str(base / "ckpt"), cfg)
     rows = spark.read.parquet(out_dir).collect()
     members = {r["a"] for r in rows} | {r["b"] for r in rows}
     assert len(members) == cap
-    assert len(rows) == len({(r["a"], r["b"]) for r in rows}) \
+    assert n == len(rows) == len({(r["a"], r["b"]) for r in rows}) \
         == cap * (cap - 1) // 2
+    assert dropped == 5
+
+    # a second wave of 5 meets the bucket at cap - 2: it admits 2
+    in_dir, out_dir = str(base / "sigs_in2"), str(base / "pairs_out2")
+    ckpt = str(base / "ckpt2")
+    old = [f"o{i}" for i in range(cap - 2)]
+    wave(in_dir, old, 9)
+    assert candidate_pair_stream(spark, in_dir, out_dir, ckpt, cfg) \
+        == (_c2(cap - 2), 0)
+    # filler rows in another bucket lift the table over the cap
+    wave(in_dir, [f"f{i}" for i in range(cap)], 11)
+    new = ["n4", "n0", "n3", "n1", "n2"]
+    wave(in_dir, new, 9)
+    n, dropped = candidate_pair_stream(spark, in_dir, out_dir, ckpt, cfg)
+    rows = spark.read.parquet(out_dir).filter("bucket = 9").collect()
+    members = {r["a"] for r in rows} | {r["b"] for r in rows}
+    assert members == set(old) | {"n0", "n1"}
+    assert len(rows) == _c2(cap)
+    assert dropped == 3
+    assert n == _c2(cap) - _c2(cap - 2) + _c2(cap)  # bucket 9 + the filler
+
+
+def test_candidate_replay_is_absorbed(spark, tmp_path_factory):
+    """A crash after the candidate append but before the banded log
+    advances re-emits that wave's rows on the next cycle. The reconcile
+    absorbs them: the clusters stay identical and no pair is adjudicated
+    again."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        streaming_dedup_cycle)
+    from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
+        _BANDED_LOG)
+
+    base = tmp_path_factory.mktemp("replay")
+    inp, wh = str(base / "in"), str(base / "wh")
+    log = os.path.join(wh, "ckpt_pairs", _BANDED_LOG)
+    images, _ = make_fixture_pandas(60, seed=42)
+    spark.createDataFrame(images.iloc[:30]).write.parquet(
+        os.path.join(inp, "w1"))
+    streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    shutil.copy(log, str(base / "log_wave1"))
+    spark.createDataFrame(images.iloc[30:]).write.parquet(
+        os.path.join(inp, "w2"))
+    r2 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    assert r2["n_new_adjudicated"] > 0
+    want = _clusters_dict(r2)  # r3 overwrites the table r2 reads
+    # roll the log back to before wave 2: its candidates are re-emitted
+    shutil.copy(str(base / "log_wave1"), log)
+    r3 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    assert r3["n_candidates"] > r2["n_candidates"]
+    assert r3["n_new_adjudicated"] == 0
+    assert _clusters_dict(r3) == want
+
+
+def test_delta_broadcast_bound_covers_the_relation(spark, tmp_path_factory,
+                                                   monkeypatch):
+    """The byte bound the delta join passes to ``broadcast_if_fits`` is at
+    least the data size of the BroadcastExchange it builds, as the SQL
+    status store reports it, so the wave is never broadcast on an
+    undercount."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming import stateful
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        streaming_dedup_cycle)
+
+    bounds = []
+    orig = stateful._delta_bytes
+
+    def spy(rows, id_bytes):
+        bounds.append(orig(rows, id_bytes))
+        return bounds[-1]
+
+    base = tmp_path_factory.mktemp("bcast_bound")
+    inp, wh = str(base / "in"), str(base / "wh")
+    images, _ = make_fixture_pandas(80, seed=42)
+    spark.createDataFrame(images).write.parquet(os.path.join(inp, "w1"))
+    sc = spark.sparkContext
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        execs = sql.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    seen = {e.executionId() for e in executions()}
+    monkeypatch.setattr(stateful, "_delta_bytes", spy)
+    streaming_dedup_cycle(spark, inp + "/*", wh, CFG, reconcile=False)
+    sizes = []
+    for e in executions():
+        if e.executionId() in seen:
+            continue
+        metrics = sql.executionMetrics(e.executionId())
+        nodes = sql.planGraph(e.executionId()).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if node.name() != "BroadcastExchange":
+                continue
+            ms = node.metrics()
+            for j in range(ms.size()):
+                m = ms.apply(j)
+                if m.name() == "data size" and \
+                        metrics.contains(m.accumulatorId()):
+                    sizes.append(_bytes(metrics.apply(m.accumulatorId())))
+    assert len(bounds) == 1 and sizes
+    assert bounds[0] >= max(sizes)
+
+
+def _bytes(metric: str) -> float:
+    """A driver-side Spark size metric as the status store formats it
+    ("1056.0 KiB") -> bytes."""
+    value, unit = metric.split()
+    return float(value) * {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20,
+                           "GiB": 1 << 30}[unit]
 
 
 def test_streaming_e2e_dedup_equals_batch(spark, tmp_path_factory):
@@ -314,7 +425,10 @@ def test_streaming_cycle_job_count(spark, tmp_path_factory):
     before, 15 after. The wave then signs in place (no repartition job),
     the verdict append is the job that materializes the wave (no
     checkpoint job) and the candidate rows bound CC (no entry checkpoint
-    job): 15 before, 12 after. A new job in the cycle shows here first."""
+    job): 15 before, 12 after. The candidate step is then a broadcast
+    delta join, whose broadcast collect and write replace the stateful
+    stream's one micro-batch job: 12 before, 13 after. A new job in the
+    cycle shows here first."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         streaming_dedup_cycle)
     from perfbench.sparkstats import StatusStore
@@ -331,7 +445,7 @@ def test_streaming_cycle_job_count(spark, tmp_path_factory):
     store = StatusStore(spark)
     r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
     assert r["n_new_adjudicated"] > 0
-    assert len(store.new_jobs()) == 12
+    assert len(store.new_jobs()) == 13
 
 
 def _caption_wave(path, rows, seed, image_bytes=0):
@@ -371,8 +485,7 @@ def test_wave_sizing_follows_the_new_files(tmp_path):
     large first wave spreads; a small second wave then signs in place
     (sizing from every file, as before, would spread it too). A wave of
     large images but small captions signs in place unless the drain
-    signs images. An unreadable source log counts every file as new.
-    The state partitions follow every input byte throughout."""
+    signs images. An unreadable source log counts every file as new."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         _IN_PLACE_WAVE_BYTES, _MIN_WAVE_PARTITIONS, _adaptive_partitions)
 
@@ -382,23 +495,23 @@ def test_wave_sizing_follows_the_new_files(tmp_path):
     big = _caption_wave(os.path.join(inp, "w1", "part-0.parquet"), 8000, 1)
     assert os.path.getsize(big) > _IN_PLACE_WAVE_BYTES
     # first drain: no source log yet, every file is new
-    assert _adaptive_partitions(par, glob, ckpt, False) == (spread, spread)
+    assert _adaptive_partitions(par, glob, ckpt, False) == spread
 
     _source_log(ckpt, 0, [big])
     small = _caption_wave(os.path.join(inp, "w2", "part-0.parquet"), 1000, 2)
     assert os.path.getsize(big) + os.path.getsize(small) \
         > _IN_PLACE_WAVE_BYTES
-    assert _adaptive_partitions(par, glob, ckpt, False) == (None, spread)
+    assert _adaptive_partitions(par, glob, ckpt, False) is None
 
     _source_log(ckpt, 1, [small])
     images = _caption_wave(os.path.join(inp, "w3", "part-0.parquet"), 40, 3,
                            image_bytes=16 * 1024)
     assert os.path.getsize(images) > _IN_PLACE_WAVE_BYTES
-    assert _adaptive_partitions(par, glob, ckpt, False)[0] is None
-    assert _adaptive_partitions(par, glob, ckpt, True)[0] == spread
+    assert _adaptive_partitions(par, glob, ckpt, False) is None
+    assert _adaptive_partitions(par, glob, ckpt, True) == spread
 
     _source_log(ckpt, 1, [], body="not a source log")
-    assert _adaptive_partitions(par, glob, ckpt, False) == (spread, spread)
+    assert _adaptive_partitions(par, glob, ckpt, False) == spread
 
 
 def test_small_wave_signs_without_exchange(spark, tmp_path_factory,
@@ -452,36 +565,31 @@ def test_verdict_append_counts_the_wave(spark, tmp_path_factory):
 
 
 def test_state_checkpoint_version_guard(tmp_path):
-    """A checkpoint written under another state layout (schema or
-    grouping key changed) must be refused with a clear error, not
-    resumed into an opaque state-store deserialization failure."""
+    """A checkpoint written under another layout (a v2 state-store
+    checkpoint, or one from before versioning) or under another bucket
+    config must be refused with a clear rebuild error, not resumed."""
+    import dataclasses
+
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
-        STATE_FORMAT_VERSION, _VERSION_FILE, _check_state_version)
+        STATE_FORMAT_VERSION, _VERSION_FILE, _check_state_version,
+        _state_layout_stamp)
 
     ck = tmp_path / "ckpt"
     _check_state_version(str(ck))  # fresh dir -> created + stamped
     stamp = ck / _VERSION_FILE
-    assert stamp.read_text() == str(STATE_FORMAT_VERSION)
+    assert stamp.read_text() == str(STATE_FORMAT_VERSION) == "3"
     _check_state_version(str(ck))  # matching stamp -> accepted
 
-    stamp.write_text("1")          # older layout -> refused, named
-    with pytest.raises(RuntimeError, match="state layout 1"):
-        _check_state_version(str(ck))
+    # a v2 (coarse state-key) checkpoint of the same config -> refused
+    stamp.write_text("2:g32" + _state_layout_stamp(CFG)[1:])
+    with pytest.raises(RuntimeError, match="state layout 2:g32.*Delete"):
+        _check_state_version(str(ck), CFG)
 
-    # grouping-factor change (same schema version): resuming would
-    # silently remap bucket state and MISS pairs -> refused
-    import dataclasses
-
-    from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
-        _state_layout_stamp)
     stamp.write_text(_state_layout_stamp(CFG))
     _check_state_version(str(ck), CFG)  # matching cfg stamp -> accepted
-    other = dataclasses.replace(CFG, state_group_buckets=7)
-    with pytest.raises(RuntimeError, match="g7"):
-        _check_state_version(str(ck), other)
-    # signature-chain change (bucket VALUES remap, not just the coarse
-    # key): every field that moves a row's (band, bucket) must refuse a
-    # resume — prior members would be invisible to new arrivals
+    # signature-chain change: every field that moves a row's (band,
+    # bucket) must refuse a resume — prior members would be invisible
+    # to new arrivals
     for field, val in [("num_bands", CFG.num_bands + 1),
                        ("rows_per_band", CFG.rows_per_band + 1),
                        ("signature_pool_size", CFG.signature_pool_size + 1),
@@ -491,7 +599,6 @@ def test_state_checkpoint_version_guard(tmp_path):
         rechained = dataclasses.replace(CFG, **{field: val})
         with pytest.raises(RuntimeError, match="state layout"):
             _check_state_version(str(ck), rechained)
-    stamp.write_text("1")  # restore for the tail of the test
 
     stamp.unlink()                 # pre-versioning checkpoint with
     (ck / "offsets").mkdir()       # real content -> also refused
