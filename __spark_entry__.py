@@ -849,14 +849,10 @@ def q_streaming_dedup_clusters(spark, sf):
     import shutil
 
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
-        streaming_dedup_cycle, unload_state_stores)
+        streaming_dedup_cycle)
 
     base = os.path.join("/tmp/dlsh_stream_e2e",
                         os.path.basename(sf.rstrip("/")))
-    # the cycle loads no state store; unload any that another stateful
-    # query in this session left, before deleting checkpoint dirs
-    # (streaming/e2e.py helper doc)
-    unload_state_stores(spark)
     shutil.rmtree(base, ignore_errors=True)
     inp = os.path.join(base, "in")
     wh = os.path.join(base, "wh")

@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.operators import banding, components, pairs, suffix
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import compute_signatures
-from distributed_gpu_lsh_using_sycl_spark.sources.tables import TableIO
+from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
+    TableIO, read_json, write_json)
 
 STAGES = ("signatures", "bands", "candidates", "pairs", "edges", "clusters")
 
@@ -89,10 +90,8 @@ class DedupPipeline:
     # manifest
     # ------------------------------------------------------------------ #
     def _manifest(self) -> dict:
-        if self._manifest_path and os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        return {"config_hash": self.cfg.config_hash(), "stages": {}}
+        fresh = {"config_hash": self.cfg.config_hash(), "stages": {}}
+        return read_json(self._manifest_path, fresh) if self._manifest_path else fresh
 
     def _record(self, stage: str, status: str, rows: int | None, millis: int) -> None:
         self.metrics.append({
@@ -112,10 +111,7 @@ class DedupPipeline:
                 "status": status, "rows": rows, "millis": millis,
                 "run_id": self.run_id, "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(m, f, indent=1)
-            os.replace(tmp, self._manifest_path)
+            write_json(self._manifest_path, m)
 
     def _done(self, stage: str) -> bool:
         if not self.io:

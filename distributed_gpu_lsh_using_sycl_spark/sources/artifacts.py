@@ -20,9 +20,8 @@ cache can change WHEN work happens, never what any query returns; the
 driver's DuckDB oracles recompute the artifact's chain from scratch and
 hash-match it either way.
 
-Local-FS paths by sandbox contract (same note as streaming's guards); a
-cluster deployment points ``artifact_root`` at shared storage and swaps
-the os.path probes for the Hadoop FileSystem API.
+The artifact root is a local path, like every warehouse path
+(``sources/tables.py``).
 """
 
 from __future__ import annotations

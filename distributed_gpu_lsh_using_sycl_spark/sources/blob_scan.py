@@ -51,6 +51,7 @@ from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.functions import hashing as H
 from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
     WINDOW_FIELDS, simhash_batch, text_signature_batch)
+from distributed_gpu_lsh_using_sycl_spark.sources.tables import parquet_footer
 
 
 def _sig_schema(id_type: T.DataType, with_windows: bool) -> T.StructType:
@@ -78,12 +79,8 @@ def _row_groups(path: str) -> list[tuple[str, int, int]]:
 
     out: list[tuple[str, int, int]] = []
     for frag in ds.dataset(path, format="parquet").get_fragments():
-        md = frag.metadata
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            size = sum(g.column(c).total_compressed_size
-                       for c in range(g.num_columns))
-            out.append((frag.path, rg, size))
+        _, sizes = parquet_footer(frag)
+        out.extend((frag.path, rg, size) for rg, size in enumerate(sizes))
     if not out:
         raise ValueError(f"no parquet row groups under {path!r}")
     return out

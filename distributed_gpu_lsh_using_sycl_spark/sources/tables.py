@@ -6,11 +6,19 @@ a real cluster the same ``TableIO`` speaks Iceberg (``writeTo`` /
 what the reference's binary-file header gave it (schema + count,
 binary_parser.hpp:33-47) plus snapshot isolation, partition pruning and
 min/max skipping. The engine code is format-agnostic through this module.
+
+It also owns the warehouse's file metadata: the engine reads parquet
+footers, lists data files, guards stamp files and publishes JSON logs
+only through the functions at its end. They speak the local file system
+only: a URI lists as unknown and the stamp guard refuses it. A cluster
+deployment moves them to the Hadoop FileSystem API, and nothing else.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -171,7 +179,95 @@ class TableIO:
         if self.fmt == "iceberg":
             return self.spark.catalog.tableExists(f"{self.warehouse}.{name}")
         p = self._path(name)
-        return os.path.isdir(p) and (
-            os.path.exists(os.path.join(p, "_SUCCESS")) or any(
-                f.endswith(".parquet") for f in os.listdir(p))
-        )
+        return os.path.exists(os.path.join(p, "_SUCCESS")) or bool(data_files(p))
+
+
+def data_files(path: str) -> dict[str, int] | None:
+    """Real path -> size of every data file under the directory ``path``,
+    skipping names that start with ``_`` or ``.`` (Spark's hidden paths:
+    ``_SUCCESS``, ``_spark_metadata``, stamps, ``.crc`` files). None when
+    ``path`` is a URI or no local directory."""
+    if "://" in path or not os.path.isdir(path):
+        return None
+    out = {}
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(root, f)
+                try:
+                    out[os.path.realpath(full)] = os.path.getsize(full)
+                except OSError:  # removed since the walk listed it
+                    pass
+    return out
+
+
+def parquet_footer(file, columns: Callable[[str], bool] | None = None,
+                   uncompressed: bool = False) -> tuple[int, list[int]]:
+    """(rows, column-chunk bytes of each row group) of one parquet file,
+    from its footer alone. ``file`` is a local path or a
+    ``pyarrow.dataset`` parquet fragment (which reads URIs too). The
+    bytes are the compressed (on-disk) or uncompressed sizes of the
+    columns ``columns`` keeps (all by default). Raises OSError or
+    ValueError when the footer cannot be read."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(file) if isinstance(file, str) else file.metadata
+    size = "total_uncompressed_size" if uncompressed else "total_compressed_size"
+    groups = []
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        chunks = (rg.column(j) for j in range(rg.num_columns))
+        groups.append(sum(getattr(c, size) for c in chunks
+                          if columns is None or columns(c.path_in_schema)))
+    return meta.num_rows, groups
+
+
+def parquet_rows(path: str) -> int:
+    """Rows of every data file under the directory ``path``, from the
+    footers: no Spark job. It counts every file on disk, committed or
+    not, so it suits batch-written tables, not a streaming sink."""
+    return sum(parquet_footer(f)[0] for f in data_files(path) or {})
+
+
+def check_stamp(path: str, stamp_file: str, want: str,
+                populated: Callable[[str], object], uri_error: str,
+                mismatch_error: str) -> None:
+    """Stamp a fresh directory ``path`` with ``want`` (in ``stamp_file``);
+    refuse a populated one (``populated(path)`` truthy) stamped otherwise
+    or not at all: ``RuntimeError(mismatch_error)``, formatted with
+    ``path``, ``have`` (or ``pre-versioning``) and ``want``. A URI is
+    refused, ``ValueError(uri_error)`` formatted with ``path``: a local
+    check would treat it as fresh and never fire."""
+    if "://" in path:
+        raise ValueError(uri_error.format(path=path))
+    stamp = os.path.join(path, stamp_file)
+    if os.path.isdir(path) and populated(path):
+        have = None
+        if os.path.exists(stamp):
+            with open(stamp) as f:
+                have = f.read().strip()
+        if have != want:
+            raise RuntimeError(mismatch_error.format(
+                path=path, have=have or "pre-versioning", want=want))
+        return
+    os.makedirs(path, exist_ok=True)
+    with open(stamp, "w") as f:
+        f.write(want)
+
+
+def read_json(path: str, default):
+    """The JSON document at ``path``; ``default`` when there is none."""
+    if not os.path.exists(path):
+        return default
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_json(path: str, doc) -> None:
+    """Publish ``doc`` at ``path`` atomically: a reader sees the old
+    document or the new one, never a partial write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(doc, f, indent=1)
+    os.replace(tmp, path)

@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
+from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
+    check_stamp, data_files, parquet_footer, parquet_rows)
 
 
 def _await_drained(q, timeout_s: int) -> None:
@@ -116,49 +118,37 @@ def _check_adj_fingerprint(adjudicated_dir: str, cfg: LshConfig) -> None:
     otherwise silently reuse verdicts computed under a different
     jaccard/hamming config and the clusters would come out wrong with no
     error at all (the exact failure _check_state_version guards for the
-    candidate checkpoint). Local-FS only, same contract as
-    _check_state_version."""
-    if "://" in adjudicated_dir:
-        raise ValueError(
-            f"adjudicated dir {adjudicated_dir!r} is a URI; the config-"
-            "fingerprint guard only supports local paths — a URI would "
-            "silently bypass it.")
+    candidate checkpoint). A URI is refused (``tables.check_stamp``)."""
     # Crash recovery for _compact_adjudicated's dir swap: a death between
     # its two renames leaves the whole table at .compact.old and nothing
-    # at the live path — restore it BEFORE the has-data probe, or this
-    # function would stamp a fresh empty dir and every persisted verdict
+    # at the live path — restore it BEFORE the has-data probe, or the
+    # guard would stamp a fresh empty dir and every persisted verdict
     # would be silently re-verified from scratch.
     old = adjudicated_dir.rstrip("/") + ".compact.old"
     if os.path.isdir(old):
         import shutil
 
-        if _parquet_dir_has_data(adjudicated_dir):
+        if data_files(adjudicated_dir):
             # crash fell between publish and cleanup: live table is
             # intact, the pre-compaction copy is now redundant
             shutil.rmtree(old, ignore_errors=True)
         else:
             shutil.rmtree(adjudicated_dir, ignore_errors=True)
             os.rename(old, adjudicated_dir)
-    want = _adj_fingerprint(cfg)
-    stamp = os.path.join(adjudicated_dir, _ADJ_STAMP_FILE)
-    if _parquet_dir_has_data(adjudicated_dir):
-        have = None
-        if os.path.exists(stamp):
-            with open(stamp) as f:
-                have = f.read().strip()
-        if have != want:
-            raise RuntimeError(
-                f"adjudicated table {adjudicated_dir!r} was written under "
-                f"config fingerprint {have or 'pre-versioning'}, but this "
-                f"cycle runs under {want} (LshConfig thresholds/schema "
-                "changed). Reusing those verdicts would silently produce "
-                "wrong clusters — delete the adjudicated dir (verdicts "
-                "will be recomputed from the candidate table) or restore "
-                "the original config.")
-        return
-    os.makedirs(adjudicated_dir, exist_ok=True)
-    with open(stamp, "w") as f:
-        f.write(want)
+    check_stamp(
+        adjudicated_dir, _ADJ_STAMP_FILE, _adj_fingerprint(cfg),
+        populated=data_files,
+        uri_error=(
+            "adjudicated dir {path!r} is a URI; the config-fingerprint "
+            "guard only supports local paths — a URI would silently "
+            "bypass it."),
+        mismatch_error=(
+            "adjudicated table {path!r} was written under config "
+            "fingerprint {have}, but this cycle runs under {want} (LshConfig "
+            "thresholds/schema changed). Reusing those verdicts would "
+            "silently produce wrong clusters — delete the adjudicated dir "
+            "(verdicts will be recomputed from the candidate table) or "
+            "restore the original config."))
 
 
 def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str,
@@ -170,10 +160,7 @@ def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str,
     rows a crash between append and cluster-write can leave (documented
     idempotence), shrinking the table to its logical content. The table
     is read with ``_adj_schema(id_type)``: no footer job."""
-    parts = [os.path.join(r, f)
-             for r, _, files in os.walk(adjudicated_dir)
-             for f in files if f.endswith(".parquet")]
-    if len(parts) <= _ADJ_COMPACT_FILES:
+    if len(data_files(adjudicated_dir) or {}) <= _ADJ_COMPACT_FILES:
         return
     import shutil
 
@@ -216,25 +203,6 @@ _MIN_WAVE_PARTITIONS = 8
 _IN_PLACE_WAVE_BYTES = 384 * 1024
 
 
-def _input_files(input_dir: str) -> dict[str, int] | None:
-    """Real path -> size of every data file under the input root (names
-    starting with ``_`` or ``.`` skipped); None for a URI or a missing
-    root. Local-FS sizing, same contract as the rest of this module."""
-    root = input_dir[:-2] if input_dir.endswith("/*") else input_dir
-    if "://" in root or not os.path.isdir(root):
-        return None
-    out = {}
-    for r, _, files in os.walk(root):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                path = os.path.join(r, f)
-                try:
-                    out[os.path.realpath(path)] = os.path.getsize(path)
-                except OSError:
-                    pass
-    return out
-
-
 def _drained_files(checkpoint_dir: str) -> set[str]:
     """Real paths of the input files the signature stream has already
     drained: every ``path`` its file-source log
@@ -267,20 +235,12 @@ def _read_bytes(path: str, size: int, with_image: bool) -> int:
     footer lists them, the image column's only when the drain signs
     images (the scan prunes it otherwise); the file's ``size`` when the
     footer is unreadable."""
-    import pyarrow.parquet as _pq
-
     try:
-        meta = _pq.ParquetFile(path).metadata
+        _, groups = parquet_footer(
+            path, columns=None if with_image else "bytes".__ne__)
     except (OSError, ValueError):
         return size
-    total = 0
-    for i in range(meta.num_row_groups):
-        rg = meta.row_group(i)
-        for j in range(rg.num_columns):
-            col = rg.column(j)
-            if with_image or col.path_in_schema != "bytes":
-                total += col.total_compressed_size
-    return total
+    return sum(groups)
 
 
 def _adaptive_partitions(par: int, input_dir: str, sigs_checkpoint: str,
@@ -294,8 +254,9 @@ def _adaptive_partitions(par: int, input_dir: str, sigs_checkpoint: str,
     yet, sized by ``_read_bytes``. Under ``_IN_PLACE_WAVE_BYTES`` it is
     None (sign in place, no repartition); otherwise one partition per
     ``_INGEST_SPLIT_BYTES``, floored at ``_MIN_WAVE_PARTITIONS``. A URI
-    input falls back to ``par``."""
-    files = _input_files(input_dir)
+    or missing input root falls back to ``par``."""
+    files = data_files(input_dir[:-2] if input_dir.endswith("/*")
+                       else input_dir)
     if files is None:
         return par
     drained = _drained_files(sigs_checkpoint)
@@ -305,34 +266,6 @@ def _adaptive_partitions(par: int, input_dir: str, sigs_checkpoint: str,
         return None
     return int(min(par, max(_MIN_WAVE_PARTITIONS,
                             -(-new // _INGEST_SPLIT_BYTES))))
-
-
-def _parquet_dir_rows(path: str) -> int:
-    """Exact row count of a local parquet dir from the file footers — no
-    Spark job. The cycle's returned n_signatures/n_candidates metrics
-    previously cost one full count() job each per cycle; footer metadata
-    is the same number for the append-only stage tables (local-FS
-    contract, same as every other path check in this module)."""
-    import pyarrow.parquet as _pq
-
-    total = 0
-    for r, _, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += _pq.ParquetFile(os.path.join(r, f)).metadata.num_rows
-    return total
-
-
-def _parquet_dir_has_data(path: str) -> bool:
-    """True iff ``path`` is a directory with at least one parquet part —
-    the only condition under which the candidate table is batch-readable.
-    A local-FS check suffices here (the sandbox warehouse is a local
-    dir); a real deployment points the warehouse at an Iceberg table
-    whose existence the catalog answers (sources/tables.py)."""
-    if not os.path.isdir(path):
-        return False
-    return any(f.endswith(".parquet")
-               for _, _, files in os.walk(path) for f in files)
 
 
 def _reconcile(spark: SparkSession, sigs: DataFrame,
@@ -376,7 +309,7 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
     if adjudicated_dir:
         _check_adj_fingerprint(adjudicated_dir, cfg)
         _compact_adjudicated(spark, adjudicated_dir, id_type)  # before any read
-        if _parquet_dir_has_data(adjudicated_dir):
+        if data_files(adjudicated_dir):
             prior = spark.read.schema(_adj_schema(id_type)).parquet(
                 adjudicated_dir)
             pairs = pairs.join(prior.select("a", "b"), ["a", "b"],
@@ -422,12 +355,13 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
         signature_stream)
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
-        candidate_pair_stream)
+        banded_rows, candidate_pair_stream)
 
     cfg = cfg or LshConfig()
     sigs_dir = os.path.join(warehouse, "signatures")
     pairs_dir = os.path.join(warehouse, "cand_pairs")
     sigs_ckpt = os.path.join(warehouse, "ckpt_sigs")
+    pairs_ckpt = os.path.join(warehouse, "ckpt_pairs")
 
     # Sized before the drain, from the files it is about to read: a small
     # wave signs in place (the file source's own splits), a large one is
@@ -440,9 +374,10 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
                          ingest_partitions=ingest_parts)
     _await_drained(q, timeout_s)
     sig_schema = q.schema
-    _, n_dropped = candidate_pair_stream(
-        spark, sigs_dir, pairs_dir, os.path.join(warehouse, "ckpt_pairs"),
-        cfg)
+    _, n_dropped = candidate_pair_stream(spark, sigs_dir, pairs_dir,
+                                         pairs_ckpt, cfg)
+    # committed rows only: the candidate step lists the sink's log
+    n_sigs = banded_rows(pairs_ckpt)
 
     # Every table is read with the schema it was written with: an
     # inferred schema costs one footer job per read. The signature schema
@@ -452,17 +387,17 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     # all singletons); any OTHER read failure (corrupt/partial parquet,
     # permissions, transient FS error) must propagate — swallowing it
     # would silently overwrite the clusters table with all-singletons.
-    if _parquet_dir_has_data(pairs_dir):
+    if data_files(pairs_dir):
         cands = spark.read.schema("a string, b string").parquet(pairs_dir)
     else:
         cands = spark.createDataFrame([], "a string, b string")
     # candidate rows from the footers: the returned metric, and the
     # bound on the verified edges (every verdict comes from one
     # candidate pair) that lets CC skip its entry checkpoint
-    n_cands = _parquet_dir_rows(pairs_dir)
+    n_cands = parquet_rows(pairs_dir)
     if not reconcile:
         return {"clusters": None,
-                "n_signatures": _parquet_dir_rows(sigs_dir),
+                "n_signatures": n_sigs,
                 "n_candidates": n_cands,
                 "n_cap_dropped": n_dropped}
     clusters, n_new = _reconcile(
@@ -475,7 +410,7 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     # re-reads it (listing + footer cost per cycle)
     clusters.coalesce(4).write.mode("overwrite").parquet(out_dir)
     return {"clusters": spark.read.schema(clusters.schema).parquet(out_dir),
-            "n_signatures": _parquet_dir_rows(sigs_dir),
+            "n_signatures": n_sigs,
             "n_candidates": n_cands,
             "n_cap_dropped": n_dropped,
             "n_new_adjudicated": n_new}
@@ -485,11 +420,11 @@ def unload_state_stores(spark: SparkSession) -> None:
     """Stop the executor-side StateStore machinery: unload every loaded
     provider and cancel the background maintenance task. No engine query
     loads a state store any more (the candidate step is a batch join);
-    this stays for callers that tear down checkpoint dirs after running
-    other stateful queries in the session, whose maintenance thread
-    would otherwise race the deletion. Spark lazily restarts the
-    machinery on the next stateful query, so this is safe between runs
-    in one session."""
+    the benchmark's streaming workload (``perfbench/workloads.py``)
+    still calls this before deleting its checkpoint dirs, which a
+    maintenance thread left by another stateful query would race. Spark
+    lazily restarts the machinery on the next stateful query, so this is
+    safe between runs in one session."""
     spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
 

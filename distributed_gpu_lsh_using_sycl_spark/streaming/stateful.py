@@ -36,7 +36,6 @@ dup however late it arrives); it is the signature table itself.
 
 from __future__ import annotations
 
-import json
 import os
 from urllib.parse import unquote, urlparse
 
@@ -48,6 +47,8 @@ from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
     explode_bands)
 from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
     broadcast_if_fits)
+from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
+    check_stamp, parquet_footer, read_json, write_json)
 
 #: Checkpoint layout version. BUMP THIS whenever what the checkpoint
 #: holds changes (v1: per-(band,bucket) state keys; v2: coarse
@@ -83,57 +84,31 @@ def _check_state_version(checkpoint_dir: str,
     """Stamp a fresh checkpoint dir with the layout stamp; refuse a
     non-empty one stamped otherwise (or pre-stamp) with a clear error
     telling the operator to rebuild, instead of resuming a checkpoint
-    whose buckets no longer match (silently missed pairs).
-
-    Local-FS only BY CONTRACT: a URI checkpoint (hdfs://, s3a://) would
-    make os.path/open silently treat the dir as fresh — os.makedirs
-    would create a bogus LOCAL dir and the guard would never fire,
-    actively hiding the layout mismatch it exists to surface. Reject it
-    loudly; a cluster deployment routes this through the Hadoop
-    FileSystem API instead."""
-    if "://" in checkpoint_dir:
-        raise ValueError(
-            f"streaming checkpoint {checkpoint_dir!r} is a URI; the state "
-            "layout-version guard only supports local paths (os.path/open) "
-            "— a URI would silently bypass it. Use a local checkpoint dir "
-            "or extend _check_state_version to the Hadoop FileSystem API.")
-    want = _state_layout_stamp(cfg)
-    vfile = os.path.join(checkpoint_dir, _VERSION_FILE)
-    if os.path.isdir(checkpoint_dir) and os.listdir(checkpoint_dir):
-        have = None
-        if os.path.exists(vfile):
-            with open(vfile) as f:
-                have = f.read().strip()
-        if have != want:
-            raise RuntimeError(
-                f"streaming checkpoint {checkpoint_dir!r} was written under "
-                f"state layout {have or 'pre-versioning'}, but this "
-                f"build uses layout {want} (checkpoint layout or bucket "
-                "config changed). Delete the checkpoint dir AND the "
-                "candidate output dir, then re-drain from the signatures "
-                "table — resuming would pair new arrivals against "
-                "remapped buckets and silently MISS pairs.")
-        return
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    with open(vfile, "w") as f:
-        f.write(want)
+    whose buckets no longer match (silently missed pairs). A URI is
+    refused (``tables.check_stamp``)."""
+    check_stamp(
+        checkpoint_dir, _VERSION_FILE, _state_layout_stamp(cfg),
+        populated=os.listdir,
+        uri_error=(
+            "streaming checkpoint {path!r} is a URI; the state layout-version "
+            "guard only supports local paths (os.path/open) — a URI would "
+            "silently bypass it. Use a local checkpoint dir or extend "
+            "_check_state_version to the Hadoop FileSystem API."),
+        mismatch_error=(
+            "streaming checkpoint {path!r} was written under state layout "
+            "{have}, but this build uses layout {want} (checkpoint layout or "
+            "bucket config changed). Delete the checkpoint dir AND the "
+            "candidate output dir, then re-drain from the signatures table "
+            "— resuming would pair new arrivals against remapped buckets "
+            "and silently MISS pairs."))
 
 
-def _footer_sizes(uri: str) -> tuple[int, int]:
-    """(rows, id bytes) of one local signature file, from its footer: the
-    row count, and the uncompressed size of its ``image_id`` chunks —
-    at least the ids' UTF-8 bytes, plain or dictionary-encoded, since
-    each id is signed once."""
-    import pyarrow.parquet as _pq
-
-    meta = _pq.ParquetFile(unquote(urlparse(uri).path)).metadata
-    ids = 0
-    for i in range(meta.num_row_groups):
-        rg = meta.row_group(i)
-        for j in range(rg.num_columns):
-            if rg.column(j).path_in_schema == "image_id":
-                ids += rg.column(j).total_uncompressed_size
-    return meta.num_rows, ids
+def banded_rows(checkpoint_dir: str) -> int:
+    """Signature rows in the files the log in ``checkpoint_dir`` lists
+    as banded: after ``candidate_pair_stream``, the rows of every
+    committed file of its signature table, counted with no footer read."""
+    return sum(read_json(os.path.join(checkpoint_dir, _BANDED_LOG),
+                         {}).values())
 
 
 def _delta_bytes(rows: int, id_bytes: int) -> int:
@@ -187,7 +162,7 @@ def candidate_pair_stream(spark, input_dir: str, out_dir: str,
     below ``bucket_modulus`` (``hashing.band_buckets``). Two jobs: the
     broadcast collect and the write.
 
-    The log advances after the append (tmp file + ``os.replace``). A
+    The log advances after the append (``tables.write_json``, atomic). A
     crash between the two re-emits that wave's rows on the next call.
     The reconcile absorbs them, as it absorbs re-appended verdicts: its
     ``distinct`` removes the repeated (a, b), and its anti-join against
@@ -195,15 +170,17 @@ def candidate_pair_stream(spark, input_dir: str, out_dir: str,
     cfg = cfg or LshConfig()
     _check_state_version(checkpoint_dir, cfg)
     log = os.path.join(checkpoint_dir, _BANDED_LOG)
-    banded: dict[str, int] = {}
-    if os.path.exists(log):
-        with open(log) as f:
-            banded = json.load(f)
+    banded: dict[str, int] = read_json(log, {})
     table = spark.read.schema(_SIGS_SCHEMA).parquet(input_dir)
     new = sorted(set(table.inputFiles()) - banded.keys())
     if not new:
         return 0, 0
-    sizes = {uri: _footer_sizes(uri) for uri in new}
+    # each new file's rows and the uncompressed bytes of its image_id
+    # chunks: at least the ids' UTF-8 bytes, plain or dictionary-encoded,
+    # since each id is signed once
+    sizes = {uri: parquet_footer(unquote(urlparse(uri).path),
+                                 columns="image_id".__eq__, uncompressed=True)
+             for uri in new}
     rows = sum(n for n, _ in sizes.values())
 
     def keyed(bands: DataFrame) -> DataFrame:
@@ -216,8 +193,8 @@ def candidate_pair_stream(spark, input_dir: str, out_dir: str,
     probe = keyed(explode_bands(
         table.withColumn("old", ~F.input_file_name().isin(new)),
         keep=("old",)))
-    size = _delta_bytes(rows * cfg.num_bands,
-                        cfg.num_bands * sum(ids for _, ids in sizes.values()))
+    size = _delta_bytes(rows * cfg.num_bands, cfg.num_bands
+                        * sum(sum(ids) for _, ids in sizes.values()))
     dropped = 0
     if 0 < cfg.max_bucket_size < rows + sum(banded.values()):
         wave, dropped = _admitted(wave, probe, cfg.max_bucket_size, size)
@@ -231,7 +208,5 @@ def candidate_pair_stream(spark, input_dir: str, out_dir: str,
     (pairs.observe(obs, F.count(F.lit(1)).alias("n"))
      .write.mode("append").parquet(out_dir))
     banded.update({uri: n for uri, (n, _) in sizes.items()})
-    with open(log + ".tmp", "w") as f:
-        json.dump(banded, f)
-    os.replace(log + ".tmp", log)
+    write_json(log, banded)
     return int(obs.get["n"]), dropped

@@ -53,3 +53,34 @@ def test_explain_audit_counts_executions_the_query_ran(spark):
     got = tool.audit_query(spark, build)
     assert got["execs"] >= 1
     assert got["exchanges"] >= 1 and got["bcast_joins"] >= 1
+
+
+def test_only_run_replaces_the_named_rows_and_keeps_the_rest():
+    """An ``--only`` audit replaces the named query's row and review note
+    in PLANS.md; the other rows and their notes stay as they were."""
+    tool = _tool()
+    head = ["# PLANS", "", "| query | execs | exch |", "|---|---|---|"]
+    guide = ["", "Reading guide: ..."]
+    old = "\n".join(head + [
+        "| q_a | 1 | 1 |", "| q_b | 2 | 2 |", "| q_c | 3 | 3 |",
+        "", "## Review notes", "",
+        "- `q_a`: 1 sort-merge join(s), old note a",
+        "- `q_b`: 2 sort-merge join(s), old note b",
+        "- `q_c`: 3 sort-merge join(s), old note c"] + guide) + "\n"
+    new = "\n".join(head + [
+        "| q_b | 5 | 0 |", "", "## Review notes", "",
+        "- `q_b`: 1 sort-merge join(s), new note b"] + guide) + "\n"
+    got = tool.merge_plans(old, new, ["q_b"])
+    assert got == old.replace("| q_b | 2 | 2 |", "| q_b | 5 | 0 |") \
+        .replace("2 sort-merge join(s), old note b",
+                 "1 sort-merge join(s), new note b")
+
+    # the named query's note goes when its fresh audit has none; the
+    # other notes keep the section from reading "none found"
+    new = "\n".join(head + ["| q_b | 5 | 0 |", "", "## Review notes", "",
+                            tool.NO_NOTES] + guide) + "\n"
+    got = tool.merge_plans(old, new, ["q_b"]).splitlines()
+    assert "| q_a | 1 | 1 |" in got and "| q_c | 3 | 3 |" in got
+    assert [x for x in got if x.startswith("- ")] == [
+        "- `q_a`: 1 sort-merge join(s), old note a",
+        "- `q_c`: 3 sort-merge join(s), old note c"]

@@ -543,8 +543,10 @@ def test_verdict_append_counts_the_wave(spark, tmp_path_factory):
     """n_new_adjudicated is the row count the cycle appended to the
     adjudicated table; a cycle with no new wave appends no rows and
     reports 0, and its clusters are unchanged."""
+    from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
+        parquet_rows)
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
-        _parquet_dir_rows, streaming_dedup_cycle)
+        streaming_dedup_cycle)
 
     base = tmp_path_factory.mktemp("verdicts")
     inp, wh = str(base / "in"), str(base / "wh")
@@ -555,13 +557,37 @@ def test_verdict_append_counts_the_wave(spark, tmp_path_factory):
         if wave is not None:
             spark.createDataFrame(wave).write.parquet(
                 os.path.join(inp, f"w{len(rows)}"))
-        before = _parquet_dir_rows(adj)
+        before = parquet_rows(adj)
         r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
-        rows.append(_parquet_dir_rows(adj) - before)
+        rows.append(parquet_rows(adj) - before)
         assert r["n_new_adjudicated"] == rows[-1]
         clusters.append(_clusters_dict(r))
     assert rows[0] > 0 and rows[1] > 0 and rows[2] == 0
     assert clusters[2] == clusters[1]
+
+
+def test_signature_count_ignores_uncommitted_parts(spark, tmp_path_factory):
+    """n_signatures counts the signature rows the sink committed. A part
+    file in the signature table that the sink's log does not list (a
+    crashed micro-batch leaves one) is not read by the cycle, so it
+    changes neither the count nor the clusters."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        streaming_dedup_cycle)
+
+    base = tmp_path_factory.mktemp("stray_part")
+    inp, wh = str(base / "in"), str(base / "wh")
+    images, _ = make_fixture_pandas(40, seed=42)
+    spark.createDataFrame(images).write.parquet(os.path.join(inp, "w1"))
+    r1 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    assert r1["n_signatures"] == 40
+    want = _clusters_dict(r1)  # r2 overwrites the table r1 reads
+    sigs = os.path.join(wh, "signatures")
+    part = sorted(f for f in os.listdir(sigs) if f.endswith(".parquet"))[0]
+    shutil.copy(os.path.join(sigs, part),
+                os.path.join(sigs, "part-99999-uncommitted.parquet"))
+    r2 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    assert r2["n_signatures"] == 40
+    assert _clusters_dict(r2) == want
 
 
 def test_state_checkpoint_version_guard(tmp_path):
@@ -614,6 +640,16 @@ def test_state_checkpoint_version_guard_rejects_uri(tmp_path):
 
     with pytest.raises(ValueError, match="URI"):
         _check_state_version("s3a://bucket/ckpt")
+
+
+def test_adjudicated_fingerprint_guard_rejects_uri():
+    """The adjudicated table's guard refuses a URI the same way: a
+    local-path check would treat it as a fresh dir and never fire."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        _check_adj_fingerprint)
+
+    with pytest.raises(ValueError, match="URI"):
+        _check_adj_fingerprint("s3a://bucket/adjudicated", CFG)
 
 
 def test_adjudicated_fingerprint_guard(spark, tmp_path_factory):

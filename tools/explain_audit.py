@@ -17,8 +17,10 @@ The 100-TB questions, made greppable per query:
 - is AQE live (AdaptiveSparkPlan) so skew/coalesce re-plans at runtime?
 
 Usage: python tools/explain_audit.py [--sf DIR] [--only name,...]
-Writes PLANS.md at the repo root and prints the summary table. Unknown
-``--only`` names are rejected (exit 2) before any Spark session starts.
+Writes PLANS.md at the repo root and prints the summary table. A full
+run rewrites the file; ``--only`` replaces the named queries' rows and
+review notes and keeps every other line. Unknown ``--only`` names are
+rejected (exit 2) before any Spark session starts.
 """
 
 from __future__ import annotations
@@ -61,6 +63,41 @@ MARKERS = {
     "python": (r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
                r"|FlatMapCoGroupsInPandas|BatchEvalPython"),
 }
+
+
+NO_NOTES = "- no sort-merge-join-without-broadcast cases found."
+#: a PLANS.md table row or review note, and the query it is about
+_ABOUT = re.compile(r"\| (\w+) \| |- `(\w+)`:")
+
+
+def _about(line: str) -> str | None:
+    m = _ABOUT.match(line)
+    return m and (m.group(1) or m.group(2))
+
+
+def merge_plans(old: str, new: str, names: list[str]) -> str:
+    """PLANS.md text ``old`` with the table rows and review notes of the
+    queries ``names`` taken from ``new``, the text an audit of those
+    queries alone renders; every other line of ``old`` stays. A row or
+    note new to the file goes after the last of its kind."""
+    fresh = {(line[0], _about(line)): line for line in new.splitlines()
+             if _about(line) in names}
+    lines = []
+    for line in old.splitlines():
+        if _about(line) in names:
+            # a stale note with no fresh one leaves the placeholder
+            line = fresh.pop((line[0], _about(line)),
+                             NO_NOTES if line[0] == "-" else None)
+        if line is not None:
+            lines.append(line)
+    for (kind, _), line in fresh.items():
+        last = max(i for i, x in enumerate(lines) if x.startswith(kind))
+        lines.insert(last + 1, line)
+    noted = any(x.startswith("- `") for x in lines)
+    first = lines.index(NO_NOTES) if NO_NOTES in lines else -1
+    lines = [x for i, x in enumerate(lines)
+             if x != NO_NOTES or (not noted and i == first)]
+    return "\n".join(lines) + "\n"
 
 
 def _markers(plan: str) -> dict:
@@ -167,7 +204,7 @@ def main(argv: list[str] | None = None) -> int:
         "",
         "## Review notes",
         "",
-        *(notes or ["- no sort-merge-join-without-broadcast cases found."]),
+        *(notes or [NO_NOTES]),
         "",
         "Reading guide: `py > 0` is expected exactly where the operator is "
         "a vectorized Arrow kernel by design (signatures, decode, "
@@ -175,8 +212,13 @@ def main(argv: list[str] | None = None) -> int:
         "1000-executor run will pay — each one is deliberate (documented "
         "in the operator's docstring) or AQE-coalesced.",
     ]
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+    text = "\n".join(lines) + "\n"
+    path = os.path.join(REPO, "PLANS.md")
+    if args.only and os.path.exists(path):
+        with open(path) as f:
+            text = merge_plans(f.read(), text, names)
+    with open(path, "w") as f:
+        f.write(text)
     print("\n".join(lines[:40]))
     return 0
 
