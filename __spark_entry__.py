@@ -832,14 +832,14 @@ def q_e2e_caption_dedup(spark, sf):
 
 
 def q_streaming_dedup_clusters(spark, sf):
-    """END-TO-END STRUCTURED STREAMING dedup, value-hash checked: the
-    full chain — incremental signature ingest (readStream + streaming
-    checkpoint) → delta bucket join (the wave's bands broadcast, probed
-    by the signature table's) → batch verify+CC reconcile — run as TWO
-    availableNow waves (even doc_ids land first, odd second) over the
-    documents table (streaming/e2e.py). The DuckDB oracle recomputes the
-    SAME semantics non-streamed: brute-force Jaccard>=tau pairs +
-    recursive-CTE connected components — so the streaming chain's
+    """END-TO-END INCREMENTAL dedup, value-hash checked: the full
+    streaming cycle — incremental signature ingest (the blob scan over
+    the files its log does not list yet) → delta bucket join (the wave's
+    bands broadcast, probed by the signature table's) → batch verify+CC
+    reconcile — run as TWO waves (even doc_ids land first, odd second)
+    over the documents table (streaming/e2e.py). The DuckDB oracle
+    recomputes the SAME semantics in one batch: brute-force Jaccard>=tau
+    pairs + recursive-CTE connected components — so the cycle's
     convergence-to-batch contract gets the hard driver signal, not just
     pytest. Each run starts from a clean warehouse (deterministic row).
 
@@ -868,9 +868,8 @@ def q_streaming_dedup_clusters(spark, sf):
     cfg = _dedup_cfg()
     d.filter(F.col("image_id").cast("long") % 2 == 0) \
         .write.mode("overwrite").parquet(os.path.join(inp, "w1"))
-    # ingest partitioning is scale-adaptive (e2e._adaptive_partitions: a
-    # wave signs in place under 384 KiB of new input and is spread over
-    # the cores above it)
+    # each wave's signing width is the blob scan's (scan_partitions: at
+    # most one task per row group of the wave's new files)
     streaming_dedup_cycle(spark, inp + "/*", wh, cfg, reconcile=False)
     d.filter(F.col("image_id").cast("long") % 2 == 1) \
         .write.mode("overwrite").parquet(os.path.join(inp, "w2"))

@@ -10,8 +10,9 @@ handling, checkpointing). One dataclass = the single source of truth —
 Execution choices the engine derives from sizes it observes are NOT
 fields here; each has one owner that computes it: the CC union-find vs
 star-loop bound (``operators/components.SMALL_GRAPH_EDGES``), the
-streaming ingest partition count (``streaming/e2e._adaptive_partitions``),
-the blob-scan task count and read slice (``sources/blob_scan``), the near-dup
+blob-scan task count and read slice (``sources/blob_scan``, which also
+signs each streaming wave; ``streaming/ingest`` caps a wave's files at
+its bytes over Spark's file open cost), the near-dup
 guardrail (``operators/embedding.neardup_pairs_lsh``) and the Arrow batch
 size (a session setting, ``sources/tables.get_spark``).
 """

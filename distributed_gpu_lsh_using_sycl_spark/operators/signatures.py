@@ -239,11 +239,7 @@ def spread(df: DataFrame) -> DataFrame:
     parquet file, one row group) otherwise run every narrow stage above
     the first exchange, Python UDFs included, on ONE task. Inputs already
     at or above the core count (any real table at scale) pass through and
-    pay no shuffle. Streaming frames also pass through: they cannot be
-    asked for a partition count, and micro-batch sizing is the source's
-    job."""
-    if df.isStreaming:
-        return df
+    pay no shuffle."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

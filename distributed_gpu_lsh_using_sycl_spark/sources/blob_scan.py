@@ -54,7 +54,8 @@ from distributed_gpu_lsh_using_sycl_spark.operators.signatures import (
 from distributed_gpu_lsh_using_sycl_spark.sources.tables import parquet_footer
 
 
-def _sig_schema(id_type: T.DataType, with_windows: bool) -> T.StructType:
+def signature_schema(id_type: T.DataType,
+                     with_windows: bool) -> T.StructType:
     """Signature schema, id type inferred from the table (image ids are
     strings; the documents table keys by int64 doc_id)."""
     return T.StructType([
@@ -68,13 +69,11 @@ def _sig_schema(id_type: T.DataType, with_windows: bool) -> T.StructType:
     ])
 
 
-_SPLIT_SCHEMA = "file string, row_group int"
-
-
-def _row_groups(path: str) -> list[tuple[str, int, int]]:
+def _row_groups(path: str | list[str]) -> list[tuple[str, int, int]]:
     """(file, row_group, on-disk bytes) for every row group under a
-    parquet file/directory, from the footers alone. pyarrow.dataset
-    handles dirs, single files, and object-store URIs alike."""
+    parquet file/directory or a list of files, from the footers alone.
+    pyarrow.dataset handles dirs, single files, file lists and
+    object-store URIs alike."""
     import pyarrow.dataset as ds
 
     out: list[tuple[str, int, int]] = []
@@ -159,7 +158,8 @@ def compute_split(file: str, rg: int, cfg: LshConfig,
     return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
 
-def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
+def scan_signatures(spark: SparkSession, path: str | list[str],
+                    cfg: LshConfig,
                     with_image: bool = True,
                     id_col: str = "image_id", text_col: str = "caption",
                     with_windows: bool = False) -> DataFrame:
@@ -169,13 +169,14 @@ def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
     simhash) —
     without moving blob bytes through the JVM.
 
-    Spark plans the (file, row_group) splits as a tiny DataFrame sliced
+    ``path`` is a parquet file, a directory or a list of files. Spark
+    plans the (file, row_group) splits as the ids of a range sliced
     evenly into ``scan_partitions`` tasks — one per
     ``spark.sql.files.maxPartitionBytes`` of row-group bytes, at least
-    ``defaultParallelism``, at most one per split. Each task
-    pyarrow-reads only the pruned columns of its row groups and runs the
-    shared numpy signature kernels; only small signature rows ever enter
-    the JVM.
+    ``defaultParallelism``, at most one per split. Each task looks its
+    ids up in the split list the UDF carries, pyarrow-reads only the
+    pruned columns of those row groups and runs the shared numpy
+    signature kernels; only small signature rows ever enter the JVM.
     """
     import pyarrow.dataset as ds
     import pyarrow.types as pat
@@ -207,8 +208,9 @@ def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
 
     def read_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for file, rg in zip(pdf["file"], pdf["row_group"]):
-                yield compute_split(file, int(rg), cfg, a, b,
+            for i in pdf["id"]:
+                file, rg = splits[i]
+                yield compute_split(file, rg, cfg, a, b,
                                     with_image=want_image,
                                     id_col=id_name, text_col=text_name,
                                     with_windows=with_windows)
@@ -217,10 +219,17 @@ def scan_signatures(spark: SparkSession, path: str, cfg: LshConfig,
         len(splits), sum(size for _, _, size in row_groups),
         spark.sparkContext.defaultParallelism,
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
-    # parallelize slices the split list exactly evenly (no hash-collision
+    # A range slices the split ids exactly evenly (no hash-collision
     # skew: a hash repartition leaves ~1/e of the tasks empty and doubles
-    # up others — measured stragglers)
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts), _SPLIT_SCHEMA)
-    return splits_df.mapInPandas(read_splits,
-                                 schema=_sig_schema(id_type, with_windows))
+    # up others — measured stragglers). It runs as a JVM RDD: the
+    # planner then has no size for the signatures (a Range's row count
+    # would make them look tiny and broadcastable), so their joins
+    # follow the sizes the pipeline observes, and no Python RDD
+    # (``parallelize``) starts a second pool of Python workers beside
+    # the one every Arrow UDF of the session uses.
+    jspark = spark._jsparkSession
+    ids = jspark.range(0, len(splits), 1, n_parts)
+    splits_df = DataFrame(
+        jspark.createDataFrame(ids.toDF().javaRDD(), ids.schema()), spark)
+    return splits_df.mapInPandas(
+        read_splits, schema=signature_schema(id_type, with_windows))

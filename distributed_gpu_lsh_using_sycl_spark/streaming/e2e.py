@@ -1,13 +1,15 @@
-"""End-to-end STREAMING dedup: incremental signatures → delta bucket
+"""End-to-end incremental dedup: incremental signatures → delta bucket
 join → periodic batch verify + connected-components reconcile.
 
-Composes the three streaming pieces into the continuous-ingest regime's
+Composes the three incremental steps into the continuous-ingest regime's
 full contract (the reference is single-shot batch, main.cpp:46-55; this
-is the north rule's resumable-pipeline surface driven by streams):
+is the north rule's resumable-pipeline surface over a delta of files).
+Every step is a batch step; no Structured Streaming query runs:
 
-1. ``signature_stream`` (streaming/ingest.py) drains newly-landed input
-   files into the ``signatures`` stage table — exactly-once via Spark's
-   streaming checkpoint; only NEW files are signed.
+1. ``signature_stream`` (streaming/ingest.py) signs the newly-landed
+   input files with the pipeline's blob scan into one wave directory of
+   the ``signatures`` stage table — exactly-once via its JSON log; only
+   NEW files are signed.
 2. ``candidate_pair_stream`` (streaming/stateful.py) bands the signature
    files it has not banded yet and probes the whole table's bands with
    them — one batch broadcast join per wave, no stream and no state
@@ -35,14 +37,13 @@ is the north rule's resumable-pipeline surface driven by streams):
    _ADJ_COMPACT_FILES, so a scheduler running thousands of cycles never
    accretes unbounded small files.
 
-Each ``streaming_dedup_cycle`` call is one availableNow drain of stage 1,
-one delta join (stage 2) and one reconcile — the "micro-batch dedup"
-loop a scheduler would run continuously.
+Each ``streaming_dedup_cycle`` call is one signing wave (stage 1), one
+delta join (stage 2) and one reconcile — the "micro-batch dedup" loop a
+scheduler would run continuously.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -51,21 +52,7 @@ from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
-    check_stamp, data_files, parquet_footer, parquet_rows)
-
-
-def _await_drained(q, timeout_s: int) -> None:
-    """Block until the availableNow query terminates; if it outlives the
-    timeout, STOP it and raise instead of proceeding — the cycle's next
-    step batch-reads the stage tables, and reading them while the stream
-    is still committing would yield partial signatures/candidates with no
-    error at all (the worst failure mode: silently wrong clusters)."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        q.awaitTermination()
-        raise TimeoutError(
-            f"streaming stage {q.name or q.id} did not drain within "
-            f"{timeout_s}s; stopped it rather than read partial stage tables")
+    check_stamp, data_files, parquet_rows)
 
 
 #: Adjudicated-table layout/semantics version. BUMP (and update
@@ -180,94 +167,6 @@ def _compact_adjudicated(spark: SparkSession, adjudicated_dir: str,
     shutil.rmtree(old)
 
 
-#: advisory bytes per partition when a wave is spread: much smaller than
-#: a scan-stage advisory (the signing UDF is compute-bound, not
-#: IO-bound), so a wave over the crossover still fans out across workers.
-_INGEST_SPLIT_BYTES = 8 * 1024 * 1024
-#: floor of a spread wave's partition count (capped at the session
-#: parallelism).
-_MIN_WAVE_PARTITIONS = 8
-#: bytes a drain reads (``_read_bytes``) under which the wave signs in
-#: place: no Exchange, and the file source's own splits (one task for a
-#: one-file wave) sign it. Wall of ``signature_stream(with_image=False)``
-#: drains of one caption file (16 row groups), fresh checkpoint, three
-#: drains per cell after a warm-up, 4-CPU host:
-#:
-#:   wave                 in place      repartition(4)
-#:   1k rows  (0.10 MB)   0.67-0.74 s   0.74-0.80 s
-#:   4k rows  (0.33 MB)   0.86-0.91 s   0.87-1.00 s
-#:   8k rows  (0.64 MB)   1.19-1.37 s   0.88-0.97 s
-#:   16k rows (1.26 MB)   1.68-1.85 s   1.21-1.24 s
-#:
-#: The two cross near 0.36 MB; around the bound they differ by < 0.05 s.
-_IN_PLACE_WAVE_BYTES = 384 * 1024
-
-
-def _drained_files(checkpoint_dir: str) -> set[str]:
-    """Real paths of the input files the signature stream has already
-    drained: every ``path`` its file-source log
-    (``<checkpoint>/sources/0``, batch and ``.compact`` files alike)
-    lists. Empty when the log is missing or any of it is unreadable, so
-    the caller then counts every file as new."""
-    from urllib.parse import unquote, urlparse
-
-    log = os.path.join(checkpoint_dir, "sources", "0")
-    seen: set[str] = set()
-    try:
-        for name in os.listdir(log):
-            if name.startswith(".") or name.endswith(".tmp"):
-                continue
-            with open(os.path.join(log, name)) as f:
-                lines = f.read().splitlines()
-            if not lines or not lines[0].startswith("v"):
-                return set()
-            for line in lines[1:]:
-                if line:
-                    uri = urlparse(json.loads(line)["path"])
-                    seen.add(os.path.realpath(unquote(uri.path)))
-    except (OSError, ValueError, KeyError, TypeError):
-        return set()
-    return seen
-
-
-def _read_bytes(path: str, size: int, with_image: bool) -> int:
-    """Bytes a drain reads from one parquet file: its column chunks as the
-    footer lists them, the image column's only when the drain signs
-    images (the scan prunes it otherwise); the file's ``size`` when the
-    footer is unreadable."""
-    try:
-        _, groups = parquet_footer(
-            path, columns=None if with_image else "bytes".__ne__)
-    except (OSError, ValueError):
-        return size
-    return sum(groups)
-
-
-def _adaptive_partitions(par: int, input_dir: str, sigs_checkpoint: str,
-                         with_image: bool) -> int | None:
-    """-> the ingest partition count, sized from bytes (advisory-size
-    rule, guide §2.2/§6), not from the core count, and capped at the
-    session parallelism ``par``.
-
-    The count follows the files this drain will read: those the
-    signature stream's source log (``_drained_files``) does not list
-    yet, sized by ``_read_bytes``. Under ``_IN_PLACE_WAVE_BYTES`` it is
-    None (sign in place, no repartition); otherwise one partition per
-    ``_INGEST_SPLIT_BYTES``, floored at ``_MIN_WAVE_PARTITIONS``. A URI
-    or missing input root falls back to ``par``."""
-    files = data_files(input_dir[:-2] if input_dir.endswith("/*")
-                       else input_dir)
-    if files is None:
-        return par
-    drained = _drained_files(sigs_checkpoint)
-    new = sum(_read_bytes(p, n, with_image)
-              for p, n in files.items() if p not in drained)
-    if new < _IN_PLACE_WAVE_BYTES:
-        return None
-    return int(min(par, max(_MIN_WAVE_PARTITIONS,
-                            -(-new // _INGEST_SPLIT_BYTES))))
-
-
 def _reconcile(spark: SparkSession, sigs: DataFrame,
                cands: DataFrame, cfg: LshConfig,
                adjudicated_dir: str | None = None,
@@ -331,10 +230,9 @@ def _reconcile(spark: SparkSession, sigs: DataFrame,
 def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
                           warehouse: str, cfg: LshConfig | None = None,
                           with_image: bool = False,
-                          timeout_s: int = 600,
                           reconcile: bool = True) -> dict:
-    """One incremental dedup cycle over ``input_dir`` (a parquet dir that
-    accumulates input files between cycles). Returns
+    """One incremental dedup cycle over ``input_dir`` (a parquet dir, or a
+    glob of them, that accumulates input files between cycles). Returns
     ``{"clusters": DataFrame, "n_signatures": int, "n_candidates": int,
     "n_cap_dropped": int, "n_new_adjudicated": int}`` — clusters is also
     written to ``<warehouse>/clusters``; n_cap_dropped counts the wave's
@@ -342,8 +240,9 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     n_new_adjudicated counts the candidate pairs verified (or rejected)
     for the first time in this cycle.
 
-    How many tasks sign the wave is ``_adaptive_partitions``' decision;
-    the CC strategy is ``assign_clusters``' own. Neither is a parameter.
+    How many tasks sign the wave is ``blob_scan.scan_partitions``'
+    decision; the CC strategy is ``assign_clusters``' own. Neither is a
+    parameter.
 
     ``reconcile=False`` runs stages 1+2 only (signatures + candidate
     rows advance; clusters table left as-is, returned as None, and no
@@ -352,6 +251,8 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     window: CC is a global fixpoint over ACCUMULATED edges, so the final
     reconcile alone produces the same clusters as reconciling every wave
     (asserted in tests/test_resume_and_streaming.py)."""
+    from distributed_gpu_lsh_using_sycl_spark.sources.blob_scan import (
+        signature_schema)
     from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
         signature_stream)
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
@@ -360,29 +261,22 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     cfg = cfg or LshConfig()
     sigs_dir = os.path.join(warehouse, "signatures")
     pairs_dir = os.path.join(warehouse, "cand_pairs")
-    sigs_ckpt = os.path.join(warehouse, "ckpt_sigs")
     pairs_ckpt = os.path.join(warehouse, "ckpt_pairs")
 
-    # Sized before the drain, from the files it is about to read: a small
-    # wave signs in place (the file source's own splits), a large one is
-    # repartitioned so a wave landing as few files still spreads.
-    ingest_parts = _adaptive_partitions(
-        spark.sparkContext.defaultParallelism, input_dir, sigs_ckpt,
-        with_image)
-    q = signature_stream(spark, input_dir, sigs_dir, sigs_ckpt, cfg,
-                         with_image=with_image,
-                         ingest_partitions=ingest_parts)
-    _await_drained(q, timeout_s)
-    sig_schema = q.schema
+    signature_stream(spark, input_dir, sigs_dir,
+                     os.path.join(warehouse, "ckpt_sigs"), cfg,
+                     with_image=with_image)
     _, n_dropped = candidate_pair_stream(spark, sigs_dir, pairs_dir,
                                          pairs_ckpt, cfg)
     # committed rows only: the candidate step lists the sink's log
     n_sigs = banded_rows(pairs_ckpt)
 
     # Every table is read with the schema it was written with: an
-    # inferred schema costs one footer job per read. The signature schema
-    # is the one the drain wrote.
-    sigs = spark.read.schema(sig_schema).parquet(sigs_dir)
+    # inferred schema costs one footer job per read. The signature table
+    # is the blob scan's output over string ids (plus the ``wave``
+    # partition column, which nothing reads).
+    sigs = spark.read.schema(signature_schema(T.StringType(), False)) \
+        .parquet(sigs_dir)
     # An empty-so-far candidate table is normal (no pair emitted yet ->
     # all singletons); any OTHER read failure (corrupt/partial parquet,
     # permissions, transient FS error) must propagate — swallowing it

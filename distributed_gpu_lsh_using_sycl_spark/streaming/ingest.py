@@ -1,90 +1,112 @@
-"""Incremental signature ingest with Structured Streaming.
+"""Incremental signature ingest: each call signs the input files it has
+not signed yet, as one batch step.
 
 The reference is strictly single-shot batch (main.cpp:46-55); the
 streaming surface is new capability for the 10^12-image regime, where
 images arrive continuously: new files landing in the input table are
 signed incrementally and appended to the ``signatures`` stage table, so
-the (batch) banding/verify/CC stages always have fresh signatures to
-re-run against — signatures are by far the most expensive stage, and
+the banding/verify/CC stages always have fresh signatures to re-run
+against — signatures are by far the most expensive stage, and
 incremental signing amortizes them.
 
-The signature computation is the SAME operator as batch
-(``compute_signatures``) — stateless row-wise transforms compose with
-readStream unchanged, which is exactly why the stage split puts banding
-(stateful shuffle) behind the materialization boundary.
+The signing is the caption pass's own signature stage
+(``blob_scan.scan_signatures``) over the new files only: the incremental
+and the batch path are one operator, and only the input set differs.
+Its task count is ``blob_scan.scan_partitions``', sized from the new
+files' row groups, but a wave writes no more files than it has
+``spark.sql.files.openCostInBytes`` of row-group bytes (rounded up), so
+a small wave signs on one task into one file. The signature table is
+re-read by every later cycle, and each of its files costs a task in
+each of those reads and in the shuffles below them: on the benchmark's
+two waves of 1k captions, four files per wave instead of one raised the
+cycle's shuffle write from 33,643 to 39,854 bytes, at 26 jobs both.
 
-Checkpointing: Spark's own streaming checkpoint (offsets + sink commit
-log) gives exactly-once file processing; the pipeline manifest governs
-the downstream batch stages.
+Exactly-once without a streaming checkpoint: one JSON log in the
+checkpoint dir lists the waves signed so far, each as the input files it
+signed. A wave is written to ``<table>/wave=<n>``, ``n`` the log's wave
+count, and the log advances after the write. A crash between the two
+leaves a wave directory the log does not list; it is uncommitted, and it
+is deleted before the next write, so no reader ever reads it, and the
+files it signed are signed again into the same directory. The
+``wave=<n>`` names are partition directories, so the table root reads as
+one table (with a ``wave`` column).
 
-Trigger: every run is an availableNow drain — it signs every file present
-at start and stops. Continuous operation is a scheduler re-running the
-drain per wave (``streaming/e2e.streaming_dedup_cycle``), not a
-long-running query.
+The input root is local-FS only, as the warehouse metadata is
+(``sources/tables.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+import glob
+import os
+import shutil
+
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
-from distributed_gpu_lsh_using_sycl_spark.operators.signatures import compute_signatures
+from distributed_gpu_lsh_using_sycl_spark.sources.blob_scan import (
+    scan_signatures)
+from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
+    data_files, parquet_footer, read_json, write_json)
 
-IMAGES_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType(), False),
-    T.StructField("bytes", T.BinaryType(), False),
-    T.StructField("w", T.IntegerType(), False),
-    T.StructField("h", T.IntegerType(), False),
-    T.StructField("fmt", T.StringType(), False),
-    T.StructField("caption", T.StringType(), False),
-    T.StructField("phash", T.LongType(), False),
-])
+#: the log of signed waves: [[input files of wave 0], [... of wave 1], ...]
+_SIGNED_LOG = "signed.json"
 
 
-class SignatureQuery(StreamingQuery):
-    """The drain ``signature_stream`` started, plus ``schema``: the schema
-    of the rows it writes, for reading the table back without inferring
-    it."""
-
-    def __init__(self, jsq, schema: T.StructType):
-        super().__init__(jsq)
-        self.schema = schema
+def _input_files(input_dir: str) -> set[str]:
+    """Real paths of the data files under ``input_dir``, a directory or a
+    glob of files and directories; hidden names (``_SUCCESS``, ``.crc``)
+    are skipped."""
+    if "://" in input_dir:
+        raise ValueError(
+            f"input root {input_dir!r} is a URI; the streaming ingest lists "
+            "its input on the local file system only. Use a local path.")
+    out: set[str] = set()
+    for path in glob.glob(input_dir):
+        if os.path.isdir(path):
+            out |= data_files(path).keys()
+        elif not os.path.basename(path).startswith(("_", ".")):
+            out.add(os.path.realpath(path))
+    return out
 
 
 def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
                      checkpoint_dir: str, cfg: LshConfig | None = None,
-                     with_image: bool = True,
-                     ingest_partitions: int | None = None) -> SignatureQuery:
-    """readStream(parquet dir) -> compute_signatures -> append parquet,
-    drained with an availableNow trigger (everything currently present,
-    then stop). Signing is stateless, so the drain runs as few
-    micro-batches as the source allows: splitting it would only add
-    per-batch commit overhead. Returns the StreamingQuery, with the
-    schema it writes.
+                     with_image: bool = True) -> int:
+    """Sign the files under ``input_dir`` that the log in
+    ``checkpoint_dir`` does not list yet, as one wave directory of the
+    signature table ``out_dir``. Returns the rows signed, observed on the
+    write job (the one job).
 
-    ``ingest_partitions`` repartitions each micro-batch BEFORE the
-    signature UDF; None skips the shuffle. The file source parallelizes
-    by input file/row-group, so a wave landing as FEW files signs on as
-    few cores. That costs little on a small wave and more on a large
-    one: on a 4-CPU host a one-file 1k-row wave drained in 0.67-0.74 s
-    in place against 0.74-0.80 s repartitioned, a 16k-row wave in
-    1.68-1.85 s against 1.21-1.24 s (the crossover table at
-    ``e2e._IN_PLACE_WAVE_BYTES``). ``streaming_dedup_cycle`` sets it
-    from the bytes the drain will read: None under the crossover, a
-    spread over it.
-    """
+    A wave whose new files hold no rows (an empty parquet file has no row
+    group) writes nothing; the log still advances, so they are not
+    listed again. With no new file the call does nothing."""
     cfg = cfg or LshConfig()
-    stream = spark.readStream.schema(IMAGES_SCHEMA).parquet(input_dir)
-    if ingest_partitions:
-        stream = stream.repartition(ingest_partitions)
-    sigs = compute_signatures(stream, cfg, with_image=with_image)
-    q = (sigs.writeStream
-         .format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    return SignatureQuery(q._jsq, sigs.schema)
+    log_path = os.path.join(checkpoint_dir, _SIGNED_LOG)
+    waves: list[list[str]] = read_json(log_path, [])
+    os.makedirs(out_dir, exist_ok=True)
+    for name in os.listdir(out_dir):
+        if name.startswith("wave=") and int(name[5:]) >= len(waves):
+            shutil.rmtree(os.path.join(out_dir, name))
+    new = sorted(_input_files(input_dir).difference(*waves))
+    if not new:
+        return 0
+    footers = [parquet_footer(f) for f in new]
+    n = 0
+    if any(rows for rows, _ in footers):
+        # one file per open cost of row-group bytes, at most the scan's
+        # own width: every later cycle reads each file of the table
+        open_cost = spark._jsparkSession.sessionState().conf() \
+            .filesOpenCostInBytes()
+        files = -(-sum(sum(groups) for _, groups in footers) // open_cost)
+        obs = Observation()
+        (scan_signatures(spark, new, cfg, with_image=with_image)
+         .coalesce(files)
+         .observe(obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite")
+         .parquet(os.path.join(out_dir, f"wave={len(waves)}")))
+        n = int(obs.get["n"])
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    write_json(log_path, waves + [new])
+    return n

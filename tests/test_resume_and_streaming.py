@@ -120,15 +120,13 @@ def test_streaming_incremental_signatures(spark, tmp_path_factory):
     spark.createDataFrame(chunk1).write.mode("overwrite").parquet(os.path.join(inp, "c1"))
 
     cfg = LshConfig()
-    q = signature_stream(spark, inp + "/*", out, ckpt, cfg)
-    q.awaitTermination(300)
+    signature_stream(spark, inp + "/*", out, ckpt, cfg)
     got1 = spark.read.parquet(out)
     assert got1.count() == 40
 
     # second chunk lands; incremental run signs ONLY the new files
     spark.createDataFrame(chunk2).write.mode("overwrite").parquet(os.path.join(inp, "c2"))
-    q = signature_stream(spark, inp + "/*", out, ckpt, cfg)
-    q.awaitTermination(300)
+    signature_stream(spark, inp + "/*", out, ckpt, cfg)
     got = spark.read.parquet(out)
     assert got.count() == 60
 
@@ -427,8 +425,11 @@ def test_streaming_cycle_job_count(spark, tmp_path_factory):
     checkpoint job) and the candidate rows bound CC (no entry checkpoint
     job): 15 before, 12 after. The candidate step is then a broadcast
     delta join, whose broadcast collect and write replace the stateful
-    stream's one micro-batch job: 12 before, 13 after. A new job in the
-    cycle shows here first."""
+    stream's one micro-batch job: 12 before, 13 after. The signing is a
+    batch blob scan, whose write replaces the drain's micro-batch job:
+    13 still, and no Structured Streaming metadata (a sink log, offsets,
+    commits) is left in the warehouse. A new job in the cycle shows here
+    first."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         streaming_dedup_cycle)
     from perfbench.sparkstats import StatusStore
@@ -446,12 +447,14 @@ def test_streaming_cycle_job_count(spark, tmp_path_factory):
     r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
     assert r["n_new_adjudicated"] > 0
     assert len(store.new_jobs()) == 13
+    assert not [d for _, dirs, _ in os.walk(wh) for d in dirs
+                if d in ("_spark_metadata", "offsets", "commits")]
 
 
-def _caption_wave(path, rows, seed, image_bytes=0):
+def _caption_wave(path, rows, seed, row_groups=1):
     """A one-file parquet wave of ``rows`` random captions of 120 hex
-    characters, each row with ``image_bytes`` random image bytes when
-    non-zero. Written with pyarrow: no Spark."""
+    characters in ``row_groups`` row groups. Written with pyarrow: no
+    Spark."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -459,84 +462,46 @@ def _caption_wave(path, rows, seed, image_bytes=0):
     rng = np.random.default_rng(seed)
     cols = {"image_id": [f"img_{seed}_{i:05d}" for i in range(rows)],
             "caption": [rng.bytes(60).hex() for _ in range(rows)]}
-    if image_bytes:
-        cols["bytes"] = [rng.bytes(image_bytes) for _ in range(rows)]
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(pa.table(cols), path)
+    pq.write_table(pa.table(cols), path,
+                   row_group_size=-(-rows // row_groups))
     return path
 
 
-def _source_log(ckpt, batch, paths, body=None):
-    """One batch file of a file-stream source log, as Spark writes it
-    under ``<checkpoint>/sources/0``; ``body`` replaces its content."""
-    log = os.path.join(ckpt, "sources", "0")
-    os.makedirs(log, exist_ok=True)
-    if body is None:
-        body = "v1\n" + "\n".join(json.dumps(
-            {"path": "file://" + p, "timestamp": 0, "batchId": batch})
-            for p in paths)
-    with open(os.path.join(log, str(batch)), "w") as f:
-        f.write(body)
-
-
-def test_wave_sizing_follows_the_new_files(tmp_path):
-    """The ingest partition count follows the bytes the drain will read:
-    the files the signature stream's source log does not list yet. A
-    large first wave spreads; a small second wave then signs in place
-    (sizing from every file, as before, would spread it too). A wave of
-    large images but small captions signs in place unless the drain
-    signs images. An unreadable source log counts every file as new."""
-    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
-        _IN_PLACE_WAVE_BYTES, _MIN_WAVE_PARTITIONS, _adaptive_partitions)
-
-    inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    glob, par = inp + "/*", 16
-    spread = min(par, _MIN_WAVE_PARTITIONS)
-    big = _caption_wave(os.path.join(inp, "w1", "part-0.parquet"), 8000, 1)
-    assert os.path.getsize(big) > _IN_PLACE_WAVE_BYTES
-    # first drain: no source log yet, every file is new
-    assert _adaptive_partitions(par, glob, ckpt, False) == spread
-
-    _source_log(ckpt, 0, [big])
-    small = _caption_wave(os.path.join(inp, "w2", "part-0.parquet"), 1000, 2)
-    assert os.path.getsize(big) + os.path.getsize(small) \
-        > _IN_PLACE_WAVE_BYTES
-    assert _adaptive_partitions(par, glob, ckpt, False) is None
-
-    _source_log(ckpt, 1, [small])
-    images = _caption_wave(os.path.join(inp, "w3", "part-0.parquet"), 40, 3,
-                           image_bytes=16 * 1024)
-    assert os.path.getsize(images) > _IN_PLACE_WAVE_BYTES
-    assert _adaptive_partitions(par, glob, ckpt, False) is None
-    assert _adaptive_partitions(par, glob, ckpt, True) == spread
-
-    _source_log(ckpt, 1, [], body="not a source log")
-    assert _adaptive_partitions(par, glob, ckpt, False) == spread
-
-
-def test_small_wave_signs_without_exchange(spark, tmp_path_factory,
-                                           monkeypatch):
-    """A wave under the crossover signs where it lands: its ingest
-    micro-batch has no Exchange below the signature UDF. With the
-    crossover patched to 0 the same wave is repartitioned first."""
+def test_wave_signs_without_exchange_sized_from_its_files(
+        spark, tmp_path_factory):
+    """A wave's signing plan has no Exchange, small or large. It writes
+    one file per task, and its task count is sized from the wave's new
+    files only: the blob scan's width, but no more tasks than the wave
+    has ``openCostInBytes`` of row-group bytes. Under the default open
+    cost a wave of 16 row groups signs on one task; with a 1-byte open
+    cost the next such wave signs on the session's cores, and a wave of
+    one row group after it on one task."""
     import re
 
     from distributed_gpu_lsh_using_sycl_spark.streaming import e2e
     from tests.test_rehydration import _with_plans
 
-    images, _ = make_fixture_pandas(30, seed=42)
-    for crossover, exchange in ((e2e._IN_PLACE_WAVE_BYTES, False),
-                                (0, True)):
-        monkeypatch.setattr(e2e, "_IN_PLACE_WAVE_BYTES", crossover)
-        base = tmp_path_factory.mktemp("in_place")
-        inp, wh = str(base / "in"), str(base / "wh")
-        spark.createDataFrame(images).write.parquet(os.path.join(inp, "w1"))
-        _, plans = _with_plans(spark, lambda: e2e.streaming_dedup_cycle(
-            spark, inp + "/*", wh, CFG, reconcile=False))
-        plans = [p for p in plans if "text_sig_udf" in p]  # the ingest
-        assert plans
-        assert all(bool(re.search(r"^\(\d+\) Exchange\b", p, re.M))
-                   == exchange for p in plans)
+    base = tmp_path_factory.mktemp("wave_plans")
+    inp, wh = str(base / "in"), str(base / "wh")
+    conf = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(conf)
+    files = []
+    try:
+        for w, (groups, cost) in enumerate(((16, prev), (16, "1"), (1, "1"))):
+            spark.conf.set(conf, cost)
+            _caption_wave(os.path.join(inp, f"w{w}", "part-0.parquet"),
+                          100 * groups, w, row_groups=groups)
+            _, plans = _with_plans(spark, lambda: e2e.streaming_dedup_cycle(
+                spark, inp + "/*", wh, CFG, reconcile=False))
+            plans = [p for p in plans if "read_splits" in p]  # the signing
+            assert len(plans) == 1
+            assert not re.search(r"^\(\d+\) Exchange\b", plans[0], re.M)
+            wave = os.path.join(wh, "signatures", f"wave={w}")
+            files.append(sum(f.endswith(".parquet") for f in os.listdir(wave)))
+    finally:
+        spark.conf.set(conf, prev)
+    assert files == [1, min(16, spark.sparkContext.defaultParallelism), 1]
 
 
 def test_verdict_append_counts_the_wave(spark, tmp_path_factory):
@@ -567,10 +532,10 @@ def test_verdict_append_counts_the_wave(spark, tmp_path_factory):
 
 
 def test_signature_count_ignores_uncommitted_parts(spark, tmp_path_factory):
-    """n_signatures counts the signature rows the sink committed. A part
-    file in the signature table that the sink's log does not list (a
-    crashed micro-batch leaves one) is not read by the cycle, so it
-    changes neither the count nor the clusters."""
+    """n_signatures counts the signature rows the ingest committed. A
+    wave directory in the signature table that the ingest's log does not
+    list (a cycle that crashed after the write leaves one) is not read by
+    the cycle, so it changes neither the count nor the clusters."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         streaming_dedup_cycle)
 
@@ -582,12 +547,94 @@ def test_signature_count_ignores_uncommitted_parts(spark, tmp_path_factory):
     assert r1["n_signatures"] == 40
     want = _clusters_dict(r1)  # r2 overwrites the table r1 reads
     sigs = os.path.join(wh, "signatures")
-    part = sorted(f for f in os.listdir(sigs) if f.endswith(".parquet"))[0]
-    shutil.copy(os.path.join(sigs, part),
-                os.path.join(sigs, "part-99999-uncommitted.parquet"))
+    shutil.copytree(os.path.join(sigs, "wave=0"), os.path.join(sigs, "wave=1"))
     r2 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
     assert r2["n_signatures"] == 40
     assert _clusters_dict(r2) == want
+
+
+def test_cycle_resumes_after_a_crash_before_the_signing_log(
+        spark, tmp_path_factory, monkeypatch):
+    """A cycle aborted after its wave directory is written and before the
+    ingest's log advances, resumed after one more input file lands: the
+    clusters equal the batch reference over every row, n_signatures
+    counts every input row, the signature table holds each image_id once
+    and the adjudicated table each (a, b) once."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming import ingest
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        batch_dedup_reference, streaming_dedup_cycle)
+
+    base = tmp_path_factory.mktemp("sign_crash")
+    inp, wh = str(base / "in"), str(base / "wh")
+    images, _ = make_fixture_pandas(90, seed=42)
+
+    def land(i):
+        spark.createDataFrame(images.iloc[i * 30:(i + 1) * 30]).write \
+            .parquet(os.path.join(inp, f"w{i}"))
+
+    land(0)
+    streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    land(1)
+
+    def crash(path, doc):
+        raise RuntimeError("crashed before the signing log advanced")
+
+    monkeypatch.setattr(ingest, "write_json", crash)
+    with pytest.raises(RuntimeError, match="crashed"):
+        streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(wh, "signatures", "wave=1"))
+    land(2)
+    r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    want = batch_dedup_reference(spark, spark.createDataFrame(images), CFG)
+    assert _clusters_dict(r) == {row["image_id"]: row["cluster_id"]
+                                 for row in want.collect()}
+    assert r["n_signatures"] == len(images)
+    ids = spark.read.parquet(os.path.join(wh, "signatures")) \
+        .select("image_id")
+    assert ids.count() == ids.distinct().count() == len(images)
+    adj = spark.read.parquet(os.path.join(wh, "adjudicated")).select("a", "b")
+    assert adj.count() == adj.distinct().count() > 0
+
+
+def test_edge_waves_do_nothing_or_fail_loudly(spark, tmp_path_factory):
+    """A cycle whose only new file is an empty parquet file (no row group,
+    as Spark writes an empty frame) advances the ingest's log and leaves
+    the clusters unchanged. A cycle with no new file signs nothing and
+    changes no log. An input root that is a URI is refused."""
+    import pyarrow.parquet as pq
+
+    from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
+        data_files, read_json)
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        streaming_dedup_cycle)
+    from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
+        _SIGNED_LOG, signature_stream)
+
+    base = tmp_path_factory.mktemp("edge_waves")
+    inp, wh = str(base / "in"), str(base / "wh")
+    sigs, ckpt = os.path.join(wh, "signatures"), os.path.join(wh, "ckpt_sigs")
+    log = os.path.join(ckpt, _SIGNED_LOG)
+    images, _ = make_fixture_pandas(40, seed=42)
+    frame = spark.createDataFrame(images)
+    frame.write.parquet(os.path.join(inp, "w1"))
+    want = _clusters_dict(streaming_dedup_cycle(spark, inp + "/*", wh, CFG))
+
+    spark.createDataFrame([], frame.schema).write.parquet(
+        os.path.join(inp, "empty"))
+    empty = data_files(os.path.join(inp, "empty"))
+    assert [pq.read_metadata(f).num_row_groups for f in empty] == [0]
+    r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    assert read_json(log, [])[-1] == sorted(empty)
+    assert r["n_signatures"] == 40 and r["n_new_adjudicated"] == 0
+    assert _clusters_dict(r) == want
+
+    before = (read_json(log, []), data_files(sigs))
+    assert signature_stream(spark, inp + "/*", sigs, ckpt, CFG) == 0
+    assert (read_json(log, []), data_files(sigs)) == before
+
+    with pytest.raises(ValueError, match="URI"):
+        streaming_dedup_cycle(spark, "s3a://bucket/in/*", wh, CFG)
 
 
 def test_state_checkpoint_version_guard(tmp_path):

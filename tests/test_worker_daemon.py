@@ -126,3 +126,51 @@ def test_workers_import_the_engine_from_any_directory(tmp_path):
     run = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
                          env=env, capture_output=True, text=True, timeout=300)
     assert "ROWS 4" in run.stdout, run.stderr[-3000:]
+
+
+def test_blob_scan_and_arrow_udfs_share_one_worker_pool(tmp_path):
+    """A blob scan plans its splits with no Python RDD, so it runs on the
+    same pool of Python workers as every Arrow UDF of the session: after
+    both, one worker daemon runs under the driver's JVM. (Splits built by
+    ``parallelize`` started a second daemon and its own workers.)"""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    data = str(tmp_path / "captions.parquet")
+    script = "\n".join([
+        "import os, sys",
+        f"sys.path.insert(0, {root!r})",
+        "import pyarrow as pa, pyarrow.parquet as pq",
+        "from pyspark import SparkContext",
+        "from distributed_gpu_lsh_using_sycl_spark.config import LshConfig",
+        "from distributed_gpu_lsh_using_sycl_spark.sources import blob_scan",
+        "from distributed_gpu_lsh_using_sycl_spark.sources.tables import get_spark",
+        "pq.write_table(pa.table({'image_id': ['a', 'b', 'c', 'd'],",
+        "                         'caption': ['w x y z'] * 4}),",
+        f"               {data!r}, row_group_size=1)",
+        "spark = get_spark('pools', parallelism=2)",
+        f"n = blob_scan.scan_signatures(spark, {data!r}, LshConfig(),",
+        "                               with_image=False).count()",
+        "n += (spark.range(4, numPartitions=2)",
+        "      .mapInPandas(lambda it: it, 'id long').count())",
+        "jvm = SparkContext._gateway.proc.pid",
+        "daemons = 0",
+        "for pid in filter(str.isdigit, os.listdir('/proc')):",
+        "    try:",
+        "        with open(f'/proc/{pid}/stat') as f:",
+        "            ppid = int(f.read().rsplit(')', 1)[1].split()[1])",
+        "        with open(f'/proc/{pid}/cmdline', 'rb') as f:",
+        "            cmd = f.read()",
+        "    except OSError:",
+        "        continue",
+        "    daemons += ppid == jvm and b'worker_daemon' in cmd",
+        "spark.stop()",
+        "print('ROWS', n, 'DAEMONS', daemons)",
+    ])
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT",
+                        "PYSPARK_GATEWAY_SECRET")}
+    env["SPARK_DRIVER_MEMORY"] = "512m"
+    run = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True, timeout=300)
+    assert "ROWS 8 DAEMONS 1" in run.stdout, run.stdout + run.stderr[-3000:]
