@@ -468,21 +468,37 @@ def _caption_wave(path, rows, seed, row_groups=1):
     return path
 
 
-def test_wave_signs_without_exchange_sized_from_its_files(
-        spark, tmp_path_factory):
-    """A wave's signing plan has no Exchange, small or large. It writes
-    one file per task, and its task count is sized from the wave's new
-    files only: the blob scan's width, but no more tasks than the wave
-    has ``openCostInBytes`` of row-group bytes. Under the default open
-    cost a wave of 16 row groups signs on one task; with a 1-byte open
-    cost the next such wave signs on the session's cores, and a wave of
-    one row group after it on one task."""
+def test_small_wave_signs_without_exchange(spark, tmp_path_factory):
+    """A wave signs where it lands, small or large: its signing plan has
+    no Exchange, for a wave of one row group and for one of 16."""
     import re
 
     from distributed_gpu_lsh_using_sycl_spark.streaming import e2e
     from tests.test_rehydration import _with_plans
 
     base = tmp_path_factory.mktemp("wave_plans")
+    inp, wh = str(base / "in"), str(base / "wh")
+    for w, groups in enumerate((1, 16)):
+        _caption_wave(os.path.join(inp, f"w{w}", "part-0.parquet"),
+                      100 * groups, w, row_groups=groups)
+        _, plans = _with_plans(spark, lambda: e2e.streaming_dedup_cycle(
+            spark, inp + "/*", wh, CFG, reconcile=False))
+        plans = [p for p in plans if "read_splits" in p]  # the signing
+        assert len(plans) == 1
+        assert not re.search(r"^\(\d+\) Exchange\b", plans[0], re.M)
+
+
+def test_wave_sizing_follows_the_new_files(spark, tmp_path_factory):
+    """A wave writes one signature file per task, and its task count is
+    sized from the wave's new files only: the blob scan's width, but no
+    more tasks than the wave has ``openCostInBytes`` of row-group bytes.
+    Under the default open cost a wave of 16 row groups signs on one
+    task; with a 1-byte open cost the next such wave signs on the
+    session's cores, and a wave of one row group after it on one task
+    (sizing from every file would spread it too)."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming import e2e
+
+    base = tmp_path_factory.mktemp("wave_sizing")
     inp, wh = str(base / "in"), str(base / "wh")
     conf = "spark.sql.files.openCostInBytes"
     prev = spark.conf.get(conf)
@@ -492,11 +508,8 @@ def test_wave_signs_without_exchange_sized_from_its_files(
             spark.conf.set(conf, cost)
             _caption_wave(os.path.join(inp, f"w{w}", "part-0.parquet"),
                           100 * groups, w, row_groups=groups)
-            _, plans = _with_plans(spark, lambda: e2e.streaming_dedup_cycle(
-                spark, inp + "/*", wh, CFG, reconcile=False))
-            plans = [p for p in plans if "read_splits" in p]  # the signing
-            assert len(plans) == 1
-            assert not re.search(r"^\(\d+\) Exchange\b", plans[0], re.M)
+            e2e.streaming_dedup_cycle(spark, inp + "/*", wh, CFG,
+                                      reconcile=False)
             wave = os.path.join(wh, "signatures", f"wave={w}")
             files.append(sum(f.endswith(".parquet") for f in os.listdir(wave)))
     finally:
