@@ -1013,8 +1013,7 @@ def q_set_ops(spark, sf):
 
 
 def q_windowed_events(spark, sf):
-    """Tumbling 5-min windows over the events stream table (batch analog
-    of the Structured Streaming windowed agg — see streaming/)."""
+    """Tumbling 5-min windows over the events stream table."""
     e = _t(spark, sf, "events")
     win = (F.floor(F.unix_timestamp("ts") / 300) * 300).cast("long")
     return (e.groupBy(win.alias("win_start"), "event_type")

@@ -66,6 +66,21 @@ def explode_bands(signatures: DataFrame, buckets_col: str = "buckets",
     )
 
 
+def bucket_key() -> Column:
+    """One long per (band_id, bucket), ``band_id * 2^32 + bucket``: the
+    one join key of both candidate joins (the fast path below and the
+    streaming delta join). A broadcast on one long key builds a
+    LongToUnsafeRowMap; on (band_id, bucket) Spark builds a
+    BytesToBytesMap, whose first page alone is ``spark.buffer.pageSize``
+    (64 MiB under a large driver heap). One-to-one while every bucket
+    lies in [0, 2^32): MinHash and parity buckets are below
+    ``bucket_modulus``, window fingerprints are masked to 32 bits, and
+    sign-bit and bit-band keys are narrower (``bit_bands`` at
+    ``hamming_threshold >= 2``). A negative (stacked) ``band_id`` keeps
+    it one-to-one."""
+    return F.col("band_id").cast("long") * (1 << 32) + F.col("bucket")
+
+
 def bucket_stats(bands: DataFrame) -> DataFrame:
     """Occupancy histogram — the skew detector (A1 analog)."""
     return bands.groupBy("band_id", "bucket").agg(F.count("*").alias("cnt"))
@@ -139,8 +154,8 @@ def band_plan(bands: DataFrame, cfg: LshConfig) -> BandPlan:
 def _fixed_width_bytes(side: DataFrame, rows: int) -> int:
     """``rows`` rows of ``side``'s schema, sized the way Spark sizes a row
     it has no statistics for (8 bytes + each field's default size) —
-    close enough for the candidate join's (band_id, bucket, id) sides,
-    whose only variable-width field is a short id."""
+    close enough for the candidate join's sides, whose only
+    variable-width field is a short id."""
     return rows * (8 + side._jdf.schema().defaultSize())
 
 
@@ -229,17 +244,20 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: LshConfig,
     # FAST PATH: when NO bucket crosses the plan threshold (the common
     # case away from degenerate corpora — true for every sf0.1 banding
     # frame measured), every m is 1 and every salt is 0, so the salted
-    # grid degenerates to a plain (band, bucket) self-join. Emitting that
-    # join directly skips the broadcast build, the per-row salt hash and
-    # the two sequence-explodes — same pair set by construction (the
-    # m=1 grid joins on (band, bucket, 0, 0)).
+    # grid degenerates to a plain (band, bucket) self-join, here on the
+    # one-long ``bucket_key``. Emitting that join directly skips the
+    # broadcast build, the per-row salt hash and the two
+    # sequence-explodes — same pair set by construction (the m=1 grid
+    # joins on (band, bucket, 0, 0)).
     if plan.n_over == 0:
-        left = bands.select("band_id", "bucket", F.col("image_id").alias("a"))
-        right = bands.select("band_id", "bucket", F.col("image_id").alias("b"))
+        left = bands.select(bucket_key().alias("k"), "band_id",
+                            F.col("image_id").alias("a"))
+        right = bands.select(bucket_key().alias("k"),
+                             F.col("image_id").alias("b"))
         return _distinct_pairs(
             left.join(broadcast_if_fits(right,
                                         _fixed_width_bytes(right, plan.rows)),
-                      ["band_id", "bucket"]),
+                      "k"),
             source)
 
     m_col = F.when(

@@ -8,13 +8,15 @@ Every step is a batch step; no Structured Streaming query runs:
 
 1. ``signature_stream`` (streaming/ingest.py) signs the newly-landed
    input files with the pipeline's blob scan into one wave directory of
-   the ``signatures`` stage table — exactly-once via its JSON log; only
-   NEW files are signed.
-2. ``candidate_pair_stream`` (streaming/stateful.py) bands the signature
-   files it has not banded yet and probes the whole table's bands with
-   them — one batch broadcast join per wave, no stream and no state
-   store; each unordered candidate pair is emitted once per bucket
-   across all waves.
+   the ``signatures`` stage table — exactly-once via the cycle's one
+   wave log (``stateful.read_waves``), whose layout guard runs before
+   anything is signed; only NEW files are signed.
+2. ``candidate_pair_stream`` (streaming/stateful.py) bands each wave
+   the log has signed but not banded and probes the table's bands with
+   it — one batch broadcast join per wave, no stream and no state
+   store, written to ``cand_pairs/wave=<n>``; each unordered candidate
+   pair is emitted once per bucket across all waves, and a wave banded
+   again after a crash is rewritten, not appended.
 3. An INCREMENTAL batch reconcile: candidate pairs already adjudicated
    (verified or rejected) in a previous cycle are persisted in the
    ``adjudicated`` table; each cycle anti-joins the accumulated
@@ -52,7 +54,7 @@ from pyspark.sql import types as T
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
-    check_stamp, data_files, parquet_rows)
+    check_stamp, data_files)
 
 
 #: Adjudicated-table layout/semantics version. BUMP (and update
@@ -256,20 +258,24 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
         signature_stream)
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
-        banded_rows, candidate_pair_stream)
+        candidate_pair_stream, read_waves)
 
     cfg = cfg or LshConfig()
     sigs_dir = os.path.join(warehouse, "signatures")
     pairs_dir = os.path.join(warehouse, "cand_pairs")
-    pairs_ckpt = os.path.join(warehouse, "ckpt_pairs")
+    ckpt = os.path.join(warehouse, "checkpoint")
 
-    signature_stream(spark, input_dir, sigs_dir,
-                     os.path.join(warehouse, "ckpt_sigs"), cfg,
+    signature_stream(spark, input_dir, sigs_dir, ckpt, cfg,
                      with_image=with_image)
-    _, n_dropped = candidate_pair_stream(spark, sigs_dir, pairs_dir,
-                                         pairs_ckpt, cfg)
-    # committed rows only: the candidate step lists the sink's log
-    n_sigs = banded_rows(pairs_ckpt)
+    _, n_dropped = candidate_pair_stream(spark, sigs_dir, pairs_dir, ckpt,
+                                         cfg)
+    # both counts are sums over the log, which counts committed waves
+    # only: no footer read. The candidate rows are also the bound on the
+    # verified edges (every verdict comes from one candidate pair) that
+    # lets CC skip its entry checkpoint.
+    waves = read_waves(ckpt, cfg)
+    n_sigs = sum(w["rows"] for w in waves)
+    n_cands = sum(w["candidates"] for w in waves)
 
     # Every table is read with the schema it was written with: an
     # inferred schema costs one footer job per read. The signature table
@@ -277,18 +283,13 @@ def streaming_dedup_cycle(spark: SparkSession, input_dir: str,
     # partition column, which nothing reads).
     sigs = spark.read.schema(signature_schema(T.StringType(), False)) \
         .parquet(sigs_dir)
-    # An empty-so-far candidate table is normal (no pair emitted yet ->
-    # all singletons); any OTHER read failure (corrupt/partial parquet,
-    # permissions, transient FS error) must propagate — swallowing it
+    # No candidate row yet is normal (all singletons); any read failure
+    # of a table the log counts rows in must propagate — swallowing it
     # would silently overwrite the clusters table with all-singletons.
-    if data_files(pairs_dir):
+    if n_cands:
         cands = spark.read.schema("a string, b string").parquet(pairs_dir)
     else:
         cands = spark.createDataFrame([], "a string, b string")
-    # candidate rows from the footers: the returned metric, and the
-    # bound on the verified edges (every verdict comes from one
-    # candidate pair) that lets CC skip its entry checkpoint
-    n_cands = parquet_rows(pairs_dir)
     if not reconcile:
         return {"clusters": None,
                 "n_signatures": n_sigs,

@@ -21,13 +21,15 @@ each of those reads and in the shuffles below them: on the benchmark's
 two waves of 1k captions, four files per wave instead of one raised the
 cycle's shuffle write from 33,643 to 39,854 bytes, at 26 jobs both.
 
-Exactly-once without a streaming checkpoint: one JSON log in the
-checkpoint dir lists the waves signed so far, each as the input files it
-signed. A wave is written to ``<table>/wave=<n>``, ``n`` the log's wave
-count, and the log advances after the write. A crash between the two
-leaves a wave directory the log does not list; it is uncommitted, and it
-is deleted before the next write, so no reader ever reads it, and the
-files it signed are signed again into the same directory. The
+Exactly-once without a streaming checkpoint: the cycle's one wave log
+(``stateful.read_waves``) lists the waves signed so far, each with the
+input files it signed and its signature rows and id bytes, observed on
+the write. A wave is written to ``<table>/wave=<n>``, ``n`` the log's
+wave count, and the log advances after the write. A crash between the
+two leaves a wave directory the log does not list; it is uncommitted,
+and it is deleted before the next write, so no reader ever reads it, and
+the files it signed are signed again into the same directory. The log's
+layout guard runs when it is read, before anything is signed. The
 ``wave=<n>`` names are partition directories, so the table root reads as
 one table (with a ``wave`` column).
 
@@ -39,7 +41,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
@@ -48,10 +49,9 @@ from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.sources.blob_scan import (
     scan_signatures)
 from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
-    data_files, parquet_footer, read_json, write_json)
-
-#: the log of signed waves: [[input files of wave 0], [... of wave 1], ...]
-_SIGNED_LOG = "signed.json"
+    data_files, parquet_footer)
+from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
+    drop_waves, read_waves, signed_wave, write_waves)
 
 
 def _input_files(input_dir: str) -> set[str]:
@@ -74,26 +74,23 @@ def _input_files(input_dir: str) -> set[str]:
 def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
                      checkpoint_dir: str, cfg: LshConfig | None = None,
                      with_image: bool = True) -> int:
-    """Sign the files under ``input_dir`` that the log in
+    """Sign the files under ``input_dir`` that the wave log in
     ``checkpoint_dir`` does not list yet, as one wave directory of the
     signature table ``out_dir``. Returns the rows signed, observed on the
-    write job (the one job).
+    write job (the one job) with the ids' bytes.
 
     A wave whose new files hold no rows (an empty parquet file has no row
     group) writes nothing; the log still advances, so they are not
     listed again. With no new file the call does nothing."""
     cfg = cfg or LshConfig()
-    log_path = os.path.join(checkpoint_dir, _SIGNED_LOG)
-    waves: list[list[str]] = read_json(log_path, [])
-    os.makedirs(out_dir, exist_ok=True)
-    for name in os.listdir(out_dir):
-        if name.startswith("wave=") and int(name[5:]) >= len(waves):
-            shutil.rmtree(os.path.join(out_dir, name))
-    new = sorted(_input_files(input_dir).difference(*waves))
+    waves = read_waves(checkpoint_dir, cfg)
+    drop_waves(out_dir, len(waves))
+    new = sorted(_input_files(input_dir).difference(
+        *(w["files"] for w in waves)))
     if not new:
         return 0
     footers = [parquet_footer(f) for f in new]
-    n = 0
+    n = id_bytes = 0
     if any(rows for rows, _ in footers):
         # one file per open cost of row-group bytes, at most the scan's
         # own width: every later cycle reads each file of the table
@@ -103,10 +100,10 @@ def signature_stream(spark: SparkSession, input_dir: str, out_dir: str,
         obs = Observation()
         (scan_signatures(spark, new, cfg, with_image=with_image)
          .coalesce(files)
-         .observe(obs, F.count(F.lit(1)).alias("n"))
+         .observe(obs, F.count(F.lit(1)).alias("n"),
+                  F.sum(F.octet_length("image_id")).alias("id_bytes"))
          .write.mode("overwrite")
          .parquet(os.path.join(out_dir, f"wave={len(waves)}")))
-        n = int(obs.get["n"])
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    write_json(log_path, waves + [new])
+        n, id_bytes = int(obs.get["n"]), int(obs.get["id_bytes"] or 0)
+    write_waves(checkpoint_dir, waves + [signed_wave(new, n, id_bytes)])
     return n

@@ -4,15 +4,16 @@ The reference builds its hash tables once and probes them with the
 query points only (``fit``/``kneighbors``, main.cpp:46-55; bucket probe
 hash_tables.hpp:566-578). The streaming cycle does the same per wave:
 the signature table is the hash table, the wave's new signatures are the
-queries. ``candidate_pair_stream`` bands the signature files it has not
-banded yet and broadcasts them; every band row of the whole table probes
-that broadcast on (band_id, bucket), and each hit pairs a new member
-``x`` with a member ``y`` of the same bucket. A pair is written when
-``x != y`` and ``y`` is from an earlier wave or ``y < x``, so each
-unordered pair comes out once per bucket across all waves — the batch
-bucket join's pair set (asserted in tests/test_resume_and_streaming.py)
-— with no shuffle and no distinct. The incremental join and the batch
-join share one result definition; only the probe set differs.
+queries. ``candidate_pair_stream`` bands each signed wave the log has
+not banded yet and broadcasts its bands; every band row of the table up
+to that wave probes the broadcast on one long bucket key
+(``banding.bucket_key``), and each hit pairs a new member ``x`` with a
+member ``y`` of the same bucket. A pair is written when ``x != y`` and
+``y`` is from an earlier wave or ``y < x``, so each unordered pair comes
+out once per bucket across all waves — the batch bucket join's pair set
+(asserted in tests/test_resume_and_streaming.py) — with no shuffle and
+no distinct. The incremental join and the batch join share one result
+definition; only the probe set differs.
 
 Bucket cap, never silent: a bucket admits its first ``max_bucket_size``
 arrivals. Waves arrive in order and a wave's members arrive in
@@ -29,36 +30,42 @@ drain == batch holds only while every bucket stays under the cap. When
 the table holds at most ``max_bucket_size`` signatures no bucket can
 reach the cap, and the cap costs nothing.
 
-No state store: which files are banded is a log in the checkpoint dir,
-advanced after the append. Bucket membership never expires (a dup is a
+No state store: the cycle's state is the signature table, the candidate
+table and one wave log, which this module owns (``read_waves``). Entry
+``n`` of the log describes ``wave=<n>`` of both tables. The signing
+step appends it after its write; the banding fills in its candidate
+count after its write. The layout guard (``_check_state_version``) runs
+on every read of the log, so a cycle under another bucket config fails
+before it signs anything. Bucket membership never expires (a dup is a
 dup however late it arrives); it is the signature table itself.
 """
 
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote, urlparse
+import shutil
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from distributed_gpu_lsh_using_sycl_spark.config import LshConfig
 from distributed_gpu_lsh_using_sycl_spark.operators.banding import (
-    explode_bands)
+    bucket_key, explode_bands)
 from distributed_gpu_lsh_using_sycl_spark.operators.pairs import (
     broadcast_if_fits)
 from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
-    check_stamp, parquet_footer, read_json, write_json)
+    check_stamp, read_json, write_json)
 
 #: Checkpoint layout version. BUMP THIS whenever what the checkpoint
 #: holds changes (v1: per-(band,bucket) state keys; v2: coarse
 #: (band, bucket % state_group_buckets) state keys; v3: no state, a log
-#: of banded signature files). A checkpoint written under another
-#: version cannot be resumed.
-STATE_FORMAT_VERSION = 3
+#: of banded signature files; v4: one wave log for signing and banding,
+#: stamped before anything is signed). A checkpoint written under
+#: another version cannot be resumed.
+STATE_FORMAT_VERSION = 4
 _VERSION_FILE = "_DLSH_STATE_VERSION"
-#: the log of banded signature files: {file URI: signature rows}
-_BANDED_LOG = "banded.json"
+#: the wave log: a list of entries, entry n for ``wave=<n>`` (read_waves)
+_WAVE_LOG = "waves.json"
 _SIGS_SCHEMA = "image_id string, buckets array<long>"
 
 
@@ -97,18 +104,45 @@ def _check_state_version(checkpoint_dir: str,
         mismatch_error=(
             "streaming checkpoint {path!r} was written under state layout "
             "{have}, but this build uses layout {want} (checkpoint layout or "
-            "bucket config changed). Delete the checkpoint dir AND the "
-            "candidate output dir, then re-drain from the signatures table "
-            "— resuming would pair new arrivals against remapped buckets "
+            "bucket config changed). Delete the checkpoint dir, the "
+            "signature table and the candidate table (their buckets are "
+            "the old layout's), then re-run the cycle over the input — "
+            "resuming would pair new arrivals against remapped buckets "
             "and silently MISS pairs."))
 
 
-def banded_rows(checkpoint_dir: str) -> int:
-    """Signature rows in the files the log in ``checkpoint_dir`` lists
-    as banded: after ``candidate_pair_stream``, the rows of every
-    committed file of its signature table, counted with no footer read."""
-    return sum(read_json(os.path.join(checkpoint_dir, _BANDED_LOG),
-                         {}).values())
+def read_waves(checkpoint_dir: str,
+               cfg: LshConfig | None = None) -> list[dict]:
+    """The wave log in ``checkpoint_dir``, read after the layout guard
+    (``_check_state_version``). Entry ``n`` is ``wave=<n>``: ``files``,
+    the input files it signed; ``rows`` and ``id_bytes``, its signature
+    rows and their ids' UTF-8 bytes, observed on the signing write; and
+    ``candidates``, the candidate rows its banding wrote, None until it
+    is banded."""
+    _check_state_version(checkpoint_dir, cfg)
+    return read_json(os.path.join(checkpoint_dir, _WAVE_LOG), [])
+
+
+def write_waves(checkpoint_dir: str, waves: list[dict]) -> None:
+    """Publish ``waves`` as the log (``tables.write_json``, atomic)."""
+    write_json(os.path.join(checkpoint_dir, _WAVE_LOG), waves)
+
+
+def signed_wave(files: list[str], rows: int, id_bytes: int) -> dict:
+    """The log entry of a wave just signed and not banded yet."""
+    return {"files": files, "rows": rows, "id_bytes": id_bytes,
+            "candidates": None}
+
+
+def drop_waves(table: str, first: int) -> None:
+    """Delete every ``wave=<n>`` directory of ``table`` with ``n >=
+    first``, the waves the log does not count there: a write that
+    crashed before the log advanced, which no reader may see and the
+    next write of that wave replaces."""
+    if os.path.isdir(table):
+        for name in os.listdir(table):
+            if name.startswith("wave=") and int(name[5:]) >= first:
+                shutil.rmtree(os.path.join(table, name))
 
 
 def _delta_bytes(rows: int, id_bytes: int) -> int:
@@ -117,9 +151,8 @@ def _delta_bytes(rows: int, id_bytes: int) -> int:
     Spark builds a LongToUnsafeRowMap: a page of 1 MiB that doubles when
     full, holding each row as an UnsafeRow (8 bytes of null bits, an
     8-byte slot per field, the id padded to a word) plus an 8-byte link,
-    and a hash array of at most 4 x nextpow2(rows) longs. (A two-column
-    key builds a BytesToBytesMap instead, whose first page alone is
-    ``spark.buffer.pageSize``, 64 MiB under a large driver heap.)"""
+    and a hash array of at most 4 x nextpow2(rows) longs
+    (``banding.bucket_key`` says why the key is one long)."""
     return (1 << 20) + 2 * (39 * rows + id_bytes) + 64 * rows
 
 
@@ -149,54 +182,60 @@ def _admitted(wave: DataFrame, probe: DataFrame, cap: int,
 def candidate_pair_stream(spark, input_dir: str, out_dir: str,
                           checkpoint_dir: str,
                           cfg: LshConfig | None = None) -> tuple[int, int]:
-    """Signature table ``input_dir`` (image_id, buckets array<long>) ->
-    the candidate rows (a, b, band_id, bucket) of its signature files not
-    banded yet, appended to ``out_dir``. Returns (rows appended, observed
-    on the write job; wave members the bucket cap refused).
+    """Signature table ``input_dir`` (``wave=<n>`` directories of
+    image_id, buckets array<long>) -> the candidate rows (a, b, band_id,
+    bucket) of each wave the log in ``checkpoint_dir`` has signed, from
+    the first it has not banded on, written to ``<out_dir>/wave=<n>``.
+    Returns (rows written, observed on the write jobs; wave members the
+    bucket cap refused).
 
-    The new files are the table's committed files (``inputFiles``, no
-    job) that the log in ``checkpoint_dir`` does not list. Their bands
-    are the broadcast side, sized by ``_delta_bytes`` from their footers;
-    the table's bands are the probe side. Both join on one long key,
-    ``band_id * bucket_modulus + bucket``, one-to-one because a bucket is
-    below ``bucket_modulus`` (``hashing.band_buckets``). Two jobs: the
-    broadcast collect and the write.
+    A wave's bands are the broadcast side, sized by ``_delta_bytes`` from
+    the rows and id bytes its log entry records; the bands of waves up to
+    it are the probe side, and those of earlier waves are old members.
+    Two jobs per wave, normally one wave: the broadcast collect and the
+    write. A wave that signed no rows is banded with no job.
 
-    The log advances after the append (``tables.write_json``, atomic). A
-    crash between the two re-emits that wave's rows on the next call.
-    The reconcile absorbs them, as it absorbs re-appended verdicts: its
-    ``distinct`` removes the repeated (a, b), and its anti-join against
-    the adjudicated table skips every pair already judged."""
+    The log counts the wave's candidates after the write
+    (``tables.write_json``, atomic). A ``wave=<n>`` directory of
+    ``out_dir`` the log does not count is deleted first and the wave
+    written in overwrite mode, so a crash between the write and the log
+    makes the next call rewrite the wave, not append its rows twice."""
     cfg = cfg or LshConfig()
-    _check_state_version(checkpoint_dir, cfg)
-    log = os.path.join(checkpoint_dir, _BANDED_LOG)
-    banded: dict[str, int] = read_json(log, {})
-    table = spark.read.schema(_SIGS_SCHEMA).parquet(input_dir)
-    new = sorted(set(table.inputFiles()) - banded.keys())
-    if not new:
+    waves = read_waves(checkpoint_dir, cfg)
+    first = next((n for n, w in enumerate(waves)
+                  if w["candidates"] is None), len(waves))
+    drop_waves(out_dir, first)
+    written = dropped = 0
+    for n in range(first, len(waves)):
+        waves[n]["candidates"], refused = _band_wave(
+            spark, input_dir, os.path.join(out_dir, f"wave={n}"), waves, n,
+            cfg)
+        write_waves(checkpoint_dir, waves)
+        written += waves[n]["candidates"]
+        dropped += refused
+    return written, dropped
+
+
+def _band_wave(spark, input_dir: str, out: str, waves: list[dict], n: int,
+               cfg: LshConfig) -> tuple[int, int]:
+    """Wave ``n`` of the signature table ``input_dir`` -> its candidate
+    rows, written to ``out``: (rows written, members the cap refused)."""
+    entry = waves[n]
+    if not entry["rows"]:
         return 0, 0
-    # each new file's rows and the uncompressed bytes of its image_id
-    # chunks: at least the ids' UTF-8 bytes, plain or dictionary-encoded,
-    # since each id is signed once
-    sizes = {uri: parquet_footer(unquote(urlparse(uri).path),
-                                 columns="image_id".__eq__, uncompressed=True)
-             for uri in new}
-    rows = sum(n for n, _ in sizes.values())
+    table = spark.read.schema(_SIGS_SCHEMA).parquet(input_dir) \
+        .filter(F.col("wave") <= n)
 
-    def keyed(bands: DataFrame) -> DataFrame:
-        return bands.withColumn("k", F.col("band_id").cast("long")
-                                * cfg.bucket_modulus + F.col("bucket"))
+    def keyed(sigs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+        return explode_bands(sigs, keep=keep).withColumn("k", bucket_key())
 
-    wave = keyed(explode_bands(spark.read.schema(_SIGS_SCHEMA)
-                               .parquet(*new))) \
+    wave = keyed(table.filter(F.col("wave") == n)) \
         .select("k", F.col("image_id").alias("x"))
-    probe = keyed(explode_bands(
-        table.withColumn("old", ~F.input_file_name().isin(new)),
-        keep=("old",)))
-    size = _delta_bytes(rows * cfg.num_bands, cfg.num_bands
-                        * sum(sum(ids) for _, ids in sizes.values()))
+    probe = keyed(table.withColumn("old", F.col("wave") < n), keep=("old",))
+    size = _delta_bytes(entry["rows"] * cfg.num_bands,
+                        entry["id_bytes"] * cfg.num_bands)
     dropped = 0
-    if 0 < cfg.max_bucket_size < rows + sum(banded.values()):
+    if 0 < cfg.max_bucket_size < sum(w["rows"] for w in waves[:n + 1]):
         wave, dropped = _admitted(wave, probe, cfg.max_bucket_size, size)
     wave = broadcast_if_fits(wave, size)
     x, y = F.col("x"), F.col("image_id")
@@ -206,7 +245,5 @@ def candidate_pair_stream(spark, input_dir: str, out_dir: str,
                      "band_id", "bucket"))
     obs = Observation()
     (pairs.observe(obs, F.count(F.lit(1)).alias("n"))
-     .write.mode("append").parquet(out_dir))
-    banded.update({uri: n for uri, (n, _) in sizes.items()})
-    write_json(log, banded)
+     .write.mode("overwrite").parquet(out))
     return int(obs.get["n"]), dropped

@@ -16,6 +16,20 @@ def _clusters_dict(res):
     return {r["image_id"]: r["cluster_id"] for r in res["clusters"].collect()}
 
 
+def _sign_by_hand(sigs, table, ckpt, cfg):
+    """Write the signature frame ``sigs`` (image_id, buckets) as the next
+    ``wave=<n>`` directory of ``table``, with the log entry in ``ckpt``
+    a signing wave leaves: its rows and their ids' UTF-8 bytes."""
+    from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
+        read_waves, signed_wave, write_waves)
+
+    waves = read_waves(ckpt, cfg)
+    sigs.coalesce(1).write.parquet(os.path.join(table, f"wave={len(waves)}"))
+    ids = [r["image_id"] for r in sigs.select("image_id").collect()]
+    write_waves(ckpt, waves + [signed_wave(
+        [], len(ids), sum(len(i.encode()) for i in ids))])
+
+
 @pytest.fixture(scope="module")
 def images_df(spark):
     images, _ = make_fixture_pandas(80, seed=42)
@@ -165,12 +179,13 @@ def test_stateful_incremental_candidates(spark, images_df, tmp_path_factory):
     def waves(n):
         """The same rows signed as ``n`` waves -> the emitted rows."""
         in_dir, out_dir = str(base / f"in{n}"), str(base / f"out{n}")
+        ckpt = str(base / f"ckpt{n}")
         appended = 0
         for w in range(n):
-            sigs.filter(F.crc32(F.col("image_id")) % n == w) \
-                .write.mode("append").parquet(in_dir)
+            _sign_by_hand(sigs.filter(F.crc32(F.col("image_id")) % n == w),
+                          in_dir, ckpt, CFG)
             appended += candidate_pair_stream(
-                spark, in_dir, out_dir, str(base / f"ckpt{n}"), CFG)[0]
+                spark, in_dir, out_dir, ckpt, CFG)[0]
         rows = spark.read.parquet(out_dir).collect()
         assert appended == len(rows)
         return rows
@@ -203,15 +218,15 @@ def test_stateful_cap_admits_first_cap_members(spark, tmp_path_factory):
     cfg = LshConfig(num_bands=1, max_bucket_size=cap)
     base = tmp_path_factory.mktemp("stateful_cap")
 
-    def wave(in_dir, ids, bucket):
-        spark.createDataFrame([(i, [bucket]) for i in ids],
-                              "image_id string, buckets array<long>") \
-            .coalesce(1).write.mode("append").parquet(in_dir)
+    def wave(in_dir, ckpt, ids, bucket):
+        _sign_by_hand(spark.createDataFrame(
+            [(i, [bucket]) for i in ids],
+            "image_id string, buckets array<long>"), in_dir, ckpt, cfg)
 
     in_dir, out_dir = str(base / "sigs_in"), str(base / "pairs_out")
-    wave(in_dir, [f"s{i:02d}" for i in range(cap + 5)], 5)
-    n, dropped = candidate_pair_stream(spark, in_dir, out_dir,
-                                       str(base / "ckpt"), cfg)
+    ckpt = str(base / "ckpt")
+    wave(in_dir, ckpt, [f"s{i:02d}" for i in range(cap + 5)], 5)
+    n, dropped = candidate_pair_stream(spark, in_dir, out_dir, ckpt, cfg)
     rows = spark.read.parquet(out_dir).collect()
     members = {r["a"] for r in rows} | {r["b"] for r in rows}
     assert len(members) == cap
@@ -223,13 +238,13 @@ def test_stateful_cap_admits_first_cap_members(spark, tmp_path_factory):
     in_dir, out_dir = str(base / "sigs_in2"), str(base / "pairs_out2")
     ckpt = str(base / "ckpt2")
     old = [f"o{i}" for i in range(cap - 2)]
-    wave(in_dir, old, 9)
+    wave(in_dir, ckpt, old, 9)
     assert candidate_pair_stream(spark, in_dir, out_dir, ckpt, cfg) \
         == (_c2(cap - 2), 0)
     # filler rows in another bucket lift the table over the cap
-    wave(in_dir, [f"f{i}" for i in range(cap)], 11)
+    wave(in_dir, ckpt, [f"f{i}" for i in range(cap)], 11)
     new = ["n4", "n0", "n3", "n1", "n2"]
-    wave(in_dir, new, 9)
+    wave(in_dir, ckpt, new, 9)
     n, dropped = candidate_pair_stream(spark, in_dir, out_dir, ckpt, cfg)
     rows = spark.read.parquet(out_dir).filter("bucket = 9").collect()
     members = {r["a"] for r in rows} | {r["b"] for r in rows}
@@ -240,32 +255,38 @@ def test_stateful_cap_admits_first_cap_members(spark, tmp_path_factory):
 
 
 def test_candidate_replay_is_absorbed(spark, tmp_path_factory):
-    """A crash after the candidate append but before the banded log
-    advances re-emits that wave's rows on the next cycle. The reconcile
-    absorbs them: the clusters stay identical and no pair is adjudicated
+    """A crash after a wave's candidate write but before the log counts
+    its candidates makes the next cycle band the wave again. It rewrites
+    the wave's candidate directory instead of appending to it: the
+    candidate count is unchanged, no (a, b, band_id, bucket) row appears
+    twice, the clusters stay identical and no pair is adjudicated
     again."""
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         streaming_dedup_cycle)
     from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
-        _BANDED_LOG)
+        read_waves, write_waves)
 
     base = tmp_path_factory.mktemp("replay")
     inp, wh = str(base / "in"), str(base / "wh")
-    log = os.path.join(wh, "ckpt_pairs", _BANDED_LOG)
+    ckpt = os.path.join(wh, "checkpoint")
     images, _ = make_fixture_pandas(60, seed=42)
     spark.createDataFrame(images.iloc[:30]).write.parquet(
         os.path.join(inp, "w1"))
     streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
-    shutil.copy(log, str(base / "log_wave1"))
     spark.createDataFrame(images.iloc[30:]).write.parquet(
         os.path.join(inp, "w2"))
     r2 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
     assert r2["n_new_adjudicated"] > 0
     want = _clusters_dict(r2)  # r3 overwrites the table r2 reads
-    # roll the log back to before wave 2: its candidates are re-emitted
-    shutil.copy(str(base / "log_wave1"), log)
+    # roll the log back to before wave 2 was banded
+    waves = read_waves(ckpt, CFG)
+    waves[-1]["candidates"] = None
+    write_waves(ckpt, waves)
     r3 = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
-    assert r3["n_candidates"] > r2["n_candidates"]
+    assert r3["n_candidates"] == r2["n_candidates"]
+    rows = spark.read.parquet(os.path.join(wh, "cand_pairs")).collect()
+    keyed = [(r["a"], r["b"], r["band_id"], r["bucket"]) for r in rows]
+    assert len(keyed) == len(set(keyed)) == r3["n_candidates"]
     assert r3["n_new_adjudicated"] == 0
     assert _clusters_dict(r3) == want
 
@@ -573,7 +594,7 @@ def test_cycle_resumes_after_a_crash_before_the_signing_log(
     clusters equal the batch reference over every row, n_signatures
     counts every input row, the signature table holds each image_id once
     and the adjudicated table each (a, b) once."""
-    from distributed_gpu_lsh_using_sycl_spark.streaming import ingest
+    from distributed_gpu_lsh_using_sycl_spark.streaming import stateful
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         batch_dedup_reference, streaming_dedup_cycle)
 
@@ -592,7 +613,7 @@ def test_cycle_resumes_after_a_crash_before_the_signing_log(
     def crash(path, doc):
         raise RuntimeError("crashed before the signing log advanced")
 
-    monkeypatch.setattr(ingest, "write_json", crash)
+    monkeypatch.setattr(stateful, "write_json", crash)
     with pytest.raises(RuntimeError, match="crashed"):
         streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
     monkeypatch.undo()
@@ -618,16 +639,17 @@ def test_edge_waves_do_nothing_or_fail_loudly(spark, tmp_path_factory):
     import pyarrow.parquet as pq
 
     from distributed_gpu_lsh_using_sycl_spark.sources.tables import (
-        data_files, read_json)
+        data_files)
     from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
         streaming_dedup_cycle)
     from distributed_gpu_lsh_using_sycl_spark.streaming.ingest import (
-        _SIGNED_LOG, signature_stream)
+        signature_stream)
+    from distributed_gpu_lsh_using_sycl_spark.streaming.stateful import (
+        read_waves)
 
     base = tmp_path_factory.mktemp("edge_waves")
     inp, wh = str(base / "in"), str(base / "wh")
-    sigs, ckpt = os.path.join(wh, "signatures"), os.path.join(wh, "ckpt_sigs")
-    log = os.path.join(ckpt, _SIGNED_LOG)
+    sigs, ckpt = os.path.join(wh, "signatures"), os.path.join(wh, "checkpoint")
     images, _ = make_fixture_pandas(40, seed=42)
     frame = spark.createDataFrame(images)
     frame.write.parquet(os.path.join(inp, "w1"))
@@ -638,16 +660,68 @@ def test_edge_waves_do_nothing_or_fail_loudly(spark, tmp_path_factory):
     empty = data_files(os.path.join(inp, "empty"))
     assert [pq.read_metadata(f).num_row_groups for f in empty] == [0]
     r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
-    assert read_json(log, [])[-1] == sorted(empty)
+    assert read_waves(ckpt, CFG)[-1]["files"] == sorted(empty)
     assert r["n_signatures"] == 40 and r["n_new_adjudicated"] == 0
     assert _clusters_dict(r) == want
 
-    before = (read_json(log, []), data_files(sigs))
+    before = (read_waves(ckpt, CFG), data_files(sigs))
     assert signature_stream(spark, inp + "/*", sigs, ckpt, CFG) == 0
-    assert (read_json(log, []), data_files(sigs)) == before
+    assert (read_waves(ckpt, CFG), data_files(sigs)) == before
 
     with pytest.raises(ValueError, match="URI"):
         streaming_dedup_cycle(spark, "s3a://bucket/in/*", wh, CFG)
+
+
+def test_cycle_under_another_bucket_config_signs_nothing(
+        spark, tmp_path_factory):
+    """A cycle under a config that moves rows to other buckets fails
+    before it signs anything: the signature table's wave directories and
+    the checkpoint's files are unchanged. A retry under the original
+    config then equals the batch reference over both waves, including a
+    planted dup pair that spans them."""
+    import dataclasses
+
+    import pandas as pd
+
+    from distributed_gpu_lsh_using_sycl_spark.streaming.e2e import (
+        batch_dedup_reference, streaming_dedup_cycle)
+
+    base = tmp_path_factory.mktemp("other_config")
+    inp, wh = str(base / "in"), str(base / "wh")
+    images, _ = make_fixture_pandas(60, seed=42)
+    wave1 = images.iloc[:30]
+    near = images.iloc[[3]].assign(
+        image_id="near_copy", caption=images.iloc[3]["caption"] + " w001")
+    wave2 = pd.concat([images.iloc[30:], near], ignore_index=True)
+    spark.createDataFrame(wave1).write.parquet(os.path.join(inp, "w1"))
+    streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    spark.createDataFrame(wave2).write.parquet(os.path.join(inp, "w2"))
+
+    def state():
+        sigs = os.path.join(wh, "signatures")
+        ckpt = os.path.join(wh, "checkpoint")
+        files = {}
+        for root, _, names in os.walk(ckpt):
+            for name in names:
+                with open(os.path.join(root, name), "rb") as f:
+                    files[os.path.join(root, name)] = f.read()
+        return sorted(os.listdir(sigs)), files
+
+    before = state()
+    reseeded = dataclasses.replace(CFG, seed=CFG.seed + 1)
+    with pytest.raises(RuntimeError, match="state layout"):
+        streaming_dedup_cycle(spark, inp + "/*", wh, reseeded)
+    assert state() == before
+
+    r = streaming_dedup_cycle(spark, inp + "/*", wh, CFG)
+    got = _clusters_dict(r)
+    want = {row["image_id"]: row["cluster_id"]
+            for row in batch_dedup_reference(
+                spark, spark.createDataFrame(
+                    pd.concat([wave1, wave2], ignore_index=True)),
+                CFG).collect()}
+    assert got == want
+    assert got["near_copy"] == got[images.iloc[3]["image_id"]]
 
 
 def test_state_checkpoint_version_guard(tmp_path):
@@ -663,7 +737,7 @@ def test_state_checkpoint_version_guard(tmp_path):
     ck = tmp_path / "ckpt"
     _check_state_version(str(ck))  # fresh dir -> created + stamped
     stamp = ck / _VERSION_FILE
-    assert stamp.read_text() == str(STATE_FORMAT_VERSION) == "3"
+    assert stamp.read_text() == str(STATE_FORMAT_VERSION) == "4"
     _check_state_version(str(ck))  # matching stamp -> accepted
 
     # a v2 (coarse state-key) checkpoint of the same config -> refused
